@@ -14,13 +14,16 @@ the whole job. Two implementations are provided; both add the deterministic
 tie-break the reference lacks (SURVEY.md §2.3 ⚠).
 
 1. ``enrich_top1_mapside`` (preferred, used by the chess pipeline): the
-   dimension is collapsed to ONE array<struct> row, broadcast-cross-joined
-   onto the fact table, and the argmax is computed per fact row with
-   higher-order functions (FILTER + REDUCE over the array). Zero shuffle,
-   zero window, stays inside whole-stage codegen; scales as
-   O(|fact| * |dim|) comparisons map-side, which is exactly what the
-   reference's nested-loop lateral does — minus its single-process limit.
-   Requires the dimension to fit in a broadcast (~3.5k openings: trivially).
+   dimension is collected on the driver in one job and embedded in the plan
+   as ONE constant array<struct>, and the argmax is computed per fact row
+   with higher-order functions (FILTER + REDUCE over the array). The
+   constant is sent to the JVM as a single JSON string that Catalyst folds
+   into the array, so building the plan costs as many Py4J calls for
+   3,400 openings as for 10. Zero shuffle, zero window, stays
+   inside whole-stage codegen; scales as O(|fact| * |dim|) comparisons
+   map-side, which is exactly what the reference's nested-loop lateral
+   does — minus its single-process limit. Requires the dimension to fit in
+   every task binary (~3.5k openings: trivially).
 
 2. ``enrich_top1_join`` (generic): broadcast theta-join + max_by aggregation
    for dimensions too large to collapse, or when the predicate needs the
@@ -34,6 +37,15 @@ from collections.abc import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+
+#: to_json/from_json options for the dim literal: the default timestamp
+#: formats stop at milliseconds, which would truncate microsecond values.
+_JSON_OPTIONS = {
+    "timestampFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX",
+    "timestampNTZFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSS",
+}
 
 
 def _better(a: Column, b: Column, rank_field: str, tiebreak_fields: Sequence[str]) -> Column:
@@ -74,11 +86,12 @@ def enrich_top1_mapside(
     rows, src/find-openings.ts:68): each output column keeps its existing
     fact value on those rows (NULL if the output column is new).
 
-    max_dim_rows guards the plan: the dim is embedded as a literal
-    array<struct> whose size is linear in the dim (serialized into every
-    task binary, compiled into the plan). Beyond the cap this raises —
-    use ``enrich_top1_join``, which broadcasts through the exchange
-    machinery instead of the plan, for larger dimensions.
+    max_dim_rows bounds the task binary: the dim is embedded as a literal
+    array<struct> that is serialized into every task, so task size grows
+    linearly with the dim (building the plan does not: the literal is one
+    string whatever the row count). Beyond the cap this raises — use
+    ``enrich_top1_join``, which broadcasts through the exchange machinery
+    instead of the plan, for larger dimensions.
     """
     tiebreak_cols = list(tiebreak_cols or [])
     if only_if_null is not None and only_if_null not in fact.columns:
@@ -101,23 +114,28 @@ def enrich_top1_mapside(
     ].dataType
     # One job both guards and collects: fetch max_dim_rows+1 rows — if the
     # limit row materializes, the dim is too big (and we never executed the
-    # dim subtree twice).
-    fetched = dim.select(*struct_cols).distinct().limit(max_dim_rows + 1).collect()
+    # dim subtree twice). Each row also carries its JSON encoding, made by
+    # the JVM so that it parses back to exactly the collected values.
+    fetched = (
+        dim.select(*struct_cols)
+        .distinct()
+        .select("*", F.to_json(F.struct(*struct_cols), _JSON_OPTIONS).alias("__json"))
+        .limit(max_dim_rows + 1)
+        .collect()
+    )
     if len(fetched) > max_dim_rows:
         raise ValueError(
             f"enrich_top1_mapside: dimension exceeds max_dim_rows={max_dim_rows}; "
-            "the literal-array plan would bloat linearly with the dim — "
+            "the literal array, serialized into every task, grows linearly with the dim — "
             "use enrich_top1_join for large dimensions"
         )
-    dim_rows = sorted(fetched, key=lambda r: tuple((v is None, v) for v in r))
-    arr = F.array(
-        *[
-            F.struct(
-                *[F.lit(r[c]).cast(f.dataType).alias(c) for c, f in zip(struct_cols, elem_type.fields)]
-            )
-            for r in dim_rows
-        ]
-    )
+    n = len(struct_cols)
+    dim_rows = sorted(fetched, key=lambda r: tuple((v is None, v) for v in r[:n]))
+    # ONE literal for the whole dim, whatever its size: Catalyst folds
+    # from_json over a constant string into a constant array, so no row
+    # parses JSON, and building it is one Py4J call rather than one per cell.
+    payload = "[" + ",".join(r[n] for r in dim_rows) + "]"
+    arr = F.from_json(F.lit(payload), T.ArrayType(elem_type), {**_JSON_OPTIONS, "mode": "FAILFAST"})
     joined = fact.withColumn("__dim_arr", arr)
 
     probe = F.col(fact_probe_col)

@@ -12,9 +12,9 @@ partitions from fanning out into one file per task.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from chess_lakehouse_spark.session import local_df
@@ -28,7 +28,7 @@ def write_partitioned(
     target_partitions: int | None = None,
     compression: str = "zstd",
     sort_cols: Sequence[str] | None = None,
-) -> None:
+) -> dict[str, int]:
     """Hive-partitioned Parquet write with file-count control.
 
     repartition(partition_cols) hash-clusters rows so every output Hive
@@ -48,6 +48,8 @@ def write_partitioned(
     ``compression`` defaults to zstd: at 100 TB the lake's at-rest size and
     scan throughput both beat snappy (~30% smaller at comparable decode
     cost on modern CPUs); pass "snappy" to match older readers.
+
+    Returns ``{"rows": rows written}``, counted by the write itself.
     """
     cols = [F.col(c) for c in partition_cols]
     repartitioned = df.repartition(target_partitions, *cols) if target_partitions else df.repartition(*cols)
@@ -55,11 +57,12 @@ def write_partitioned(
         repartitioned = repartitioned.sortWithinPartitions(
             *partition_cols, *sort_cols
         )
-    (
-        repartitioned.write.mode(mode)
+    return write_counted(
+        repartitioned,
+        lambda d: d.write.mode(mode)
         .option("compression", compression)
         .partitionBy(*partition_cols)
-        .parquet(out_dir)
+        .parquet(out_dir),
     )
 
 
@@ -455,14 +458,39 @@ def read_with_skipping(
     return spark.read.option("basePath", lake_dir).parquet(*files).filter(residual)
 
 
+def qc_aggs(error_predicate: Column | None = None) -> list[Column]:
+    """The reference's QC probes as aggregate columns: total row count
+    (``rows``) + error-row count (``error_rows``, when ``error_predicate``
+    is given), for a ``DataFrame.agg`` or a ``DataFrame.observe``."""
+    aggs = [F.count(F.lit(1)).alias("rows")]
+    if error_predicate is not None:
+        aggs.append(F.count(F.when(error_predicate, 1)).alias("error_rows"))
+    return aggs
+
+
+def write_counted(
+    df: DataFrame,
+    write: Callable[[DataFrame], None],
+    error_predicate: Column | None = None,
+) -> dict[str, int]:
+    """Run ``write`` on ``df`` with the QC probes (:func:`qc_aggs`) observed
+    on it, and return the counts the write itself collected: no second job
+    re-reads the output to count it.
+
+    ``df`` must be the frame the writer consumes, above any shuffle: when a
+    shuffle turns out empty, AQE replaces the plan below it, observation
+    included, and the counts never arrive.
+    """
+    obs = Observation()
+    write(df.observe(obs, *qc_aggs(error_predicate)))
+    return {k: int(v) for k, v in obs.get.items()}
+
+
 def qc_counts(spark: SparkSession, df: DataFrame, error_predicate=None) -> dict[str, int]:
     """The reference's QC probes: total row count + error-row count
     (src/read-pgn.ts:54-56, src/export-to-parquet.ts:102-104). One pass:
     conditional aggregation instead of two jobs."""
-    aggs = [F.count(F.lit(1)).alias("rows")]
-    if error_predicate is not None:
-        aggs.append(F.sum(F.when(error_predicate, 1).otherwise(0)).alias("error_rows"))
-    row = df.agg(*aggs).collect()[0]
+    row = df.agg(*qc_aggs(error_predicate)).collect()[0]
     return {k: int(v) for k, v in row.asDict().items()}
 
 

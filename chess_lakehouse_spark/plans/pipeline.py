@@ -29,7 +29,7 @@ from chess_lakehouse_spark.functions.chess import (
     timecontrol_normalize,
 )
 from chess_lakehouse_spark.operators.enrich import enrich_top1_mapside
-from chess_lakehouse_spark.operators.publish import qc_counts, write_partitioned
+from chess_lakehouse_spark.operators.publish import write_partitioned
 from chess_lakehouse_spark.operators.relational import align_and_union
 from chess_lakehouse_spark.sources.pgn import read_pgn
 
@@ -162,5 +162,4 @@ def run_pipeline(
         for name, path in sorted(pgn_sources.items())
     ]
     combined = export_combined(enriched)
-    write_partitioned(combined, out_dir, ("DataSource", "year", "month"))
-    return qc_counts(spark, spark.read.parquet(out_dir))
+    return write_partitioned(combined, out_dir, ("DataSource", "year", "month"))

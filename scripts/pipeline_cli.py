@@ -63,26 +63,29 @@ def _read_list_file(path: str) -> list:
 def cmd_read_pgn(args: argparse.Namespace) -> None:
     from pyspark.sql import functions as F
 
-    from chess_lakehouse_spark.operators.publish import qc_counts
+    from chess_lakehouse_spark.operators.publish import write_counted
     from chess_lakehouse_spark.plans.pipeline import ingest
 
     spark = _spark()
-    games = ingest(spark, args.inDir)
-    games.write.mode("overwrite").parquet(args.outDir)
-    # QC report, as the reference prints per ingest (src/read-pgn.ts:54-56)
-    staged = spark.read.parquet(args.outDir)
     err = F.col("parse_error").isNotNull()
-    qc = qc_counts(spark, staged, error_predicate=err)
+    qc = write_counted(
+        ingest(spark, args.inDir),
+        lambda df: df.write.mode("overwrite").parquet(args.outDir),
+        error_predicate=err,
+    )
+    # QC report, as the reference prints per ingest (src/read-pgn.ts:54-56)
     if args.markdown:
         # reference renders QC through `duckdb -markdown` (src/read-pgn.ts:55)
         from chess_lakehouse_spark.report import qc_markdown_report
 
+        staged = spark.read.parquet(args.outDir)
         print(qc_markdown_report(staged, qc, error_predicate=err))
     else:
         print(f"[read-pgn] key={args.key} games={qc['rows']} parse_errors={qc['error_rows']}")
 
 
 def cmd_find_openings(args: argparse.Namespace) -> None:
+    from chess_lakehouse_spark.operators.publish import write_counted
     from chess_lakehouse_spark.plans.pipeline import enrich
     from chess_lakehouse_spark.sources.openings import load_openings
 
@@ -90,8 +93,8 @@ def cmd_find_openings(args: argparse.Namespace) -> None:
     games = spark.read.parquet(args.inDir)
     openings = load_openings(spark, args.openingsDb)
     enriched = enrich(games, openings.select("eco", "name", "pgn", "uci"), args.dataSource)
-    enriched.write.mode("overwrite").parquet(args.outDir)
-    print(f"[find-openings] key={args.key} dataSource={args.dataSource} rows={spark.read.parquet(args.outDir).count()}")
+    qc = write_counted(enriched, lambda df: df.write.mode("overwrite").parquet(args.outDir))
+    print(f"[find-openings] key={args.key} dataSource={args.dataSource} rows={qc['rows']}")
 
 
 def cmd_export_parquet(args: argparse.Namespace) -> None:
@@ -105,10 +108,9 @@ def cmd_export_parquet(args: argparse.Namespace) -> None:
     sources = [spark.read.parquet(d) for d in src_dirs]
     combined = export_combined(sources)
     sort_cols = [c for c in (args.clusterBy or "").split(",") if c] or None
-    write_partitioned(
+    n = write_partitioned(
         combined, args.outDir, ("DataSource", "year", "month"), sort_cols=sort_cols
-    )
-    n = spark.read.parquet(args.outDir).count()
+    )["rows"]
     if args.outDb:
         spark.read.parquet(args.outDir).write.mode("overwrite").parquet(args.outDb)
     if args.markdown:

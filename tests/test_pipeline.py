@@ -143,8 +143,9 @@ def test_enrich_mapside_only_if_null_gates_on_named_column(spark, openings_df):
 
 
 def test_enrich_mapside_dim_size_guard(spark):
-    """The literal-array plan grows linearly with the dim — beyond
-    max_dim_rows the operator must refuse and point at enrich_top1_join."""
+    """The dim literal is serialized into every task binary, so task size
+    grows linearly with the dim — beyond max_dim_rows the operator must
+    refuse and point at enrich_top1_join."""
     from chess_lakehouse_spark.operators.enrich import enrich_top1_mapside
 
     fact = spark.createDataFrame([("x",)], "probe string")
@@ -184,6 +185,16 @@ def test_full_pipeline_partition_layout(spark, tmp_path, openings_df):
     assert back.count() == 4
     # partition pruning columns materialize correctly
     assert back.where(F.col("month") == "01").count() == 1
+
+
+def test_write_partitioned_counts_rows_written(spark, tmp_path):
+    """write_partitioned returns the rows it wrote, also when a filter
+    leaves none (AQE then replaces the plan below the empty shuffle)."""
+    from chess_lakehouse_spark.operators.publish import write_partitioned
+
+    df = spark.range(10).select("id", (F.col("id") % 3).alias("p"))
+    assert write_partitioned(df, str(tmp_path / "a"), ("p",)) == {"rows": 10}
+    assert write_partitioned(df.where("id < 0"), str(tmp_path / "b"), ("p",), sort_cols=["id"]) == {"rows": 0}
 
 
 def test_load_openings_recursive_glob(spark, tmp_path):
@@ -305,6 +316,43 @@ def test_pipeline_cli_markdown_qc_report(spark, tmp_path, capsys):
     assert "| Games with Parse Errors |" in out
     # the fixture has no parse errors -> no error-row table
     assert "| 0 |" in out and "parse_error" not in out
+
+
+def test_pipeline_cli_counts_come_from_the_write(spark, tmp_path, capsys, monkeypatch):
+    """read-pgn, find-openings and export-parquet print counts collected by
+    an Observation on their own write: a parse-error game is counted, and
+    no stage reads its output back to count it."""
+    import sys
+    from pathlib import Path
+
+    from pyspark.sql.readwriter import DataFrameReader
+
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "scripts"))
+    import pipeline_cli
+
+    pgn_dir = tmp_path / "pgn"
+    pgn_dir.mkdir()
+    make_games_pgn(pgn_dir)
+    (pgn_dir / "broken.pgn").write_text('[Event "Broken\n[White "E"]\n\n1. d4 *\n')
+    op_dir = str(tmp_path / "openings")
+    spark.createDataFrame(OPENINGS, "eco string, name string, pgn string, uci string").write.parquet(op_dir)
+
+    read = []
+    parquet = DataFrameReader.parquet
+    monkeypatch.setattr(DataFrameReader, "parquet", lambda self, *p, **kw: read.extend(p) or parquet(self, *p, **kw))
+    raw, enr, lake = (str(tmp_path / d) for d in ("raw", "enriched/k1", "lake"))
+    pipeline_cli.main(["read-pgn", "--key", "k1", "--inDir", str(pgn_dir), "--outDir", raw])
+    pipeline_cli.main([
+        "find-openings", "--key", "k1", "--inDir", raw, "--outDir", enr,
+        "--openingsDb", op_dir, "--dataSource", "S",
+    ])
+    pipeline_cli.main(["export-parquet", "--inDir", str(tmp_path / "enriched"), "--outDir", lake])
+    assert capsys.readouterr().out.splitlines() == [
+        "[read-pgn] key=k1 games=7 parse_errors=1",
+        "[find-openings] key=k1 dataSource=S rows=7",
+        "[export-parquet] sources=1 rows=4",
+    ]
+    assert lake not in read and read.count(raw) == 1 and read.count(enr) == 1, read
 
 
 def test_markdown_table_rendering():
