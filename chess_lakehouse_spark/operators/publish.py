@@ -6,8 +6,7 @@ Reference semantics: wipe outputs, then
 5.7 GB — a small-files problem that gets fatal at 100 TB (NameNode/S3-listing
 pressure, per-file open cost dominating scans). This sink therefore
 repartitions BY THE PARTITION COLUMNS before the write so each Hive partition
-is produced by a bounded number of tasks, and AQE coalescing keeps tiny
-partitions from fanning out into one file per task.
+is produced by exactly one task, whatever the shuffle width.
 """
 
 from __future__ import annotations
@@ -31,12 +30,20 @@ def write_partitioned(
 ) -> dict[str, int]:
     """Hive-partitioned Parquet write with file-count control.
 
-    repartition(partition_cols) hash-clusters rows so every output Hive
-    partition is written by as few tasks as actually carry its data; without
-    it, every one of N shuffle tasks can open a file in every partition
-    (N x |partitions| files — the reference's 7,584-file lake). For very hot
-    partition keys, pass target_partitions to cap the shuffle width and let
-    AQE split skewed reducers.
+    Repartitioning by partition_cols hash-clusters rows so every output
+    Hive partition is written by exactly one task; without it, every one of
+    N shuffle tasks can open a file in every partition (N x |partitions|
+    files — the reference's 7,584-file lake).
+
+    The shuffle width is explicit: ``target_partitions``, or else the
+    session's default parallelism (the core count ``spread()`` also uses).
+    A bare ``repartition(*cols)`` leaves the width to AQE, which coalesces
+    by bytes and so hands a lake under ~1 MB per core to ONE writer task,
+    although at that size a write costs per file, not per byte. An explicit
+    width is not coalesced, and since hashing keeps each Hive partition in
+    one task, it cannot add files. A very hot partition key still lands in
+    one task: AQE's skew split covers joins and rebalances, not
+    ``repartition``.
 
     ``sort_cols`` additionally sorts within each task by (partition cols,
     sort cols): partition-col-first keeps one open writer per task (bounded
@@ -52,7 +59,8 @@ def write_partitioned(
     Returns ``{"rows": rows written}``, counted by the write itself.
     """
     cols = [F.col(c) for c in partition_cols]
-    repartitioned = df.repartition(target_partitions, *cols) if target_partitions else df.repartition(*cols)
+    width = target_partitions or df.sparkSession.sparkContext.defaultParallelism
+    repartitioned = df.repartition(width, *cols)
     if sort_cols:
         repartitioned = repartitioned.sortWithinPartitions(
             *partition_cols, *sort_cols

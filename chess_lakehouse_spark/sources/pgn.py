@@ -12,6 +12,13 @@ resynchronizes forward to the first game boundary (a line starting with
 parsed exactly once, files of any size parallelize across the cluster, and
 no task ever materializes more than one game + an IO buffer.
 
+The split list is planned on the JVM: ``spark.range(0, n, 1, n)`` gives one
+partition per split with no shuffle, and each task looks up its split by the
+range id (the list rides in the task closure). Planning it from
+``spark.createDataFrame(list)`` instead would add a stage of Python tasks
+that only unpickle the split rows, each paying the Python-worker start-up
+cost (~0.25 s per task on a 4-core VM) for a handful of tuples.
+
 Parsing itself runs in ``mapInPandas`` (Arrow-batched); malformed games
 produce a row with ``parse_error`` set instead of failing the scan
 (src/read-pgn.ts:55 reports such rows).
@@ -203,8 +210,10 @@ def read_pgn(
 
     Driver does pure metadata work (listing + split arithmetic); all IO and
     parsing run in executors via mapInPandas, batch_rows games per Arrow
-    batch. game_id is a content hash (stable across runs/partitionings —
-    Spark has no DuckDB-style rowid, SURVEY.md §1.3).
+    batch. The scan is one JVM ``range`` partition per split, with no
+    shuffle: partition i parses split i. game_id is a content hash (stable
+    across runs/partitionings — Spark has no DuckDB-style rowid, SURVEY.md
+    §1.3).
     """
     if isinstance(path, str):
         if os.path.isdir(path):
@@ -222,15 +231,13 @@ def read_pgn(
         raise FileNotFoundError(f"no PGN files under {path!r}")
 
     splits = _make_splits(paths, split_bytes)
-    splits_df = spark.createDataFrame(splits, "path string, start long, end long").repartition(
-        len(splits)
-    )
 
     def parse_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows: list[dict] = []
-            for path_, start_, end_ in pdf.itertuples(index=False):
-                for _, text in _iter_game_texts(path_, int(start_), int(end_)):
+            for split_id in pdf["id"]:
+                path_, start_, end_ = splits[split_id]
+                for _, text in _iter_game_texts(path_, start_, end_):
                     rows.append(_parse_game(text, path_))
                     if len(rows) >= batch_rows:
                         yield pd.DataFrame(rows, columns=[f.name for f in GAMES_SCHEMA.fields])
@@ -238,7 +245,7 @@ def read_pgn(
             if rows:
                 yield pd.DataFrame(rows, columns=[f.name for f in GAMES_SCHEMA.fields])
 
-    games = splits_df.mapInPandas(parse_partition, GAMES_SCHEMA)
+    games = spark.range(0, len(splits), 1, len(splits)).mapInPandas(parse_partition, GAMES_SCHEMA)
     return games.withColumn(
         "game_id", F.xxhash64("source_file", "Event", "Site", "White", "Black", "UTCDate", "UTCTime", "movetext")
     )

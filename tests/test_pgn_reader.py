@@ -5,8 +5,9 @@ exactly once regardless of split size)."""
 import random
 
 import pytest
+from pyspark.sql import functions as F
 
-from chess_lakehouse_spark.sources.pgn import read_pgn
+from chess_lakehouse_spark.sources.pgn import _make_splits, read_pgn
 
 CLEAN_GAME = """[Event "Test Open"]
 [Site "Testville"]
@@ -90,16 +91,47 @@ def _synth_game(i: int, rng: random.Random) -> str:
     )
 
 
-@pytest.mark.parametrize("split_bytes", [97, 1024, 10_000, 64 * 1024 * 1024])
-def test_splits_parse_each_game_exactly_once(spark, tmp_path, split_bytes):
+_SPLIT_SIZES = [97, 1024, 10_000, 64 * 1024 * 1024]
+
+
+def _write_synth_corpus(tmp_path, n: int = 200) -> tuple[str, dict[str, int]]:
+    """A synthetic one-file corpus and each game's first-byte offset, by Event."""
     rng = random.Random(7)
-    n = 200
+    games = [_synth_game(i, rng) for i in range(n)]
+    offsets, pos = {}, 0
+    for i, g in enumerate(games):
+        offsets[f"Synth {i}"] = pos
+        pos += len(g.encode()) + 1  # the "\n" separator
     p = tmp_path / "big.pgn"
-    p.write_text("\n".join(_synth_game(i, rng) for i in range(n)))
-    df = read_pgn(spark, str(p), split_bytes=split_bytes)
+    p.write_text("\n".join(games))
+    return str(p), offsets
+
+
+@pytest.mark.parametrize("split_bytes", _SPLIT_SIZES)
+def test_splits_parse_each_game_exactly_once(spark, tmp_path, split_bytes):
+    path, offsets = _write_synth_corpus(tmp_path)
+    n = len(offsets)
+    df = read_pgn(spark, path, split_bytes=split_bytes)
     events = [r["Event"] for r in df.select("Event").collect()]
     assert len(events) == n, f"expected {n} games, got {len(events)}"
     assert len(set(events)) == n, "duplicate games across splits"
+
+
+@pytest.mark.parametrize("split_bytes", _SPLIT_SIZES)
+def test_scan_is_one_range_partition_per_split(spark, tmp_path, split_bytes):
+    """The split list is planned on the JVM: no shuffle and no scan of
+    pickled Python rows, exactly one partition per split, and every game
+    parsed by the partition of the split that holds its first byte."""
+    path, offsets = _write_synth_corpus(tmp_path)
+    n_splits = len(_make_splits([path], split_bytes))
+    df = read_pgn(spark, path, split_bytes=split_bytes)
+    rows = df.select("Event", F.spark_partition_id().alias("pid")).collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan and "Scan ExistingRDD" not in plan, plan
+    assert df.rdd.getNumPartitions() == n_splits
+    assert {r["Event"]: r["pid"] for r in rows} == {
+        e: off // split_bytes for e, off in offsets.items()
+    }
 
 
 def test_percent_escape_lines_dropped_on_reader_path(spark, tmp_path):

@@ -197,6 +197,27 @@ def test_write_partitioned_counts_rows_written(spark, tmp_path):
     assert write_partitioned(df.where("id < 0"), str(tmp_path / "b"), ("p",), sort_cols=["id"]) == {"rows": 0}
 
 
+def test_write_partitioned_spreads_small_lake_over_tasks(spark, tmp_path):
+    """Under AQE, a small lake is still written by more than one task (an
+    explicit shuffle width is not coalesced by bytes), and hashing on the
+    partition columns keeps exactly one file per Hive partition."""
+    from chess_lakehouse_spark.operators.publish import write_partitioned
+
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    n_parts = 2 * spark.sparkContext.defaultParallelism + 3
+    df = spark.range(200).select("id", (F.col("id") % n_parts).alias("p"))
+    out = tmp_path / "lake"
+    assert write_partitioned(df, str(out), ("p",)) == {"rows": 200}
+    part_dirs = sorted(d for d in os.listdir(out) if d.startswith("p="))
+    assert len(part_dirs) == n_parts
+    task_ids = set()
+    for d in part_dirs:
+        files = [f for f in os.listdir(out / d) if f.endswith(".parquet")]
+        assert len(files) == 1, (d, files)
+        task_ids.add(files[0].split("-")[1])
+    assert len(task_ids) > 1, task_ids
+
+
 def test_load_openings_recursive_glob(spark, tmp_path):
     from chess_lakehouse_spark.sources.openings import load_openings
 
