@@ -1,9 +1,11 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Entry points for an external verification harness (PySpark target).
 
-The driver's verify runs ``entry(spark)`` as a smoke check, runs
-each ``queries()[name]`` at sf=0.01 and compares it against the
-matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
-order-insensitive value-hash → CORRECTNESS_r{N}.json).
+A harness runs ``entry(spark)`` as a smoke check, then runs each
+``queries()[name]`` at sf=0.01 and compares it against the matching
+``oracle_sql()[name]`` run by DuckDB (row count + schema +
+order-insensitive value hash). ``scripts/verify_local.py`` makes the
+same comparison locally over every registered query; that full run is
+the correctness gate.
 
 All implementations live in the ``chess_lakehouse_spark`` package
 (suite/ holds the query pairs; operators/, functions/, sources/,

@@ -61,13 +61,17 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one lake table. Plain `spark.read.parquet` keeps the scan inside
     the vectorized Parquet reader with predicate pushdown + column pruning.
 
-    PRECONDITION (r15 ADVICE): a table path is schema-IMMUTABLE for the
-    lifetime of a Spark application — the memoized schema is served for
-    every subsequent read, and an explicit schema disables Spark's
-    inference/mismatch detection, so a same-path rewrite with a different
-    schema would read silent NULLs for renamed columns. The fixture lake
-    honors this by construction (TESTDATA.md: read-only per sf_dir); a
-    test that must rewrite a path should call :func:`clear_schema_cache`.
+    PRECONDITION (r15 ADVICE): a table path is IMMUTABLE for the lifetime
+    of a Spark application — schema AND file set. The memoized schema is
+    served for every subsequent read, and an explicit schema disables
+    Spark's inference/mismatch detection, so a same-path rewrite with a
+    different schema would read silent NULLs for renamed columns. The
+    memoized frame also pins the path's file listing at its first load:
+    files appended, removed or replaced afterwards, even with the same
+    schema, stay invisible to every later call. The fixture lake honors
+    this by construction (TESTDATA.md: read-only per sf_dir); code that
+    changes a table path's files must call :func:`clear_schema_cache`
+    before reading it again.
 
     events.ts is TIMESTAMP(NANOS) in the fixture Parquet; with
     ``spark.sql.legacy.parquet.nanosAsLong`` it arrives as a nanosecond long
@@ -108,8 +112,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def clear_schema_cache() -> None:
     """Drop every memoized schema AND constructed frame (all sessions, all
-    paths) — for tests or tooling that rewrite a table path in place, which
-    violates load_table's immutability precondition."""
+    paths) — for tests or tooling that rewrite or append to a table path,
+    which violates load_table's immutability precondition."""
     _SCHEMA_CACHE.clear()
     _DF_CACHE.clear()
 

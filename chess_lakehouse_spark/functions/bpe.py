@@ -116,29 +116,31 @@ def bpe_train(
     vocab0 = _word_symbols(df, text_col).persist()
     vocab = vocab0
     merges: list[tuple[str, str]] = []
-    for r in range(n_merges):
-        pairs = vocab.select(
-            "n",
-            F.explode(
-                F.expr("zip_with(slice(syms, 1, size(syms) - 1), slice(syms, 2, size(syms) - 1),"
-                       " (a, b) -> named_struct('pa', a, 'pb', b))")
-            ).alias("p"),
-        )
-        best = (
-            pairs.groupBy("p.pa", "p.pb")
-            .agg(F.sum("n").alias("cnt"))
-            .orderBy(F.col("cnt").desc(), F.col("pa").asc(), F.col("pb").asc())
-            .limit(1)
-            .collect()
-        )
-        if not best or best[0]["cnt"] < min_pair_count:
-            break
-        pa, pb = best[0]["pa"], best[0]["pb"]
-        merges.append((pa, pb))
-        vocab = vocab.select("w", "n", _merge_expr(pa, pb).alias("syms"))
-        if (r + 1) % _CHECKPOINT_EVERY == 0:
-            vocab = vocab.localCheckpoint(eager=False)
-    vocab0.unpersist()
+    try:
+        for r in range(n_merges):
+            pairs = vocab.select(
+                "n",
+                F.explode(
+                    F.expr("zip_with(slice(syms, 1, size(syms) - 1), slice(syms, 2, size(syms) - 1),"
+                           " (a, b) -> named_struct('pa', a, 'pb', b))")
+                ).alias("p"),
+            )
+            best = (
+                pairs.groupBy("p.pa", "p.pb")
+                .agg(F.sum("n").alias("cnt"))
+                .orderBy(F.col("cnt").desc(), F.col("pa").asc(), F.col("pb").asc())
+                .limit(1)
+                .collect()
+            )
+            if not best or best[0]["cnt"] < min_pair_count:
+                break
+            pa, pb = best[0]["pa"], best[0]["pb"]
+            merges.append((pa, pb))
+            vocab = vocab.select("w", "n", _merge_expr(pa, pb).alias("syms"))
+            if (r + 1) % _CHECKPOINT_EVERY == 0:
+                vocab = vocab.localCheckpoint(eager=False)
+    finally:
+        vocab0.unpersist(blocking=True)
     return merges
 
 

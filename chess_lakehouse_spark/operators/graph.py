@@ -334,82 +334,3 @@ def pagerank(
     trans.unpersist()
     dangling_nodes.unpersist()
     return ranks
-
-
-def label_propagation(
-    edges: DataFrame,
-    n_iter: int,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-) -> DataFrame:
-    """Synchronous label-propagation community detection (Raghavan et al.
-    2007, "Near linear time algorithm to detect community structures in
-    large-scale networks" — public) over an undirected edge list, made
-    DETERMINISTIC: every node starts with its own id as label; each of the
-    ``n_iter`` fixed synchronous rounds relabels every node to the MODE of
-    its neighbors' labels with the (count DESC, label ASC) total order on
-    ties — no random node order, no asynchronous drift, so any engine /
-    partitioning / run produces the identical labelling and the whole
-    fixpoint unrolls into a SQL oracle (the kmeans/bpe unroll discipline).
-    Returns (node, community) for every node appearing in ``edges``,
-    where ``community`` is the smallest MEMBER id of the node's final
-    label group — a raw LPA label is an arbitrary identifier that can
-    leak across a bridge without merging the groups (a node of community
-    A can end up naming community B), so a final canonicalization pass
-    (one |nodes|-keyed groupBy + join — the connected_components
-    representative discipline) renames every label group to its own
-    min member.
-
-    Contrast with :func:`connected_components`: CC answers reachability
-    (min label floods the component); LPA's mode update lets DENSE
-    neighborhoods outvote smaller labels, so a bridge between two cliques
-    does not merge them — the community structure, not the component
-    structure (pinned divergent on a crafted two-clique bridge in tests).
-
-    Distribution contract (the pagerank/connected_components skeleton):
-    labels stay a distributed frame; each round is ONE keyed join of the
-    symmetrized edge list against the label frame + ONE map-combined
-    (node, label) count + ONE argmax aggregate — hub nodes absorb into
-    partial aggregation, nothing collects to the driver, and each round
-    materializes through an eager ``localCheckpoint`` so the iterated
-    plan stays constant-size. Fixed ``n_iter`` (LPA converges in a few
-    sweeps on social/crawl graphs — Raghavan et al. report ~5): callers
-    wanting a fixpoint raise it; every round costs the same one join.
-    Node ids must be integral (the argmax negates labels for the
-    struct-min total order) and non-negative."""
-    if n_iter < 1:
-        raise ValueError(f"label_propagation: n_iter must be >= 1, got {n_iter}")
-    integral = {"byte", "short", "int", "bigint"}
-    for c in (id_a, id_b):
-        dt = dict(edges.dtypes).get(c)
-        if dt not in integral:
-            raise ValueError(
-                f"label_propagation: node id column {c!r} has type {dt!r} "
-                "but the mode argmax requires an integral id — map string "
-                "keys through a dense integer id first"
-            )
-    sym = edges.select(F.col(id_a).alias("node"), F.col(id_b).alias("nb")).union(
-        edges.select(F.col(id_b).alias("node"), F.col(id_a).alias("nb"))
-    )
-    labels = (
-        sym.select("node").distinct().withColumn("lbl", F.col("node"))
-    ).localCheckpoint()
-    for _ in range(n_iter):
-        votes = (
-            sym.join(
-                labels.select(F.col("node").alias("nb"), F.col("lbl").alias("nlbl")),
-                "nb",
-            )
-            .groupBy("node", "nlbl")
-            .agg(F.count(F.lit(1)).alias("c"))
-        )
-        # min over (-count, label): largest count, then smallest label
-        winner = votes.groupBy("node").agg(
-            F.min(F.struct((-F.col("c")).alias("nc"), F.col("nlbl").alias("l")))
-            .alias("w")
-        )
-        labels = winner.select(
-            "node", F.col("w.l").alias("lbl")
-        ).localCheckpoint()
-    canon = labels.groupBy("lbl").agg(F.min("node").alias("community"))
-    return labels.join(canon, "lbl").select("node", "community")

@@ -270,48 +270,50 @@ def kmeans_fit(
             "vid",
         )
     ).persist()
-    init_rows = (
-        vecs.select(
-            "vid", "dv", F.md5(F.concat(F.lit(f"{seed}|"), F.col("vid").cast("string"))).alias("mk")
-        )
-        .orderBy("mk", "vid")
-        .limit(k)
-        .collect()
-    )
-    cents: list[tuple[int, list[float]]] = [
-        (i, [float(x) for x in r.dv])
-        for i, r in enumerate(sorted(init_rows, key=lambda r: (r.mk, r.vid)))
-    ]
-    for _ in range(iters):
-        cent_arr = _centroid_literal_array(
-            [(cid, cv, _py_dot(cv, cv)) for cid, cv in cents]
-        )
-        assigned = vecs.withColumn("n2", dot(F.col("dv"), F.col("dv"))).withColumn(
-            "list_id", _ranked_lists(cent_arr, F.col("dv"), F.col("n2"))[0]["cid"]
-        )
-        mean_rows = (
-            assigned.select("list_id", F.posexplode("dv").alias("pos", "val"))
-            .groupBy("list_id", "pos")
-            .agg(
-                F.round(
-                    F.sum(F.col("val").cast("decimal(18,6)")).cast("double")
-                    / F.count(F.lit(1)),
-                    6,
-                ).alias("mval")
+    try:
+        init_rows = (
+            vecs.select(
+                "vid", "dv", F.md5(F.concat(F.lit(f"{seed}|"), F.col("vid").cast("string"))).alias("mk")
             )
+            .orderBy("mk", "vid")
+            .limit(k)
             .collect()
         )
-        by_cid: dict[int, dict[int, float]] = {}
-        for r in mean_rows:
-            by_cid.setdefault(int(r.list_id), {})[int(r.pos)] = float(r.mval)
-        cents = [
-            (
-                cid,
-                [d[p] for p in sorted(d)] if (d := by_cid.get(cid)) else old,
-            )
-            for cid, old in cents
+        cents: list[tuple[int, list[float]]] = [
+            (i, [float(x) for x in r.dv])
+            for i, r in enumerate(sorted(init_rows, key=lambda r: (r.mk, r.vid)))
         ]
-    vecs.unpersist()
+        for _ in range(iters):
+            cent_arr = _centroid_literal_array(
+                [(cid, cv, _py_dot(cv, cv)) for cid, cv in cents]
+            )
+            assigned = vecs.withColumn("n2", dot(F.col("dv"), F.col("dv"))).withColumn(
+                "list_id", _ranked_lists(cent_arr, F.col("dv"), F.col("n2"))[0]["cid"]
+            )
+            mean_rows = (
+                assigned.select("list_id", F.posexplode("dv").alias("pos", "val"))
+                .groupBy("list_id", "pos")
+                .agg(
+                    F.round(
+                        F.sum(F.col("val").cast("decimal(18,6)")).cast("double")
+                        / F.count(F.lit(1)),
+                        6,
+                    ).alias("mval")
+                )
+                .collect()
+            )
+            by_cid: dict[int, dict[int, float]] = {}
+            for r in mean_rows:
+                by_cid.setdefault(int(r.list_id), {})[int(r.pos)] = float(r.mval)
+            cents = [
+                (
+                    cid,
+                    [d[p] for p in sorted(d)] if (d := by_cid.get(cid)) else old,
+                )
+                for cid, old in cents
+            ]
+    finally:
+        vecs.unpersist(blocking=True)
     return cents
 
 
@@ -1402,81 +1404,83 @@ def pq_train(
             "vid",
         )
     ).persist()
-    init_rows = (
-        vecs.select(
-            "vid",
-            "dv",
-            F.md5(
-                F.concat(F.lit(f"{seed}|"), F.col("vid").cast("string"))
-            ).alias("mk"),
-        )
-        .orderBy("mk", "vid")
-        .limit(k)
-        .collect()
-    )
-    if not init_rows:
-        raise ValueError("pq_train: empty corpus")
-    dim = len(init_rows[0].dv)
-    if dim % m != 0:
-        raise ValueError(
-            f"pq_train: m={m} must divide the vector dim {dim}"
-        )
-    d = dim // m
-    seeds = sorted(init_rows, key=lambda r: (r.mk, r.vid))
-    books: list[list[tuple[int, list[float]]]] = [
-        [
-            (i, [float(x) for x in r.dv[s * d : (s + 1) * d]])
-            for i, r in enumerate(seeds)
-        ]
-        for s in range(m)
-    ]
-    for _ in range(iters):
-        per_slice = []
-        for s in range(m):
-            cent_arr = _centroid_literal_array(
-                [(cid, cv, _py_dot(cv, cv)) for cid, cv in books[s]]
+    try:
+        init_rows = (
+            vecs.select(
+                "vid",
+                "dv",
+                F.md5(
+                    F.concat(F.lit(f"{seed}|"), F.col("vid").cast("string"))
+                ).alias("mk"),
             )
-            sub = F.slice(F.col("dv"), s * d + 1, d)
-            per_slice.append(
-                F.struct(
-                    F.lit(s).alias("s"),
-                    _ranked_lists(cent_arr, sub, dot(sub, sub))[0]["cid"].alias(
-                        "list_id"
-                    ),
-                    sub.alias("sv"),
-                )
-            )
-        mean_rows = (
-            vecs.select(F.explode(F.array(*per_slice)).alias("a"))
-            .select("a.s", "a.list_id", F.posexplode("a.sv").alias("pos", "val"))
-            .groupBy("s", "list_id", "pos")
-            .agg(
-                F.round(
-                    F.sum(F.col("val").cast("decimal(18,6)")).cast("double")
-                    / F.count(F.lit(1)),
-                    6,
-                ).alias("mval")
-            )
+            .orderBy("mk", "vid")
+            .limit(k)
             .collect()
         )
-        by_key: dict[tuple[int, int], dict[int, float]] = {}
-        for r in mean_rows:
-            by_key.setdefault((int(r.s), int(r.list_id)), {})[int(r.pos)] = float(
-                r.mval
+        if not init_rows:
+            raise ValueError("pq_train: empty corpus")
+        dim = len(init_rows[0].dv)
+        if dim % m != 0:
+            raise ValueError(
+                f"pq_train: m={m} must divide the vector dim {dim}"
             )
-        books = [
+        d = dim // m
+        seeds = sorted(init_rows, key=lambda r: (r.mk, r.vid))
+        books: list[list[tuple[int, list[float]]]] = [
             [
-                (
-                    cid,
-                    [dd[p] for p in sorted(dd)]
-                    if (dd := by_key.get((s, cid)))
-                    else old,
-                )
-                for cid, old in books[s]
+                (i, [float(x) for x in r.dv[s * d : (s + 1) * d]])
+                for i, r in enumerate(seeds)
             ]
             for s in range(m)
         ]
-    vecs.unpersist()
+        for _ in range(iters):
+            per_slice = []
+            for s in range(m):
+                cent_arr = _centroid_literal_array(
+                    [(cid, cv, _py_dot(cv, cv)) for cid, cv in books[s]]
+                )
+                sub = F.slice(F.col("dv"), s * d + 1, d)
+                per_slice.append(
+                    F.struct(
+                        F.lit(s).alias("s"),
+                        _ranked_lists(cent_arr, sub, dot(sub, sub))[0]["cid"].alias(
+                            "list_id"
+                        ),
+                        sub.alias("sv"),
+                    )
+                )
+            mean_rows = (
+                vecs.select(F.explode(F.array(*per_slice)).alias("a"))
+                .select("a.s", "a.list_id", F.posexplode("a.sv").alias("pos", "val"))
+                .groupBy("s", "list_id", "pos")
+                .agg(
+                    F.round(
+                        F.sum(F.col("val").cast("decimal(18,6)")).cast("double")
+                        / F.count(F.lit(1)),
+                        6,
+                    ).alias("mval")
+                )
+                .collect()
+            )
+            by_key: dict[tuple[int, int], dict[int, float]] = {}
+            for r in mean_rows:
+                by_key.setdefault((int(r.s), int(r.list_id)), {})[int(r.pos)] = float(
+                    r.mval
+                )
+            books = [
+                [
+                    (
+                        cid,
+                        [dd[p] for p in sorted(dd)]
+                        if (dd := by_key.get((s, cid)))
+                        else old,
+                    )
+                    for cid, old in books[s]
+                ]
+                for s in range(m)
+            ]
+    finally:
+        vecs.unpersist(blocking=True)
     return books
 
 

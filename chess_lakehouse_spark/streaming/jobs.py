@@ -1931,44 +1931,3 @@ def stream_rank_sketch(
         .start()
     )
     q.awaitTermination()
-
-
-def stream_ivfpq_append(
-    new_rows: DataFrame,
-    index_dir: str,
-    checkpoint_dir: str,
-    id_col: str,
-    vec_col: str,
-) -> None:
-    """Streaming maintenance of a published IVF+PQ lake index
-    (operators/similarity.py — the twelfth stateful loop, the
-    stream_rollup structural-idempotency class, closing the one staged
-    index lifecycle that had no streaming twin): every micro-batch of
-    NEW vectors folds into the live index via
-    :func:`append_ivfpq_index` — assigned and PQ-encoded with the
-    index's OWN sidecar models (build, append and stream-append can
-    never disagree), landed as its own ``batch_id=b<N>`` partition via
-    the rename-aside swap in O(delta). The fold reads no other batch's
-    state, so a crash-replayed micro-batch re-publishes its partition
-    value-identically (append_ivfpq_index's corrected-re-delivery
-    semantics — reusing a batch_id REPLACES that batch). Serving stays
-    :func:`search_ivfpq_index` over the same directory, pruning across
-    every batch level unchanged — the streamed index serves
-    bit-identically to one batch publish over the union (pinned in
-    tests/test_r17_candidates.py). Rebuilds (new models) must go
-    through ``publish_ivfpq_index``, which atomically replaces every
-    appended batch — the centroid-consistency contract."""
-    from chess_lakehouse_spark.operators.similarity import append_ivfpq_index
-
-    def _batch(batch_df: DataFrame, batch_id: int) -> None:
-        append_ivfpq_index(
-            batch_df, index_dir, id_col, vec_col, f"b{batch_id}"
-        )
-
-    q = (
-        new_rows.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()

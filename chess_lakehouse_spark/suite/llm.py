@@ -747,13 +747,6 @@ EXACT_QUANTILES_ORACLE = f"""
 """
 
 
-# --------------------------------------------------------------------------
-# r12 staging candidates (built in r11; registration happens only at the
-# r12 window re-plan — the STAGED_CANDIDATES manifest at the bottom of
-# this module is the machine-checked hand-off).
-# --------------------------------------------------------------------------
-
-
 def q_score_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global percent-rank calibration in EXACT integer millionths
     (operators/relational.py:global_percent_rank): every order mapped to
@@ -2022,12 +2015,9 @@ def q_shard_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
     return shard_assignments(docs, "doc_id", SHARD_N, seed=SHARD_SEED)
 
 
-# ------------------------------------------ r8-registered gate queries
-# Registered in r8 per the staged plan: the oracle templates were
-# promoted from tests/test_span_dedup.py / test_gopher.py / test_bm25.py
-# (which now import the suite templates, the bm25_topk anti-divergence
-# pattern) and each query proved exact value parity against its
-# gating-form oracle in tests/test_r8_candidates.py before registration.
+# ---------------------------------------------------------- gate queries
+# tests/test_span_dedup.py / test_gopher.py / test_bm25.py import these
+# oracle templates (the bm25_topk anti-divergence pattern).
 
 SPAN_DEDUP_K = 3
 #: fixture-tuned Gopher thresholds (see tests/test_gopher.py — the
@@ -2174,10 +2164,8 @@ def q_bm25_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
     the term predicate reaches the clustered postings' footers —
     branch-attributed fences in SCALE.md r15).
 
-    Registered at the r10 window re-plan (suite/__init__.py) and
-    hash-green in CORRECTNESS_r10. Exact value parity additionally
-    against BM25_STAGED_ORACLE pinned in tests/test_bm25.py at two
-    scales + cold-JVM."""
+    Exact value parity against BM25_STAGED_ORACLE pinned in
+    tests/test_bm25.py at two scales + cold-JVM."""
     import os
 
     from chess_lakehouse_spark.functions.text import (
@@ -2220,10 +2208,8 @@ def q_rollup_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle is the direct GROUP BY over the full raw table, so the
     hash-match certifies build+append+merge+serve end to end.
 
-    Registered at the r11 window re-plan (suite/__init__.py) and
-    hash-green in CORRECTNESS_r11. Exact value parity additionally
-    against ROLLUP_STAGED_ORACLE pinned in tests/test_rollup.py at two
-    scales + cold-JVM."""
+    Exact value parity against ROLLUP_STAGED_ORACLE pinned in
+    tests/test_rollup.py at two scales + cold-JVM."""
     from chess_lakehouse_spark.operators.rollup import (
         append_rollup,
         build_rollup,
@@ -2277,10 +2263,8 @@ def q_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     funnel entry in exact integer microseconds. K-1 user-keyed joins +
     map-combined groupBys, type filters pushed to the scan.
 
-    Registered at the r11 window re-plan (suite/__init__.py) and
-    hash-green in CORRECTNESS_r11. Exact value parity additionally
-    against FUNNEL_ORACLE pinned in tests/test_funnel.py at two scales +
-    cold-JVM."""
+    Exact value parity against FUNNEL_ORACLE pinned in tests/test_funnel.py
+    at two scales + cold-JVM."""
     from chess_lakehouse_spark.operators.relational import funnel
 
     apply_runtime_conf(spark)
@@ -2331,10 +2315,8 @@ def q_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     z-score would ride the ROUND-of-transcendental risk. NULL until the
     trailing window is full.
 
-    Registered at the r11 window re-plan (suite/__init__.py) and
-    hash-green in CORRECTNESS_r11. Exact value parity additionally
-    against ANOMALY_ORACLE pinned in tests/test_anomaly.py at two scales
-    + cold-JVM."""
+    Exact value parity against ANOMALY_ORACLE pinned in
+    tests/test_anomaly.py at two scales + cold-JVM."""
     from chess_lakehouse_spark.operators.relational import integer_zscore_flags
     from chess_lakehouse_spark.operators.rollup import time_bucket
 
@@ -2387,10 +2369,8 @@ def q_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     min to max, forward-filled counts, is_filled markers. Grid explode
     is output-sized; the fill is one window per series.
 
-    Registered at the r11 window re-plan (suite/__init__.py) and
-    hash-green in CORRECTNESS_r11. Exact value parity additionally
-    against GAPFILL_ORACLE pinned in tests/test_gapfill.py at two scales
-    + cold-JVM."""
+    Exact value parity against GAPFILL_ORACLE pinned in
+    tests/test_gapfill.py at two scales + cold-JVM."""
     from chess_lakehouse_spark.operators.relational import gapfill_series
     from chess_lakehouse_spark.operators.rollup import time_bucket
 
@@ -2448,10 +2428,8 @@ def q_corpus_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     one shingle-keyed self-join bounded by |groups| per hash; nothing
     all-pairs in documents.
 
-    Registered at the r11 window re-plan (suite/__init__.py) and
-    hash-green in CORRECTNESS_r11. Exact value parity additionally
-    against CORPUS_OVERLAP_ORACLE pinned in tests/test_corpus_overlap.py
-    at two scales + cold-JVM."""
+    Exact value parity against CORPUS_OVERLAP_ORACLE pinned in
+    tests/test_corpus_overlap.py at two scales + cold-JVM."""
     from chess_lakehouse_spark.operators.dedup import corpus_overlap_matrix
 
     apply_runtime_conf(spark)
@@ -2525,9 +2503,7 @@ def q_classifier_hashed(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-combined doc sum through the ROUND->DECIMAL(18,6) chain, margin
     and keep in exact DECIMAL — no float-sum order, no transcendental.
 
-    Registered at the r10 window re-plan (suite/__init__.py) and
-    hash-green in CORRECTNESS_r10. Exact value parity additionally
-    against HASHED_CLASSIFIER_ORACLE pinned in
+    Exact value parity against HASHED_CLASSIFIER_ORACLE pinned in
     tests/test_hashed_classifier.py at two scales + cold-JVM."""
     from chess_lakehouse_spark.operators.classify import (
         hashed_classifier_margins,
@@ -2570,10 +2546,8 @@ def q_contamination_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     cosine re-check at SEM_CONTAM_THRESHOLD. Returns
     (corpus_id, eval_id, sim).
 
-    Registered at the r10 window re-plan (suite/__init__.py) and
-    hash-green in CORRECTNESS_r10. Exact value parity additionally
-    against SEM_CONTAM_ORACLE pinned in tests/test_semantic_contamination.py
-    at two scales + cold-JVM."""
+    Exact value parity against SEM_CONTAM_ORACLE pinned in
+    tests/test_semantic_contamination.py at two scales + cold-JVM."""
     from chess_lakehouse_spark.operators.similarity import semantic_contamination
 
     apply_runtime_conf(spark)
@@ -2618,10 +2592,8 @@ def q_hamming64(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the brute-force oracle checks RECALL as well as precision.
     Returns (id_a, id_b, hamming).
 
-    Registered at the r10 window re-plan (suite/__init__.py) and
-    hash-green in CORRECTNESS_r10. Exact value parity additionally
-    against HAMMING64_ORACLE pinned in tests/test_phash.py at two scales
-    + cold-JVM."""
+    Exact value parity against HAMMING64_ORACLE pinned in
+    tests/test_phash.py at two scales + cold-JVM."""
     from chess_lakehouse_spark.operators.dedup import hamming_near_pairs
 
     apply_runtime_conf(spark)
@@ -2666,10 +2638,8 @@ def q_badwords(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-document boolean projection — pure codegen, rides the scan.
     Returns (doc_id, keep_doc).
 
-    Registered at the r11 window re-plan (suite/__init__.py) and
-    hash-green in CORRECTNESS_r11. Exact value parity additionally
-    against BADWORDS_ORACLE pinned in tests/test_gopher.py at two scales
-    + cold-JVM."""
+    Exact value parity against BADWORDS_ORACLE pinned in
+    tests/test_gopher.py at two scales + cold-JVM."""
     from chess_lakehouse_spark.functions.text import badwords_gate
 
     apply_runtime_conf(spark)
@@ -2816,9 +2786,8 @@ def q_lm_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
     and ZERO training-corpus access (functions/text.py:build_lm,
     lm_score_from).
 
-    REGISTERED as `lm_staged` at the r9 window re-plan; exact value
-    parity against LM_STAGED_ORACLE pinned in tests/test_lm_staged.py
-    (driver-safe types) before registration."""
+    Exact value parity against LM_STAGED_ORACLE pinned in
+    tests/test_lm_staged.py (allowlisted output types)."""
     from chess_lakehouse_spark.functions.text import build_lm, lm_score_from
 
     import os
@@ -2879,9 +2848,7 @@ def q_pii_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-publication audit, over deterministically PII-laced text so
     every pattern actually fires.
 
-    REGISTERED as `pii_scan` at the r9 window re-plan; exact parity
-    against PII_SCAN_ORACLE pinned in tests/test_pii_scan.py before
-    registration."""
+    Exact parity against PII_SCAN_ORACLE pinned in tests/test_pii_scan.py."""
     from chess_lakehouse_spark.functions.text import pii_counts
 
     apply_runtime_conf(spark)
@@ -2981,9 +2948,8 @@ def q_html_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     preprocessing step, hash-checked on the full cleaned string plus its
     length.
 
-    REGISTERED as `html_strip` at the r9 window re-plan; exact parity
-    against HTML_STRIP_ORACLE pinned in tests/test_strip_html.py before
-    registration."""
+    Exact parity against HTML_STRIP_ORACLE pinned in
+    tests/test_strip_html.py."""
     from chess_lakehouse_spark.functions.text import strip_html
 
     apply_runtime_conf(spark)
@@ -3721,12 +3687,11 @@ def bm25_batch_oracle_sql(
     return BM25_BATCH_ORACLE_TPL.format(queries_cte=queries_cte, k1=k1, b=b, k=k)
 
 
-#: DuckDB oracle for the q_bm25_staged r10 candidate — the RAW-table
+#: DuckDB oracle for q_bm25_staged — the RAW-table
 #: batch-BM25 SQL over the BM25_STAGED_MOD query slice: the staged-index
 #: serving path must return exactly what one pass over the raw corpus
 #: computes (the lake_skipping_read gating pattern). Defined HERE per
-#: the anti-divergence pattern; tests/test_bm25.py imports this and
-#: registration at r10 is a dict + window edit.
+#: the anti-divergence pattern; tests/test_bm25.py imports this.
 BM25_STAGED_ORACLE = bm25_batch_oracle_sql(
     "queries AS (SELECT doc_id AS query_id, text AS qtext FROM documents "
     f"WHERE doc_id % {BM25_STAGED_MOD} = 0)",
@@ -3783,8 +3748,7 @@ SELECT doc_id, CAST(z AS DOUBLE) AS margin, z >= 0 AS keep FROM zt
 """
 
 
-#: Canonical q_classifier_hashed oracle (tests import THIS; registration
-#: at r10 is a dict + window edit).
+#: Canonical q_classifier_hashed oracle (tests import THIS).
 HASHED_CLASSIFIER_ORACLE = hashed_classifier_oracle_sql()
 
 
@@ -3816,8 +3780,7 @@ SELECT corpus_id, eval_id, sim FROM (
 """
 
 
-#: Canonical q_contamination_semantic oracle (tests import THIS;
-#: registration at r10 is a dict + window edit).
+#: Canonical q_contamination_semantic oracle (tests import THIS).
 SEM_CONTAM_ORACLE = semantic_contamination_oracle_sql()
 
 
@@ -3886,10 +3849,8 @@ def q_dedup_edit(spark: SparkSession, sf_dir: str) -> DataFrame:
     tractable, and byte-level (DuckDB) vs char-level (Spark) levenshtein
     agree exactly on ASCII. The Spark side runs the real gram-keyed plan.
 
-    Registered at the r11 window re-plan (suite/__init__.py) and
-    hash-green in CORRECTNESS_r11. Exact value parity additionally
-    against EDIT_DIST_ORACLE pinned in tests/test_edit_join.py at two
-    scales + cold-JVM."""
+    Exact value parity against EDIT_DIST_ORACLE pinned in
+    tests/test_edit_join.py at two scales + cold-JVM."""
     from chess_lakehouse_spark.operators.dedup import edit_distance_pairs
 
     apply_runtime_conf(spark)
@@ -3903,11 +3864,10 @@ def q_dedup_edit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Canonical q_dedup_edit oracle (tests import THIS; registration at a
-#: window re-plan is a dict + window edit). Brute-force with the IMPLIED
-#: |len diff| <= d predicate (ed(a,b) >= |len diff|, so adding it changes
-#: nothing) — the independent check the gram-filtered Spark plan is graded
-#: against; dist computed once in a subquery so the sf0.1 local verify
+#: Canonical q_dedup_edit oracle (tests import THIS). Brute-force with the
+#: IMPLIED |len diff| <= d predicate (ed(a,b) >= |len diff|, so adding it
+#: changes nothing) — the independent check the gram-filtered Spark plan is
+#: graded against; dist computed once in a subquery so the sf0.1 local verify
 #: doesn't pay the DP twice.
 EDIT_DIST_ORACLE = f"""
     WITH s AS (
@@ -3942,10 +3902,8 @@ def q_cms_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     counter is a plain SUM over md5-derived buckets, so the sketch is
     exactly oracle-able.
 
-    Registered at the r11 window re-plan (suite/__init__.py) and
-    hash-green in CORRECTNESS_r11. Exact value parity additionally
-    against CMS_FREQ_ORACLE pinned in tests/test_cms.py at two scales +
-    cold-JVM."""
+    Exact value parity against CMS_FREQ_ORACLE pinned in tests/test_cms.py
+    at two scales + cold-JVM."""
     from chess_lakehouse_spark.operators.dedup import tokens
     from chess_lakehouse_spark.operators.sketches import (
         CmsSpec,
@@ -3975,10 +3933,9 @@ _CMS_BUCKET = (
     f"CAST(r.i AS VARCHAR), '|', {{term}})), 1, 15)) AS BIGINT) % {CMS_WIDTH}"
 )
 
-#: Canonical q_cms_freq oracle (tests import THIS; registration at a
-#: window re-plan is a dict + window edit). The counters and estimates
-#: are recomputed from scratch in SQL with the same md5 bucket hash — an
-#: independent arithmetic path to the identical integers.
+#: Canonical q_cms_freq oracle (tests import THIS). The counters and
+#: estimates are recomputed from scratch in SQL with the same md5 bucket hash
+#: — an independent arithmetic path to the identical integers.
 CMS_FREQ_ORACLE = rf"""
     WITH tok AS (SELECT unnest({_TOKS}) AS term FROM documents),
     occ AS (SELECT term FROM tok WHERE term <> ''),
@@ -4029,10 +3986,8 @@ def q_substring_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruned serve); the ORACLE is the honest
     brute contains() scan the index path must reproduce exactly.
 
-    Registered at the r11 window re-plan (suite/__init__.py) and
-    hash-green in CORRECTNESS_r11. Exact value parity additionally
-    against SUBSTR_SEARCH_ORACLE pinned in tests/test_substring_index.py
-    at two scales + cold-JVM."""
+    Exact value parity against SUBSTR_SEARCH_ORACLE pinned in
+    tests/test_substring_index.py at two scales + cold-JVM."""
     from chess_lakehouse_spark.functions.text import (
         build_substring_index,
         substring_search_from_index,
@@ -4056,10 +4011,9 @@ def q_substring_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Canonical q_substring_search oracle (tests import THIS; registration at
-#: a window re-plan is a dict + window edit): the brute contains() scan —
-#: completely index-free, so it checks the posting-intersection path's
-#: exactness rather than mirroring it.
+#: Canonical q_substring_search oracle (tests import THIS): the brute
+#: contains() scan — completely index-free, so it checks the
+#: posting-intersection path's exactness rather than mirroring it.
 SUBSTR_SEARCH_ORACLE = f"""
     WITH qs AS (
       SELECT doc_id AS qid,
@@ -4101,10 +4055,8 @@ def q_session_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     event count), and the positive-association flag is the exact integer
     comparison n_ab·n_sessions > n_a·n_b — no float lift ever computed.
 
-    Registered at the r11 window re-plan (suite/__init__.py) and
-    hash-green in CORRECTNESS_r11. Exact value parity additionally
-    against SESSION_PAIRS_ORACLE pinned in tests/test_session_pairs.py
-    at two scales + cold-JVM."""
+    Exact value parity against SESSION_PAIRS_ORACLE pinned in
+    tests/test_session_pairs.py at two scales + cold-JVM."""
     from chess_lakehouse_spark.operators.relational import session_cooccurrence
 
     apply_runtime_conf(spark)
@@ -4116,10 +4068,9 @@ def q_session_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Canonical q_session_pairs oracle (tests import THIS; registration at a
-#: window re-plan is a dict + window edit): the q_sessionize lag/running-
-#: sum CTE shape with the SAME (ts, event_id) total order in BOTH
-#: windows, distinct session-type sets, a<b self-join pairs, and the
+#: Canonical q_session_pairs oracle (tests import THIS): the q_sessionize
+#: lag/running-sum CTE shape with the SAME (ts, event_id) total order in
+#: BOTH windows, distinct session-type sets, a<b self-join pairs, and the
 #: integer lift comparison.
 SESSION_PAIRS_ORACLE = f"""
     WITH x AS (
@@ -4179,10 +4130,8 @@ def q_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer millionths (DECIMAL floor division), session boundaries never
     bridged.
 
-    Registered at the r11 window re-plan (suite/__init__.py) and
-    hash-green in CORRECTNESS_r11. Exact value parity additionally
-    against EVENT_TRANSITIONS_ORACLE pinned in tests/test_session_pairs.py
-    at two scales + cold-JVM."""
+    Exact value parity against EVENT_TRANSITIONS_ORACLE pinned in
+    tests/test_session_pairs.py at two scales + cold-JVM."""
     from chess_lakehouse_spark.operators.relational import event_transitions
 
     apply_runtime_conf(spark)
@@ -4193,9 +4142,9 @@ def q_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Canonical q_event_transitions oracle (tests import THIS; registration
-#: at a window re-plan is a dict + window edit): the shared session CTEs,
-#: an in-session lag for the adjacency, exact HUGEINT floor-division ppm.
+#: Canonical q_event_transitions oracle (tests import THIS): the shared
+#: session CTEs, an in-session lag for the adjacency, exact HUGEINT
+#: floor-division ppm.
 EVENT_TRANSITIONS_ORACLE = f"""
     WITH x AS (
       SELECT user_id, event_id, event_type, epoch_us(ts) AS ts_us,
@@ -5409,20 +5358,14 @@ ORACLES = {
           FROM canon
         ) WHERE rk <= {URL_CAP_N}
     """,
-    # registered at the r9 window re-plan (suite/__init__.py): the three
-    # r8-staged candidates plus the learned-gate serving path
     "lm_staged": LM_STAGED_ORACLE,
     "pii_scan": PII_SCAN_ORACLE,
     "html_strip": HTML_STRIP_ORACLE,
     "classifier_serve": classifier_oracle_sql(),
-    # registered at the r10 window re-plan (suite/__init__.py): the four
-    # r9-staged candidates, promoted verbatim from STAGED_CANDIDATES
     "bm25_staged": BM25_STAGED_ORACLE,
     "classifier_hashed": HASHED_CLASSIFIER_ORACLE,
     "contamination_semantic": SEM_CONTAM_ORACLE,
     "dedup_hamming64": HAMMING64_ORACLE,
-    # registered at the r11 window re-plan (suite/__init__.py): the
-    # sixteen staged candidates, promoted verbatim from STAGED_CANDIDATES
     "badwords_gate": BADWORDS_ORACLE,
     "rollup_staged": ROLLUP_STAGED_ORACLE,
     "corpus_overlap": CORPUS_OVERLAP_ORACLE,
@@ -5439,11 +5382,6 @@ ORACLES = {
     "group_quantiles": GROUP_QUANTILES_ORACLE,
     "salted_join": SALTED_JOIN_ORACLE,
     "gate_attribution": GATE_ATTRIBUTION_ORACLE,
-    # registered at the r12 window re-plan (suite/__init__.py): eight of
-    # the eleven r11-staged candidates, promoted verbatim from
-    # STAGED_CANDIDATES (the remaining three — upsample_epochs,
-    # user_growth, interleave_sources — are defined below this dict and
-    # join via the ORACLES.update alongside their definitions)
     "bloom_gate_table": BLOOM_GATE_TABLE_ORACLE,
     "score_percentile": SCORE_PERCENTILE_ORACLE,
     "robust_zscore": ROBUST_ZSCORE_ORACLE,
@@ -5531,13 +5469,10 @@ QUERIES = {
     "pii_scan": q_pii_scan,
     "html_strip": q_html_strip,
     "classifier_serve": q_classifier_serve,
-    # registered at the r10 window re-plan (suite/__init__.py)
     "bm25_staged": q_bm25_staged,
     "classifier_hashed": q_classifier_hashed,
     "contamination_semantic": q_contamination_semantic,
     "dedup_hamming64": q_hamming64,
-    # registered at the r11 window re-plan (suite/__init__.py): the
-    # sixteen staged candidates, promoted verbatim from STAGED_CANDIDATES
     "badwords_gate": q_badwords,
     "rollup_staged": q_rollup_staged,
     "corpus_overlap": q_corpus_overlap,
@@ -5554,10 +5489,6 @@ QUERIES = {
     "group_quantiles": q_group_quantiles,
     "salted_join": q_salted_join,
     "gate_attribution": q_gate_attribution,
-    # registered at the r12 window re-plan (suite/__init__.py): eight of
-    # the eleven r11-staged candidates, promoted verbatim from
-    # STAGED_CANDIDATES (upsample_epochs / user_growth /
-    # interleave_sources are defined below and join via QUERIES.update)
     "bloom_gate_table": q_bloom_gate_table,
     "score_percentile": q_score_percentile,
     "robust_zscore": q_robust_zscore,
@@ -5570,8 +5501,8 @@ QUERIES = {
 
 
 # --------------------------------------------------------------------------
-# r11-built staging candidates (second batch): budgeted corpus repetition,
-# growth accounting, deterministic training-order interleave.
+# Budgeted corpus repetition, growth accounting, deterministic
+# training-order interleave.
 # --------------------------------------------------------------------------
 
 #: Global char budget for the epoch-upsampling recipe — sized so every
@@ -5595,10 +5526,8 @@ def q_upsample_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
     All-integer allocation (ANSI-safe), zero corpus shuffles (a
     |sources|-row plan broadcasts back; the explode is map-side).
 
-    Registered at the r12 window re-plan (suite/__init__.py); the
-    CORRECTNESS_r12 driver row is the gate. Exact value parity
-    against UPSAMPLE_EPOCHS_ORACLE pinned in tests/test_r12_candidates.py
-    at two scales + cold-JVM."""
+    Exact value parity against UPSAMPLE_EPOCHS_ORACLE pinned in
+    tests/test_r12_candidates.py at two scales + cold-JVM."""
     apply_runtime_conf(spark)
     from chess_lakehouse_spark.operators.sampling import upsample_epochs
 
@@ -5667,10 +5596,8 @@ def q_user_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     day is <= it, so the plan is two keyed aggregations plus a cumsum
     over the calendar-bounded |days| frame (the offsets-cumsum class).
 
-    Registered at the r12 window re-plan (suite/__init__.py); the
-    CORRECTNESS_r12 driver row is the gate. Exact value parity
-    against USER_GROWTH_ORACLE pinned in tests/test_r12_candidates.py
-    at two scales + cold-JVM."""
+    Exact value parity against USER_GROWTH_ORACLE pinned in
+    tests/test_r12_candidates.py at two scales + cold-JVM."""
     apply_runtime_conf(spark)
     from chess_lakehouse_spark.operators.relational import daily_user_growth
 
@@ -5711,10 +5638,8 @@ def q_interleave_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     repartition + broadcast offsets, never a single-partition window);
     both sort keys are unique, so every rank is exact and tie-free.
 
-    Registered at the r12 window re-plan (suite/__init__.py); the
-    CORRECTNESS_r12 driver row is the gate. Exact value parity
-    against INTERLEAVE_ORACLE pinned in tests/test_r12_candidates.py
-    at two scales + cold-JVM."""
+    Exact value parity against INTERLEAVE_ORACLE pinned in
+    tests/test_r12_candidates.py at two scales + cold-JVM."""
     apply_runtime_conf(spark)
     from chess_lakehouse_spark.operators.sampling import interleave_groups
 
@@ -5744,9 +5669,6 @@ INTERLEAVE_ORACLE = f"""
 """
 
 
-# registered at the r12 window re-plan (suite/__init__.py): the three
-# r11-staged candidates whose definitions sit below the main dicts —
-# promoted verbatim from STAGED_CANDIDATES, same entries, same oracles.
 QUERIES.update(
     {
         "upsample_epochs": q_upsample_epochs,
@@ -5770,8 +5692,7 @@ def q_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     digit string — no float log2, no drift at exact powers of two).
     One map-combined aggregation; (|sources| x ~64)-row output.
 
-    Registered at the r13 window re-plan (suite/__init__.py); exact
-    value parity against LENGTH_HISTOGRAM_ORACLE pinned in
+    Exact value parity against LENGTH_HISTOGRAM_ORACLE pinned in
     tests/test_r12_candidates.py at two scales + cold-JVM."""
     apply_runtime_conf(spark)
     from chess_lakehouse_spark.report import log2_length_histogram
@@ -5806,8 +5727,7 @@ def q_shard_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     handoff. One map-combined aggregate + a broadcast 1-row total;
     |shards| output rows at any corpus size.
 
-    Registered at the r13 window re-plan (suite/__init__.py); exact
-    value parity against SHARD_SKEW_ORACLE pinned in
+    Exact value parity against SHARD_SKEW_ORACLE pinned in
     tests/test_r12_candidates.py at two scales + cold-JVM."""
     apply_runtime_conf(spark)
     from chess_lakehouse_spark.operators.sampling import shard_balance_audit
@@ -5852,8 +5772,7 @@ def q_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     heterogeneous quality scales. Global rank rides global_sort_rank;
     group rank is one source-keyed window.
 
-    Registered at the r13 window re-plan (suite/__init__.py); exact
-    value parity against QUANTILE_NORMALIZE_ORACLE pinned in
+    Exact value parity against QUANTILE_NORMALIZE_ORACLE pinned in
     tests/test_r12_candidates.py at two scales + cold-JVM."""
     apply_runtime_conf(spark)
     from chess_lakehouse_spark.operators.relational import quantile_normalize
@@ -5899,11 +5818,10 @@ def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     join is on (query, candidate) identity only — no float similarity
     ever compared.
 
-    Registered at the r13 window re-plan (suite/__init__.py); exact
-    value parity against ANN_RECALL_ORACLE (built VERBATIM from the
-    registered knn_brute_force / knn_ivf oracle texts as CTEs — the
-    three definitions cannot drift) pinned in
-    tests/test_r12_candidates.py at two scales + cold-JVM."""
+    Exact value parity against ANN_RECALL_ORACLE (built VERBATIM from the
+    registered knn_brute_force / knn_ivf oracle texts as CTEs — the three
+    definitions cannot drift) pinned in tests/test_r12_candidates.py at two
+    scales + cold-JVM."""
     apply_runtime_conf(spark)
     from chess_lakehouse_spark.operators.similarity import ann_recall_report
 
@@ -5957,8 +5875,7 @@ def q_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     token count from the final vocab state (= rank-priority apply for
     training-corpus words; see _bpe_chain_ctes).
 
-    Registered at the r13 window re-plan (suite/__init__.py); exact
-    value parity against TOKENIZER_FERTILITY_ORACLE pinned in
+    Exact value parity against TOKENIZER_FERTILITY_ORACLE pinned in
     tests/test_r13_candidates.py at two scales + cold-JVM."""
     apply_runtime_conf(spark)
     from chess_lakehouse_spark.functions.bpe import bpe_apply, bpe_train
@@ -6059,8 +5976,7 @@ def q_dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus/target_cluster_size, and a larger k RAISES recall by
     shrinking each ball's boundary surface relative to its volume).
 
-    Registered at the r13 window re-plan (suite/__init__.py); exact
-    value parity against DEDUP_SEMDEDUP_ORACLE pinned in
+    Exact value parity against DEDUP_SEMDEDUP_ORACLE pinned in
     tests/test_r13_candidates.py at two scales + cold-JVM."""
     apply_runtime_conf(spark)
     from chess_lakehouse_spark.operators.similarity import semantic_dedup
@@ -6136,8 +6052,7 @@ def q_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     exit); the checkpoint is fresh per invocation, so every run drains
     the complete feeds in one availableNow pass.
 
-    Registered at the r13 window re-plan (suite/__init__.py); exact
-    value parity against STREAM_INTERVAL_JOIN_ORACLE pinned in
+    Exact value parity against STREAM_INTERVAL_JOIN_ORACLE pinned in
     tests/test_r13_candidates.py at two scales + cold-JVM."""
     import tempfile
 
@@ -6251,8 +6166,7 @@ def q_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     summary's bounds are additionally property-pinned in
     tests/test_r14_candidates.py across partitioning layouts.
 
-    Registered at the r13 window re-plan (suite/__init__.py); exact
-    value parity against HEAVY_HITTERS_ORACLE pinned in
+    Exact value parity against HEAVY_HITTERS_ORACLE pinned in
     tests/test_r14_candidates.py at two scales + cold-JVM."""
     apply_runtime_conf(spark)
     from chess_lakehouse_spark.functions.text import ws_tokens
@@ -6297,9 +6211,8 @@ def q_heavy_hitters_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
     staging the sketch may never change the audit verdict — exactly the
     bloom_gate_table discipline (same truth, different serving layout).
 
-    Registered at the r15 window re-plan: exact value parity pinned in tests/test_r14_candidates.py at two scales +
-    cold-JVM before registration.
-    """
+    Exact value parity pinned in tests/test_r14_candidates.py at two scales
+    + cold-JVM."""
     apply_runtime_conf(spark)
     from chess_lakehouse_spark.functions.text import ws_tokens
     from chess_lakehouse_spark.operators.sketches import (
@@ -6383,8 +6296,7 @@ def q_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     REGISTERED minhash pair CTEs verbatim (its `cand` stage) for the
     found side, so the production path and its audit cannot drift.
 
-    Registered at the r13 window re-plan (suite/__init__.py); exact
-    value parity against LSH_RECALL_ORACLE pinned in
+    Exact value parity against LSH_RECALL_ORACLE pinned in
     tests/test_r14_candidates.py at two scales + cold-JVM."""
     apply_runtime_conf(spark)
     from chess_lakehouse_spark.operators.dedup import (
@@ -6488,8 +6400,8 @@ def q_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     session; the sentinel's own session stays in (discarded) state and
     is additionally filtered from the read-back.
 
-    Registered at the r15 window re-plan: exact value parity against STREAM_SESSIONIZE_ORACLE pinned in
-    tests/test_r14_candidates.py at two scales + cold-JVM before registration."""
+    Exact value parity against STREAM_SESSIONIZE_ORACLE pinned in
+    tests/test_r14_candidates.py at two scales + cold-JVM."""
     import tempfile
 
     apply_runtime_conf(spark)
@@ -6593,8 +6505,8 @@ def q_stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch — and duplicate copies are value-identical, so survivor
     choice cannot matter).
 
-    Registered at the r15 window re-plan: exact value parity against STREAM_DEDUP_WATERMARK_ORACLE pinned in
-    tests/test_r14_candidates.py at two scales + cold-JVM before registration."""
+    Exact value parity against STREAM_DEDUP_WATERMARK_ORACLE pinned in
+    tests/test_r14_candidates.py at two scales + cold-JVM."""
     import tempfile
 
     apply_runtime_conf(spark)
@@ -6653,15 +6565,7 @@ STREAM_DEDUP_WATERMARK_ORACLE = """
 """
 
 
-#: Machine-checkable staging manifest: every gating candidate that is
-#: READY (suite-defined oracle, two-scale exact parity, cold-JVM ANSI
-#: run — see each function's docstring and test file) but NOT yet
-#: registered. A window re-plan moves entries from here into
-#: QUERIES/ORACLES verbatim; tests/test_suite_order.py enforces that
-#: names stay disjoint from the registered dicts, callables/oracles are
-#: well-formed, and registration REMOVES the entry (a query present in
-#: both would double-claim its verification state).
-#: Weighted-reservoir staging constants: k docs per source, weighted by
+#: Weighted-reservoir constants: k docs per source, weighted by
 #: n_chars (longer docs proportionally likelier), distinct seed so the
 #: sample is uncorrelated with the other gated hash samples.
 RESERVOIR_K = 5
@@ -6679,9 +6583,8 @@ def q_sample_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
     documented ROUND-of-a-transcendental accepted-risk class the gated
     lm_score already rides; ln parity is sweep-tested).
 
-    Registered at the r14 window re-plan: exact value parity against
-    SAMPLE_RESERVOIR_ORACLE pinned in tests/test_r15_candidates.py at
-    two scales + cold-JVM before registration."""
+    Exact value parity against SAMPLE_RESERVOIR_ORACLE pinned in
+    tests/test_r15_candidates.py at two scales + cold-JVM."""
     apply_runtime_conf(spark)
     from chess_lakehouse_spark.operators.sampling import (
         weighted_reservoir_per_group,
@@ -6712,7 +6615,7 @@ SAMPLE_RESERVOIR_ORACLE = f"""
 """
 
 
-#: Curriculum staging constants: three quality phases (top third first),
+#: Curriculum constants: three quality phases (top third first),
 #: distinct interleave seed.
 CURRICULUM_PHASES = 3
 CURRICULUM_SEED = 5
@@ -6730,9 +6633,8 @@ def q_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast offsets, never a single-partition global window), so a
     trainer cuts the best-first prefix at any token budget.
 
-    Registered at the r14 window re-plan: exact value parity against
-    CURRICULUM_ORDER_ORACLE pinned in tests/test_r15_candidates.py at
-    two scales + cold-JVM before registration."""
+    Exact value parity against CURRICULUM_ORDER_ORACLE pinned in
+    tests/test_r15_candidates.py at two scales + cold-JVM."""
     apply_runtime_conf(spark)
     from chess_lakehouse_spark.functions.text import quality_score, ws_tokens
     from chess_lakehouse_spark.operators.sampling import curriculum_order
@@ -6808,10 +6710,8 @@ def q_stream_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     never change the served truth — batch fold and stream fold must be
     indistinguishable at serve time).
 
-    Registered at the r14 window re-plan: exact value parity pinned in
-    tests/test_r15_candidates.py at two scales + cold-JVM before
-    registration.
-    """
+    Exact value parity pinned in tests/test_r15_candidates.py at two scales
+    + cold-JVM."""
     import tempfile
 
     apply_runtime_conf(spark)
@@ -6872,11 +6772,10 @@ def q_qc_card_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus_overlap stay in their own gated queries (stated split, not a
     silent drop).
 
-    Registered at the r14 window re-plan: exact value parity against
-    QC_CARD_SIGNALS_ORACLE (built from the REGISTERED gate_attribution /
-    length_histogram / shard_skew / vocab_topk oracle texts as CTEs —
-    the definitions cannot drift) pinned in tests/test_r15_candidates.py
-    at two scales + cold-JVM before registration."""
+    Exact value parity against QC_CARD_SIGNALS_ORACLE (built from the
+    REGISTERED gate_attribution / length_histogram / shard_skew / vocab_topk
+    oracle texts as CTEs — the definitions cannot drift) pinned in
+    tests/test_r15_candidates.py at two scales + cold-JVM."""
     apply_runtime_conf(spark)
     from chess_lakehouse_spark.report import qc_card_signals_tall
 
@@ -6891,7 +6790,7 @@ def q_qc_card_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Product-quantization staging constants: 2 slices x 8 codes, one
+#: Product-quantization constants: 2 slices x 8 codes, one
 #: unrolled k-means iteration (the oracle unrolls each slice's chain).
 PQ_M = 2
 PQ_K = 8
@@ -6913,11 +6812,9 @@ def q_knn_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     production). Probes are the same vec_id < {probes} rows the knn
     family uses; self-pairs excluded.
 
-    Registered at the r14 window re-plan: exact value parity against
-    KNN_PQ_ADC_ORACLE (each slice's k-means chain unrolled on the
-    sliced vectors — the knn_ivf_kmeans oracle discipline) pinned in
-    tests/test_r15_candidates.py at two scales + cold-JVM before
-    registration."""
+    Exact value parity against KNN_PQ_ADC_ORACLE (each slice's k-means chain
+    unrolled on the sliced vectors — the knn_ivf_kmeans oracle discipline)
+    pinned in tests/test_r15_candidates.py at two scales + cold-JVM."""
     apply_runtime_conf(spark)
     from chess_lakehouse_spark.operators.similarity import (
         pq_adc_topk,
@@ -7041,10 +6938,10 @@ def q_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     is exactly what the audit exists to surface; real embedding
     corpora cluster and the same audit prices (m, k) against them.
 
-    Registered at the r15 window re-plan: exact value parity against PQ_RECALL_ORACLE (built VERBATIM from
-    KNN_PQ_ADC_ORACLE and the registered knn_brute_force oracle text as
-    CTEs — the three definitions cannot drift) pinned in
-    tests/test_r15_candidates.py at two scales + cold-JVM before registration."""
+    Exact value parity against PQ_RECALL_ORACLE (built VERBATIM from
+    KNN_PQ_ADC_ORACLE and the registered knn_brute_force oracle text as CTEs
+    — the three definitions cannot drift) pinned in
+    tests/test_r15_candidates.py at two scales + cold-JVM."""
     apply_runtime_conf(spark)
     from chess_lakehouse_spark.operators.similarity import ann_recall_report
 
@@ -7079,7 +6976,7 @@ PQ_RECALL_ORACLE = f"""
 """
 
 
-#: Record-linkage staging constants: bucket cap per blocking pass, and
+#: Record-linkage constants: bucket cap per blocking pass, and
 #: the name-similarity floor for the emitted comparison vectors (ppm).
 LINKAGE_MAX_BUCKET = 10_000
 LINKAGE_NAME_PPM = 700_000
@@ -7099,9 +6996,8 @@ def q_record_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
     structure (Customer#000000111 vs #000001111 are trigram-identical),
     so the output exercises the full similarity range at every scale.
 
-    Registered at the r14 window re-plan: exact value parity against
-    RECORD_LINKAGE_ORACLE pinned in tests/test_r15_candidates.py at
-    two scales + cold-JVM before registration."""
+    Exact value parity against RECORD_LINKAGE_ORACLE pinned in
+    tests/test_r15_candidates.py at two scales + cold-JVM."""
     apply_runtime_conf(spark)
     from chess_lakehouse_spark.operators.linkage import (
         blocking_pairs,
@@ -7290,11 +7186,7 @@ QC_CARD_SIGNALS_ORACLE = f"""
 
 
 
-# ---------------------------------------------------------------------------
-# r15-bound staging candidates built in the r14 session
-# ---------------------------------------------------------------------------
-
-#: Rank-sketch staging constants: per-group retained-sample target k
+#: Rank-sketch constants: per-group retained-sample target k
 #: (16 puts the sampling level above 0 at BOTH parity scales — 25
 #: docs/source at sf0.01 -> lvl 1, 250 at sf0.1 -> lvl 4, so the gate
 #: exercises real subsampling, not the degenerate keep-everything
@@ -7325,8 +7217,8 @@ def q_rank_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     window over the ~k-per-group retained state; the audit join
     broadcasts |groups|*|probes| rows against one corpus scan.
 
-    Registered at the r15 window re-plan: exact value parity against RANK_SKETCH_ORACLE pinned in
-    tests/test_r16_candidates.py at two scales + cold-JVM before registration."""
+    Exact value parity against RANK_SKETCH_ORACLE pinned in
+    tests/test_r16_candidates.py at two scales + cold-JVM."""
     apply_runtime_conf(spark)
     from chess_lakehouse_spark.operators.sketches import (
         rank_sketch_build,
@@ -7475,9 +7367,9 @@ def q_rank_sketch_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
     a serving layout can never change the served quantiles — the
     bloom_gate_table discipline, machine-enforced by the shared oracle.
 
-    Registered at the r15 window re-plan: exact value parity against RANK_SKETCH_ORACLE (verbatim — the layout may never
-    change the verdict) pinned in tests/test_r16_candidates.py at two
-    scales + cold-JVM before registration."""
+    Exact value parity against RANK_SKETCH_ORACLE (verbatim — the layout may
+    never change the verdict) pinned in tests/test_r16_candidates.py at two
+    scales + cold-JVM."""
     import os
 
     apply_runtime_conf(spark)
@@ -7507,7 +7399,7 @@ def q_rank_sketch_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _rank_sketch_audit(docs, state)
 
 
-#: Fellegi-Sunter staging constants: per-field (m, u) agreement
+#: Fellegi-Sunter constants: per-field (m, u) agreement
 #: probabilities in ppm — name trigram similarity is the discriminative
 #: field, segment/nation/balance carry the block structure — the
 #: integer log2-weights they derive (fs_weights_ppm, baked host-side so
@@ -7539,10 +7431,10 @@ def q_linkage_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     column arithmetic over q_record_linkage's gated output: the
     decision stage adds zero shuffles at any scale.
 
-    Registered at the r15 window re-plan: exact value parity against LINKAGE_SCORE_ORACLE (built on RECORD_LINKAGE_ORACLE
-    verbatim as a CTE — the vectors cannot drift from the registered
-    query) pinned in tests/test_r16_candidates.py at two scales +
-    cold-JVM before registration."""
+    Exact value parity against LINKAGE_SCORE_ORACLE (built on
+    RECORD_LINKAGE_ORACLE verbatim as a CTE — the vectors cannot drift from
+    the registered query) pinned in tests/test_r16_candidates.py at two
+    scales + cold-JVM."""
     apply_runtime_conf(spark)
     from chess_lakehouse_spark.operators.linkage import fs_match_score
 
@@ -7610,10 +7502,10 @@ def q_linkage_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
     (driver union-find under the bound, distributed min-label loop
     past it), membership is one groupBy + one keyed join.
 
-    Registered at the r15 window re-plan: exact value parity against LINKAGE_ENTITIES_ORACLE (LINKAGE_SCORE_ORACLE
+    Exact value parity against LINKAGE_ENTITIES_ORACLE (LINKAGE_SCORE_ORACLE
     embedded verbatim + the recursive-CTE reachability oracle the
-    dedup_clusters gate uses) pinned in tests/test_r16_candidates.py at
-    two scales + cold-JVM before registration."""
+    dedup_clusters gate uses) pinned in tests/test_r16_candidates.py at two
+    scales + cold-JVM."""
     apply_runtime_conf(spark)
     from chess_lakehouse_spark.operators.graph import connected_components
 
@@ -7680,7 +7572,7 @@ LINKAGE_ENTITIES_ORACLE = f"""
 
 
 
-#: IVF+PQ composed-serving staging constants: probe list fan-out and
+#: IVF+PQ composed-serving constants: probe list fan-out and
 #: the ADC shortlist size (the exact re-rank pool — TWO_STAGE_POOL, the
 #: same knob the gated two-stage serve uses).
 IVFPQ_NPROBE = 2
@@ -7707,10 +7599,10 @@ def q_knn_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     models, never the in-session trainers, so build and serve cannot
     drift.
 
-    Registered at the r15 window re-plan: exact value parity against KNN_IVFPQ_ORACLE (the knn_ivf_kmeans chain and each
-    PQ slice chain unrolled in one SQL — assignment, codes, ADC
-    shortlist, exact re-rank) pinned in tests/test_r16_candidates.py at
-    two scales + cold-JVM before registration."""
+    Exact value parity against KNN_IVFPQ_ORACLE (the knn_ivf_kmeans chain
+    and each PQ slice chain unrolled in one SQL — assignment, codes, ADC
+    shortlist, exact re-rank) pinned in tests/test_r16_candidates.py at two
+    scales + cold-JVM."""
     import os
 
     apply_runtime_conf(spark)
@@ -7840,332 +7732,6 @@ def _ivfpq_oracle_sql() -> str:
 KNN_IVFPQ_ORACLE = _ivfpq_oracle_sql()
 
 
-def q_knn_ivfpq_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The streaming-maintained IVF+PQ lake index, gated end to end
-    (streaming/jobs.py: stream_ivfpq_append — the twelfth stateful
-    loop, stream_rollup structural-idempotency class): the base publish
-    carries only a THIRD of the corpus; the remaining vectors arrive as
-    micro-batches that each fold into the live index via
-    append_ivfpq_index — assigned and PQ-encoded with the index's OWN
-    sidecar models, landed as their own ``batch_id=b<N>`` partitions in
-    O(delta) — and the serve is the SAME search_ivfpq_index read path
-    (partition-prune + codes-only ADC + exact re-rank) over all batch
-    levels. Passes KNN_IVFPQ_ORACLE VERBATIM: an ingestion path may
-    never change the served truth (the bloom_gate_table /
-    rank_sketch_staged discipline, machine-enforced by the shared
-    oracle). Models are trained once on the full snapshot (the rebuild
-    path's job — publish_ivfpq_index atomically replaces appended
-    batches when models change), so stream-append == batch publish is
-    an equality, pinned in tests/test_r17_candidates.py.
-
-    r16-bound STAGING CANDIDATE — not yet registered: exact value
-    parity against KNN_IVFPQ_ORACLE (verbatim) pinned in
-    tests/test_r17_candidates.py at two scales + cold-JVM; registration
-    at a window re-plan is a dict + window edit."""
-    import os
-
-    apply_runtime_conf(spark)
-    from chess_lakehouse_spark.operators.similarity import (
-        kmeans_fit,
-        pq_train,
-        publish_ivfpq_index,
-        search_ivfpq_index,
-    )
-    from chess_lakehouse_spark.streaming.jobs import stream_ivfpq_append
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    root = _scratch_dir("ivfpqs", sf_dir)
-    idx = f"{root}/index"
-    feed = f"{root}/feed"
-    marker = f"{root}/_published"
-    if not os.path.exists(marker):
-        cents = kmeans_fit(
-            emb, "vec_id", "embedding",
-            k=KMEANS_K, iters=KMEANS_ITERS, seed=KMEANS_SEED,
-        )
-        books = pq_train(
-            emb, "vec_id", "embedding",
-            m=PQ_M, k=PQ_K, iters=PQ_ITERS, seed=PQ_SEED,
-        )
-        publish_ivfpq_index(
-            emb.where(F.col("vec_id") % 3 == 0), idx,
-            "vec_id", "embedding", cents, books, batch_id="base",
-        )
-        _feed_once(
-            feed,
-            lambda: emb.where(F.col("vec_id") % 3 != 0)
-            .repartition(2)
-            .write.mode("overwrite")
-            .parquet(feed),
-        )
-        stream = (
-            spark.readStream.schema(spark.read.parquet(feed).schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(feed)
-        )
-        with _stream_drain_conf(spark):
-            stream_ivfpq_append(
-                stream, idx, f"{root}/ckpt", "vec_id", "embedding"
-            )
-        open(marker, "w").close()
-    probes = emb.where(F.col("vec_id") < KNN_PROBES)
-    return search_ivfpq_index(
-        spark, idx, probes, "vec_id", "embedding",
-        nprobe=IVFPQ_NPROBE, pool=TWO_STAGE_POOL, k=KNN_K,
-    )
-
-
-#: Synchronous LPA rounds for the staged community-detection query —
-#: LPA converges in a few sweeps (Raghavan et al. 2007 report ~5); the
-#: fixed count is what makes the fixpoint SQL-unrollable.
-LPA_ITERS = 4
-
-
-def q_graph_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic label-propagation community detection over the
-    near-dup pair graph (operators/graph.py: label_propagation —
-    Raghavan et al. 2007, made engine-reproducible: synchronous rounds,
-    mode-of-neighbors update, (count DESC, label ASC) tie-break): the
-    SAME char-7-gram Jaccard pairs the registered dedup_ngram_jaccard
-    gates become an undirected graph, LPA_ITERS fixed sweeps vote every
-    node into its community (final label groups canonicalized to their
-    min MEMBER id), and each node returns with its community and the
-    community's member count. Contrast with the gated
-    dedup_clusters (connected components): CC floods reachability — one
-    bridge edge merges two dense groups; LPA's mode vote does not (the
-    divergence is pinned on a crafted two-clique bridge in tests) —
-    community structure vs component structure, the distinction a
-    crawl-source curation pipeline uses to weight SITES rather than
-    whole link-connected blobs. 100 TB shape: edges are threshold-pruned
-    far below the corpus; each sweep is one keyed join + one
-    map-combined (node, label) count + one argmax — the
-    pagerank/connected_components localCheckpoint skeleton, nothing on
-    the driver.
-
-    r16-bound STAGING CANDIDATE — not yet registered: exact value
-    parity against GRAPH_COMMUNITIES_ORACLE (the registered
-    dedup_ngram_jaccard oracle embedded VERBATIM as the edge CTE — the
-    graph cannot drift from the gated pair query — + LPA_ITERS unrolled
-    vote/argmax CTE rounds, the kmeans/bpe unroll discipline) pinned in
-    tests/test_r17_candidates.py at two scales + cold-JVM; registration
-    at a window re-plan is a dict + window edit."""
-    apply_runtime_conf(spark)
-    from chess_lakehouse_spark.operators.graph import label_propagation
-
-    docs = load_table(spark, sf_dir, "documents")
-    pairs = ngram_jaccard_pairs(
-        docs, "doc_id", "text", block_col="source", n=7,
-        threshold=JACCARD_THRESHOLD,
-    )
-    comm = label_propagation(
-        pairs.select("id_a", "id_b"), n_iter=LPA_ITERS
-    )
-    sizes = comm.groupBy("community").agg(
-        F.count(F.lit(1)).cast("long").alias("n_members")
-    )
-    return comm.join(F.broadcast(sizes), "community").select(
-        "node", "community", "n_members"
-    )
-
-
-def _graph_communities_oracle_sql() -> str:
-    """The registered dedup_ngram_jaccard oracle VERBATIM as the edge
-    CTE (graph == gated pairs, machine-enforced), then LPA_ITERS
-    unrolled synchronous rounds: vote = join labels to the symmetrized
-    edges + count, winner = row_number over (count DESC, label ASC)."""
-    rounds = []
-    for i in range(1, LPA_ITERS + 1):
-        rounds.append(f"""
-    v{i} AS (
-      SELECT n.node, p.l AS nl, COUNT(*) AS c
-      FROM nbr n JOIN l{i - 1} p ON p.node = n.nb
-      GROUP BY 1, 2
-    ),
-    l{i} AS (
-      SELECT node, nl AS l FROM v{i}
-      QUALIFY row_number() OVER (
-        PARTITION BY node ORDER BY c DESC, nl ASC) = 1
-    )""")
-    last = f"l{LPA_ITERS}"
-    return f"""
-    WITH pairs AS ({ORACLES["dedup_ngram_jaccard"]}),
-    e AS (SELECT id_a, id_b FROM pairs),
-    nbr AS (
-      SELECT id_a AS node, id_b AS nb FROM e
-      UNION ALL
-      SELECT id_b AS node, id_a AS nb FROM e
-    ),
-    l0 AS (SELECT DISTINCT node, node AS l FROM nbr),
-    {",".join(rounds)},
-    canon AS (SELECT l, MIN(node) AS community FROM {last} GROUP BY 1),
-    lf AS (
-      SELECT t.node, c.community FROM {last} t JOIN canon c ON c.l = t.l
-    ),
-    m AS (
-      SELECT community, CAST(COUNT(*) AS BIGINT) AS n_members
-      FROM lf GROUP BY 1
-    )
-    SELECT lf.node, lf.community, m.n_members
-    FROM lf JOIN m ON m.community = lf.community
-"""
-
-
-GRAPH_COMMUNITIES_ORACLE = _graph_communities_oracle_sql()
-
-
-#: Unigram-LM trainer staging constants: max piece length, seed size for
-#: multi-char candidates, hard-EM rounds, and the kept multi-char pieces.
-UNI_MAX_LEN = 3
-UNI_SEED_MULTI = 40
-UNI_EM_ITERS = 2
-UNI_KEEP_MULTI = 12
-
-
-def q_unigram_train(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unigram-LM (SentencePiece-style) tokenizer induction over the
-    documents corpus by deterministic Viterbi hard-EM
-    (functions/unigram.py: unigram_lm_train — Kudo 2018, the EM
-    complement of the gated bpe_train's greedy merges): the corpus
-    collapses to the distinct-word frequency table, the seed vocabulary
-    is every substring <= {L} chars (all single chars + top {V0}
-    multi-char by weight), and each of the {T} EM rounds re-costs pieces
-    in integer micro-nats (the sweep-tested ROUND-of-ln-ratio pillar),
-    Viterbi-segments every distinct word with exact integer DP under the
-    (cost, piece-count, segmentation) total order, and re-counts usage.
-    Returns the final ranked vocabulary — all chars (coverage floor 1)
-    plus the top {KEEP} multi-char pieces — as (rk, piece, n). The
-    driver holds only the vocabulary (the kmeans/bpe discipline); each
-    round is one map-side codegen DP pass + one map-combined count over
-    the distributed word table.
-
-    r16-bound STAGING CANDIDATE — not yet registered: exact value
-    parity against UNIGRAM_TRAIN_ORACLE (seed weights, the in-engine
-    micro-nat costs, every EM round's Viterbi — a recursive-CTE
-    enumeration with the SAME total order — and the usage re-counts all
-    unrolled in one statement, the kmeans/bpe unroll discipline) pinned
-    in tests/test_r17_candidates.py at two scales + cold-JVM;
-    registration at a window re-plan is a dict + window edit."""
-    from chess_lakehouse_spark.functions.unigram import unigram_lm_train
-
-    apply_runtime_conf(spark)
-    docs = load_table(spark, sf_dir, "documents")
-    vocab = unigram_lm_train(
-        docs, "text",
-        max_piece_len=UNI_MAX_LEN, n_seed_multi=UNI_SEED_MULTI,
-        em_iters=UNI_EM_ITERS, n_keep_multi=UNI_KEEP_MULTI,
-    )
-    rows = [(i + 1, p, int(w)) for i, (p, w) in enumerate(vocab)]
-    return local_df(spark, rows, "rk int, piece string, n bigint")
-
-
-q_unigram_train.__doc__ = q_unigram_train.__doc__.format(
-    L=UNI_MAX_LEN, V0=UNI_SEED_MULTI, T=UNI_EM_ITERS, KEEP=UNI_KEEP_MULTI
-)
-
-
-def _unigram_oracle_sql() -> str:
-    """The full hard-EM unroll in one DuckDB statement: seed weights
-    (substring multiplicity x word count), then per round — in-engine
-    micro-nat costs from the current weights, Viterbi by RECURSIVE-CTE
-    path enumeration (sound because the unique winner under the
-    (cost, k, seg) total order is what the engine's DP computes; path
-    count is bounded by word length and vocab hits), usage re-count,
-    and the char-floor/multi-drop weight update."""
-    ws = r"[ \t\n\r\f\x0B]+"
-    parts = [
-        f"""
-    WITH RECURSIVE w0 AS (
-      SELECT w, CAST(COUNT(*) AS BIGINT) AS n FROM (
-        SELECT unnest(list_filter(string_split_regex(text, '{ws}'),
-                      x -> x <> '')) AS w
-        FROM documents
-      ) GROUP BY w
-    ),
-    sw AS (
-      SELECT piece, CAST(SUM(n) AS BIGINT) AS wt FROM (
-        SELECT w0.n, substring(w0.w, CAST(i.i AS INT), CAST(d.d AS INT)) AS piece
-        FROM w0, range(1, 256) i(i), range(1, {UNI_MAX_LEN + 1}) d(d)
-        WHERE i.i + d.d - 1 <= length(w0.w)
-      ) GROUP BY piece
-    ),
-    chars AS (SELECT piece, wt FROM sw WHERE length(piece) = 1),
-    multi0 AS (
-      SELECT piece, wt FROM sw WHERE length(piece) > 1
-      QUALIFY row_number() OVER (ORDER BY wt DESC, piece ASC) <= {UNI_SEED_MULTI}
-    ),
-    v0 AS (
-      SELECT piece, wt FROM chars UNION ALL SELECT piece, wt FROM multi0
-    )"""
-    ]
-    for r in range(1, UNI_EM_ITERS + 1):
-        pv = f"v{r - 1}"
-        parts.append(f"""
-    c{r} AS (
-      SELECT piece,
-             CAST(ROUND(ln(CAST((SELECT SUM(wt) FROM {pv}) AS DOUBLE)
-                           / CAST(wt AS DOUBLE)) * 1000000) AS BIGINT) AS cost
-      FROM {pv}
-    ),
-    s{r} AS (
-      SELECT w, CAST(0 AS BIGINT) AS pos, CAST(0 AS BIGINT) AS c,
-             0 AS k, '' AS s
-      FROM w0
-      UNION ALL
-      SELECT t.w, t.pos + length(p.piece), t.c + p.cost, t.k + 1,
-             t.s || chr(31) || p.piece
-      FROM s{r} t JOIN c{r} p
-        ON substring(t.w, CAST(t.pos + 1 AS INT), length(p.piece)) = p.piece
-      WHERE t.pos < length(t.w)
-    ),
-    b{r} AS (
-      SELECT w, s FROM s{r} WHERE pos = length(w)
-      QUALIFY row_number() OVER (
-        PARTITION BY w ORDER BY c ASC, k ASC, s ASC) = 1
-    ),
-    u{r} AS (
-      SELECT piece, CAST(SUM(n) AS BIGINT) AS wt FROM (
-        SELECT w0.n,
-               unnest(list_filter(string_split(b{r}.s, chr(31)),
-                      x -> x <> '')) AS piece
-        FROM b{r} JOIN w0 ON w0.w = b{r}.w
-      ) GROUP BY piece
-    ),
-    v{r} AS (
-      SELECT c.piece,
-             CAST(greatest(COALESCE(u.wt, 0), 1) AS BIGINT) AS wt
-      FROM chars c LEFT JOIN u{r} u ON u.piece = c.piece
-      UNION ALL
-      SELECT m.piece, u.wt
-      FROM {pv} m JOIN u{r} u ON u.piece = m.piece
-      WHERE length(m.piece) > 1 AND u.wt > 0
-    )""")
-    vf = f"v{UNI_EM_ITERS}"
-    parts.append(f"""
-    kept AS (
-      SELECT piece, wt FROM {vf} WHERE length(piece) = 1
-      UNION ALL
-      SELECT piece, wt FROM (
-        SELECT piece, wt FROM {vf} WHERE length(piece) > 1
-        QUALIFY row_number() OVER (
-          ORDER BY wt DESC, piece ASC) <= {UNI_KEEP_MULTI}
-      )
-    )
-    SELECT CAST(row_number() OVER (ORDER BY wt DESC, piece ASC) AS INT) AS rk,
-           piece, wt AS n
-    FROM kept""")
-    return ",".join(parts)
-
-
-UNIGRAM_TRAIN_ORACLE = _unigram_oracle_sql()
-
-
-# registered at the r13 window re-plan (suite/__init__.py): nine staged
-# candidates promoted verbatim from STAGED_CANDIDATES — the four
-# r11-staged (length_histogram, shard_skew, quantile_normalize,
-# ann_recall), the three early-r12-staged (dedup_semdedup,
-# tokenizer_fertility, stream_interval_join), plus the two
-# broadest-audit-value entries of the r12 second batch (heavy_hitters,
-# lsh_recall). Same entries, same oracles.
 QUERIES.update(
     {
         "length_histogram": q_length_histogram,
@@ -8194,14 +7760,9 @@ ORACLES.update(
 )
 
 
-# registered at the r14 window re-plan (suite/__init__.py): six staged
-# candidates promoted verbatim from STAGED_CANDIDATES — sample_reservoir,
-# curriculum_order, stream_rollup, qc_card_signals, record_linkage,
-# knn_pq_adc (all staged in the r13 build session with two-scale exact
-# parity + cold-JVM ANSI + plan guards, tests/test_r15_candidates.py).
-# Same entries, same oracles. stream_rollup serves ROLLUP_STAGED_ORACLE
-# verbatim — the bloom_gate_table discipline: an ingestion path may
-# never change the served truth.
+# stream_rollup serves ROLLUP_STAGED_ORACLE verbatim — the
+# bloom_gate_table discipline: an ingestion path may never change the
+# served truth.
 QUERIES.update(
     {
         "sample_reservoir": q_sample_reservoir,
@@ -8224,14 +7785,6 @@ ORACLES.update(
 )
 
 
-# registered at the r15 window re-plan (suite/__init__.py): all NINE
-# staged candidates promoted verbatim from STAGED_CANDIDATES, oldest
-# staged evidence first — the three r12-staged carries
-# (stream_sessionize, heavy_hitters_staged, stream_dedup_watermark;
-# tests/test_r14_candidates.py), the r13-staged pq_recall
-# (tests/test_r15_candidates.py), and the five r14-staged (rank_sketch,
-# linkage_score, knn_ivfpq, rank_sketch_staged, linkage_entities;
-# tests/test_r16_candidates.py). Same entries, same oracles.
 # heavy_hitters_staged serves HEAVY_HITTERS_ORACLE verbatim and
 # rank_sketch_staged serves RANK_SKETCH_ORACLE verbatim — the
 # bloom_gate_table discipline: a serving layout may never change the
@@ -8262,30 +7815,3 @@ ORACLES.update(
         "linkage_entities": LINKAGE_ENTITIES_ORACLE,
     }
 )
-
-
-STAGED_CANDIDATES = {
-    # (the nine r15-plan entries — the three r12-staged stream carries,
-    # the r13-staged pq_recall, and the five r14-staged — were promoted
-    # into QUERIES/ORACLES at the r15 window re-plan above; the six
-    # r14-plan, nine r13-plan, eleven r12-plan and sixteen r11-plan
-    # entries landed at their re-plans before them)
-    # staged in the r15 build session (tests/test_r17_candidates.py:
-    # two-scale exact parity + cold-JVM ANSI + plan guards) — the
-    # streaming twin of the IVF+PQ staged-index lifecycle (the twelfth
-    # stateful loop); serves KNN_IVFPQ_ORACLE verbatim: an ingestion
-    # path may never change the served truth
-    "knn_ivfpq_stream": (q_knn_ivfpq_stream, KNN_IVFPQ_ORACLE),
-    # deterministic LPA community detection over the gated near-dup pair
-    # graph — mode-of-neighbors vs connected_components' reachability
-    # flood (divergence pinned on a crafted two-clique bridge); oracle
-    # embeds the registered dedup_ngram_jaccard oracle verbatim as the
-    # edge CTE + LPA_ITERS unrolled vote rounds
-    "graph_communities": (q_graph_communities, GRAPH_COMMUNITIES_ORACLE),
-    # unigram-LM (SentencePiece-style) tokenizer induction by
-    # deterministic Viterbi hard-EM — the EM complement of the gated
-    # bpe_train; oracle unrolls seed weights, in-engine micro-nat costs,
-    # every EM round's Viterbi (recursive-CTE enumeration under the
-    # same total order) and the usage re-counts in one statement
-    "unigram_train": (q_unigram_train, UNIGRAM_TRAIN_ORACLE),
-}

@@ -21,8 +21,8 @@ from chess_lakehouse_spark.session import get_spark  # noqa: E402
 #: Every test file keeps at least one fast test, so the default tier still
 #: smoke-covers every operator family; the deselected tests are the
 #: multi-scale oracle parities, crash-point/idempotence replays and
-#: property sweeps whose coverage the builder gate and the driver's own
-#: 50-query DuckDB oracle window duplicate.
+#: property sweeps whose coverage the full-suite run and the DuckDB oracle
+#: gate over every registered query (``scripts/verify_local.py``) duplicate.
 _SLOW_MANIFEST = Path(__file__).resolve().parent / "slow_manifest.txt"
 
 

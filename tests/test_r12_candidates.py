@@ -1,9 +1,8 @@
-"""Staging tests for the eight r12 window candidates built in r11
-(suite/llm.py STAGED_CANDIDATES): two-scale exact parity against their
-suite-defined DuckDB oracles, driver-safe output types, plan-shape
-guards, and the operator-level semantics pins (percent-rank reference,
-robust-z NULL/mask behavior, per-group ntile formula equivalence,
-brute-force skyline definition).
+"""Tests for eight registered suite queries (suite/llm.py): two-scale
+exact parity against their suite-defined DuckDB oracles, allowlisted
+output types, plan-shape guards, and the operator-level semantics pins
+(percent-rank reference, robust-z NULL/mask behavior, per-group ntile
+formula equivalence, brute-force skyline definition).
 
 - bloom_gate_table  — word-TABLE Bloom layout, oracle shared verbatim
   with bloom_gate (the layout may never change a verdict)

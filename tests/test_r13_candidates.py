@@ -1,7 +1,6 @@
-"""Staging tests for r13 window candidates built in r12
-(suite/llm.py STAGED_CANDIDATES): two-scale exact parity against their
-suite-defined DuckDB oracles, driver-safe output types, plan-shape
-guards, and operator-level semantics pins.
+"""Tests for registered suite queries (suite/llm.py): two-scale exact
+parity against their suite-defined DuckDB oracles, allowlisted output
+types, plan-shape guards, and operator-level semantics pins.
 
 - dedup_semdedup — the full SemDeDup recipe (Abbas et al. 2023) as one
   query: k-means-trained clusters (the q_knn_ivf_kmeans trainer) ->

@@ -1,8 +1,6 @@
-"""Staging tests for the r13/r14 window candidates built in the r12
-build session's second batch (suite/llm.py STAGED_CANDIDATES):
-two-scale exact parity against their suite-defined DuckDB oracles,
-driver-safe output types, plan-shape guards, and operator-level
-semantics pins.
+"""Tests for registered suite queries (suite/llm.py): two-scale exact
+parity against their suite-defined DuckDB oracles, allowlisted output
+types, plan-shape guards, and operator-level semantics pins.
 
 - heavy_hitters — Misra-Gries heavy hitters through the
   driver-checkable projection (Agarwal et al., "Mergeable Summaries",
@@ -339,8 +337,7 @@ def test_heavy_hitters_staged_candidate_matches_oracle_two_scales(spark, sf_dir)
         q_heavy_hitters_staged,
     )
 
-    # promoted at the r15 window re-plan: the REGISTERED entry pins the
-    # verbatim oracle share (was the STAGED_CANDIDATES manifest pre-r15)
+    # the registered entry shares the oracle verbatim
     assert suite.ORACLES["heavy_hitters_staged"] is HEAVY_HITTERS_ORACLE
 
     sdf = q_heavy_hitters_staged(spark, sf_dir)

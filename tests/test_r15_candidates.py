@@ -1,7 +1,6 @@
-"""Staging tests for the r14/r15 window candidates built in the r13
-build session (suite/llm.py STAGED_CANDIDATES): two-scale exact parity
-against their suite-defined DuckDB oracles, driver-safe output types,
-plan-shape guards, and operator-level semantics pins.
+"""Tests for registered suite queries (suite/llm.py): two-scale exact
+parity against their suite-defined DuckDB oracles, allowlisted output
+types, plan-shape guards, and operator-level semantics pins.
 
 - sample_reservoir — weighted reservoir sample per group (algorithm
   A-ES, Efraimidis & Spirakis, IPL 2006): k items per group with the
@@ -294,9 +293,8 @@ def test_qc_card_signals_shares_bundle_frames(spark, tmp_path):
 
 
 def test_staged_candidate_plans_clean(spark):
-    """No CartesianProduct / BatchEvalPython in any new candidate's
-    physical plan (mirrors tests/test_suite_order.py's manifest sweep,
-    run here at build time for fast feedback)."""
+    """No CartesianProduct / BatchEvalPython in these queries' physical
+    plans."""
     from chess_lakehouse_spark.suite.llm import (
         q_curriculum_order,
         q_qc_card_signals,

@@ -1,7 +1,6 @@
-"""Staging tests for the r15/r16 window candidates built in the r14
-build session (suite/llm.py STAGED_CANDIDATES): two-scale exact parity
-against their suite-defined DuckDB oracles, driver-safe output types,
-plan-shape guards, and operator-level semantics pins.
+"""Tests for registered suite queries (suite/llm.py): two-scale exact
+parity against their suite-defined DuckDB oracles, allowlisted output
+types, plan-shape guards, and operator-level semantics pins.
 
 - rank_sketch — the mergeable rank/quantile sketch (random-sampling
   quantile summary, Agarwal et al. "Mergeable Summaries" PODS 2012;
@@ -435,10 +434,9 @@ def test_ivfpq_validation(spark, tmp_path):
 
 
 def test_new_candidates_in_manifest():
-    """The three r14-built candidates were promoted to the REGISTERED
-    suite at the r15 window re-plan (they sat in STAGED_CANDIDATES
-    pre-promotion), and linkage_score's oracle embeds the registered
-    record_linkage oracle verbatim (the composition discipline)."""
+    """The three queries are registered, and linkage_score's oracle
+    embeds the registered record_linkage oracle verbatim (the
+    composition discipline)."""
     from chess_lakehouse_spark import suite
     from chess_lakehouse_spark.suite.llm import (
         LINKAGE_SCORE_ORACLE,
@@ -533,8 +531,7 @@ def test_rank_sketch_staged_matches_oracle_two_scales(spark, sf_dir):
         q_rank_sketch_staged,
     )
 
-    # promoted at the r15 window re-plan: the REGISTERED entry pins the
-    # verbatim oracle share (was the STAGED_CANDIDATES manifest pre-r15)
+    # the registered entry shares the oracle verbatim
     assert suite.ORACLES["rank_sketch_staged"] is RANK_SKETCH_ORACLE
     sdf = q_rank_sketch_staged(spark, sf_dir)
     _assert_clean_plan(sdf)

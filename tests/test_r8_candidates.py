@@ -27,10 +27,7 @@ def con():
 
 
 def test_r8_queries_are_registered():
-    """In-window membership was the r8-round requirement (verified:
-    CORRECTNESS_r08.json hash-green rows); from r9 on the rotation is
-    governed by the staleness ratchet in test_suite_order.py, so this
-    pins registration only."""
+    """Each query is registered with its oracle."""
     for name in R8_REGISTERED:
         assert name in suite.QUERIES and name in suite.ORACLES
 

@@ -31,27 +31,6 @@ def con():
     c.close()
 
 
-def test_r9_queries_are_registered_and_driver_covered():
-    """Until the r9 CORRECTNESS file lands these four must hold window
-    slots (never-verified queries outside the window get no driver row);
-    once hash-green they rotate like any other query — so the durable
-    claim is: registered, and in-window OR already hash-green."""
-    import json
-    from pathlib import Path
-
-    repo = Path(__file__).resolve().parent.parent
-    green: set[str] = set()
-    for p in sorted(repo.glob("CORRECTNESS_r*.json")):
-        data = json.loads(p.read_text())
-        green |= {k for k, v in data.items() if v.get("hash_match")}
-    window = list(suite.QUERIES)[:50]
-    for name in R9_REGISTERED:
-        assert name in suite.QUERIES and name in suite.ORACLES
-        assert name in window or name in green, (
-            f"{name} registered but neither in the driver window nor green"
-        )
-
-
 @pytest.mark.parametrize("name", R9_REGISTERED)
 def test_r9_registered_query_matches_suite_oracle(spark, con, name):
     sdf = suite.QUERIES[name](spark, SF_DIR)
