@@ -6,6 +6,17 @@ equivalent "engine config" is the SparkSession. Defaults are chosen for
 correctness-parity with the DuckDB oracle (UTC session timezone) and for
 scale (AQE on, skew-join handling, partial-aggregation pushdown left to
 Catalyst, Arrow for any Pandas-UDF stage).
+
+Sessions built by :func:`get_spark` also set
+``spark.python.daemon.module=chess_lakehouse_spark._pydaemon``: a worker
+daemon that stops every Python task re-reading ``pyspark.zip`` and the
+Spark jar it runs from (about 0.25 s per task on a 4-core VM; see
+``_pydaemon``). ``spark.python.worker.module`` would not do: Spark ignores
+it while the daemon is in use, the Linux default. The daemon has to be
+importable from any working directory, so the package root is put first on
+``spark.executorEnv.PYTHONPATH``, ahead of any value the caller passes in
+``extra_conf``. A cluster deployment ships this package to its executors,
+as every UDF pickled by reference already requires.
 """
 
 from __future__ import annotations
@@ -79,6 +90,28 @@ def apply_runtime_conf(spark: SparkSession) -> SparkSession:
     return spark
 
 
+#: Leaf scans whose ``execute()`` builds an RDD without running a job. An
+#: adaptive plan (``AdaptiveSparkPlanExec``) is a leaf too, and not listed:
+#: executing it runs its query stages.
+_JOB_FREE_LEAVES = frozenset(
+    {"FileSourceScanExec", "BatchScanExec", "RangeExec", "LocalTableScanExec", "RDDScanExec"}
+)
+
+
+def _job_free(plan) -> bool:
+    """True when ``plan.execute()`` cannot start a Spark job: no exchange
+    (a broadcast's ``execute()`` runs the broadcast job, a range shuffle's
+    samples its input), no subquery, and every leaf a plain scan."""
+    name = plan.getClass().getSimpleName()
+    if "Exchange" in name or not plan.subqueries().isEmpty():
+        return False
+    kids = plan.children()
+    n = kids.size()
+    if n == 0:
+        return name in _JOB_FREE_LEAVES
+    return all(_job_free(kids.apply(i)) for i in range(n))
+
+
 def spread(df, *keys: str):
     """Scale-adaptive parallelism guard for compute-heavy map stages
     (guide §2.5 "input skew: … otherwise repartition immediately after the
@@ -95,14 +128,23 @@ def spread(df, *keys: str):
     no-ops, and no extra exchange is ever inserted — this is partitioning
     derived from input vs cores, not a constant tuned to either.
 
+    The decision starts no Spark job. Only a scan-rooted plan (see
+    ``_job_free``) is counted, with ``executedPlan().execute()``, which
+    builds the RDD without running it. Any other frame (a shuffle, a
+    broadcast, a subquery, a cached relation; under AQE, every adaptive
+    plan) is returned as it is: counting it would run its upstream stages,
+    and the real action would run them again. A shuffled frame already
+    has ``spark.sql.shuffle.partitions`` partitions (the core count here)
+    before AQE coalesces them.
+
     ``keys`` picks hash partitioning (deterministic under task retry —
     guide §2.5 discourages keyless round-robin, which also pays a local
     sort); callers pass the operator's natural id column. Results are
     row-set-identical: every consumer below is a join/aggregate/window
     keyed on columns, never on physical row order."""
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
-    if df.rdd.getNumPartitions() >= target:
+    target = df.sparkSession.sparkContext.defaultParallelism
+    plan = df._jdf.queryExecution().executedPlan()
+    if not _job_free(plan) or plan.execute().getNumPartitions() >= target:
         return df
     return df.repartition(target, *keys) if keys else df.repartition(target)
 
@@ -128,6 +170,11 @@ def local_df(spark: SparkSession, rows, schema, n_slices: int = 1):
     )
 
 
+#: Directory holding the ``chess_lakehouse_spark`` package.
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_WORKER_PYTHONPATH = "spark.executorEnv.PYTHONPATH"
+
+
 def get_spark(
     app_name: str = "chess_lakehouse_spark",
     master: str | None = None,
@@ -151,7 +198,12 @@ def get_spark(
     )
     for k, v in RUNTIME_CONF.items():
         builder = builder.config(k, v)
-    for k, v in (extra_conf or {}).items():
+    extra = dict(extra_conf or {})
+    caller_path = extra.pop(_WORKER_PYTHONPATH, "")
+    builder = builder.config(
+        "spark.python.daemon.module", "chess_lakehouse_spark._pydaemon"
+    ).config(_WORKER_PYTHONPATH, os.pathsep.join(p for p in (_PACKAGE_ROOT, caller_path) if p))
+    for k, v in extra.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -78,11 +78,19 @@ def test_doc_fingerprint_shuffle_free(spark):
     is the scale-adaptive ``spread`` repartition after the scan (r16, guide
     §2.5 — the single-file fixture otherwise runs the whole gram-hash chain
     on one core; measured 2.0 s → 0.4 s). No aggregation/join shuffle may
-    ever appear."""
+    ever appear. Which exact plan is right depends on the fixture: the
+    spread's Exchange appears only when the documents scan is narrower
+    than the session's parallelism."""
+    from chess_lakehouse_spark.catalog import load_table
+
+    scan_parts = load_table(spark, SF_DIR, "documents").rdd.getNumPartitions()
     plan = explain(spark, llm.q_doc_fingerprint(spark, SF_DIR))
-    assert "Exchange" in plan and "hashpartitioning" in plan  # the spread
-    # exactly one exchange (the spread's); no aggregation/join shuffle
-    assert plan.count("Exchange") <= 2  # tree node + detail section
+    if scan_parts < spark.sparkContext.defaultParallelism:
+        # exactly one exchange, the spread's: tree node + detail section
+        assert plan.count("Exchange") == 2
+        assert "Arguments: hashpartitioning(doc_id" in plan
+    else:
+        assert "Exchange" not in plan
     assert "HashAggregate" not in plan and "SortMergeJoin" not in plan
 
 
