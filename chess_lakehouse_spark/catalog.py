@@ -3,8 +3,8 @@
 The reference's "catalog" is a directory of single-table DuckDB files
 attached read-only per query (reference: src/find-openings.ts:62,
 src/export-to-parquet.ts:67). Spark needs no attach concept: a table is a
-Parquet path; this module centralizes path -> DataFrame resolution and
-temp-view registration so every operator/query reads through one place.
+Parquet path; this module centralizes path -> DataFrame resolution so
+every operator/query reads through one place.
 """
 
 from __future__ import annotations
@@ -116,18 +116,3 @@ def clear_schema_cache() -> None:
     which violates load_table's immutability precondition."""
     _SCHEMA_CACHE.clear()
     _DF_CACHE.clear()
-
-
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TESTDATA_TABLES
-) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in names}
-
-
-def register_views(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TESTDATA_TABLES
-) -> None:
-    """Register each table as a temp view so SQL-expressed operators can run
-    through spark.sql(...) — same Catalyst plan as the DataFrame API."""
-    for n in names:
-        load_table(spark, sf_dir, n).createOrReplaceTempView(n)

@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from chess_lakehouse_spark.session import local_df
+from chess_lakehouse_spark.session import FrameScope, local_df
 
 from chess_lakehouse_spark.functions.text import WS_SPLIT as _WS_SPLIT
 
@@ -112,11 +112,13 @@ def bpe_train(
         raise ValueError(f"bpe_train: n_merges must be >= 1, got {n_merges}")
     # Lazy persist, not eager localCheckpoint: materialization rides round
     # 1's TakeOrdered job (the kmeans_fit/pq_train r16 discipline); the
-    # mid-loop lineage-truncation checkpoints below stay, lazily.
-    vocab0 = _word_symbols(df, text_col).persist()
-    vocab = vocab0
+    # mid-loop lineage-truncation checkpoints below stay, lazily. A lazy
+    # checkpoint is materialized by the next round's job, and only then is
+    # the frame it was taken over (``stale``) released.
     merges: list[tuple[str, str]] = []
-    try:
+    with FrameScope() as scope:
+        held = vocab = scope.cache(_word_symbols(df, text_col))
+        stale = None
         for r in range(n_merges):
             pairs = vocab.select(
                 "n",
@@ -132,15 +134,17 @@ def bpe_train(
                 .limit(1)
                 .collect()
             )
+            if stale is not None:
+                scope.release(stale)
+                stale = None
             if not best or best[0]["cnt"] < min_pair_count:
                 break
             pa, pb = best[0]["pa"], best[0]["pb"]
             merges.append((pa, pb))
             vocab = vocab.select("w", "n", _merge_expr(pa, pb).alias("syms"))
             if (r + 1) % _CHECKPOINT_EVERY == 0:
-                vocab = vocab.localCheckpoint(eager=False)
-    finally:
-        vocab0.unpersist(blocking=True)
+                stale, held = held, scope.checkpoint(vocab, eager=False)
+                vocab = held
     return merges
 
 

@@ -27,12 +27,10 @@ deterministic given a model dict.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from chess_lakehouse_spark.session import local_df
+from chess_lakehouse_spark.session import FrameScope, local_df
 
 #: Feature order — FIXED: the model dict records it, and serving folds
 #: coefficients positionally against these metric columns.
@@ -137,14 +135,6 @@ def score_quality_classifier(
     if threshold is None:
         return df.select(F.col(id_col), prob.alias("keep_prob"))
     return df.where(prob >= F.lit(float(threshold)))
-
-
-def reference_sigmoid(features: dict[str, float], model: dict) -> float:
-    """Pure-Python twin of :func:`classifier_score` for tests."""
-    z = model["intercept"] + sum(
-        model["coef"][n] * features[n] for n in model["features"]
-    )
-    return 1.0 / (1.0 + math.exp(-z))
 
 
 # ---------------------------------------------------------------------------
@@ -314,60 +304,60 @@ def train_hashed_classifier(
     sums are partition-order floats — reproducible for a fixed layout,
     not bit-pinned (the LBFGS/PCA class; serving IS exact)."""
     spark = df.sparkSession
-    feats = hashed_features(df, id_col, text_col, n_buckets).persist()
-    labels = df.select(
-        F.col(id_col), F.col(label_col).cast("double").alias("_y")
-    ).persist()
-    n = labels.count()
-    if n == 0:
-        feats.unpersist()
-        labels.unpersist()
-        raise ValueError("train_hashed_classifier: empty training frame")
+    with FrameScope() as scope:
+        feats = scope.cache(hashed_features(df, id_col, text_col, n_buckets))
+        labels = scope.cache(
+            df.select(F.col(id_col), F.col(label_col).cast("double").alias("_y"))
+        )
+        n = labels.count()
+        if n == 0:
+            raise ValueError("train_hashed_classifier: empty training frame")
 
-    x = feats.select(
-        F.col(id_col),
-        "bucket",
-        (F.col("tf").cast("double") / F.col("n_d").cast("double")).alias("_x"),
-    ).persist()
-    w = spark.createDataFrame([], "bucket long, w double")
-    b = 0.0
-    for _ in range(int(iters)):
-        dotp = (
-            x.join(w, "bucket")
-            .groupBy(id_col)
-            .agg(F.sum(F.col("_x") * F.col("w")).alias("_dp"))
-        )
-        resid = (
-            labels.join(dotp, id_col, "left")
-            .select(
+        x = scope.cache(
+            feats.select(
                 F.col(id_col),
-                (
-                    F.lit(1.0)
-                    / (F.lit(1.0) + F.exp(-(F.lit(b) + F.coalesce(F.col("_dp"), F.lit(0.0)))))
-                    - F.col("_y")
-                ).alias("_r"),
-            )
-        )
-        grad = (
-            x.join(resid, id_col)
-            .groupBy("bucket")
-            .agg((F.sum(F.col("_x") * F.col("_r")) / F.lit(float(n))).alias("_g"))
-        )
-        w = (
-            w.join(grad, "bucket", "full_outer")
-            .select(
                 "bucket",
-                (
-                    F.coalesce(F.col("w"), F.lit(0.0)) * F.lit(1.0 - lr * reg)
-                    - F.lit(lr) * F.coalesce(F.col("_g"), F.lit(0.0))
-                ).alias("w"),
+                (F.col("tf").cast("double") / F.col("n_d").cast("double")).alias("_x"),
             )
-            .localCheckpoint(eager=True)
         )
-        b -= lr * float(resid.agg(F.avg("_r")).collect()[0][0])
-    feats.unpersist()
-    labels.unpersist()
-    x.unpersist()
+        w = spark.createDataFrame([], "bucket long, w double")
+        b = 0.0
+        for _ in range(int(iters)):
+            dotp = (
+                x.join(w, "bucket")
+                .groupBy(id_col)
+                .agg(F.sum(F.col("_x") * F.col("w")).alias("_dp"))
+            )
+            resid = (
+                labels.join(dotp, id_col, "left")
+                .select(
+                    F.col(id_col),
+                    (
+                        F.lit(1.0)
+                        / (F.lit(1.0) + F.exp(-(F.lit(b) + F.coalesce(F.col("_dp"), F.lit(0.0)))))
+                        - F.col("_y")
+                    ).alias("_r"),
+                )
+            )
+            grad = (
+                x.join(resid, id_col)
+                .groupBy("bucket")
+                .agg((F.sum(F.col("_x") * F.col("_r")) / F.lit(float(n))).alias("_g"))
+            )
+            new_w = scope.checkpoint(
+                w.join(grad, "bucket", "full_outer").select(
+                    "bucket",
+                    (
+                        F.coalesce(F.col("w"), F.lit(0.0)) * F.lit(1.0 - lr * reg)
+                        - F.lit(lr) * F.coalesce(F.col("_g"), F.lit(0.0))
+                    ).alias("w"),
+                )
+            )
+            b -= lr * float(resid.agg(F.avg("_r")).collect()[0][0])
+            # released only now: the resid collect above read it
+            scope.release(w)
+            w = new_w
+        scope.keep(w)
     meta = {
         "algo": "hashed_lr",
         "n_buckets": int(n_buckets),

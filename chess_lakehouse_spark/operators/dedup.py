@@ -15,58 +15,10 @@ DuckDB — parity-tested in tests/test_llm_ops.py).
 
 from __future__ import annotations
 
-import itertools
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-
-#: Monotonic per-process sequence for :func:`_stamp_lease` plan tokens.
-_LEASE_SEQ = itertools.count()
-
-
-def _stamp_lease(df: DataFrame) -> DataFrame:
-    """Stamp a unique-per-invocation literal column into a frame that is
-    about to be persisted under a :class:`_CacheLease`.
-
-    Spark's CacheManager keys cache entries by CANONICALIZED PLAN, and
-    ``unpersist`` removes entries by the same plan match. Two invocations
-    of the same operator over the same inputs build byte-identical plans,
-    so WITHOUT the token (a) the second ``persist()`` is a no-op against
-    the first invocation's entry, and (b) the first result's GC-time lease
-    release UNPERSISTS the entry the second invocation is still serving —
-    measured r16: bench rep 2 of dedup_ngram_jaccard ran uncached at
-    ~19-21 s vs ~3.5 s (the gram transform re-inlined 3× into scan filters
-    and AQE broadcast the exploded gram side). The token makes every
-    invocation's cached plan distinct; downstream consumers never select
-    ``__lease``, so results and consumer codegen are unchanged, and the
-    constant column RLE-compresses to nothing in the columnar cache."""
-    return df.withColumn("__lease", F.lit(next(_LEASE_SEQ)))
-
-
-class _CacheLease:
-    """Ties a persisted DataFrame's lifetime to a consumer object.
-
-    Attached to a returned result frame so the cached upstream is released
-    exactly when the result is garbage-collected — no session-lifetime leak,
-    no premature unpersist before the caller's action runs. Frames persisted
-    under a lease must be stamped with :func:`_stamp_lease` first — plan-keyed
-    unpersist is NOT invocation-scoped without it (see the token rationale).
-    """
-
-    def __init__(self, cached: DataFrame) -> None:
-        self._cached = cached
-
-    def release(self) -> None:
-        cached, self._cached = self._cached, None
-        if cached is not None:
-            try:
-                cached.unpersist(blocking=False)
-            except Exception:
-                pass  # session already stopped / interpreter shutdown
-
-    def __del__(self) -> None:
-        self.release()
+from chess_lakehouse_spark.session import FrameScope
 
 
 def md5_hash64(col: Column) -> Column:
@@ -317,18 +269,16 @@ def incremental_near_dups(
     the staged table + verification bounded by candidate count — fully
     incremental; the corpus text is touched only for candidates.
 
-    Execution (r16, guide §2.4): ``cand`` and the verification shingle
-    frame are persisted under invocation-scoped leases. Both are consumed
-    by multiple differently-pruned subtrees (cand: the corpus semi-join +
-    the verify pair list; the shingle union: per-doc counts twice + both
-    sides of the intersection join), and ReuseExchange cannot dedupe
-    across prunings — before the fix the whole band-join chain (new
-    shingles → minhash → bands ⋈ staged bands) executed ~5× per action
-    (24 exchanges in the r15 plan). Both frames are BOUNDED at any corpus
-    scale: candidates by the LSH collision count, the union by |new
-    batch| + |candidate corpus docs| — never full-corpus-sized, which is
-    why persisting here is safe where minhash_lsh_dedup's full-corpus
-    shingle frame deliberately is not.
+    Execution (r16, guide §2.4): ``cand`` is cached, owned by the
+    returned frame (``FrameScope.own``). It is consumed by two
+    differently-pruned subtrees (the corpus semi-join and the verify pair
+    list), and ReuseExchange cannot dedupe across prunings — before the
+    fix the whole band-join chain (new shingles → minhash → bands ⋈
+    staged bands) executed ~5× per action (24 exchanges in the r15 plan).
+    The candidates are BOUNDED at any corpus scale by the LSH collision
+    count — never full-corpus-sized, which is why caching here is safe
+    where minhash_lsh_dedup's full-corpus shingle frame deliberately is
+    not.
     """
     new_sh = word_shingles(new_docs, id_col, text_col, k=k)
     new_sigs = minhash_signatures(new_sh, id_col, num_hashes=num_hashes)
@@ -349,24 +299,24 @@ def incremental_near_dups(
         .select("new_id", "corpus_id")
         .distinct()
     )
-    cand = _stamp_lease(cand).persist()
-    cand_lease = _CacheLease(cand)
-    cand_corpus = corpus_docs.join(
-        cand.select(F.col("corpus_id").alias(id_col)).distinct(), id_col, "semi"
-    )
-    corpus_sh = word_shingles(cand_corpus, id_col, text_col, k=k)
-    pairs = cand.select(
-        F.col("new_id").alias("id_a"), F.col("corpus_id").alias("id_b")
-    )
-    verified = jaccard_verify(
-        pairs, new_sh.unionByName(corpus_sh.select(id_col, "shingle")), id_col,
-        threshold=threshold,
-    )
-    out = verified.select(
-        F.col("id_a").alias("new_id"), F.col("id_b").alias("corpus_id"), "jaccard"
-    )
-    out._incr_cache_leases = (cand_lease,)  # type: ignore[attr-defined]
-    return out
+    with FrameScope() as scope:
+        cand = scope.cache(cand)
+        cand_corpus = corpus_docs.join(
+            cand.select(F.col("corpus_id").alias(id_col)).distinct(), id_col, "semi"
+        )
+        corpus_sh = word_shingles(cand_corpus, id_col, text_col, k=k)
+        pairs = cand.select(
+            F.col("new_id").alias("id_a"), F.col("corpus_id").alias("id_b")
+        )
+        verified = jaccard_verify(
+            pairs, new_sh.unionByName(corpus_sh.select(id_col, "shingle")), id_col,
+            threshold=threshold,
+        )
+        return scope.own(
+            verified.select(
+                F.col("id_a").alias("new_id"), F.col("id_b").alias("corpus_id"), "jaccard"
+            )
+        )
 
 
 def simhash32(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -433,30 +383,28 @@ def hamming_near_pairs(
     ``persist_signatures=True`` caches the signature frame so the self-join's
     two sides compute it once (warm-session min-of-2 at sf0.1: persist 1.4s
     vs no-persist 2.1s; AQE does NOT reuse the exchange here because the two
-    sides' shuffles carry different projections). The cache's lifetime is
-    OWNED by the returned frame via a GC lease (``_CacheLease``): it is
-    released when the result is garbage-collected, so long-lived sessions
+    sides' shuffles carry different projections). The cache is OWNED
+    by the returned frame (``FrameScope.own``): it is released when the
+    result is garbage-collected, so long-lived sessions
     don't accumulate cached RDDs and the caller's later action still hits
     cache. Default False keeps the operator side-effect-free for callers
     that manage their own staging; at 100 TB, stage signatures to a table
     between jobs instead. Returns (id_a, id_b, hamming).
     """
-    lease = None
-    if persist_signatures:
-        sig = _stamp_lease(sig).persist()
-        lease = _CacheLease(sig)
-    a = _signature_bands(sig, id_col, hash_col, n_bits, band_bits, "id_a", "sim_a")
-    b = _signature_bands(sig, id_col, hash_col, n_bits, band_bits, "id_b", "sim_b")
-    out = (
-        a.join(b, on=["bi", "bv"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .where(_no_earlier_band(n_bits, band_bits))
-        .select("id_a", "id_b", F.expr("bit_count(sim_a ^ sim_b)").cast("int").alias("hamming"))
-        .where(F.col("hamming") <= max_hamming)
-    )
-    if lease is not None:
-        out._simhash_cache_lease = lease  # type: ignore[attr-defined]
-    return out
+    with FrameScope() as scope:
+        if persist_signatures:
+            sig = scope.cache(sig)
+        a = _signature_bands(sig, id_col, hash_col, n_bits, band_bits, "id_a", "sim_a")
+        b = _signature_bands(sig, id_col, hash_col, n_bits, band_bits, "id_b", "sim_b")
+        return scope.own(
+            a.join(b, on=["bi", "bv"])
+            .where(F.col("id_a") < F.col("id_b"))
+            .where(_no_earlier_band(n_bits, band_bits))
+            .select(
+                "id_a", "id_b", F.expr("bit_count(sim_a ^ sim_b)").cast("int").alias("hamming")
+            )
+            .where(F.col("hamming") <= max_hamming)
+        )
 
 
 def _signature_bands(
@@ -576,22 +524,6 @@ def simhash_near_pairs(
     )
 
 
-def char_ngrams(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:
-    """Distinct character n-grams per document: (id, gram). Pure codegen
-    (sequence + substring), no Python."""
-    return (
-        df.select(id_col, F.col(text_col).alias("t"))
-        .where(F.length("t") >= n)
-        .select(
-            id_col,
-            F.explode(
-                F.expr(f"transform(sequence(1, length(t) - {n - 1}), i -> substring(t, i, {n}))")
-            ).alias("gram"),
-        )
-        .distinct()
-    )
-
-
 def choose_ngram_strategy(
     grams: DataFrame,
     id_col: str,
@@ -693,8 +625,8 @@ def ngram_jaccard_pairs(
     counts derived from them do), so no engine-parity requirement applies.
     The gram-set frame feeds three consumers (counts + both join sides)
     and is persisted in its COMPACT array form — one row per doc, exploded
-    per consumer — with its lifetime GC-tied to the returned frame
-    (_CacheLease); at 100 TB, stage the same array-form grams to a table.
+    per consumer — owned by the returned frame (``FrameScope.own``); at
+    100 TB, stage the same array-form grams to a table.
 
     Two lossless strategies (measured at sf0.1, both oracle-verified equal):
 
@@ -749,74 +681,74 @@ def ngram_jaccard_pairs(
         )
         .select(id_col, "blk", F.size("garr").alias("n_g"), "garr")
     )
-    garr = _stamp_lease(garr).persist()
-    lease = _CacheLease(garr)
-    grams = garr.select(id_col, "blk", "n_g", F.explode("garr").alias("gram"))
+    with FrameScope() as scope:
+        garr = scope.cache(garr)
+        grams = garr.select(id_col, "blk", "n_g", F.explode("garr").alias("gram"))
 
-    if strategy == "auto":
-        strategy = choose_ngram_strategy(grams, id_col, threshold)
+        if strategy == "auto":
+            strategy = choose_ngram_strategy(grams, id_col, threshold)
 
-    if strategy == "prefix":
-        from pyspark.sql.window import Window
+        if strategy == "prefix":
+            from pyspark.sql.window import Window
 
-        dfreq = grams.groupBy("blk", "gram").agg(F.count(F.lit(1)).alias("gdf"))
-        w = Window.partitionBy(id_col).orderBy(F.col("gdf").asc(), F.col("gram").asc())
-        ranked = grams.join(dfreq, on=["blk", "gram"]).withColumn("r", F.row_number().over(w))
-        prefix = ranked.where(
-            F.col("r") <= F.col("n_g") - F.ceil(F.lit(threshold) * F.col("n_g")) + 1
-        ).select(id_col, "blk", "gram")
-        a = prefix.select(F.col(id_col).alias("id_a"), "blk", "gram")
-        b = prefix.select(F.col(id_col).alias("id_b"), "blk", "gram")
-        cand = (
-            a.join(b, on=["blk", "gram"])
+            dfreq = grams.groupBy("blk", "gram").agg(F.count(F.lit(1)).alias("gdf"))
+            w = Window.partitionBy(id_col).orderBy(F.col("gdf").asc(), F.col("gram").asc())
+            ranked = grams.join(dfreq, on=["blk", "gram"]).withColumn("r", F.row_number().over(w))
+            prefix = ranked.where(
+                F.col("r") <= F.col("n_g") - F.ceil(F.lit(threshold) * F.col("n_g")) + 1
+            ).select(id_col, "blk", "gram")
+            a = prefix.select(F.col(id_col).alias("id_a"), "blk", "gram")
+            b = prefix.select(F.col(id_col).alias("id_b"), "blk", "gram")
+            cand = (
+                a.join(b, on=["blk", "gram"])
+                .where(F.col("id_a") < F.col("id_b"))
+                .select("id_a", "id_b")
+                .distinct()
+            )
+            return scope.own(
+                jaccard_verify(
+                    cand, grams.select(id_col, F.col("gram").alias("shingle")), id_col,
+                    threshold,
+                )
+            )
+
+        # Exhaustive: gram-equality self-join with set sizes CARRIED on each
+        # posting row. The length band (min(n_a,n_b)/max(n_a,n_b) >= t is
+        # necessary for Jaccard >= t) prunes pair instances inside the join's
+        # codegen stage, BEFORE the pair-aggregation shuffle; grouping by
+        # (id_a, id_b, n_a, n_b) — sizes are functionally dependent on the ids —
+        # means no post-aggregation join is needed at all.
+        a = grams.select(F.col(id_col).alias("id_a"), "blk", "gram", F.col("n_g").alias("n_a"))
+        b = grams.select(F.col(id_col).alias("id_b"), "blk", "gram", F.col("n_g").alias("n_b"))
+        # Pin the pair join to sort-merge: both sides are the corpus-scale
+        # exploded gram postings, so a broadcast is wrong BY CONSTRUCTION at
+        # any real scale — and when the cached gram frame's column-pruned size
+        # estimate drifts under autoBroadcastJoinThreshold, AQE builds a
+        # multi-million-row hash relation and fences 3× SLOWER even at sf0.1
+        # (r16 measured: 10-12 s BHJ vs 3.4 s SMJ on the same cache).
+        inter = (
+            a.hint("merge").join(b, on=["blk", "gram"])
             .where(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b")
-            .distinct()
+            .where(
+                (F.col("n_a") >= F.lit(threshold) * F.col("n_b"))
+                & (F.col("n_b") >= F.lit(threshold) * F.col("n_a"))
+            )
+            .groupBy("id_a", "id_b", "n_a", "n_b")
+            .agg(F.count(F.lit(1)).alias("n_common"))
         )
-        out = jaccard_verify(
-            cand, grams.select(id_col, F.col("gram").alias("shingle")), id_col, threshold
+        out = (
+            inter.select(
+                "id_a",
+                "id_b",
+                F.round(
+                    F.col("n_common").cast("double")
+                    / (F.col("n_a") + F.col("n_b") - F.col("n_common")),
+                    6,
+                ).alias("jaccard"),
+            )
+            .where(F.col("jaccard") >= threshold)
         )
-        out._ngram_cache_lease = lease  # type: ignore[attr-defined]
-        return out
-
-    # Exhaustive: gram-equality self-join with set sizes CARRIED on each
-    # posting row. The length band (min(n_a,n_b)/max(n_a,n_b) >= t is
-    # necessary for Jaccard >= t) prunes pair instances inside the join's
-    # codegen stage, BEFORE the pair-aggregation shuffle; grouping by
-    # (id_a, id_b, n_a, n_b) — sizes are functionally dependent on the ids —
-    # means no post-aggregation join is needed at all.
-    a = grams.select(F.col(id_col).alias("id_a"), "blk", "gram", F.col("n_g").alias("n_a"))
-    b = grams.select(F.col(id_col).alias("id_b"), "blk", "gram", F.col("n_g").alias("n_b"))
-    # Pin the pair join to sort-merge: both sides are the corpus-scale
-    # exploded gram postings, so a broadcast is wrong BY CONSTRUCTION at
-    # any real scale — and when the cached gram frame's column-pruned size
-    # estimate drifts under autoBroadcastJoinThreshold, AQE builds a
-    # multi-million-row hash relation and fences 3× SLOWER even at sf0.1
-    # (r16 measured: 10-12 s BHJ vs 3.4 s SMJ on the same cache).
-    inter = (
-        a.hint("merge").join(b, on=["blk", "gram"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .where(
-            (F.col("n_a") >= F.lit(threshold) * F.col("n_b"))
-            & (F.col("n_b") >= F.lit(threshold) * F.col("n_a"))
-        )
-        .groupBy("id_a", "id_b", "n_a", "n_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    out = (
-        inter.select(
-            "id_a",
-            "id_b",
-            F.round(
-                F.col("n_common").cast("double")
-                / (F.col("n_a") + F.col("n_b") - F.col("n_common")),
-                6,
-            ).alias("jaccard"),
-        )
-        .where(F.col("jaccard") >= threshold)
-    )
-    out._ngram_cache_lease = lease  # type: ignore[attr-defined]
-    return out
+        return scope.own(out)
 
 
 def exact_dedup_groups(df: DataFrame, id_col: str, text_col: str) -> DataFrame:

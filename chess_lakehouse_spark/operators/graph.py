@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from chess_lakehouse_spark.session import local_df
+from chess_lakehouse_spark.session import FrameScope, local_df
 
 
 #: Edge-count ceiling for the driver-side fast path. Near-dup graphs are
@@ -102,26 +102,27 @@ def connected_components(
     sym = edges.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst")).union(
         edges.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))
     )
-    labels = (
-        sym.select(F.col("src").alias("id")).distinct().withColumn("lbl", F.col("id"))
-    ).localCheckpoint()
-    prev_sum = labels.agg(F.sum("lbl")).collect()[0][0]
+    with FrameScope() as scope:
+        labels = scope.checkpoint(
+            sym.select(F.col("src").alias("id")).distinct().withColumn("lbl", F.col("id"))
+        )
+        prev_sum = labels.agg(F.sum("lbl")).collect()[0][0]
 
-    for _ in range(max_iter):
-        neigh_min = (
-            sym.join(labels.select(F.col("id").alias("src"), F.col("lbl").alias("nlbl")), "src")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.min("nlbl").alias("minn"))
-        )
-        labels = (
-            labels.join(neigh_min, "id", "left")
-            .select("id", F.least("lbl", F.coalesce("minn", F.col("lbl"))).alias("lbl"))
-            .localCheckpoint()
-        )
-        cur_sum = labels.agg(F.sum("lbl")).collect()[0][0]
-        if cur_sum == prev_sum:
-            return labels.select("id", F.col("lbl").alias("component"))
-        prev_sum = cur_sum
+        for _ in range(max_iter):
+            neigh_min = (
+                sym.join(labels.select(F.col("id").alias("src"), F.col("lbl").alias("nlbl")), "src")
+                .groupBy(F.col("dst").alias("id"))
+                .agg(F.min("nlbl").alias("minn"))
+            )
+            prev, labels = labels, scope.checkpoint(
+                labels.join(neigh_min, "id", "left")
+                .select("id", F.least("lbl", F.coalesce("minn", F.col("lbl"))).alias("lbl"))
+            )
+            scope.release(prev)
+            cur_sum = labels.agg(F.sum("lbl")).collect()[0][0]
+            if cur_sum == prev_sum:
+                return scope.keep(labels).select("id", F.col("lbl").alias("component"))
+            prev_sum = cur_sum
 
     raise RuntimeError(
         f"connected_components did not converge in {max_iter} iterations — "
@@ -270,67 +271,61 @@ def pagerank(
         F.col(dst_col).alias("dst"),
         (F.col(weight_col) if weight_col else F.lit(1)).cast("double").alias("w"),
     )
-    nodes = (
-        w.select(F.col("src").alias("node"))
-        .unionByName(w.select(F.col("dst").alias("node")))
-        .distinct()
-        .persist()
-    )
-    n = nodes.count()
-    if n == 0:
-        return nodes.withColumn("rank", F.lit(0.0))
-    out_w = w.groupBy("src").agg(F.sum("w").alias("out_w"))
-    trans = (
-        w.join(out_w, "src")
-        .select("src", "dst", (F.col("w") / F.col("out_w")).alias("p"))
-        .persist()
-    )
-    dangling_nodes = nodes.join(
-        out_w.select(F.col("src").alias("node")), "node", "left_anti"
-    ).persist()
-    ranks = nodes.select("node", F.lit(1.0 / n).alias("rank")).localCheckpoint()
-    for _ in range(n_iter):
-        dangling_mass = (
-            dangling_nodes.join(ranks, "node")
-            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)))
-            .first()[0]
+    with FrameScope() as scope:
+        nodes = scope.cache(
+            w.select(F.col("src").alias("node"))
+            .unionByName(w.select(F.col("dst").alias("node")))
+            .distinct()
         )
-        contribs = (
-            trans.join(ranks, trans["src"] == ranks["node"])
-            .groupBy("dst")
-            .agg(F.sum(F.col("rank") * F.col("p")).alias("c"))
+        n = nodes.count()
+        if n == 0:
+            return nodes.withColumn("rank", F.lit(0.0))
+        out_w = w.groupBy("src").agg(F.sum("w").alias("out_w"))
+        trans = scope.cache(
+            w.join(out_w, "src").select("src", "dst", (F.col("w") / F.col("out_w")).alias("p"))
         )
-        new_ranks = (
-            nodes.join(contribs, nodes["node"] == contribs["dst"], "left")
-            .select(
-                "node",
-                (
-                    F.lit((1.0 - damping) / n)
-                    + F.lit(damping)
-                    * (F.coalesce(F.col("c"), F.lit(0.0)) + F.lit(dangling_mass / n))
-                ).alias("rank"),
-            )
-            .localCheckpoint()
+        dangling_nodes = scope.cache(
+            nodes.join(out_w.select(F.col("src").alias("node")), "node", "left_anti")
         )
-        delta = None
-        if tol is not None:
-            delta = (
-                new_ranks.select("node", F.col("rank").alias("r_new"))
-                .join(
-                    ranks.select("node", F.col("rank").alias("r_old")), "node"
-                )
-                .agg(
-                    F.coalesce(
-                        F.sum(F.abs(F.col("r_new") - F.col("r_old"))), F.lit(0.0)
-                    )
-                )
+        ranks = scope.checkpoint(nodes.select("node", F.lit(1.0 / n).alias("rank")))
+        for _ in range(n_iter):
+            dangling_mass = (
+                dangling_nodes.join(ranks, "node")
+                .agg(F.coalesce(F.sum("rank"), F.lit(0.0)))
                 .first()[0]
             )
-        ranks.unpersist()
-        ranks = new_ranks
-        if delta is not None and delta <= tol:
-            break
-    nodes.unpersist()
-    trans.unpersist()
-    dangling_nodes.unpersist()
-    return ranks
+            contribs = (
+                trans.join(ranks, trans["src"] == ranks["node"])
+                .groupBy("dst")
+                .agg(F.sum(F.col("rank") * F.col("p")).alias("c"))
+            )
+            new_ranks = scope.checkpoint(
+                nodes.join(contribs, nodes["node"] == contribs["dst"], "left").select(
+                    "node",
+                    (
+                        F.lit((1.0 - damping) / n)
+                        + F.lit(damping)
+                        * (F.coalesce(F.col("c"), F.lit(0.0)) + F.lit(dangling_mass / n))
+                    ).alias("rank"),
+                )
+            )
+            delta = None
+            if tol is not None:
+                delta = (
+                    new_ranks.select("node", F.col("rank").alias("r_new"))
+                    .join(
+                        ranks.select("node", F.col("rank").alias("r_old")), "node"
+                    )
+                    .agg(
+                        F.coalesce(
+                            F.sum(F.abs(F.col("r_new") - F.col("r_old"))), F.lit(0.0)
+                        )
+                    )
+                    .first()[0]
+                )
+            # released only now: the delta join above read it
+            scope.release(ranks)
+            ranks = new_ranks
+            if delta is not None and delta <= tol:
+                break
+        return scope.keep(ranks)

@@ -724,9 +724,9 @@ def global_sort_rank(df: DataFrame, order_cols: Sequence[str]) -> DataFrame:
     sampled range exchange — with reuse disabled (or a plan shape that
     defeats canonicalization) independent evaluations could draw
     different partitioner boundaries and desynchronize ``__off`` from
-    ``__pid``. (A persist-plus-GC-lease would not survive derivation:
-    cache substitution happens at action time, so a lease collected with
-    an intermediate frame reopens the hole; the checkpointed RDD is
+    ``__pid``. (A cache owned by the returned frame, ``FrameScope.own``,
+    would not survive derivation: cache substitution happens at action
+    time, so a scope collected with an intermediate frame reopens the hole; the checkpointed RDD is
     referenced structurally by every derived plan.) Reserved working
     names must be free."""
     from pyspark.sql.window import Window

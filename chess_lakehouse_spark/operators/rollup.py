@@ -66,7 +66,7 @@ import re
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from chess_lakehouse_spark.session import local_df
+from chess_lakehouse_spark.session import FrameScope, local_df
 
 _AGGS = ("count", "countnn", "sum", "sum6", "min", "max", "hll")
 _BATCH_ID_RE = re.compile(r"^[A-Za-z0-9._-]+$")
@@ -359,12 +359,10 @@ def percentile_from_counts(
         )
     w = Window.partitionBy(*group_keys).orderBy(bucket_col)
     tot = Window.partitionBy(*group_keys)
-    c = (
-        df.withColumn("_cum", F.sum(n_col).over(w))
-        .withColumn("_tot", F.sum(n_col).over(tot))
-        .persist()
-    )
-    try:
+    with FrameScope() as scope:
+        c = scope.cache(
+            df.withColumn("_cum", F.sum(n_col).over(w)).withColumn("_tot", F.sum(n_col).over(tot))
+        )
         out = None
         for p6, name in zip(p6s, names):
             hit = (
@@ -378,7 +376,4 @@ def percentile_from_counts(
                 .agg(F.min(bucket_col).alias(name))
             )
             out = hit if out is None else out.join(hit, group_keys)
-        out = out.localCheckpoint()
-    finally:
-        c.unpersist()
-    return out
+        return out.localCheckpoint()

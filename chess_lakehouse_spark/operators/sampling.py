@@ -451,71 +451,70 @@ def dsir_topk(
 
     from pyspark.sql.window import Window as _W
 
-    from chess_lakehouse_spark.operators.dedup import _CacheLease, _stamp_lease
+    from chess_lakehouse_spark.session import FrameScope
 
     t_counts = features(target).groupBy("b").agg(F.count(F.lit(1)).alias("ct"))
     # The raw feature frame feeds TWO consumers (the raw bucket model and
     # the per-doc scoring join); without a persist the tokenize + bigram
     # explode + md5 hashing chain ran once per consumer (r16, guide §2.4).
-    # Invocation-scoped cache, lifetime GC-tied to the returned frame.
-    raw_feats = _stamp_lease(features(raw, with_id=True)).persist()
-    lease = _CacheLease(raw_feats)
-    q_counts = raw_feats.groupBy("b").agg(F.count(F.lit(1)).alias("cq"))
-    # Corpus totals as unpartitioned-window columns over the joined
-    # bucket frame (≤ 2·n_buckets rows) — the .scalar() subqueries each
-    # re-executed a full corpus feature chain (r16, the bm25 trick).
-    # Σ coalesce(ct, 0) over the full-outer join = Σ ct over t_counts
-    # exactly (bucket keys are unique per side), so the same integers
-    # enter the same expressions.
-    _wall = _W.partitionBy()
-    ratios = (
-        t_counts.join(q_counts, "b", "full_outer")
-        .withColumn("__tt", F.sum(F.coalesce(F.col("ct"), F.lit(0))).over(_wall))
-        .withColumn("__qt", F.sum(F.coalesce(F.col("cq"), F.lit(0))).over(_wall))
-        .select(
-            "b",
-            F.round(
-                F.log(
-                    # factors cast to double BEFORE the product: the
-                    # count*B terms fit a long, but their product with the
-                    # corpus total can exceed it at scale
-                    (
-                        (F.coalesce(F.col("ct"), F.lit(0)) * n_buckets + 1).cast("double")
-                        * (F.col("__qt") + F.lit(1)).cast("double")
-                    )
-                    / (
-                        (F.coalesce(F.col("cq"), F.lit(0)) * n_buckets + 1).cast("double")
-                        * (F.col("__tt") + F.lit(1)).cast("double")
-                    )
-                ),
-                precision,
-            ).alias("lr"),
+    # Invocation-scoped cache, owned by the returned frame.
+    with FrameScope() as scope:
+        raw_feats = scope.cache(features(raw, with_id=True))
+        q_counts = raw_feats.groupBy("b").agg(F.count(F.lit(1)).alias("cq"))
+        # Corpus totals as unpartitioned-window columns over the joined
+        # bucket frame (≤ 2·n_buckets rows) — the .scalar() subqueries each
+        # re-executed a full corpus feature chain (r16, the bm25 trick).
+        # Σ coalesce(ct, 0) over the full-outer join = Σ ct over t_counts
+        # exactly (bucket keys are unique per side), so the same integers
+        # enter the same expressions.
+        _wall = _W.partitionBy()
+        ratios = (
+            t_counts.join(q_counts, "b", "full_outer")
+            .withColumn("__tt", F.sum(F.coalesce(F.col("ct"), F.lit(0))).over(_wall))
+            .withColumn("__qt", F.sum(F.coalesce(F.col("cq"), F.lit(0))).over(_wall))
+            .select(
+                "b",
+                F.round(
+                    F.log(
+                        # factors cast to double BEFORE the product: the
+                        # count*B terms fit a long, but their product with the
+                        # corpus total can exceed it at scale
+                        (
+                            (F.coalesce(F.col("ct"), F.lit(0)) * n_buckets + 1).cast("double")
+                            * (F.col("__qt") + F.lit(1)).cast("double")
+                        )
+                        / (
+                            (F.coalesce(F.col("cq"), F.lit(0)) * n_buckets + 1).cast("double")
+                            * (F.col("__tt") + F.lit(1)).cast("double")
+                        )
+                    ),
+                    precision,
+                ).alias("lr"),
+            )
         )
-    )
-    logw = (
-        raw_feats.join(F.broadcast(ratios), "b")
-        .groupBy("id")
-        .agg(
-            F.round(
-                F.sum(F.col("lr").cast("decimal(18,6)")).cast("double"), precision
-            ).alias("logw")
+        logw = (
+            raw_feats.join(F.broadcast(ratios), "b")
+            .groupBy("id")
+            .agg(
+                F.round(
+                    F.sum(F.col("lr").cast("decimal(18,6)")).cast("double"), precision
+                ).alias("logw")
+            )
         )
-    )
-    u = (sample_hash(F.col("id"), seed).cast("double") + F.lit(1.0)) / F.lit(
-        float(_HASH_SPACE + 1)
-    )
-    gumbel = F.round(-F.log(-F.log(u)), precision)
-    out = (
-        logw.select(
-            F.col("id").alias(id_col),
-            "logw",
-            F.round(F.col("logw") + gumbel, precision).alias("score"),
+        u = (sample_hash(F.col("id"), seed).cast("double") + F.lit(1.0)) / F.lit(
+            float(_HASH_SPACE + 1)
         )
-        .orderBy(F.col("score").desc(), F.col(id_col).asc())
-        .limit(k)
-    )
-    out._dsir_cache_lease = lease  # type: ignore[attr-defined]
-    return out
+        gumbel = F.round(-F.log(-F.log(u)), precision)
+        out = (
+            logw.select(
+                F.col("id").alias(id_col),
+                "logw",
+                F.round(F.col("logw") + gumbel, precision).alias("score"),
+            )
+            .orderBy(F.col("score").desc(), F.col(id_col).asc())
+            .limit(k)
+        )
+        return scope.own(out)
 
 
 def shard_assignments(

@@ -26,7 +26,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from chess_lakehouse_spark.session import local_df, spread
+from chess_lakehouse_spark.session import FrameScope, local_df, spread
 
 
 def as_double(arr: Column) -> Column:
@@ -260,17 +260,15 @@ def kmeans_fit(
     # fully-unrolled one-job form (oracle-style nested CTEs in one plan)
     # fenced SLOWER (4.2 s) — the nested window/agg tree costs more than
     # the saved job round trips — so iteration stays driver-sequenced.
-    from chess_lakehouse_spark.operators.dedup import _stamp_lease
-
-    vecs = _stamp_lease(
-        spread(
-            corpus.select(
-                F.col(id_col).alias("vid"), as_double(F.col(vec_col)).alias("dv")
-            ),
-            "vid",
+    with FrameScope() as scope:
+        vecs = scope.cache(
+            spread(
+                corpus.select(
+                    F.col(id_col).alias("vid"), as_double(F.col(vec_col)).alias("dv")
+                ),
+                "vid",
+            )
         )
-    ).persist()
-    try:
         init_rows = (
             vecs.select(
                 "vid", "dv", F.md5(F.concat(F.lit(f"{seed}|"), F.col("vid").cast("string"))).alias("mk")
@@ -312,8 +310,6 @@ def kmeans_fit(
                 )
                 for cid, old in cents
             ]
-    finally:
-        vecs.unpersist(blocking=True)
     return cents
 
 
@@ -655,35 +651,35 @@ def semantic_dedup(
 
     # The assigned frame feeds THREE consumers (both pair-join sides and
     # the survivor anti-join); without a persist the k-centroid argmax fold
-    # re-runs once per consumer — measured 3x assignment cost. Lifetime is
-    # GC-tied to the returned frame (_CacheLease, as in ngram_jaccard).
-    from chess_lakehouse_spark.operators.dedup import _CacheLease, _stamp_lease
-
+    # re-runs once per consumer — measured 3x assignment cost. The cache
+    # is owned by the returned frame (FrameScope.own, as in ngram_jaccard).
     c = spread(corpus.select(F.col(id_col), F.col(vec_col)), id_col).select(
         F.col(id_col).alias("vid"),
         F.col(vec_col).alias("v"),
         dot(F.col(vec_col), F.col(vec_col)).alias("n2"),
     ).withColumn("list_id", _ranked_lists(cent_arr, F.col("v"), F.col("n2"))[0]["cid"])
-    c = _stamp_lease(c).persist()
-    lease = _CacheLease(c)
-    a = c.select(
-        F.col("vid").alias("id_a"), F.col("v").alias("qv"), F.col("n2").alias("qn2"), "list_id"
-    )
-    b = c.select(
-        F.col("vid").alias("id_b"), F.col("v").alias("cv"), F.col("n2").alias("cn2"), "list_id"
-    )
-    dropped = (
-        a.join(b, on="list_id")
-        .where(F.col("id_a") < F.col("id_b"))
-        .where(_paired_cosine() >= threshold)
-        .select(F.col("id_b").alias("vid"))
-        .distinct()
-    )
-    out = c.join(dropped, on="vid", how="left_anti").select(
-        F.col("vid").alias(id_col), "list_id"
-    )
-    out._semantic_cache_lease = lease  # type: ignore[attr-defined]
-    return out
+    with FrameScope() as scope:
+        c = scope.cache(c)
+        a = c.select(
+            F.col("vid").alias("id_a"), F.col("v").alias("qv"), F.col("n2").alias("qn2"),
+            "list_id",
+        )
+        b = c.select(
+            F.col("vid").alias("id_b"), F.col("v").alias("cv"), F.col("n2").alias("cn2"),
+            "list_id",
+        )
+        dropped = (
+            a.join(b, on="list_id")
+            .where(F.col("id_a") < F.col("id_b"))
+            .where(_paired_cosine() >= threshold)
+            .select(F.col("id_b").alias("vid"))
+            .distinct()
+        )
+        return scope.own(
+            c.join(dropped, on="vid", how="left_anti").select(
+                F.col("vid").alias(id_col), "list_id"
+            )
+        )
 
 
 def semantic_contamination(
@@ -1394,17 +1390,15 @@ def pq_train(
         raise ValueError(f"pq_train: m must be >= 1, got {m}")
     # Lazy persist, not eager localCheckpoint — see kmeans_fit (the
     # materialization rides the init-collect job; one fewer job per train).
-    from chess_lakehouse_spark.operators.dedup import _stamp_lease
-
-    vecs = _stamp_lease(
-        spread(
-            corpus.select(
-                F.col(id_col).alias("vid"), as_double(F.col(vec_col)).alias("dv")
-            ),
-            "vid",
+    with FrameScope() as scope:
+        vecs = scope.cache(
+            spread(
+                corpus.select(
+                    F.col(id_col).alias("vid"), as_double(F.col(vec_col)).alias("dv")
+                ),
+                "vid",
+            )
         )
-    ).persist()
-    try:
         init_rows = (
             vecs.select(
                 "vid",
@@ -1479,8 +1473,6 @@ def pq_train(
                 ]
                 for s in range(m)
             ]
-    finally:
-        vecs.unpersist(blocking=True)
     return books
 
 

@@ -15,6 +15,7 @@ same code path as the live stream.
 from __future__ import annotations
 
 from collections.abc import Iterator
+from functools import partial
 from typing import Any
 
 import pandas as pd
@@ -29,7 +30,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from chess_lakehouse_spark.session import local_df
+from chess_lakehouse_spark.session import FrameScope, local_df
 
 
 def read_events_stream(spark: SparkSession, events_dir: str) -> DataFrame:
@@ -171,6 +172,18 @@ def run_available_now(
         .start()
     )
     q.awaitTermination()
+
+
+def _drain(stream_df: DataFrame, batch_fn, checkpoint_dir: str) -> None:
+    """Run ``batch_fn(batch_df, batch_id)`` on every micro-batch currently
+    in the source (availableNow), then stop."""
+    (
+        stream_df.writeStream.foreachBatch(batch_fn)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
 
 
 def read_documents_stream(spark: SparkSession, docs_dir: str) -> DataFrame:
@@ -344,13 +357,7 @@ def stream_corpus_to_jsonl_shards(
             .json(f"{out_dir}/batch_id={batch_id}")
         )
 
-    q = (
-        clean_docs.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(clean_docs, _sink, checkpoint_dir)
 
 
 def sliding_event_counts(
@@ -415,20 +422,16 @@ def stream_incremental_dedup(
     and stops (test/backfill); production uses a live trigger on the same
     plan.
     """
-    def _batch(batch_df: DataFrame, batch_id: int) -> None:
-        incremental_dedup_batch(
-            batch_df, batch_id, corpus_dir, sigs_dir, pairs_dir,
+    _drain(
+        new_docs,
+        partial(
+            incremental_dedup_batch,
+            corpus_dir=corpus_dir, sigs_dir=sigs_dir, pairs_dir=pairs_dir,
             id_col=id_col, text_col=text_col,
             k=k, num_hashes=num_hashes, band_size=band_size, threshold=threshold,
-        )
-
-    q = (
-        new_docs.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        ),
+        checkpoint_dir,
     )
-    q.awaitTermination()
 
 
 def _path_exists(spark: SparkSession, path: str) -> bool:
@@ -464,8 +467,8 @@ def incremental_dedup_batch(
     )
 
     spark = batch_df.sparkSession
-    batch_df = batch_df.persist()
-    try:
+    with FrameScope() as scope:
+        batch_df = scope.cache(batch_df)
         # within-batch near-dups: min id per pair is the batch canonical
         intra = minhash_lsh_dedup(
             batch_df, id_col, text_col,
@@ -496,22 +499,17 @@ def incremental_dedup_batch(
                 batch_df, corpus_sigs, corpus_docs, id_col, text_col,
                 k=k, num_hashes=num_hashes, band_size=band_size, threshold=threshold,
             )
+            # ``inc`` owns its candidate cache; it stays bound until the
+            # writes below have run
             cross = inc.select(
                 F.col("new_id").alias("id_a"),
                 F.col("corpus_id").alias("id_b"),
                 "jaccard",
                 F.lit("cross").alias("kind"),
             )
-            # carry the candidate-cache lease onto the frame this job
-            # actually actions — a bare .select() would drop the last
-            # reference and unpersist the candidate frame before the
-            # pairs write runs (r16; see incremental_near_dups)
-            cross._incr_cache_leases = getattr(  # type: ignore[attr-defined]
-                inc, "_incr_cache_leases", ()
-            )
         else:
             cross = intra.limit(0)
-        pairs = intra.unionByName(cross).persist()
+        pairs = scope.cache(intra.unionByName(cross))
         pairs.write.mode("overwrite").parquet(f"{pairs_dir}/batch_id={batch_id}")
 
         # dropped: anything with a corpus near-dup, or the higher id of
@@ -523,16 +521,12 @@ def incremental_dedup_batch(
             )
             .distinct()
         )
-        admitted = batch_df.join(dropped, id_col, "left_anti").persist()
+        admitted = scope.cache(batch_df.join(dropped, id_col, "left_anti"))
         admitted.write.mode("overwrite").parquet(f"{corpus_dir}/batch_id={batch_id}")
         sigs = minhash_signatures(
             word_shingles(admitted, id_col, text_col, k=k), id_col, num_hashes=num_hashes
         )
         sigs.write.mode("overwrite").parquet(f"{sigs_dir}/batch_id={batch_id}")
-        pairs.unpersist()
-        admitted.unpersist()
-    finally:
-        batch_df.unpersist()
 
 
 def stream_url_dedup(
@@ -566,18 +560,14 @@ def stream_url_dedup(
     canonicalization + one map-combined groupBy on the batch's URLs + the
     staged anti-join.
     """
-    def _batch(batch_df: DataFrame, batch_id: int) -> None:
-        url_dedup_batch(
-            batch_df, batch_id, urls_dir, out_dir, id_col=id_col, url_col=url_col
-        )
-
-    q = (
-        new_docs.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        new_docs,
+        partial(
+            url_dedup_batch,
+            urls_dir=urls_dir, out_dir=out_dir, id_col=id_col, url_col=url_col,
+        ),
+        checkpoint_dir,
     )
-    q.awaitTermination()
 
 
 def stream_span_dedup(
@@ -610,19 +600,15 @@ def stream_span_dedup(
     the staged side is an equi-join on md5 keys, never pairwise.
     """
 
-    def _batch(batch_df: DataFrame, batch_id: int) -> None:
-        span_dedup_batch(
-            batch_df, batch_id, spans_dir, out_dir,
+    _drain(
+        new_docs,
+        partial(
+            span_dedup_batch,
+            spans_dir=spans_dir, out_dir=out_dir,
             id_col=id_col, text_col=text_col, k=k,
-        )
-
-    q = (
-        new_docs.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        ),
+        checkpoint_dir,
     )
-    q.awaitTermination()
 
 
 def span_dedup_batch(
@@ -643,8 +629,8 @@ def span_dedup_batch(
     )
 
     spark = batch_df.sparkSession
-    batch_df = batch_df.persist()
-    try:
+    with FrameScope() as scope:
+        batch_df = scope.cache(batch_df)
         staged = None
         if _path_exists(spark, spans_dir):
             # replay-hole guard: never dedup a replayed batch against its
@@ -671,8 +657,6 @@ def span_dedup_batch(
         new_hashes.write.mode("overwrite").parquet(
             f"{spans_dir}/batch_id={batch_id}"
         )
-    finally:
-        batch_df.unpersist()
 
 
 def url_dedup_batch(
@@ -691,10 +675,8 @@ def url_dedup_batch(
     from chess_lakehouse_spark.functions.urls import url_canonicalize
 
     spark = batch_df.sparkSession
-    canon = batch_df.withColumn(
-        "url_canon", url_canonicalize(F.col(url_col))
-    ).persist()
-    try:
+    with FrameScope() as scope:
+        canon = scope.cache(batch_df.withColumn("url_canon", url_canonicalize(F.col(url_col))))
         winners = canon.groupBy("url_canon").agg(
             F.min(id_col).alias(id_col)
         )
@@ -707,18 +689,13 @@ def url_dedup_batch(
                 .select("url_canon")
             )
             winners = winners.join(staged, "url_canon", "left_anti")
-        admitted = canon.join(
-            winners.select(id_col), id_col, "left_semi"
-        ).persist()
+        admitted = scope.cache(canon.join(winners.select(id_col), id_col, "left_semi"))
         admitted.write.mode("overwrite").parquet(
             f"{out_dir}/batch_id={batch_id}"
         )
         admitted.select("url_canon", id_col).write.mode("overwrite").parquet(
             f"{urls_dir}/batch_id={batch_id}"
         )
-        admitted.unpersist()
-    finally:
-        canon.unpersist()
 
 
 def bloom_dedup_batch(
@@ -742,8 +719,8 @@ def bloom_dedup_batch(
     )
 
     spark = batch_df.sparkSession
-    batch_df = batch_df.persist()
-    try:
+    with FrameScope() as scope:
+        batch_df = scope.cache(batch_df)
         winners = batch_df.groupBy(key_col).agg(F.min(id_col).alias(id_col))
         staged = None
         if _path_exists(spark, bloom_dir):
@@ -755,7 +732,7 @@ def bloom_dedup_batch(
             # persist the merged bitmap: the dims fetch, the gate's own
             # meta fetch and the broadcast would otherwise each re-run
             # the multi-batch OR over the staged state
-            staged = staged.persist()
+            staged = scope.cache(staged)
             row = staged.select("m_bits", "k").first()
             m_bits, k = int(row["m_bits"]), int(row["k"])  # state owns dims
             winners = (
@@ -763,24 +740,17 @@ def bloom_dedup_batch(
                 .where(~F.col("might_contain"))
                 .drop("might_contain")
             )
-        winners = winners.persist()
-        try:
-            admitted = batch_df.join(
-                winners.select(id_col), id_col, "left_semi"
-            )
-            admitted.write.mode("overwrite").parquet(
-                f"{out_dir}/batch_id={batch_id}"
-            )
-            delta_bloom = build_bloom(
-                winners.select(key_col), key_col, m_bits=m_bits, k=k
-            )
-            write_bloom_batch(delta_bloom, bloom_dir, batch_id)
-        finally:
-            winners.unpersist()
-            if staged is not None:
-                staged.unpersist()
-    finally:
-        batch_df.unpersist()
+        winners = scope.cache(winners)
+        admitted = batch_df.join(
+            winners.select(id_col), id_col, "left_semi"
+        )
+        admitted.write.mode("overwrite").parquet(
+            f"{out_dir}/batch_id={batch_id}"
+        )
+        delta_bloom = build_bloom(
+            winners.select(key_col), key_col, m_bits=m_bits, k=k
+        )
+        write_bloom_batch(delta_bloom, bloom_dir, batch_id)
 
 
 def stream_bloom_dedup(
@@ -822,19 +792,15 @@ def stream_bloom_dedup(
     tests per winner against the broadcast bitmap + an O(k·|admitted|)
     delta-bitmap build — the staged corpus is never re-read."""
 
-    def _batch(batch_df: DataFrame, batch_id: int) -> None:
-        bloom_dedup_batch(
-            batch_df, batch_id, bloom_dir, out_dir,
+    _drain(
+        new_docs,
+        partial(
+            bloom_dedup_batch,
+            bloom_dir=bloom_dir, out_dir=out_dir,
             id_col=id_col, key_col=key_col, m_bits=m_bits, k=k,
-        )
-
-    q = (
-        new_docs.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        ),
+        checkpoint_dir,
     )
-    q.awaitTermination()
 
 
 def stream_phash_dedup(
@@ -872,19 +838,15 @@ def stream_phash_dedup(
     the batch's band buckets, not the corpus.
     """
 
-    def _batch(batch_df: DataFrame, batch_id: int) -> None:
-        phash_dedup_batch(
-            batch_df, batch_id, sigs_dir, out_dir,
+    _drain(
+        new_docs,
+        partial(
+            phash_dedup_batch,
+            sigs_dir=sigs_dir, out_dir=out_dir,
             max_hamming=max_hamming, band_bits=band_bits, codec=codec,
-        )
-
-    q = (
-        new_docs.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        ),
+        checkpoint_dir,
     )
-    q.awaitTermination()
 
 
 def _binary_sig_dedup_batch(
@@ -892,7 +854,7 @@ def _binary_sig_dedup_batch(
     batch_id: int,
     sigs_dir: str,
     out_dir: str,
-    sig: DataFrame,
+    signature,
     hash_col: str,
     max_hamming: int,
     band_bits: int,
@@ -902,9 +864,11 @@ def _binary_sig_dedup_batch(
     connected components → min-id canonical; survivors banded-joined
     against staged signatures (excluding the in-flight batch's own
     partition — the replay-hole guard); ALL of the batch's signatures
-    (pre-dedup, the anchor rule) staged to ``sigs_dir``. ``sig`` is the
-    NULL-filtered (doc_id, hash_col) frame — rows absent from it
-    (undecodable payloads) always survive and stage nothing."""
+    (pre-dedup, the anchor rule) staged to ``sigs_dir``.
+    ``signature(batch_df)`` gives the NULL-filtered (doc_id, hash_col)
+    frame — rows absent from it (undecodable payloads) always survive and
+    stage nothing. It is applied to the cached batch, so the payloads are
+    read once."""
     from chess_lakehouse_spark.operators.dedup import (
         hamming_join,
         hamming_near_pairs,
@@ -912,44 +876,39 @@ def _binary_sig_dedup_batch(
     from chess_lakehouse_spark.operators.graph import connected_components
 
     spark = batch_df.sparkSession
-    batch_df = batch_df.persist()
-    try:
-        sig = sig.persist()
-        try:
-            pairs = hamming_near_pairs(
-                sig, "doc_id", hash_col,
+    with FrameScope() as scope:
+        batch_df = scope.cache(batch_df)
+        sig = scope.cache(signature(batch_df))
+        pairs = hamming_near_pairs(
+            sig, "doc_id", hash_col,
+            n_bits=64, max_hamming=max_hamming, band_bits=band_bits,
+        )
+        comps = connected_components(pairs)
+        losers = comps.where(F.col("id") != F.col("component")).select(
+            F.col("id").alias("doc_id")
+        )
+        admitted = batch_df.join(losers, "doc_id", "left_anti")
+        if _path_exists(spark, sigs_dir):
+            # replay-hole guard: never compare a replayed batch
+            # against its own staged signatures
+            staged = (
+                spark.read.parquet(sigs_dir)
+                .where(F.col("batch_id").cast("string") != F.lit(str(batch_id)))
+                .select("doc_id", hash_col)
+            )
+            hits = hamming_join(
+                sig, staged, "doc_id", hash_col,
                 n_bits=64, max_hamming=max_hamming, band_bits=band_bits,
-            )
-            comps = connected_components(pairs)
-            losers = comps.where(F.col("id") != F.col("component")).select(
-                F.col("id").alias("doc_id")
-            )
-            admitted = batch_df.join(losers, "doc_id", "left_anti")
-            if _path_exists(spark, sigs_dir):
-                # replay-hole guard: never compare a replayed batch
-                # against its own staged signatures
-                staged = (
-                    spark.read.parquet(sigs_dir)
-                    .where(F.col("batch_id").cast("string") != F.lit(str(batch_id)))
-                    .select("doc_id", hash_col)
-                )
-                hits = hamming_join(
-                    sig, staged, "doc_id", hash_col,
-                    n_bits=64, max_hamming=max_hamming, band_bits=band_bits,
-                ).select(F.col("new_id").alias("doc_id"))
-                admitted = admitted.join(hits, "doc_id", "left_anti")
-            admitted.write.mode("overwrite").parquet(
-                f"{out_dir}/batch_id={batch_id}"
-            )
-            # stage ALL decodable batch signatures (pre-dedup — the
-            # anchor rule, exactly as the span loop stages original text)
-            sig.write.mode("overwrite").parquet(
-                f"{sigs_dir}/batch_id={batch_id}"
-            )
-        finally:
-            sig.unpersist()
-    finally:
-        batch_df.unpersist()
+            ).select(F.col("new_id").alias("doc_id"))
+            admitted = admitted.join(hits, "doc_id", "left_anti")
+        admitted.write.mode("overwrite").parquet(
+            f"{out_dir}/batch_id={batch_id}"
+        )
+        # stage ALL decodable batch signatures (pre-dedup — the
+        # anchor rule, exactly as the span loop stages original text)
+        sig.write.mode("overwrite").parquet(
+            f"{sigs_dir}/batch_id={batch_id}"
+        )
 
 
 def phash_dedup_batch(
@@ -966,9 +925,9 @@ def phash_dedup_batch(
     identical partitions; see ``stream_phash_dedup``)."""
     from chess_lakehouse_spark.operators.multimodal import phash64
 
-    sig = phash64(batch_df, codec=codec).where(F.col("phash").isNotNull())
     _binary_sig_dedup_batch(
-        batch_df, batch_id, sigs_dir, out_dir, sig, "phash",
+        batch_df, batch_id, sigs_dir, out_dir,
+        lambda b: phash64(b, codec=codec).where(F.col("phash").isNotNull()), "phash",
         max_hamming=max_hamming, band_bits=band_bits,
     )
 
@@ -992,19 +951,15 @@ def stream_audio_dedup(
     vs global-clustering boundary as the image loop, exact on
     clique-shaped clusters."""
 
-    def _batch(batch_df: DataFrame, batch_id: int) -> None:
-        audio_dedup_batch(
-            batch_df, batch_id, sigs_dir, out_dir,
+    _drain(
+        new_docs,
+        partial(
+            audio_dedup_batch,
+            sigs_dir=sigs_dir, out_dir=out_dir,
             max_hamming=max_hamming, band_bits=band_bits,
-        )
-
-    q = (
-        new_docs.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        ),
+        checkpoint_dir,
     )
-    q.awaitTermination()
 
 
 def audio_dedup_batch(
@@ -1020,9 +975,9 @@ def audio_dedup_batch(
     ``stream_audio_dedup``)."""
     from chess_lakehouse_spark.operators.audio import audio_fingerprint
 
-    sig = audio_fingerprint(batch_df).where(F.col("afp").isNotNull())
     _binary_sig_dedup_batch(
-        batch_df, batch_id, sigs_dir, out_dir, sig, "afp",
+        batch_df, batch_id, sigs_dir, out_dir,
+        lambda b: audio_fingerprint(b).where(F.col("afp").isNotNull()), "afp",
         max_hamming=max_hamming, band_bits=band_bits,
     )
 
@@ -1055,20 +1010,16 @@ def stream_video_dedup(
     partitions + the replay-hole guard), pinned by the double-invoke
     replay test."""
 
-    def _batch(batch_df: DataFrame, batch_id: int) -> None:
-        video_dedup_batch(
-            batch_df, batch_id, sigs_dir, out_dir,
+    _drain(
+        new_docs,
+        partial(
+            video_dedup_batch,
+            sigs_dir=sigs_dir, out_dir=out_dir,
             max_hamming=max_hamming, min_sim=min_sim,
             frame_stride=frame_stride, band_bits=band_bits,
-        )
-
-    q = (
-        new_docs.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        ),
+        checkpoint_dir,
     )
-    q.awaitTermination()
 
 
 def video_dedup_batch(
@@ -1095,66 +1046,61 @@ def video_dedup_batch(
 
     S = FRAME_ID_STRIDE
     spark = batch_df.sparkSession
-    batch_df = batch_df.persist()
-    try:
-        fr = video_frame_phash(batch_df, frame_stride=frame_stride).persist()
-        try:
-            pairs = video_near_pairs(
-                batch_df, max_hamming=max_hamming, min_sim=min_sim,
-                band_bits=band_bits, frames=fr,
+    with FrameScope() as scope:
+        batch_df = scope.cache(batch_df)
+        fr = scope.cache(video_frame_phash(batch_df, frame_stride=frame_stride))
+        pairs = video_near_pairs(
+            batch_df, max_hamming=max_hamming, min_sim=min_sim,
+            band_bits=band_bits, frames=fr,
+        )
+        comps = connected_components(pairs.select("id_a", "id_b"))
+        losers = comps.where(F.col("id") != F.col("component")).select(
+            F.col("id").alias("doc_id")
+        )
+        admitted = batch_df.join(losers, "doc_id", "left_anti")
+        if _path_exists(spark, sigs_dir):
+            # replay-hole guard: never compare a replayed batch
+            # against its own staged frame hashes
+            staged = (
+                spark.read.parquet(sigs_dir)
+                .where(F.col("batch_id").cast("string") != F.lit(str(batch_id)))
+                .select("doc_id", "frame_idx", "frame_phash")
             )
-            comps = connected_components(pairs.select("id_a", "id_b"))
-            losers = comps.where(F.col("id") != F.col("component")).select(
-                F.col("id").alias("doc_id")
+            new_fid = fr.select(
+                checked_frame_id("doc_id", "frame_idx").alias("fid"),
+                "frame_phash",
             )
-            admitted = batch_df.join(losers, "doc_id", "left_anti")
-            if _path_exists(spark, sigs_dir):
-                # replay-hole guard: never compare a replayed batch
-                # against its own staged frame hashes
-                staged = (
-                    spark.read.parquet(sigs_dir)
-                    .where(F.col("batch_id").cast("string") != F.lit(str(batch_id)))
-                    .select("doc_id", "frame_idx", "frame_phash")
-                )
-                new_fid = fr.select(
-                    checked_frame_id("doc_id", "frame_idx").alias("fid"),
-                    "frame_phash",
-                )
-                corp_fid = staged.select(
-                    checked_frame_id("doc_id", "frame_idx").alias("fid"),
-                    "frame_phash",
-                )
-                hits = hamming_join(
-                    new_fid, corp_fid, "fid", "frame_phash",
-                    n_bits=64, max_hamming=max_hamming, band_bits=band_bits,
-                )
-                covered = (
-                    hits.select(
-                        F.expr(f"new_id DIV {S}").alias("doc_id"),
-                        (F.col("new_id") % S).alias("fidx"),
-                    )
-                    .groupBy("doc_id")
-                    .agg(F.countDistinct("fidx").alias("m"))
-                )
-                n_sampled = fr.groupBy("doc_id").agg(
-                    F.count(F.lit(1)).alias("ns")
-                )
-                drop = (
-                    covered.join(n_sampled, "doc_id")
-                    .where(F.col("m") / F.col("ns") >= min_sim)
-                    .select("doc_id")
-                )
-                admitted = admitted.join(drop, "doc_id", "left_anti")
-            admitted.write.mode("overwrite").parquet(
-                f"{out_dir}/batch_id={batch_id}"
+            corp_fid = staged.select(
+                checked_frame_id("doc_id", "frame_idx").alias("fid"),
+                "frame_phash",
             )
-            # stage ALL of the batch's frame hashes (pre-dedup — the
-            # anchor rule)
-            fr.write.mode("overwrite").parquet(f"{sigs_dir}/batch_id={batch_id}")
-        finally:
-            fr.unpersist()
-    finally:
-        batch_df.unpersist()
+            hits = hamming_join(
+                new_fid, corp_fid, "fid", "frame_phash",
+                n_bits=64, max_hamming=max_hamming, band_bits=band_bits,
+            )
+            covered = (
+                hits.select(
+                    F.expr(f"new_id DIV {S}").alias("doc_id"),
+                    (F.col("new_id") % S).alias("fidx"),
+                )
+                .groupBy("doc_id")
+                .agg(F.countDistinct("fidx").alias("m"))
+            )
+            n_sampled = fr.groupBy("doc_id").agg(
+                F.count(F.lit(1)).alias("ns")
+            )
+            drop = (
+                covered.join(n_sampled, "doc_id")
+                .where(F.col("m") / F.col("ns") >= min_sim)
+                .select("doc_id")
+            )
+            admitted = admitted.join(drop, "doc_id", "left_anti")
+        admitted.write.mode("overwrite").parquet(
+            f"{out_dir}/batch_id={batch_id}"
+        )
+        # stage ALL of the batch's frame hashes (pre-dedup — the
+        # anchor rule)
+        fr.write.mode("overwrite").parquet(f"{sigs_dir}/batch_id={batch_id}")
 
 
 def stream_rollup(
@@ -1180,13 +1126,7 @@ def stream_rollup(
     def _batch(batch_df: DataFrame, batch_id: int) -> None:
         append_rollup(batch_df, rollup_dir, f"b{batch_id}")
 
-    q = (
-        new_rows.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(new_rows, _batch, checkpoint_dir)
 
 
 def compact_stream_state(
@@ -1370,13 +1310,7 @@ def stream_scd2(
                 batch_df.sparkSession, dim_dir, keep_recent=keep_recent
             )
 
-    q = (
-        updates.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(updates, _batch, checkpoint_dir)
 
 
 def compact_scd2_snapshots(
@@ -1464,13 +1398,7 @@ def stream_anomaly_alerts(
         flags.write.mode("overwrite").parquet(tmp)
         _swap_lake_dirs(spark, tmp, alerts_dir.rstrip("/"), "stream_anomaly_alerts")
 
-    q = (
-        new_events.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(new_events, _batch, checkpoint_dir)
 
 
 def edit_dedup_batch(
@@ -1517,8 +1445,8 @@ def edit_dedup_batch(
     )
 
     spark = batch_df.sparkSession
-    batch_df = batch_df.persist()
-    try:
+    with FrameScope() as scope:
+        batch_df = scope.cache(batch_df)
         intra = edit_distance_pairs(
             batch_df, id_col, text_col, max_dist,
             q=q, stop_gram_min_df=stop_gram_min_df,
@@ -1552,7 +1480,7 @@ def edit_dedup_batch(
             )
         else:
             cross = intra.limit(0)
-        pairs = intra.unionByName(cross).persist()
+        pairs = scope.cache(intra.unionByName(cross))
         pairs.write.mode("overwrite").parquet(f"{pairs_dir}/batch_id={batch_id}")
 
         dropped = (
@@ -1562,7 +1490,7 @@ def edit_dedup_batch(
             )
             .distinct()
         )
-        admitted = batch_df.join(dropped, id_col, "left_anti").persist()
+        admitted = scope.cache(batch_df.join(dropped, id_col, "left_anti"))
         admitted.write.mode("overwrite").parquet(f"{corpus_dir}/batch_id={batch_id}")
         admitted_sigs = edit_signatures(admitted, id_col, text_col, q=q)
         admitted_sigs.write.mode("overwrite").parquet(
@@ -1578,10 +1506,6 @@ def edit_dedup_batch(
                 .write.mode("overwrite")
                 .parquet(f"{gdf_dir}/batch_id={batch_id}")
             )
-        pairs.unpersist()
-        admitted.unpersist()
-    finally:
-        batch_df.unpersist()
 
 
 def stream_edit_dedup(
@@ -1609,21 +1533,17 @@ def stream_edit_dedup(
     one gram equi-join against staged signatures + candidate-bounded
     threshold-DP verify — corpus text touched only for candidates."""
 
-    def _batch(batch_df: DataFrame, batch_id: int) -> None:
-        edit_dedup_batch(
-            batch_df, batch_id, corpus_dir, sigs_dir, pairs_dir,
+    _drain(
+        new_docs,
+        partial(
+            edit_dedup_batch,
+            corpus_dir=corpus_dir, sigs_dir=sigs_dir, pairs_dir=pairs_dir,
             id_col=id_col, text_col=text_col,
             max_dist=max_dist, q=q, stop_gram_min_df=stop_gram_min_df,
             gdf_dir=gdf_dir,
-        )
-
-    q_ = (
-        new_docs.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        ),
+        checkpoint_dir,
     )
-    q_.awaitTermination()
 
 
 def substring_index_batch(
@@ -1736,20 +1656,16 @@ def stream_substring_index(
     ``substring_search_from_index`` on the same directory, unaware of
     which partitions came from streaming."""
 
-    def _batch(batch_df: DataFrame, batch_id: int) -> None:
-        substring_index_batch(
-            batch_df, batch_id, index_dir,
+    _drain(
+        new_docs,
+        partial(
+            substring_index_batch,
+            index_dir=index_dir,
             id_col=id_col, text_col=text_col,
             q=q, fold_case=fold_case, n_posting_files=n_posting_files,
-        )
-
-    q_ = (
-        new_docs.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        ),
+        checkpoint_dir,
     )
-    q_.awaitTermination()
 
 
 def user_growth_batch(
@@ -1813,13 +1729,7 @@ def stream_user_growth(
             batch_df, f"b{batch_id}", state_dir, user_col=user_col, ts_col=ts_col
         )
 
-    q = (
-        new_events.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(new_events, _batch, checkpoint_dir)
 
 
 def serve_user_growth(
@@ -1879,13 +1789,7 @@ def stream_heavy_hitters(
             mg_batch_partial(batch_df, term_col, k), state_dir, f"b{batch_id}"
         )
 
-    q = (
-        new_rows.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(new_rows, _batch, checkpoint_dir)
 
 
 def stream_rank_sketch(
@@ -1924,10 +1828,4 @@ def stream_rank_sketch(
         )
         write_rank_sketch_batch(part, state_dir, f"b{batch_id}")
 
-    q = (
-        new_rows.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(new_rows, _batch, checkpoint_dir)

@@ -44,7 +44,7 @@ from chess_lakehouse_spark.functions.urls import (
     TRACKING_PARAM_SUB_DUCKDB,
     WWW_RE,
 )
-from chess_lakehouse_spark.session import apply_runtime_conf, local_df
+from chess_lakehouse_spark.session import FrameScope, apply_runtime_conf, local_df
 
 NUM_PLANES = 8
 EMB_DIM = 64
@@ -6308,28 +6308,24 @@ def q_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from chess_lakehouse_spark.operators.dedup import lsh_recall_report
 
-    from chess_lakehouse_spark.operators.dedup import _CacheLease, _stamp_lease
-
     docs = load_table(spark, sf_dir, "documents")
     # ONE shingle frame feeds all three consumers (exact-side counts,
     # exact-side inverted-index pair expansion, minhash signatures) —
     # before r16 the scan → tokenize → explode → distinct chain executed
     # three times because each consumer prunes it differently and
     # ReuseExchange cannot dedupe across the prunings (guide §2.4). The
-    # persist is lifetime-scoped to the returned frame (_CacheLease, the
+    # cache is owned by the returned frame (FrameScope.own, the
     # ngram_jaccard discipline); values are unchanged — the same
     # deterministic shingle set enters the same expressions.
-    sh = _stamp_lease(word_shingles(docs, "doc_id", "text", k=3)).persist()
-    lease = _CacheLease(sh)
-    exact = exact_jaccard_pairs_ppm(
-        docs, "doc_id", "text", k=3, threshold_ppm=LSH_RECALL_FLOOR_PPM, shingles=sh
-    )
-    sig = minhash_signatures(sh, "doc_id", num_hashes=8)
-    bands = lsh_bands(sig, "doc_id", num_hashes=8, band_size=2)
-    cand = lsh_candidate_pairs(bands, "doc_id", max_bucket_size=LSH_MAX_BUCKET_SIZE)
-    out = lsh_recall_report(exact, cand, bucket_ppm=100_000)
-    out._lsh_recall_cache_lease = lease  # type: ignore[attr-defined]
-    return out
+    with FrameScope() as scope:
+        sh = scope.cache(word_shingles(docs, "doc_id", "text", k=3))
+        exact = exact_jaccard_pairs_ppm(
+            docs, "doc_id", "text", k=3, threshold_ppm=LSH_RECALL_FLOOR_PPM, shingles=sh
+        )
+        sig = minhash_signatures(sh, "doc_id", num_hashes=8)
+        bands = lsh_bands(sig, "doc_id", num_hashes=8, band_size=2)
+        cand = lsh_candidate_pairs(bands, "doc_id", max_bucket_size=LSH_MAX_BUCKET_SIZE)
+        return scope.own(lsh_recall_report(exact, cand, bucket_ppm=100_000))
 
 
 LSH_RECALL_ORACLE = f"""

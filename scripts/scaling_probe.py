@@ -70,7 +70,7 @@ def main() -> None:
     sf_dir = args[0] if args else "/root/testdata/sf0.1"
     factors = [int(x) for x in args[1:]] or [1, 2, 4, 8]
 
-    from chess_lakehouse_spark.session import get_spark
+    from chess_lakehouse_spark.session import FrameScope, get_spark
 
     spark = get_spark()  # the product session: 8g driver, AQE, Arrow
     from chess_lakehouse_spark.functions.bpe import bpe_train
@@ -766,20 +766,22 @@ def main() -> None:
             # inside every timed rep and misstate serve cost) against the
             # x-factor corpus — pure map-side column exprs, should ride
             # the scan linearly like gopher_rules
-            bloom_fixed = build_bloom(
-                spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-                    F.md5("text").alias("bk")
-                ),
-                "bk", m_bits=1 << 20, k=7,
-            ).persist()
-            bloom_fixed.count()
-            probe(
-                "bloom_gate_serve", factor,
-                lambda: bloom_might_contain(keys_x, "bk", bloom_fixed)
-                .agg(F.sum(F.col("might_contain").cast("long")))
-                .collect(),
-            )
-            bloom_fixed.unpersist()
+            with FrameScope() as scope:
+                bloom_fixed = scope.cache(
+                    build_bloom(
+                        spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+                            F.md5("text").alias("bk")
+                        ),
+                        "bk", m_bits=1 << 20, k=7,
+                    )
+                )
+                bloom_fixed.count()
+                probe(
+                    "bloom_gate_serve", factor,
+                    lambda: bloom_might_contain(keys_x, "bk", bloom_fixed)
+                    .agg(F.sum(F.col("might_contain").cast("long")))
+                    .collect(),
+                )
 
         if only_ops is not None and "bloom_table_ceiling" in only_ops:
             # the umbrella op name covers both timed sub-probes
@@ -923,23 +925,25 @@ def main() -> None:
                     keyed_x, "bk", m_bits=1 << 20, k=7
                 ).count(),
             )
-            words_fixed = build_bloom_table(
-                spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-                    F.md5("text").alias("bk")
-                ),
-                "bk", m_bits=1 << 20, k=7,
-            ).persist()
-            words_fixed.count()
-            probe(
-                "bloom_table_serve", factor,
-                lambda: bloom_might_contain_table(
-                    keyed_x, "bk", "doc_id", words_fixed,
-                    m_bits=1 << 20, k=7,
+            with FrameScope() as scope:
+                words_fixed = scope.cache(
+                    build_bloom_table(
+                        spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+                            F.md5("text").alias("bk")
+                        ),
+                        "bk", m_bits=1 << 20, k=7,
+                    )
                 )
-                .agg(F.sum(F.col("might_contain").cast("long")))
-                .collect(),
-            )
-            words_fixed.unpersist()
+                words_fixed.count()
+                probe(
+                    "bloom_table_serve", factor,
+                    lambda: bloom_might_contain_table(
+                        keyed_x, "bk", "doc_id", words_fixed,
+                        m_bits=1 << 20, k=7,
+                    )
+                    .agg(F.sum(F.col("might_contain").cast("long")))
+                    .collect(),
+                )
             # r11 relational additions: percent-rank rides the same
             # two-shuffle sort-rank skeleton as exact_quantiles; the
             # by-group forms are one partitioned window / two

@@ -327,30 +327,6 @@ def test_dedup_operators_leave_no_cached_rdds(spark):
     assert _persistent_ids(spark) <= before
 
 
-def test_simhash_pairs_cache_lease_released_on_gc(spark):
-    """persist_signatures=True caches the signature frame for the self-join;
-    the cache must be held while the result frame is alive (so the caller's
-    collect hits it) and released when the result is garbage-collected."""
-    import gc
-
-    df = _docs(
-        spark,
-        [(1, "a b c d e f g h"), (2, "a b c d e f g x"), (3, "q r s t u v w y")],
-    )
-    before = _persistent_ids(spark)
-    sim = simhash32(df, "doc_id", "text")
-    pairs = simhash_near_pairs(sim, "doc_id", persist_signatures=True)
-    assert pairs.count() >= 1
-    added = _persistent_ids(spark) - before
-    assert added  # the signature cache is held while the result is alive
-    # same rows as the unpersisted path
-    plain = {tuple(r) for r in simhash_near_pairs(sim, "doc_id").collect()}
-    assert {tuple(r) for r in pairs.collect()} == plain
-    del pairs
-    gc.collect()
-    assert not (added & _persistent_ids(spark))
-
-
 def test_salted_join_matches_plain_join(spark):
     from chess_lakehouse_spark.operators.relational import salted_join
 

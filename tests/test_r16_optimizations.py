@@ -7,15 +7,10 @@ pathology (r15 discipline, tests/test_r15_optimizations.py).
 
 from __future__ import annotations
 
-import gc
-
 import pytest
 from pyspark.sql import functions as F
 
-from chess_lakehouse_spark.operators.dedup import (
-    _stamp_lease,
-    ngram_jaccard_pairs,
-)
+from chess_lakehouse_spark.operators.dedup import ngram_jaccard_pairs
 
 
 def _docs(spark):
@@ -26,55 +21,6 @@ def _docs(spark):
         (4, "alpha beta gamma delta epsilon zeta eta theta", "s1"),
     ]
     return spark.createDataFrame(rows, "doc_id long, text string, source string")
-
-
-def test_cache_lease_is_invocation_scoped(spark):
-    """r16 cache-collision fix: Spark's CacheManager keys (and unpersists)
-    entries by CANONICALIZED PLAN, so two invocations of the same operator
-    used to share one entry — and the FIRST result's GC-time lease release
-    unpersisted the cache the SECOND result was still serving (measured:
-    bench rep 2 of dedup_ngram_jaccard ran uncached at ~20 s vs ~3.5 s).
-    With the _stamp_lease plan token every invocation owns a distinct
-    entry: releasing the predecessor must leave the successor cached."""
-    docs = _docs(spark)
-    cm = spark._jsparkSession.sharedState().cacheManager()
-    spark.catalog.clearCache()
-    assert cm.isEmpty()
-
-    out1 = ngram_jaccard_pairs(docs, "doc_id", "text", block_col="source", n=7)
-    out1.count()
-    out2 = ngram_jaccard_pairs(docs, "doc_id", "text", block_col="source", n=7)
-    rows2 = sorted(map(tuple, out2.collect()))
-
-    # Predecessor dies (the bench.py rebind pattern); its lease fires.
-    del out1
-    gc.collect()
-    # Pre-fix this was empty: out1's plan-matched unpersist removed the
-    # single shared entry out2 depended on.
-    assert not cm.isEmpty()
-
-    # The successor still computes the same rows (from its own cache).
-    assert sorted(map(tuple, out2.collect())) == rows2
-
-    del out2
-    gc.collect()
-    assert cm.isEmpty()
-
-
-def test_stamp_lease_never_reaches_output(spark):
-    """The __lease token is plan-internal: operator outputs must not carry
-    it (and the ngram result schema is the documented one)."""
-    docs = _docs(spark)
-    out = ngram_jaccard_pairs(docs, "doc_id", "text", block_col="source", n=7)
-    assert out.columns == ["id_a", "id_b", "jaccard"]
-    stamped = _stamp_lease(docs.select("doc_id"))
-    assert stamped.columns == ["doc_id", "__lease"]
-    # two stamps differ -> two invocations can never share a cache entry
-    a = _stamp_lease(docs.select("doc_id"))
-    b = _stamp_lease(docs.select("doc_id"))
-    va = a.select("__lease").distinct().collect()[0][0]
-    vb = b.select("__lease").distinct().collect()[0][0]
-    assert va != vb
 
 
 def test_ngram_pair_join_pins_sort_merge(spark):
@@ -230,34 +176,6 @@ def test_winnow_codes_split_equals_substring_form(spark):
         )
     )
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, ref.collect()))
-
-
-def test_kmeans_pq_train_release_their_cache(spark):
-    """r16 trainer persist discipline: kmeans_fit/pq_train persist their
-    projected vectors lazily (the materialization rides the init-collect
-    job — one fewer driver job than the eager localCheckpoint they replace)
-    and must UNPERSIST before returning, so back-to-back fits in one
-    session never accumulate cached vector frames."""
-    from chess_lakehouse_spark.operators.similarity import kmeans_fit, pq_train
-
-    rows = [
-        (i, [float(i % 7) + 1.0, float((i * 3) % 5) + 0.5, 1.0, 0.5])
-        for i in range(40)
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-
-    jsc = spark.sparkContext._jsc.sc()
-    def n_cached():
-        return jsc.getRDDStorageInfo().__len__()
-
-    base = n_cached()
-    cents = kmeans_fit(df, "vec_id", "embedding", k=4, iters=2, seed=0)
-    assert len(cents) == 4 and all(len(cv) == 4 for _, cv in cents)
-    assert n_cached() == base, "kmeans_fit left a persisted frame behind"
-
-    books = pq_train(df, "vec_id", "embedding", m=2, k=4, iters=1, seed=0)
-    assert len(books) == 2
-    assert n_cached() == base, "pq_train left a persisted frame behind"
 
 
 def test_load_table_serves_one_frame_per_path(spark, tmp_path):
