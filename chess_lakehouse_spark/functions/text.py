@@ -279,11 +279,11 @@ def append_lm(delta_df: DataFrame, text_col: str, lm_dir: str) -> None:
     vocabulary-sized merge, never a full-corpus retrain (the daily-ingest
     counterpart of the staged-LM lifecycle). The merged terms table is
     written aside and atomically swapped in (the crash-safe
-    rename-aside pattern of operators/publish.py:_swap_lake_dirs); stats
+    rename-aside swap of operators/publish.py:swap_publish); stats
     rebuild from the merged table. Exact equivalence with a full rebuild
     — ``build_lm(A ∪ B) == build_lm(A); append_lm(B)`` — is pytest-pinned
     (integer counts merge losslessly)."""
-    from chess_lakehouse_spark.operators.publish import _swap_lake_dirs
+    from chess_lakehouse_spark.operators.publish import swap_publish
 
     spark = delta_df.sparkSession
     delta_terms = delta_df.select(
@@ -296,9 +296,9 @@ def append_lm(delta_df: DataFrame, text_col: str, lm_dir: str) -> None:
         .groupBy("term")
         .agg(F.sum("ctf").alias("ctf"))
     )
-    tmp = f"{lm_dir}/terms.compacting"
-    merged.write.mode("overwrite").parquet(tmp)
-    _swap_lake_dirs(spark, tmp, f"{lm_dir}/terms", "append_lm")
+    swap_publish(
+        spark, f"{lm_dir}/terms", merged.write.mode("overwrite").parquet, "append_lm"
+    )
     spark.read.parquet(f"{lm_dir}/terms").agg(
         F.sum("ctf").alias("total"), F.count(F.lit(1)).alias("vocab")
     ).write.mode("overwrite").parquet(f"{lm_dir}/stats")
@@ -1402,7 +1402,7 @@ def append_bm25_index(
     directory aside as ``.old`` — the documented
     :func:`operators.publish.vacuum_lake` recovery, loud not silent.)"""
     from chess_lakehouse_spark.operators.publish import (
-        _swap_lake_dirs,
+        swap_publish,
         write_clustered,
     )
 
@@ -1420,9 +1420,11 @@ def append_bm25_index(
         .select("t", "doc_id", "tf")  # the equi-join moved the key first
         .unionByName(new_postings)
     )
-    tmp = f"{index_dir}/postings.compacting"
-    write_clustered(merged, tmp, ["t"], n_files=n_posting_files)
-    _swap_lake_dirs(spark, tmp, f"{index_dir}/postings", "append_bm25_index")
+    swap_publish(
+        spark, f"{index_dir}/postings",
+        lambda tmp: write_clustered(merged, tmp, ["t"], n_files=n_posting_files),
+        "append_bm25_index",
+    )
 
     # Map-side per-doc length (see bm25_batch) — identical values/schema.
     new_lengths = delta_df.select(
@@ -1437,25 +1439,31 @@ def append_bm25_index(
         .select("doc_id", "n_d")
         .unionByName(new_lengths)
     )
-    tmp_l = f"{index_dir}/lengths.compacting"
-    merged_lengths.write.mode("overwrite").parquet(tmp_l)
-    _swap_lake_dirs(spark, tmp_l, f"{index_dir}/lengths", "append_bm25_index")
+    swap_publish(
+        spark, f"{index_dir}/lengths",
+        merged_lengths.write.mode("overwrite").parquet, "append_bm25_index",
+    )
 
     # dfreq/stats also publish via rename-aside swap (never overwrite in
     # place): a reader between the postings swap and here must still find
     # COMPLETE dfreq/stats tables — stale-but-consistent-per-table, per
     # the documented append/serve coordination contract (SCALE.md).
-    postings_staged = spark.read.parquet(f"{index_dir}/postings")
-    tmp_d = f"{index_dir}/dfreq.compacting"
-    postings_staged.groupBy("t").agg(F.count(F.lit(1)).alias("df")).write.mode(
-        "overwrite"
-    ).parquet(tmp_d)
-    _swap_lake_dirs(spark, tmp_d, f"{index_dir}/dfreq", "append_bm25_index")
-    tmp_s = f"{index_dir}/stats.compacting"
-    spark.read.parquet(f"{index_dir}/lengths").agg(
+    dfreq = (
+        spark.read.parquet(f"{index_dir}/postings")
+        .groupBy("t")
+        .agg(F.count(F.lit(1)).alias("df"))
+    )
+    swap_publish(
+        spark, f"{index_dir}/dfreq",
+        dfreq.write.mode("overwrite").parquet, "append_bm25_index",
+    )
+    stats = spark.read.parquet(f"{index_dir}/lengths").agg(
         F.count(F.lit(1)).alias("n_docs"), F.sum("n_d").alias("total_len")
-    ).write.mode("overwrite").parquet(tmp_s)
-    _swap_lake_dirs(spark, tmp_s, f"{index_dir}/stats", "append_bm25_index")
+    )
+    swap_publish(
+        spark, f"{index_dir}/stats",
+        stats.write.mode("overwrite").parquet, "append_bm25_index",
+    )
 
 
 def bm25_from_index(
@@ -1622,12 +1630,12 @@ def append_substring_index(
     discipline as :func:`append_bm25_index`: the staged postings are
     anti-joined on the delta's doc ids before the union (so a retried
     append is idempotent at any crash point), merged gram-clustered into
-    a ``.compacting`` dir and atomically swapped, then meta/ rebuilt
+    a staging dir and atomically swapped, then meta/ rebuilt
     LAST from the swapped postings (q is read from the existing meta —
     the append cannot change the gram width). Double-append == single
     append == full rebuild is pytest-pinned."""
     from chess_lakehouse_spark.operators.publish import (
-        _swap_lake_dirs,
+        swap_publish,
         write_clustered,
     )
 
@@ -1650,9 +1658,11 @@ def append_substring_index(
         .select("doc_id", "g")  # keep the build layout's column order
         .unionByName(new_postings.select("doc_id", "g"))
     )
-    tmp = f"{index_dir}/postings.compacting"
-    write_clustered(merged, tmp, ["g"], n_files=n_posting_files)
-    _swap_lake_dirs(spark, tmp, f"{index_dir}/postings", "append_substring_index")
+    swap_publish(
+        spark, f"{index_dir}/postings",
+        lambda tmp: write_clustered(merged, tmp, ["g"], n_files=n_posting_files),
+        "append_substring_index",
+    )
     n_docs = (
         spark.read.parquet(f"{index_dir}/postings")
         .select("doc_id")
@@ -1661,12 +1671,13 @@ def append_substring_index(
     )
     # meta/ swaps too: a straddling reader sees old-or-new meta, never a
     # deleted or half-written one (see the SCALE.md coordination contract)
-    tmp_m = f"{index_dir}/meta.compacting"
-    local_df(
-        spark,
-        [(q, n_docs, fold_case)], "q int, n_docs long, fold_case boolean"
-    ).write.mode("overwrite").parquet(tmp_m)
-    _swap_lake_dirs(spark, tmp_m, f"{index_dir}/meta", "append_substring_index")
+    new_meta = local_df(
+        spark, [(q, n_docs, fold_case)], "q int, n_docs long, fold_case boolean"
+    )
+    swap_publish(
+        spark, f"{index_dir}/meta",
+        new_meta.write.mode("overwrite").parquet, "append_substring_index",
+    )
 
 
 def substring_search_from_index(

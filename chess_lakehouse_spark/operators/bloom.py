@@ -36,6 +36,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from chess_lakehouse_spark.operators.dedup import md5_hash64
+from chess_lakehouse_spark.operators.publish import swap_publish
 
 #: Bits used per bitmap word. 63 (not 64) so ``1 << bit`` never reaches
 #: the sign bit — Spark and DuckDB agree on every shift this emits.
@@ -258,20 +259,17 @@ def write_bloom_batch(bloom: DataFrame, state_dir: str, batch_id) -> None:
     own partition byte-identically, and readers can exclude the in-flight
     batch (bits merged into one bitmap could never be un-ORed).
 
-    Publish is the module's rename-aside swap (``_swap_lake_dirs``), not
-    an in-place overwrite: the bitmap writes to a dot-prefixed staging
+    Publish is the package's rename-aside swap (``publish.swap_publish``),
+    not an in-place overwrite: the bitmap writes to a dot-prefixed staging
     sibling (hidden from Spark's file listing, so a concurrent
     :func:`read_bloom_merged` never sees it) and renames into place — a
     crash mid-write leaves only the hidden staging dir plus at worst a
-    ``batch_id=<id>.old`` rollback copy holding the byte-identical
+    hidden ``.batch_id=<id>.old`` rollback copy holding the byte-identical
     previous replay, never a half-written live partition."""
-    from chess_lakehouse_spark.operators.publish import _swap_lake_dirs
-
-    root = state_dir.rstrip("/")
-    live = f"{root}/batch_id={batch_id}"
-    tmp = f"{root}/.staging-batch_id={batch_id}"
-    bloom.coalesce(1).write.mode("overwrite").parquet(tmp)
-    _swap_lake_dirs(bloom.sparkSession, tmp, live, "write_bloom_batch")
+    swap_publish(
+        bloom.sparkSession, f"{state_dir.rstrip('/')}/batch_id={batch_id}",
+        bloom.coalesce(1).write.mode("overwrite").parquet, "write_bloom_batch",
+    )
 
 
 def read_bloom_merged(
@@ -298,15 +296,15 @@ def compact_bloom_state(spark, state_dir: str) -> None:
     swap (mirrors ``compact_rollup`` / ``compact_stream_state``). The
     merged bits are identical to the multi-batch OR, so gating before
     and after compaction agrees exactly."""
-    from chess_lakehouse_spark.operators.publish import _swap_lake_dirs
-
     merged = _merge_bloom_rows(
         spark.read.parquet(state_dir).select("words", "m_bits", "k", "n_keys"),
         "compact_bloom_state",
     )
-    tmp = state_dir.rstrip("/") + ".compacting"
-    merged.coalesce(1).write.mode("overwrite").parquet(f"{tmp}/batch_id=base")
-    _swap_lake_dirs(spark, tmp, state_dir.rstrip("/"), "compact_bloom_state")
+    swap_publish(
+        spark, state_dir,
+        lambda tmp: merged.coalesce(1).write.mode("overwrite").parquet(f"{tmp}/batch_id=base"),
+        "compact_bloom_state",
+    )
 
 
 def append_bloom(delta_df: DataFrame, key_col: str, bloom: DataFrame) -> DataFrame:

@@ -11,12 +11,13 @@ is produced by exactly one task, whatever the shuffle width.
 
 from __future__ import annotations
 
+import re
 from collections.abc import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from chess_lakehouse_spark.session import local_df
+from chess_lakehouse_spark.session import FrameScope, local_df
 
 
 def write_partitioned(
@@ -234,46 +235,57 @@ def write_zordered(
 
 
 def vacuum_lake(spark: SparkSession, lake_dir: str) -> list[str]:
-    """Remove crash leftovers around a lake directory: the ``.compacting``
-    staging copy and ``.old`` rollback copy that ``compact_partitions`` can
-    leave behind if interrupted, plus any ``_temporary`` task-attempt dirs
-    from a failed write inside the lake itself.
+    """Remove crash leftovers around a lake directory: the staging copy and
+    rollback copy (:func:`_sidecar`'s ``compacting`` and ``old``) that an
+    interrupted :func:`swap_publish` can leave, for the lake itself and for
+    each of its direct Hive ``k=v`` children, plus any ``_temporary``
+    task-attempt dirs from a failed write inside the lake itself.
 
-    Safety rule: never touches the live lake's data files — only the three
-    well-known sidecar names this package itself creates — and never
-    deletes the ONLY copy of the lake: if a crash landed inside
-    ``_swap_lake_dirs``'s one-rename window (live dir renamed aside to
-    ``.old``, replacement not yet in place) the live directory is ABSENT
-    and ``.old`` holds the sole copy, so vacuum first renames ``.old``
-    back into place (restore) and only then cleans the sidecars. The
-    restored path is included in the returned list prefixed with
-    ``restored:``; deleted paths are returned as-is. Run before
-    re-attempting a failed compaction, or on a maintenance schedule; at
-    100 TB a stranded ``.compacting`` copy is a full extra lake of
-    storage.
+    Safety rule: never touches live data files — only the sidecar names
+    :func:`_sidecar` produces — and never deletes the ONLY copy of a
+    directory: if a crash landed inside ``_swap_lake_dirs``'s one-rename
+    window (live dir renamed aside to its ``old`` sidecar, replacement not
+    yet in place) the live directory is ABSENT and the ``old`` sidecar
+    holds the sole copy, so vacuum first renames it back into place
+    (restore) and only then cleans the sidecars. A restored path is
+    included in the returned list prefixed with ``restored:``; deleted
+    paths are returned as-is. Run before re-attempting a failed rewrite,
+    or on a maintenance schedule; at 100 TB a stranded staging copy is a
+    full extra lake of storage.
     """
     jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
+    Path = jvm.org.apache.hadoop.fs.Path
     base = lake_dir.rstrip("/")
-    live = jvm.org.apache.hadoop.fs.Path(base)
-    old = jvm.org.apache.hadoop.fs.Path(base + ".old")
-    fs = live.getFileSystem(hconf)
+    fs = Path(base).getFileSystem(spark._jsc.hadoopConfiguration())
     removed: list[str] = []
-    if not fs.exists(live) and fs.exists(old):
-        # crash window of _swap_lake_dirs: .old is the only copy — restore
-        # it instead of deleting it (deleting here would be total data loss)
-        if not fs.rename(old, live):
-            raise IOError(
-                f"vacuum_lake: live lake {base} is missing and restoring "
-                f"{base}.old failed; NOT deleting any sidecar"
-            )
-        removed.append(f"restored:{base}.old")
-    for path_str in (base + ".compacting", base + ".old", base + "/_temporary"):
-        p = jvm.org.apache.hadoop.fs.Path(path_str)
-        if fs.exists(p):
-            if not fs.delete(p, True):
+
+    def drop(path_str: str) -> None:
+        if fs.exists(Path(path_str)):
+            if not fs.delete(Path(path_str), True):
                 raise IOError(f"vacuum_lake: failed to delete {path_str}")
             removed.append(path_str)
+
+    def clean(live: str) -> None:
+        old = _sidecar(live, "old")
+        if not fs.exists(Path(live)) and fs.exists(Path(old)):
+            # crash window of _swap_lake_dirs: old is the only copy — restore
+            # it instead of deleting it (deleting here would be total data loss)
+            if not fs.rename(Path(old), Path(live)):
+                raise IOError(
+                    f"vacuum_lake: {live} is missing and restoring {old} "
+                    "failed; NOT deleting any sidecar"
+                )
+            removed.append(f"restored:{old}")
+        drop(_sidecar(live, "compacting"))
+        drop(old)
+
+    clean(base)
+    if fs.exists(Path(base)):
+        names = (st.getPath().getName() for st in fs.listStatus(Path(base)))
+        matches = filter(None, map(_CHILD_SIDECAR.fullmatch, names))
+        for child in sorted({m.group(1) for m in matches}):
+            clean(f"{base}/{child}")
+    drop(f"{base}/_temporary")
     return removed
 
 
@@ -414,8 +426,9 @@ def update_skipping_manifest(
     else:
         merged = keep
     # materialize before overwriting the manifest the lineage reads
-    merged = merged.localCheckpoint()
-    merged.coalesce(1).write.mode("overwrite").parquet(man_path)
+    with FrameScope() as scope:
+        merged = scope.checkpoint(merged)
+        merged.coalesce(1).write.mode("overwrite").parquet(man_path)
     return man_path
 
 
@@ -678,11 +691,21 @@ def merge_overwrite(
     target = existing.join(F.broadcast(affected), on=list(partition_cols), how="left_semi")
     keep = target.join(updates.select(*key_cols), on=list(key_cols), how="left_anti")
     if evolve_schema:
-        merged = keep.unionByName(updates, allowMissingColumns=True).localCheckpoint()
+        merged = keep.unionByName(updates, allowMissingColumns=True)
     else:
-        merged = keep.unionByName(updates.select(*keep.columns)).localCheckpoint()
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        merged = keep.unionByName(updates.select(*keep.columns))
+    with FrameScope() as scope:
+        _overwrite_partitions(scope.checkpoint(merged), lake_dir, partition_cols)
+
+
+def _overwrite_partitions(
+    merged: DataFrame, lake_dir: str, partition_cols: Sequence[str]
+) -> None:
+    """Dynamic partition overwrite of ``lake_dir`` with ``merged``: only the
+    Hive partitions ``merged`` holds rows for are rewritten."""
+    conf = merged.sparkSession.conf
+    prev = conf.get("spark.sql.sources.partitionOverwriteMode")
+    conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try:
         (
             merged.repartition(*[F.col(c) for c in partition_cols])
@@ -691,7 +714,7 @@ def merge_overwrite(
             .parquet(lake_dir)
         )
     finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        conf.set("spark.sql.sources.partitionOverwriteMode", prev)
 
 
 def delete_rows(
@@ -751,24 +774,13 @@ def delete_rows(
 
     target = existing.join(F.broadcast(affected), on=list(partition_cols), how="left_semi")
     keep = target.join(keys.select(*key_cols), on=list(key_cols), how="left_anti")
-    merged = keep.localCheckpoint()
-
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            merged.repartition(*[F.col(c) for c in partition_cols])
-            .write.mode("overwrite")
-            .partitionBy(*partition_cols)
-            .parquet(lake_dir)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-
-    survivors = {
-        tuple(str(r[c]) for c in partition_cols)
-        for r in merged.select(*partition_cols).distinct().collect()
-    }
+    with FrameScope() as scope:
+        merged = scope.checkpoint(keep)
+        _overwrite_partitions(merged, lake_dir, partition_cols)
+        survivors = {
+            tuple(str(r[c]) for c in partition_cols)
+            for r in merged.select(*partition_cols).distinct().collect()
+        }
     jvm = spark._jvm
     hconf = spark._jsc.hadoopConfiguration()
     base = lake_dir.rstrip("/")
@@ -819,31 +831,73 @@ def compact_partitions(
             if target_partitions
             else snapshot.repartition(*cols)
         )
-        # rewrite via a temp location: Spark cannot overwrite a path it is
+        # rewrite via a staging copy: Spark cannot overwrite a path it is
         # concurrently reading from
-        tmp = lake_dir.rstrip("/") + ".compacting"
-        repartitioned.write.mode("overwrite").partitionBy(*partition_cols).parquet(tmp)
+        swap_publish(
+            spark, lake_dir,
+            repartitioned.write.mode("overwrite").partitionBy(*partition_cols).parquet,
+            "compact_partitions",
+        )
     finally:
         spark.conf.set(infer_key, prev_infer)
 
-    _swap_lake_dirs(spark, tmp, lake_dir, "compact_partitions")
+
+#: A Hive ``k=v`` child's sidecar name inside its parent (see ``_sidecar``).
+_CHILD_SIDECAR = re.compile(r"\.(.+=.*)\.(?:compacting|old)")
+
+
+def _sidecar(live_dir: str, kind: str) -> str:
+    """The one naming rule for a live directory's ``compacting`` (staging)
+    and ``old`` (rollback) copies. A table dir gets ``<live>.<kind>``. A
+    Hive partition dir ``k=v`` gets the dot-prefixed ``<parent>/.<k=v>.<kind>``:
+    Spark's partition discovery skips names starting with ``.``, while a
+    plain ``k=v.old`` sibling would be read as one more partition."""
+    base = live_dir.rstrip("/")
+    parent, _, name = base.rpartition("/")
+    if "=" in name:
+        return f"{parent}/.{name}.{kind}"
+    return f"{base}.{kind}"
+
+
+def swap_publish(
+    spark: SparkSession,
+    live_dir: str,
+    write: Callable[[str], object],
+    op: str,
+) -> None:
+    """Replace ``live_dir`` with what ``write(staging)`` writes: the one way
+    this package swaps a rewritten directory in. The staging path is
+    ``_sidecar(live_dir, "compacting")``; a stale copy left there by a
+    crashed earlier run is deleted through the Hadoop FileSystem first (so
+    it can never be promoted wholesale), then ``write`` fills it and
+    ``_swap_lake_dirs`` renames it into place. ``op`` names the caller in
+    error messages. :func:`vacuum_lake` cleans what a crash leaves."""
+    live = live_dir.rstrip("/")
+    staging = _sidecar(live, "compacting")
+    path = spark._jvm.org.apache.hadoop.fs.Path(staging)
+    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
+    if fs.exists(path) and not fs.delete(path, True):
+        raise IOError(f"{op}: failed to clear stale {staging}")
+    write(staging)
+    _swap_lake_dirs(spark, staging, live, op)
 
 
 def _swap_lake_dirs(spark: SparkSession, tmp: str, lake_dir: str, op: str) -> None:
     """Swap a rewritten copy into place by renaming the live directory ASIDE
-    first (dst -> dst.old), then src -> dst, then deleting dst.old. A crash
-    between the two renames leaves a one-rename no-data window plus a
-    rollback copy in .old — unlike delete-then-rename, the lake is never
-    the ONLY copy destroyed (each single rename/delete is atomic on
-    HDFS/local FS). Leftovers from a crash are exactly what
+    first (dst -> its ``old`` sidecar), then src -> dst, then deleting the
+    ``old`` copy. A crash between the two renames leaves a one-rename
+    no-data window plus a rollback copy — unlike delete-then-rename, the
+    lake is never the ONLY copy destroyed (each single rename/delete is
+    atomic on HDFS/local FS). Leftovers from a crash are exactly what
     :func:`vacuum_lake` cleans. A missing live directory is the
     first-publish case (e.g. a served surface's first micro-batch): the
-    rewritten copy renames straight into place with no aside step."""
+    rewritten copy renames straight into place with no aside step. Called
+    only by :func:`swap_publish`."""
     jvm = spark._jvm
     hconf = spark._jsc.hadoopConfiguration()
     dst = jvm.org.apache.hadoop.fs.Path(lake_dir)
     src = jvm.org.apache.hadoop.fs.Path(tmp)
-    old = jvm.org.apache.hadoop.fs.Path(lake_dir.rstrip("/") + ".old")
+    old = jvm.org.apache.hadoop.fs.Path(_sidecar(lake_dir, "old"))
     fs = dst.getFileSystem(hconf)
     if fs.exists(old) and not fs.delete(old, True):
         raise IOError(f"{op}: failed to clear stale {old}")
@@ -881,19 +935,21 @@ def recluster_lake(
     column routes to :func:`write_clustered` (disjoint per-file ranges),
     several to :func:`write_zordered` (Morton-interleaved quantile
     buckets). Content is identical; only file layout and footer stats
-    change, so run it before building the skipping manifest. Uses the same
-    crash-safe rename-aside swap (and sidecar names) as
-    ``compact_partitions`` — :func:`vacuum_lake` cleans an interrupted run.
-    Single-writer only, like every mutation in this layer; on S3-like
-    stores the swap's rename is copy+delete (see ``compact_partitions``).
+    change, so run it before building the skipping manifest. Publishes
+    through :func:`swap_publish`, like ``compact_partitions`` —
+    :func:`vacuum_lake` cleans an interrupted run. Single-writer only, like
+    every mutation in this layer; on S3-like stores the swap's rename is
+    copy+delete (see ``compact_partitions``).
     """
     snapshot = spark.read.parquet(lake_dir)
-    tmp = lake_dir.rstrip("/") + ".compacting"
-    if len(cluster_cols) == 1:
-        write_clustered(snapshot, tmp, cluster_cols, n_files, compression=compression)
-    else:
-        write_zordered(
-            snapshot, tmp, cluster_cols, n_files,
-            bits_per_col=bits_per_col, compression=compression,
-        )
-    _swap_lake_dirs(spark, tmp, lake_dir, "recluster_lake")
+
+    def write(tmp: str) -> None:
+        if len(cluster_cols) == 1:
+            write_clustered(snapshot, tmp, cluster_cols, n_files, compression=compression)
+        else:
+            write_zordered(
+                snapshot, tmp, cluster_cols, n_files,
+                bits_per_col=bits_per_col, compression=compression,
+            )
+
+    swap_publish(spark, lake_dir, write, "recluster_lake")

@@ -24,7 +24,7 @@ path), so a retried crash-replay reproduces the partition byte-identically
 delta fold never touches staged bytes at all. Serve merges across batch
 partitions (|groups|·|batches| rows — kilobytes); :func:`compact_rollup`
 folds all partitions back into one with the crash-safe rename-aside swap
-(`operators/publish.py:_swap_lake_dirs`).
+(`operators/publish.py:swap_publish`).
 
 Measures are restricted to ALGEBRAIC partials so the merge is exact and
 order-independent (the 100 TB contract — no holistic aggregate ever hides
@@ -66,6 +66,7 @@ import re
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from chess_lakehouse_spark.operators.publish import swap_publish
 from chess_lakehouse_spark.session import FrameScope, local_df
 
 _AGGS = ("count", "countnn", "sum", "sum6", "min", "max", "hll")
@@ -187,32 +188,18 @@ def build_rollup(
     _check_spec(keys, measures)
     _check_batch_id(batch_id)
     spark = df.sparkSession
-    # stage spec + partials TOGETHER under one .building dir and swap the
+    # stage spec + partials TOGETHER in one staging dir and swap the
     # whole rollup root in: writing spec/ into the live dir first would
     # open a crash window where a NEW spec is paired with STALE old-spec
     # partials (or none) and serve_rollup silently merges wrong values —
     # the exact hazard the rename-aside pattern exists for
-    rollup_dir = rollup_dir.rstrip("/")
-    tmp = f"{rollup_dir}.building"
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    tmp_p = jvm.org.apache.hadoop.fs.Path(tmp)
-    fs = tmp_p.getFileSystem(hconf)
-    if fs.exists(tmp_p) and not fs.delete(tmp_p, True):
-        raise IOError(f"build_rollup: failed to clear stale {tmp}")
-    _write_spec(spark, keys, measures, tmp)
-    df.groupBy(*keys).agg(*_partial_aggs(measures)).write.mode("overwrite").parquet(
-        f"{tmp}/agg/batch_id={batch_id}"
-    )
-    live = jvm.org.apache.hadoop.fs.Path(rollup_dir)
-    if fs.exists(live):
-        from chess_lakehouse_spark.operators.publish import _swap_lake_dirs
+    def write(tmp: str) -> None:
+        _write_spec(spark, keys, measures, tmp)
+        df.groupBy(*keys).agg(*_partial_aggs(measures)).write.mode(
+            "overwrite"
+        ).parquet(f"{tmp}/agg/batch_id={batch_id}")
 
-        _swap_lake_dirs(spark, tmp, rollup_dir, "build_rollup")
-    else:
-        fs.mkdirs(live.getParent())
-        if not fs.rename(tmp_p, live):
-            raise IOError(f"build_rollup: rename {tmp} -> {rollup_dir} failed")
+    swap_publish(spark, rollup_dir, write, "build_rollup")
 
 
 def append_rollup(delta_df: DataFrame, rollup_dir: str, batch_id: str) -> None:
@@ -236,18 +223,18 @@ def compact_rollup(spark: SparkSession, rollup_dir: str) -> None:
     """Fold every batch partition into one ``batch_id=base`` partition —
     |groups|-sized work, crash-safe via the rename-aside swap (a crash
     leaves either the old multi-batch layout or the compacted one, plus at
-    worst a ``.old`` rollback copy for vacuum_lake)."""
-    from chess_lakehouse_spark.operators.publish import _swap_lake_dirs
-
+    worst an ``agg.old`` rollback copy for ``vacuum_lake(<rollup>/agg)``)."""
     keys, measures = read_spec(spark, rollup_dir)
     merged = (
         spark.read.parquet(f"{rollup_dir}/agg")
         .groupBy(*keys)
         .agg(*_merge_aggs(measures))
     )
-    tmp = f"{rollup_dir}/agg.compacting"
-    merged.write.mode("overwrite").parquet(f"{tmp}/batch_id=base")
-    _swap_lake_dirs(spark, tmp, f"{rollup_dir}/agg", "compact_rollup")
+    swap_publish(
+        spark, f"{rollup_dir}/agg",
+        lambda tmp: merged.write.mode("overwrite").parquet(f"{tmp}/batch_id=base"),
+        "compact_rollup",
+    )
 
 
 def serve_rollup(

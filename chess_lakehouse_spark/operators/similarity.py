@@ -20,7 +20,6 @@ over query_id: the shuffle carries only candidate rows, already pruned.
 from __future__ import annotations
 
 import hashlib
-import shutil
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -879,29 +878,26 @@ def publish_ivf_index(
     their vectors (probes rank lists with the new centroids and miss
     them). Re-fold deltas after a rebuild."""
     from chess_lakehouse_spark.operators.publish import (
-        _swap_lake_dirs,
+        swap_publish,
         write_partitioned,
     )
 
     _check_ivf_batch_id(batch_id)
     spark = corpus.sparkSession
-    tmp = out_dir.rstrip("/") + ".compacting"
-    # A crashed earlier publish can leave stale partitions here (encoded
-    # under OLD centroids/codebooks); the rename-aside swap would promote
-    # them wholesale, silently mis-listing vectors — clear first (the
-    # compact_rank_sketch_state discipline).
-    shutil.rmtree(tmp, ignore_errors=True)
-    write_partitioned(
-        _assign_lists(corpus, id_col, vec_col, centroids),
-        f"{tmp}/batch_id={batch_id}",
-        ("list_id",),
-    )
-    local_df(
-        spark,
-        [(int(cid), [float(x) for x in cv]) for cid, cv in centroids],
-        "cid int, centroid array<double>",
-    ).write.mode("overwrite").parquet(f"{tmp}/_centroids")
-    _swap_lake_dirs(spark, tmp, out_dir.rstrip("/"), "publish_ivf_index")
+
+    def write(tmp: str) -> None:
+        write_partitioned(
+            _assign_lists(corpus, id_col, vec_col, centroids),
+            f"{tmp}/batch_id={batch_id}",
+            ("list_id",),
+        )
+        local_df(
+            spark,
+            [(int(cid), [float(x) for x in cv]) for cid, cv in centroids],
+            "cid int, centroid array<double>",
+        ).write.mode("overwrite").parquet(f"{tmp}/_centroids")
+
+    swap_publish(spark, out_dir, write, "publish_ivf_index")
 
 
 def read_ivf_centroids(spark, index_dir: str) -> list[tuple[int, list[float]]]:
@@ -928,7 +924,7 @@ def append_ivf_index(
     re-read or re-clustered; searches prune on ``list_id`` exactly as
     before, now across every batch level.
 
-    Publish is the rename-aside swap (``_swap_lake_dirs``), not an
+    Publish is the rename-aside swap (``publish.swap_publish``), not an
     in-place overwrite: the assigned delta writes to a dot-prefixed
     staging sibling — hidden from Spark's file listing, so a concurrent
     ``search_ivf_index`` scanning ``batch_id=*/list_id=*`` can never see
@@ -938,7 +934,7 @@ def append_ivf_index(
     coordination contract"), not a window proportional to the delta's
     file count."""
     from chess_lakehouse_spark.operators.publish import (
-        _swap_lake_dirs,
+        swap_publish,
         write_partitioned,
     )
 
@@ -946,15 +942,11 @@ def append_ivf_index(
     if batch_id == "base":
         raise ValueError("append_ivf_index: batch_id 'base' is the build's own")
     spark = delta.sparkSession
-    centroids = read_ivf_centroids(spark, index_dir)
-    root = index_dir.rstrip("/")
-    tmp = f"{root}/.staging-batch_id={batch_id}"
-    write_partitioned(
-        _assign_lists(delta, id_col, vec_col, centroids),
-        tmp,
-        ("list_id",),
+    assigned = _assign_lists(delta, id_col, vec_col, read_ivf_centroids(spark, index_dir))
+    swap_publish(
+        spark, f"{index_dir.rstrip('/')}/batch_id={batch_id}",
+        lambda tmp: write_partitioned(assigned, tmp, ("list_id",)), "append_ivf_index",
     )
-    _swap_lake_dirs(spark, tmp, f"{root}/batch_id={batch_id}", "append_ivf_index")
 
 
 def search_ivf_index(
@@ -1586,40 +1578,37 @@ def publish_ivfpq_index(
     than the build; re-publish REPLACES the whole index atomically (the
     publish_ivf_index centroid-consistency contract)."""
     from chess_lakehouse_spark.operators.publish import (
-        _swap_lake_dirs,
+        swap_publish,
         write_partitioned,
     )
 
     _check_ivf_batch_id(batch_id)
     spark = corpus.sparkSession
-    tmp = out_dir.rstrip("/") + ".compacting"
-    # A crashed earlier publish can leave stale partitions here (encoded
-    # under OLD centroids/codebooks); the rename-aside swap would promote
-    # them wholesale, silently mis-listing vectors — clear first (the
-    # compact_rank_sketch_state discipline).
-    shutil.rmtree(tmp, ignore_errors=True)
     assigned = _assign_lists(corpus, id_col, vec_col, centroids)
     codes = pq_encode(assigned, id_col, vec_col, codebooks)
-    write_partitioned(
-        assigned.join(codes, id_col),
-        f"{tmp}/batch_id={batch_id}",
-        ("list_id",),
-    )
-    local_df(
-        spark,
-        [(int(cid), [float(x) for x in cv]) for cid, cv in centroids],
-        "cid int, centroid array<double>",
-    ).write.mode("overwrite").parquet(f"{tmp}/_centroids")
-    local_df(
-        spark,
-        [
-            (int(s), int(cid), [float(x) for x in cv])
-            for s, book in enumerate(codebooks)
-            for cid, cv in book
-        ],
-        "s int, cid int, centroid array<double>",
-    ).write.mode("overwrite").parquet(f"{tmp}/_pq_codebooks")
-    _swap_lake_dirs(spark, tmp, out_dir.rstrip("/"), "publish_ivfpq_index")
+
+    def write(tmp: str) -> None:
+        write_partitioned(
+            assigned.join(codes, id_col),
+            f"{tmp}/batch_id={batch_id}",
+            ("list_id",),
+        )
+        local_df(
+            spark,
+            [(int(cid), [float(x) for x in cv]) for cid, cv in centroids],
+            "cid int, centroid array<double>",
+        ).write.mode("overwrite").parquet(f"{tmp}/_centroids")
+        local_df(
+            spark,
+            [
+                (int(s), int(cid), [float(x) for x in cv])
+                for s, book in enumerate(codebooks)
+                for cid, cv in book
+            ],
+            "s int, cid int, centroid array<double>",
+        ).write.mode("overwrite").parquet(f"{tmp}/_pq_codebooks")
+
+    swap_publish(spark, out_dir, write, "publish_ivfpq_index")
 
 
 def read_pq_codebooks(spark, index_dir: str):
@@ -1648,7 +1637,7 @@ def append_ivfpq_index(
     (corrected-re-delivery semantics); serve prunes across every batch
     level unchanged."""
     from chess_lakehouse_spark.operators.publish import (
-        _swap_lake_dirs,
+        swap_publish,
         write_partitioned,
     )
 
@@ -1658,12 +1647,12 @@ def append_ivfpq_index(
     spark = delta.sparkSession
     centroids = read_ivf_centroids(spark, index_dir)
     codebooks = read_pq_codebooks(spark, index_dir)
-    root = index_dir.rstrip("/")
-    tmp = f"{root}/.staging-batch_id={batch_id}"
     assigned = _assign_lists(delta, id_col, vec_col, centroids)
-    codes = pq_encode(assigned, id_col, vec_col, codebooks)
-    write_partitioned(assigned.join(codes, id_col), tmp, ("list_id",))
-    _swap_lake_dirs(spark, tmp, f"{root}/batch_id={batch_id}", "append_ivfpq_index")
+    coded = assigned.join(pq_encode(assigned, id_col, vec_col, codebooks), id_col)
+    swap_publish(
+        spark, f"{index_dir.rstrip('/')}/batch_id={batch_id}",
+        lambda tmp: write_partitioned(coded, tmp, ("list_id",)), "append_ivfpq_index",
+    )
 
 
 def search_ivfpq_index(

@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from chess_lakehouse_spark.operators.publish import swap_publish
+
 
 def content_sketches(
     df: DataFrame,
@@ -425,15 +427,12 @@ def write_mg_batch(partial: DataFrame, state_dir: str, batch_id) -> None:
     layout (see ``write_bloom_batch``): a crash-replayed batch
     republishes its OWN partition (value-identically for the default
     exact partial), readers can exclude an in-flight batch, and publish
-    rides the rename-aside swap through a hidden ``.staging-`` sibling,
-    never an in-place overwrite."""
-    from chess_lakehouse_spark.operators.publish import _swap_lake_dirs
-
-    root = state_dir.rstrip("/")
-    live = f"{root}/batch_id={batch_id}"
-    tmp = f"{root}/.staging-batch_id={batch_id}"
-    partial.coalesce(1).write.mode("overwrite").parquet(tmp)
-    _swap_lake_dirs(partial.sparkSession, tmp, live, "write_mg_batch")
+    rides the rename-aside swap (``publish.swap_publish``) through a
+    hidden dot-prefixed sibling, never an in-place overwrite."""
+    swap_publish(
+        partial.sparkSession, f"{state_dir.rstrip('/')}/batch_id={batch_id}",
+        partial.coalesce(1).write.mode("overwrite").parquet, "write_mg_batch",
+    )
 
 
 def mg_from_batches(spark, state_dir: str, k: int) -> DataFrame:
@@ -799,13 +798,10 @@ def write_rank_sketch_batch(partial: DataFrame, state_dir: str, batch_id) -> Non
     rename-aside swap. Distinct ingests MUST use distinct batch_ids and
     disjoint row sets (the mg/CMS batch contract — levels make the
     MERGE exact only over disjoint builds)."""
-    from chess_lakehouse_spark.operators.publish import _swap_lake_dirs
-
-    root = state_dir.rstrip("/")
-    live = f"{root}/batch_id={batch_id}"
-    tmp = f"{root}/.staging-batch_id={batch_id}"
-    partial.coalesce(1).write.mode("overwrite").parquet(tmp)
-    _swap_lake_dirs(partial.sparkSession, tmp, live, "write_rank_sketch_batch")
+    swap_publish(
+        partial.sparkSession, f"{state_dir.rstrip('/')}/batch_id={batch_id}",
+        partial.coalesce(1).write.mode("overwrite").parquet, "write_rank_sketch_batch",
+    )
 
 
 def rank_sketch_from_batches(
@@ -855,17 +851,11 @@ def compact_rank_sketch_state(
     merge once (:func:`rank_sketch_merge` — exact by nesting) and
     publishes the MERGED partial, whose uniform per-group n* makes it a
     valid batch for every future merge. Rename-aside swap via a
-    temporary sibling root so a crash mid-compaction leaves the old
+    staging sibling root so a crash mid-compaction leaves the old
     partitions readable."""
-    import shutil
-
-    from chess_lakehouse_spark.operators.publish import _swap_lake_dirs
-
-    root = state_dir.rstrip("/")
-    merged = rank_sketch_from_batches(spark, root, k=k, by=by)
-    tmp_root = f"{root}.compacting"
-    shutil.rmtree(tmp_root, ignore_errors=True)
-    merged.coalesce(1).write.mode("overwrite").parquet(
-        f"{tmp_root}/batch_id=compacted"
+    merged = rank_sketch_from_batches(spark, state_dir, k=k, by=by)
+    swap_publish(
+        spark, state_dir,
+        lambda tmp: merged.coalesce(1).write.mode("overwrite").parquet(f"{tmp}/batch_id=compacted"),
+        "compact_rank_sketch_state",
     )
-    _swap_lake_dirs(spark, tmp_root, root, "compact_rank_sketch_state")

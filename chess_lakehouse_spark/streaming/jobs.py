@@ -1151,7 +1151,7 @@ def compact_stream_state(
     drain-and-stop cycle leaves exactly that window), and keep
     ``keep_recent`` >= 1 so a crashed-uncommitted batch — the only one
     foreachBatch can ever replay — still owns its partition."""
-    from chess_lakehouse_spark.operators.publish import _swap_lake_dirs
+    from chess_lakehouse_spark.operators.publish import swap_publish
 
     if keep_recent < 1:
         raise ValueError(
@@ -1181,9 +1181,11 @@ def compact_stream_state(
             F.col("batch_id").cast("string"),
         ).otherwise(F.lit(tag)),
     )
-    tmp = f"{state_dir.rstrip('/')}.compacting"
-    remapped.write.partitionBy("batch_id").mode("overwrite").parquet(tmp)
-    _swap_lake_dirs(spark, tmp, state_dir.rstrip("/"), "compact_stream_state")
+    swap_publish(
+        spark, state_dir,
+        remapped.write.partitionBy("batch_id").mode("overwrite").parquet,
+        "compact_stream_state",
+    )
 
 
 def read_scd2_current(
@@ -1232,10 +1234,7 @@ def scd2_batch(
     O(|dim| + |batch|) — dimensions are small relative to fact/corpus
     tables, the documented trade for exact fold semantics; prune old
     snapshots with :func:`compact_scd2_snapshots`."""
-    from chess_lakehouse_spark.operators.publish import (
-        _swap_lake_dirs,
-        scd2_apply,
-    )
+    from chess_lakehouse_spark.operators.publish import scd2_apply, swap_publish
 
     spark = batch_df.sparkSession
     keys, attrs = list(key_cols), list(attr_cols)
@@ -1250,10 +1249,10 @@ def scd2_batch(
             ).limit(0)
         )
     out = scd2_apply(prior, batch_df, keys, attrs, ts_col)
-    root = dim_dir.rstrip("/")
-    tmp = f"{root}/.staging-batch_id={batch_id}"
-    out.write.mode("overwrite").parquet(tmp)
-    _swap_lake_dirs(spark, tmp, f"{root}/batch_id={batch_id}", "scd2_batch")
+    swap_publish(
+        spark, f"{dim_dir.rstrip('/')}/batch_id={batch_id}",
+        out.write.mode("overwrite").parquet, "scd2_batch",
+    )
 
 
 def stream_scd2(
@@ -1325,7 +1324,7 @@ def compact_scd2_snapshots(
     keep ``keep_recent`` >= 1 so a crashed-uncommitted batch still
     finds its prior snapshot to re-fold from (>= 2 keeps one fallback
     generation)."""
-    from chess_lakehouse_spark.operators.publish import _swap_lake_dirs
+    from chess_lakehouse_spark.operators.publish import swap_publish
 
     if keep_recent < 1:
         raise ValueError(
@@ -1337,12 +1336,14 @@ def compact_scd2_snapshots(
     kept = ids[-keep_recent:]
     if set(kept) == set(ids):
         return
-    remain = df.where(F.col("batch_id").cast("string").isin(kept))
-    tmp = f"{dim_dir.rstrip('/')}.compacting"
-    remain.withColumn(
+    remain = df.where(F.col("batch_id").cast("string").isin(kept)).withColumn(
         "batch_id", F.col("batch_id").cast("string")
-    ).write.partitionBy("batch_id").mode("overwrite").parquet(tmp)
-    _swap_lake_dirs(spark, tmp, dim_dir.rstrip("/"), "compact_scd2_snapshots")
+    )
+    swap_publish(
+        spark, dim_dir,
+        remain.write.partitionBy("batch_id").mode("overwrite").parquet,
+        "compact_scd2_snapshots",
+    )
 
 
 def stream_anomaly_alerts(
@@ -1372,7 +1373,7 @@ def stream_anomaly_alerts(
     first (``build_rollup`` with keys ``[series_col, 'bk']`` and one
     ``('n', 'count', None)`` measure — e.g. over the historical backfill,
     or an empty slice of it)."""
-    from chess_lakehouse_spark.operators.publish import _swap_lake_dirs
+    from chess_lakehouse_spark.operators.publish import swap_publish
     from chess_lakehouse_spark.operators.relational import integer_zscore_flags
     from chess_lakehouse_spark.operators.rollup import (
         append_rollup,
@@ -1394,9 +1395,10 @@ def stream_anomaly_alerts(
         # dashboard reader must never observe a deleted or half-written
         # alerts table mid-rewrite — same served-surface convention as
         # compact_stream_state and the staged indexes.
-        tmp = alerts_dir.rstrip("/") + ".staging"
-        flags.write.mode("overwrite").parquet(tmp)
-        _swap_lake_dirs(spark, tmp, alerts_dir.rstrip("/"), "stream_anomaly_alerts")
+        swap_publish(
+            spark, alerts_dir,
+            flags.write.mode("overwrite").parquet, "stream_anomaly_alerts",
+        )
 
     _drain(new_events, _batch, checkpoint_dir)
 
@@ -1579,7 +1581,7 @@ def substring_index_batch(
     clustering tightness, never correctness — footers still carry
     min/max)."""
     from chess_lakehouse_spark.functions.text import substring_grams
-    from chess_lakehouse_spark.operators.publish import write_clustered
+    from chess_lakehouse_spark.operators.publish import swap_publish, write_clustered
 
     spark = batch_df.sparkSession
     # drift guard: a restart with different q/fold_case would rewrite
@@ -1626,14 +1628,13 @@ def substring_index_batch(
     # the rename-aside swap, never an in-place overwrite a concurrent
     # substring_search_from_index reader could catch half-deleted
     if not _path_exists(spark, f"{index_dir}/meta"):
-        from chess_lakehouse_spark.operators.publish import _swap_lake_dirs
-
-        tmp_m = f"{index_dir}/meta.compacting"
-        local_df(
-            spark,
-            [(q, None, bool(fold_case))], "q int, n_docs long, fold_case boolean"
-        ).write.mode("overwrite").parquet(tmp_m)
-        _swap_lake_dirs(spark, tmp_m, f"{index_dir}/meta", "substring_index_batch")
+        new_meta = local_df(
+            spark, [(q, None, bool(fold_case))], "q int, n_docs long, fold_case boolean"
+        )
+        swap_publish(
+            spark, f"{index_dir}/meta",
+            new_meta.write.mode("overwrite").parquet, "substring_index_batch",
+        )
 
 
 def stream_substring_index(
@@ -1687,7 +1688,7 @@ def user_growth_batch(
     :func:`serve_user_growth` re-distincts at the activity grain (a
     distinct is the idempotent-merge state class: replaying ANY subset
     of history cannot change the served curve)."""
-    from chess_lakehouse_spark.operators.publish import _swap_lake_dirs
+    from chess_lakehouse_spark.operators.publish import swap_publish
 
     act = (
         batch_df.where(F.col(ts_col).isNotNull())
@@ -1696,11 +1697,10 @@ def user_growth_batch(
         )
         .distinct()
     )
-    root = state_dir.rstrip("/")
-    live = f"{root}/batch_id={batch_id}"
-    tmp = f"{root}/.staging-batch_id={batch_id}"
-    act.write.mode("overwrite").parquet(tmp)
-    _swap_lake_dirs(act.sparkSession, tmp, live, "user_growth_batch")
+    swap_publish(
+        act.sparkSession, f"{state_dir.rstrip('/')}/batch_id={batch_id}",
+        act.write.mode("overwrite").parquet, "user_growth_batch",
+    )
 
 
 def stream_user_growth(

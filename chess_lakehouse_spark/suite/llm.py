@@ -1959,8 +1959,6 @@ def q_lake_skipping_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_skipping_manifest,
     )
 
-    import os
-
     apply_runtime_conf(spark)
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "source", "n_chars"
@@ -1969,11 +1967,11 @@ def q_lake_skipping_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stage the clustered lake + manifest once per process (pure
     # function of sf_dir — the bm25_staged r15 watchlist discipline;
     # the gated cost measures the manifest-pruned point READ)
-    marker = f"{lake}/_staged"
-    if not os.path.exists(marker):
+    def stage() -> None:
         write_clustered(docs, lake, ["doc_id"], n_files=8)
         write_skipping_manifest(spark, lake, ["doc_id"])
-        open(marker, "w").close()
+
+    _feed_once(lake, stage)
     lo, hi = LAKE_READ_RANGE
     return read_with_skipping(spark, lake, {"doc_id": (lo, hi)})
 
@@ -2166,8 +2164,6 @@ def q_bm25_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Exact value parity against BM25_STAGED_ORACLE pinned in
     tests/test_bm25.py at two scales + cold-JVM."""
-    import os
-
     from chess_lakehouse_spark.functions.text import (
         bm25_from_index,
         build_bm25_index,
@@ -2176,10 +2172,7 @@ def q_bm25_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
     apply_runtime_conf(spark)
     docs = load_table(spark, sf_dir, "documents")
     idx = _bm25_index_dir(sf_dir)
-    marker = f"{idx}/_staged"
-    if not os.path.exists(marker):
-        build_bm25_index(docs, "doc_id", "text", idx)
-        open(marker, "w").close()
+    _feed_once(idx, lambda: build_bm25_index(docs, "doc_id", "text", idx))
     queries = docs.where(F.col("doc_id") % BM25_STAGED_MOD == 0).select(
         F.col("doc_id").alias("query_id"), F.col("text").alias("query_text")
     )
@@ -2217,8 +2210,6 @@ def q_rollup_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
         time_bucket,
     )
 
-    import os
-
     apply_runtime_conf(spark)
     ev = load_table(spark, sf_dir, "events").withColumn(
         "hour_epoch", time_bucket(F.col("ts"), 3600)
@@ -2229,8 +2220,7 @@ def q_rollup_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
     # replay-idempotent by construction (a replay of the same batch_id
     # rewrites its own partition value-identically — operators/rollup.py
     # swap contract); the gated cost should measure the SERVE.
-    marker = f"{d}/_staged"
-    if not os.path.exists(marker):
+    def stage() -> None:
         build_rollup(
             ev.where(F.col("event_id") % ROLLUP_DELTA_MOD != 0),
             ["hour_epoch", "event_type"],
@@ -2246,7 +2236,8 @@ def q_rollup_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
         append_rollup(
             ev.where(F.col("event_id") % ROLLUP_DELTA_MOD == 0), d, "delta1"
         )
-        open(marker, "w").close()
+
+    _feed_once(d, stage)
     return serve_rollup(spark, d, avg6=[("avg_value", "sum_value", "n_value")])
 
 
@@ -2790,8 +2781,6 @@ def q_lm_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_lm_staged.py (allowlisted output types)."""
     from chess_lakehouse_spark.functions.text import build_lm, lm_score_from
 
-    import os
-
     apply_runtime_conf(spark)
     docs = load_table(spark, sf_dir, "documents")
     train = docs.where(F.col("doc_id") % LM_STAGED_MOD != 0)
@@ -2800,10 +2789,7 @@ def q_lm_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stage once per process (pure function of sf_dir — the bm25_staged
     # r15 watchlist discipline; the gated cost measures the held-out
     # scoring serve, not the training-count write)
-    marker = f"{lm}/_staged"
-    if not os.path.exists(marker):
-        build_lm(train, "text", lm)
-        open(marker, "w").close()
+    _feed_once(lm, lambda: build_lm(train, "text", lm))
     return lm_score_from(spark, lm, held_out, "doc_id", "text")
 
 
@@ -3993,15 +3979,10 @@ def q_substring_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         substring_search_from_index,
     )
 
-    import os
-
     apply_runtime_conf(spark)
     docs = load_table(spark, sf_dir, "documents")
     idx = _sklake_dir(sf_dir).rsplit("/", 1)[0] + "/subidx"
-    marker = f"{idx}/_staged"
-    if not os.path.exists(marker):
-        build_substring_index(docs, "doc_id", "text", idx, q=SUBSTR_Q)
-        open(marker, "w").close()
+    _feed_once(idx, lambda: build_substring_index(docs, "doc_id", "text", idx, q=SUBSTR_Q))
     queries = docs.where(F.col("doc_id") % SUBSTR_QUERY_MOD == 0).select(
         F.col("doc_id").alias("qid"),
         F.substring("text", SUBSTR_SLICE_POS, SUBSTR_SLICE_LEN).alias("qt"),
@@ -6222,8 +6203,6 @@ def q_heavy_hitters_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_mg_batch,
     )
 
-    import os
-
     docs = load_table(spark, sf_dir, "documents")
     state = _sklake_dir(sf_dir).rsplit("/", 1)[0] + "/mgstate"
 
@@ -6238,12 +6217,12 @@ def q_heavy_hitters_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sf_dir — the bm25_staged r15 watchlist discipline; each batch_id
     # partition replays value-identically anyway, re-invocation parity
     # pinned in tests/test_r14_candidates.py)
-    marker = f"{state}/_staged"
-    if not os.path.exists(marker):
+    def stage() -> None:
         for b in range(3):
             batch = docs.where(F.col("doc_id") % 3 == b)
             write_mg_batch(mg_batch_partial(_toks(batch), "term", MG_K), state, b)
-        open(marker, "w").close()
+
+    _feed_once(state, stage)
 
     served = mg_from_batches(spark, state, MG_K).withColumnRenamed("est", "__est")
     n_total = mg_state_total(spark, state)
@@ -7366,8 +7345,6 @@ def q_rank_sketch_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exact value parity against RANK_SKETCH_ORACLE (verbatim — the layout may
     never change the verdict) pinned in tests/test_r16_candidates.py at two
     scales + cold-JVM."""
-    import os
-
     apply_runtime_conf(spark)
     from chess_lakehouse_spark.operators.sketches import (
         rank_sketch_build,
@@ -7378,8 +7355,7 @@ def q_rank_sketch_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     root = _scratch_dir("rsketch", sf_dir)
     state_dir = f"{root}/state"
-    marker = f"{root}/_staged"
-    if not os.path.exists(marker):
+    def stage() -> None:
         for i in range(3):
             part = rank_sketch_build(
                 docs.where(F.col("doc_id") % 3 == i),
@@ -7390,7 +7366,8 @@ def q_rank_sketch_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
                 seed=RSK_SEED,
             )
             write_rank_sketch_batch(part, state_dir, f"b{i}")
-        open(marker, "w").close()
+
+    _feed_once(root, stage)
     state = rank_sketch_from_batches(spark, state_dir, k=RSK_K, by=["source"])
     return _rank_sketch_audit(docs, state)
 
@@ -7599,8 +7576,6 @@ def q_knn_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     and each PQ slice chain unrolled in one SQL — assignment, codes, ADC
     shortlist, exact re-rank) pinned in tests/test_r16_candidates.py at two
     scales + cold-JVM."""
-    import os
-
     apply_runtime_conf(spark)
     from chess_lakehouse_spark.operators.similarity import (
         kmeans_fit,
@@ -7612,8 +7587,7 @@ def q_knn_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     root = _ivfpq_dir(sf_dir)
     idx = f"{root}/index"
-    marker = f"{root}/_published"
-    if not os.path.exists(marker):
+    def stage() -> None:
         cents = kmeans_fit(
             emb, "vec_id", "embedding",
             k=KMEANS_K, iters=KMEANS_ITERS, seed=KMEANS_SEED,
@@ -7625,7 +7599,8 @@ def q_knn_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         publish_ivfpq_index(
             emb, idx, "vec_id", "embedding", cents, books, batch_id="base"
         )
-        open(marker, "w").close()
+
+    _feed_once(root, stage)
     probes = emb.where(F.col("vec_id") < KNN_PROBES)
     return search_ivfpq_index(
         spark, idx, probes, "vec_id", "embedding",

@@ -48,6 +48,14 @@ def _spark():
     return get_spark(app_name="chess_lakehouse_pipeline")
 
 
+def _write_rows(df, out_dir: str) -> int:
+    """Overwrite ``out_dir`` with ``df``; return the rows written, counted
+    by the write itself, so no second job re-runs ``df``'s plan."""
+    from chess_lakehouse_spark.operators.publish import write_counted
+
+    return write_counted(df, lambda d: d.write.mode("overwrite").parquet(out_dir))["rows"]
+
+
 def _read_list_file(path: str) -> list:
     """One entry per line, blank lines and #-comment lines skipped —
     STRIPPED first, so an indented '  # comment' is a comment, not a
@@ -544,35 +552,6 @@ def cmd_train_hashed_model(args: argparse.Namespace) -> None:
     )
 
 
-def cmd_image_dedup(args: argparse.Namespace) -> None:
-    """Image near-dedup stage: 64-bit pHash over binary payloads, pairs
-    via the shared banded hamming join, connected components, keep the
-    min-id canonical per visual cluster (operators/multimodal.py:
-    phash_dedup). Input is any parquet with an id and a binary payload
-    column; output is the surviving rows, all columns intact."""
-    from chess_lakehouse_spark.operators.multimodal import phash_dedup
-
-    spark = _spark()
-    df = spark.read.parquet(args.inParquet)
-    renamed = df
-    if args.idCol != "doc_id":
-        renamed = renamed.withColumnRenamed(args.idCol, "doc_id")
-    if args.payloadCol != "payload":
-        renamed = renamed.withColumnRenamed(args.payloadCol, "payload")
-    kept = phash_dedup(
-        renamed,
-        max_hamming=args.maxHamming,
-        codec=args.codec,
-        band_bits=args.bandBits,
-    )
-    if args.idCol != "doc_id":
-        kept = kept.withColumnRenamed("doc_id", args.idCol)
-    if args.payloadCol != "payload":
-        kept = kept.withColumnRenamed("payload", args.payloadCol)
-    kept.write.mode("overwrite").parquet(args.outDir)
-    print(f"[image-dedup] kept={kept.count()} -> {args.outDir}")
-
-
 def cmd_scd2_apply(args: argparse.Namespace) -> None:
     """SCD2 dimension maintenance stage (operators/publish.py:
     scd2_apply, Kimball Type-2): fold an update feed into a versioned
@@ -583,10 +562,7 @@ def cmd_scd2_apply(args: argparse.Namespace) -> None:
     and the caller rotates."""
     from pyspark.sql import functions as F
 
-    from chess_lakehouse_spark.operators.publish import (
-        _swap_lake_dirs,
-        scd2_apply,
-    )
+    from chess_lakehouse_spark.operators.publish import scd2_apply, swap_publish
 
     spark = _spark()
     keys = args.keyCols.split(",")
@@ -611,9 +587,9 @@ def cmd_scd2_apply(args: argparse.Namespace) -> None:
     if args.inPlace:
         if not args.dimDir:
             raise SystemExit("scd2-apply: --inPlace requires --dimDir")
-        tmp = args.dimDir.rstrip("/") + ".scd2-staging"
-        out.write.mode("overwrite").parquet(tmp)
-        _swap_lake_dirs(spark, tmp, args.dimDir.rstrip("/"), "scd2-apply")
+        swap_publish(
+            spark, args.dimDir, out.write.mode("overwrite").parquet, "scd2-apply"
+        )
         dest = args.dimDir
     else:
         if not args.outDir:
@@ -681,8 +657,7 @@ def cmd_score_calibrate(args: argparse.Namespace) -> None:
         out = score_buckets(
             out, args.idCol, args.scoreCol, n_buckets=args.buckets, by=by
         )
-    out.write.mode("overwrite").parquet(args.outDir)
-    print(f"[score-calibrate] rows={out.count()} -> {args.outDir}")
+    print(f"[score-calibrate] rows={_write_rows(out, args.outDir)} -> {args.outDir}")
 
 
 def cmd_qc_report(args: argparse.Namespace) -> None:
@@ -752,8 +727,7 @@ def cmd_upsample_epochs(args: argparse.Namespace) -> None:
         max_epochs=args.maxEpochs,
         seed=args.seed,
     )
-    out.write.mode("overwrite").parquet(args.outDir)
-    print(f"[upsample-epochs] rows={out.count()} -> {args.outDir}")
+    print(f"[upsample-epochs] rows={_write_rows(out, args.outDir)} -> {args.outDir}")
 
 
 def cmd_edit_dedup(args: argparse.Namespace) -> None:
@@ -775,8 +749,7 @@ def cmd_edit_dedup(args: argparse.Namespace) -> None:
         q=args.qgram,
         stop_gram_min_df=args.stopGramMinDf,
     )
-    kept.write.mode("overwrite").parquet(args.outDir)
-    print(f"[edit-dedup] kept={kept.count()} -> {args.outDir}")
+    print(f"[edit-dedup] kept={_write_rows(kept, args.outDir)} -> {args.outDir}")
 
 
 def cmd_encode_corpus(args: argparse.Namespace) -> None:
@@ -872,7 +845,7 @@ def cmd_bloom(args: argparse.Namespace) -> None:
         bloom_might_contain,
         build_bloom,
     )
-    from chess_lakehouse_spark.operators.publish import _swap_lake_dirs
+    from chess_lakehouse_spark.operators.publish import swap_publish
 
     spark = _spark()
     if args.stage == "bloom-build":
@@ -884,9 +857,10 @@ def cmd_bloom(args: argparse.Namespace) -> None:
         )
         # rename-aside swap like bloom-append: a REBUILD over a live
         # bloomDir must never expose readers to a deleted/partial table
-        tmp = args.bloomDir.rstrip("/") + ".staging"
-        bloom.coalesce(1).write.mode("overwrite").parquet(tmp)
-        _swap_lake_dirs(spark, tmp, args.bloomDir.rstrip("/"), "bloom-build")
+        swap_publish(
+            spark, args.bloomDir,
+            bloom.coalesce(1).write.mode("overwrite").parquet, "bloom-build",
+        )
         row = spark.read.parquet(args.bloomDir).first()
         print(
             f"[bloom-build] m_bits={row['m_bits']} k={row['k']} "
@@ -898,9 +872,10 @@ def cmd_bloom(args: argparse.Namespace) -> None:
             args.keyCol,
             spark.read.parquet(args.bloomDir),
         )
-        tmp = args.bloomDir.rstrip("/") + ".staging"
-        merged.coalesce(1).write.mode("overwrite").parquet(tmp)
-        _swap_lake_dirs(spark, tmp, args.bloomDir.rstrip("/"), "bloom-append")
+        swap_publish(
+            spark, args.bloomDir,
+            merged.coalesce(1).write.mode("overwrite").parquet, "bloom-append",
+        )
         row = spark.read.parquet(args.bloomDir).first()
         print(f"[bloom-append] n_keys={row['n_keys']} -> {args.bloomDir}")
     else:  # bloom-gate
@@ -1041,15 +1016,17 @@ def cmd_read_wet(args: argparse.Namespace) -> None:
             10,
         ).cast("long"),
     )
-    docs.write.mode("overwrite").parquet(args.outDir)
-    print(f"[read-wet] docs={docs.count()} quarantined_files={n_bad} -> {args.outDir}")
+    n_docs = _write_rows(docs, args.outDir)
+    print(f"[read-wet] docs={n_docs} quarantined_files={n_bad} -> {args.outDir}")
 
 
 def cmd_media_dedup(args: argparse.Namespace) -> None:
-    """Audio / video near-dedup stages — same shape as image-dedup:
-    read any parquet with an id and binary payload column, drop
-    near-duplicate clips (operators/audio.py:audio_dedup /
-    operators/video.py:video_dedup), write the survivors."""
+    """Image / audio / video near-dedup stages: read any parquet with an
+    id and a binary payload column, drop near-duplicates, write the
+    survivors with all columns intact. Images: 64-bit pHash pairs via
+    the shared banded hamming join, connected components, the min-id
+    canonical per visual cluster (operators/multimodal.py:phash_dedup);
+    clips: operators/audio.py:audio_dedup / operators/video.py:video_dedup."""
     spark = _spark()
     df = spark.read.parquet(args.inParquet)
     renamed = df
@@ -1057,7 +1034,13 @@ def cmd_media_dedup(args: argparse.Namespace) -> None:
         renamed = renamed.withColumnRenamed(args.idCol, "doc_id")
     if args.payloadCol != "payload":
         renamed = renamed.withColumnRenamed(args.payloadCol, "payload")
-    if args.stage == "audio-dedup":
+    if args.stage == "image-dedup":
+        from chess_lakehouse_spark.operators.multimodal import phash_dedup
+
+        kept = phash_dedup(
+            renamed, max_hamming=args.maxHamming, codec=args.codec, band_bits=args.bandBits
+        )
+    elif args.stage == "audio-dedup":
         from chess_lakehouse_spark.operators.audio import audio_dedup
 
         kept = audio_dedup(
@@ -1074,8 +1057,7 @@ def cmd_media_dedup(args: argparse.Namespace) -> None:
         kept = kept.withColumnRenamed("doc_id", args.idCol)
     if args.payloadCol != "payload":
         kept = kept.withColumnRenamed("payload", args.payloadCol)
-    kept.write.mode("overwrite").parquet(args.outDir)
-    print(f"[{args.stage}] kept={kept.count()} -> {args.outDir}")
+    print(f"[{args.stage}] kept={_write_rows(kept, args.outDir)} -> {args.outDir}")
 
 
 def cmd_maintain_lake(args: argparse.Namespace) -> None:
@@ -1147,8 +1129,8 @@ def cmd_rank_hosts(args: argparse.Namespace) -> None:
         damping=args.damping,
         n_iter=args.iterations,
     )
-    ranks.write.mode("overwrite").parquet(args.outDir)
-    print(f"[rank-hosts] hosts={ranks.count()} iters={args.iterations} -> {args.outDir}")
+    n_hosts = _write_rows(ranks, args.outDir)
+    print(f"[rank-hosts] hosts={n_hosts} iters={args.iterations} -> {args.outDir}")
 
 
 def cmd_rollup(args: argparse.Namespace) -> None:
@@ -1396,7 +1378,7 @@ def main(argv: list[str] | None = None) -> None:
     imd.add_argument("--maxHamming", type=int, default=10)
     imd.add_argument("--bandBits", type=int, default=8)
     imd.add_argument("--codec", default="auto", choices=["auto", "real"])
-    imd.set_defaults(fn=cmd_image_dedup)
+    imd.set_defaults(fn=cmd_media_dedup)
 
     s2 = sub.add_parser("scd2-apply")
     s2.add_argument("--dimDir", default="",

@@ -389,6 +389,47 @@ def test_dedup_batch_releases_cache_when_a_write_fails(spark, monkeypatch, tmp_p
     _assert_released(spark, base, f"{kind} failed batch 1")
 
 
+def test_publish_mutations_release_their_checkpoints(spark, tmp_path):
+    """``merge_overwrite``, ``delete_rows`` and ``update_skipping_manifest``
+    each checkpoint a merged frame that only their own write reads; no
+    persisted RDD of theirs outlives the call."""
+    from pyspark.sql import functions as F
+
+    from chess_lakehouse_spark.operators.publish import (
+        delete_rows,
+        merge_overwrite,
+        update_skipping_manifest,
+        write_partitioned,
+        write_skipping_manifest,
+    )
+
+    lake = str(tmp_path / "lake")
+    df = spark.range(0, 60).select(
+        "id", (F.col("id") % 7).alias("val"), F.when(F.col("id") < 30, "A").otherwise("B").alias("p")
+    )
+    write_partitioned(df, lake, ("p",))
+    write_skipping_manifest(spark, lake, ["id"])
+    updates = spark.createDataFrame([(5, 99, "A")], "id long, val long, p string")
+    keys = spark.createDataFrame([(40, "B")], "id long, p string")
+
+    calls = {
+        "merge_overwrite": lambda: merge_overwrite(
+            spark, lake, updates, key_cols=["id"], partition_cols=["p"]
+        ),
+        "update_skipping_manifest": lambda: update_skipping_manifest(
+            spark, lake, ["id"], ["p"], affected=updates.select("p")
+        ),
+        "delete_rows": lambda: delete_rows(
+            spark, lake, keys, key_cols=["id"], partition_cols=["p"]
+        ),
+    }
+    for name, call in calls.items():
+        base = _held(spark)
+        call()
+        _assert_released(spark, base, name)
+    assert spark.read.parquet(lake).count() == 59
+
+
 def _helper_spans(tree: ast.AST) -> list[tuple[int, int]]:
     return [
         (n.lineno, n.end_lineno)
@@ -418,6 +459,33 @@ def test_cache_calls_only_inside_frame_scope():
                 if not any(lo <= node.lineno <= hi for lo, hi in spans):
                     offenders.append(f"{path.relative_to(ROOT)}:{node.lineno} .{attr}(")
     assert len(_helper_spans(ast.parse(session_py.read_text()))) == 2
+    assert offenders == []
+
+
+def test_directory_swaps_only_inside_publish():
+    """Every rename-aside swap goes through ``publish.swap_publish``: no
+    module of the package or the scripts but ``operators/publish.py``
+    names ``_swap_lake_dirs`` or calls a two-argument ``.rename(src, dst)``
+    (the Hadoop FileSystem rename)."""
+    publish_py = ROOT / "chess_lakehouse_spark" / "operators" / "publish.py"
+    offenders = []
+    files = sorted((ROOT / "chess_lakehouse_spark").rglob("*.py")) + sorted(
+        (ROOT / "scripts").rglob("*.py")
+    )
+    for path in files:
+        if path == publish_py:
+            continue
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            # a Name, an attribute, or an imported alias
+            name = getattr(node, "id", None) or getattr(node, "attr", None) or getattr(node, "name", None)
+            rename = (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "rename"
+                and len(node.args) == 2
+            )
+            if name == "_swap_lake_dirs" or rename:
+                offenders.append(f"{path.relative_to(ROOT)}:{getattr(node, 'lineno', '?')}")
     assert offenders == []
 
 

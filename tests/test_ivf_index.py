@@ -244,7 +244,8 @@ def test_publish_clears_stale_staging_root(spark, tmp_path):
     """r15 ADVICE regression: a crashed earlier publish can leave a
     '<out>.compacting' root holding partitions encoded under OLD
     centroids; the rename-aside swap would promote them wholesale. Both
-    IVF publishers must clear the staging root before writing."""
+    IVF publishers must clear the staging root before writing, also when
+    the index path is a ``file://`` URI."""
     import os
 
     from chess_lakehouse_spark.operators.similarity import (
@@ -255,16 +256,18 @@ def test_publish_clears_stale_staging_root(spark, tmp_path):
     emb = load_table(spark, SF_DIR, "embeddings")
     cents = kmeans_fit(emb, "vec_id", "embedding", k=4, iters=1, seed=0)
 
-    for publish in ("ivf", "ivfpq"):
-        idx = str(tmp_path / publish)
+    for publish, scheme in [
+        ("ivf", ""), ("ivfpq", ""), ("ivf", "file://"), ("ivfpq", "file://")
+    ]:
+        idx = str(tmp_path / f"{publish}{'_uri' if scheme else ''}")
         stale = f"{idx}.compacting/batch_id=crashed/list_id=0"
         os.makedirs(stale)
         open(f"{stale}/junk.parquet", "w").write("stale")
         if publish == "ivf":
-            publish_ivf_index(emb, idx, "vec_id", "embedding", cents)
+            publish_ivf_index(emb, scheme + idx, "vec_id", "embedding", cents)
         else:
             books = pq_train(emb, "vec_id", "embedding", m=4, k=4, iters=1, seed=0)
-            publish_ivfpq_index(emb, idx, "vec_id", "embedding", cents, books)
+            publish_ivfpq_index(emb, scheme + idx, "vec_id", "embedding", cents, books)
         assert not os.path.exists(f"{idx}.compacting")
         assert sorted(
             d for d in os.listdir(idx) if d.startswith("batch_id=")

@@ -625,6 +625,35 @@ def test_vacuum_lake_removes_only_sidecars(spark, tmp_path):
     assert vacuum_lake(spark, str(lake)) == []
 
 
+def test_vacuum_lake_partition_sidecars_hidden_and_cleaned(spark, tmp_path):
+    """A Hive ``k=v`` dir's staging and rollback copies are dot-prefixed
+    siblings, so a read of the lake never sees them as partitions, and
+    ``vacuum_lake`` restores a stranded rollback copy and deletes the rest."""
+    import os
+
+    from chess_lakehouse_spark.operators.publish import _sidecar, vacuum_lake
+
+    root = str(tmp_path / "state")
+    for b in (0, 1):
+        spark.range(b * 5, b * 5 + 5).write.parquet(f"{root}/batch_id={b}")
+    staging0 = _sidecar(f"{root}/batch_id=0", "compacting")
+    old1 = _sidecar(f"{root}/batch_id=1", "old")
+    assert old1 == f"{root}/.batch_id=1.old"
+    # batch 0: a staged rewrite never swapped in; batch 1: crashed inside
+    # the swap's one-rename window (live renamed aside, staging stranded)
+    spark.range(0, 5).write.parquet(staging0)
+    os.rename(f"{root}/batch_id=1", old1)
+    spark.range(5, 10).write.parquet(_sidecar(f"{root}/batch_id=1", "compacting"))
+    assert spark.read.parquet(root).count() == 5
+
+    removed = vacuum_lake(spark, root)
+    assert f"restored:{old1}" in removed and staging0 in removed
+    assert len(removed) == 3
+    assert sorted(os.listdir(root)) == ["batch_id=0", "batch_id=1"]
+    assert sorted(r.id for r in spark.read.parquet(root).collect()) == list(range(10))
+    assert vacuum_lake(spark, root) == []
+
+
 def test_compact_partitions_reduces_files(spark, tmp_path):
     import glob
 
@@ -1064,7 +1093,7 @@ def test_pipeline_cli_bloom_stages_roundtrip(spark, tmp_path, capsys):
     """bloom-build -> bloom-append -> bloom-gate through the CLI: the
     gated output keeps exactly the rows the folded filter rejects (no
     false negatives: every blocklisted key is dropped), and the appended
-    artifact swaps atomically (no .staging/.old leftovers)."""
+    artifact swaps atomically (no .compacting/.old leftovers)."""
     import sys
     from pathlib import Path
 
@@ -1102,7 +1131,7 @@ def test_pipeline_cli_bloom_stages_roundtrip(spark, tmp_path, capsys):
     assert "[bloom-append] n_keys=50" in stdout
     import os
 
-    assert not os.path.exists(bloom + ".staging")
+    assert not os.path.exists(bloom + ".compacting")
     assert not os.path.exists(bloom + ".old")
 
     pipeline_cli.main([
@@ -1237,8 +1266,8 @@ def test_pipeline_cli_crawl_side_chain_matches_example_dag(spark, tmp_path, caps
     assert kept == {f"https://ok{i}.example/p" for i in range(5)}
     import os
 
-    assert not os.path.exists(unblocked + ".staging")
-    assert not os.path.exists(bloom + ".staging") and not os.path.exists(
+    assert not os.path.exists(unblocked + ".compacting")
+    assert not os.path.exists(bloom + ".compacting") and not os.path.exists(
         bloom + ".old"
     )
 
@@ -1433,8 +1462,48 @@ def test_scd2_apply_cli_lifecycle(spark, tmp_path):
         (2, "steel", 40, None),
         (3, "new", 50, None),
     }
-    assert not os.path.exists(dim + ".scd2-staging")
+    assert not os.path.exists(dim + ".compacting")
     assert not os.path.exists(dim + ".old")
+
+
+def test_cli_stages_count_rows_from_their_write(spark, tmp_path, monkeypatch, capsys):
+    """edit-dedup, score-calibrate and upsample-epochs print the rows they
+    wrote without a second job over the output: ``DataFrame.count`` is
+    never called."""
+    import sys
+    from pathlib import Path
+
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "scripts"))
+    import pipeline_cli
+
+    src = str(tmp_path / "docs")
+    spark.createDataFrame(
+        [(i, "abcdef"[i // 2] * 8, f"s{i % 3}", 50 + i, float(i)) for i in range(12)],
+        "doc_id long, text string, source string, n_chars long, score double",
+    ).write.parquet(src)
+
+    def no_count(self):
+        raise AssertionError("DataFrame.count re-runs the written plan")
+
+    # the session's concrete frame class, which overrides DataFrame.count
+    monkeypatch.setattr(type(spark.range(1)), "count", no_count)
+    out = str(tmp_path / "out")
+    pipeline_cli.main([
+        "edit-dedup", "--inParquet", src, "--outDir", out + "1", "--maxDist", "1",
+    ])
+    pipeline_cli.main([
+        "score-calibrate", "--inParquet", src, "--outDir", out + "2", "--scoreCol", "score",
+    ])
+    pipeline_cli.main([
+        "upsample-epochs", "--inParquet", src, "--outDir", out + "3", "--budget", "1000",
+    ])
+    monkeypatch.undo()
+    lines = capsys.readouterr().out.splitlines()
+    counts = [spark.read.parquet(out + str(i)).count() for i in (1, 2, 3)]
+    assert f"[edit-dedup] kept={counts[0]} -> {out}1" in lines
+    assert f"[score-calibrate] rows={counts[1]} -> {out}2" in lines
+    assert f"[upsample-epochs] rows={counts[2]} -> {out}3" in lines
+    assert counts[0] == 6 and counts[1] == 12
 
 
 def test_upsample_epochs_cli_roundtrip(spark, tmp_path):

@@ -1378,7 +1378,7 @@ def test_stream_anomaly_alerts_equals_batch_composition(spark, tmp_path):
     # concurrent reader can never observe a deleted/half-written table
     import os
 
-    assert not os.path.exists(alerts + ".staging")
+    assert not os.path.exists(alerts + ".compacting")
     assert not os.path.exists(alerts + ".old")
 
 
