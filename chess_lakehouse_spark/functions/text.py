@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from chess_lakehouse_spark.session import local_df
+from chess_lakehouse_spark.session import FrameScope, local_df, spread
 
 from chess_lakehouse_spark.operators.dedup import md5_hash64
 
@@ -1335,7 +1335,7 @@ def build_bm25_index(
     id_col: str,
     text_col: str,
     index_dir: str,
-    n_posting_files: int = 64,
+    n_posting_files: int | None = None,
 ) -> None:
     """Materialize the BM25 corpus tables to the lake — ONE corpus pass,
     after which any number of query batches score without touching the
@@ -1350,6 +1350,7 @@ def build_bm25_index(
     - ``lengths/``   (doc_id, n_d);
     - ``stats/``     one row (n_docs, total_len).
 
+    ``n_posting_files`` None writes one postings file per core.
     Rebuild on corpus change (append-only corpora can instead union a
     delta index and re-aggregate postings/dfreq — same keyed shapes).
     """
@@ -1385,7 +1386,7 @@ def append_bm25_index(
     id_col: str,
     text_col: str,
     index_dir: str,
-    n_posting_files: int = 64,
+    n_posting_files: int | None = None,
 ) -> None:
     """Fold NEW documents into a staged :func:`build_bm25_index` layout —
     the append-only lifecycle. Every merged table is UPSERT-shaped and
@@ -1554,25 +1555,71 @@ def substring_grams(text: Column, q: int = 3) -> Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
+def gram_postings(base: DataFrame, q: int) -> DataFrame:
+    """(doc_id, g) postings of a (doc_id, t) frame: one row per distinct
+    q-gram of each text. The explode runs after :func:`session.spread`, so
+    a one-partition scan still grams on every core."""
+    return spread(base, "doc_id").select(
+        "doc_id", F.explode(substring_grams(F.col("t"), q)).alias("g")
+    )
+
+
+def substring_index_meta(
+    spark, q: int, n_docs: int | None, fold_case: bool
+) -> DataFrame:
+    """The one-row ``meta/`` table (q, n_docs, fold_case), made in the JVM:
+    a row list would need a Python task to unpickle it."""
+    return spark.range(0, 1, 1, 1).select(
+        F.lit(q).cast("int").alias("q"),
+        F.lit(n_docs).cast("long").alias("n_docs"),
+        F.lit(bool(fold_case)).alias("fold_case"),
+    )
+
+
+def read_substring_index_meta(spark, index_dir: str):
+    """The staged ``meta/`` row. The schema is known, so the read starts
+    no schema-inference job."""
+    return (
+        spark.read.schema("q int, n_docs long, fold_case boolean")
+        .parquet(f"{index_dir}/meta")
+        .first()
+    )
+
+
+def write_gram_postings(
+    postings: DataFrame, out_dir: str, n_files: int | None = None
+) -> None:
+    """Gram-clustered postings write (``write_clustered`` on ``g``) that
+    computes ``postings`` once: the range exchange runs its input twice,
+    once to sample the boundaries and once to shuffle, so the frame is
+    cached across both. ``n_files`` None means the core count."""
+    from chess_lakehouse_spark.operators.publish import write_clustered
+
+    with FrameScope() as scope:
+        write_clustered(scope.cache(postings), out_dir, ["g"], n_files=n_files)
+
+
 def build_substring_index(
     df: DataFrame,
     id_col: str,
     text_col: str,
     index_dir: str,
     q: int = 3,
-    n_posting_files: int = 64,
+    n_posting_files: int | None = None,
     fold_case: bool = False,
 ) -> None:
     """Materialize a trigram-class SUBSTRING-SEARCH index to the lake —
     the pg_trgm / codesearch pattern (Cox 2012, "Regular Expression
     Matching with a Trigram Index", public): a document can contain a
-    query string only if it contains EVERY q-gram of that query, so the
-    candidate set for a lookup is an intersection of posting lists and
-    the corpus is never scanned. ONE corpus pass builds:
+    query string only if it contains EVERY q-gram of that query, so any
+    one gram's posting list is a complete candidate set for a lookup
+    (serve reads the rarest) and the corpus is never scanned. ONE corpus
+    pass builds:
 
     - ``postings/``  DISTINCT (g, doc_id) — GRAM-CLUSTERED via
-      write_clustered, so a query batch's gram predicate skips every
-      file whose footer [min, max] cannot match;
+      :func:`write_gram_postings` into ``n_posting_files`` files (None:
+      one per core), so a query batch's gram predicate skips every file
+      whose footer [min, max] cannot match;
     - ``meta/``      one row (q, n_docs, fold_case) — serve DERIVES q and
       the case mode from the staged layout rather than taking them as
       parameters, so build and serve cannot drift (contrast the hashed
@@ -1589,18 +1636,15 @@ def build_substring_index(
     they can contain is itself shorter than q."""
     if q < 2:
         raise ValueError(f"build_substring_index: q must be >= 2, got {q}")
-    from chess_lakehouse_spark.operators.publish import write_clustered
-
     t = F.col(text_col)
     if fold_case:
         t = F.lower(t)
     base = df.select(F.col(id_col).alias("doc_id"), t.alias("t")).where(
         F.col("t").isNotNull()
     )
-    postings = base.select(
-        "doc_id", F.explode(substring_grams(F.col("t"), q)).alias("g")
+    write_gram_postings(
+        gram_postings(base, q), f"{index_dir}/postings", n_posting_files
     )
-    write_clustered(postings, f"{index_dir}/postings", ["g"], n_files=n_posting_files)
     # n_docs = INDEXED documents (>= 1 gram, i.e. len >= q) — the same
     # value append_substring_index recomputes from the merged postings
     # (it has no full-corpus frame to count). Here the full corpus IS in
@@ -1612,10 +1656,9 @@ def build_substring_index(
     n_docs = (
         base.where(F.length("t") >= q).select("doc_id").distinct().count()
     )
-    local_df(
-        base.sparkSession,
-        [(q, n_docs, bool(fold_case))], "q int, n_docs long, fold_case boolean"
-    ).write.mode("overwrite").parquet(f"{index_dir}/meta")
+    substring_index_meta(base.sparkSession, q, n_docs, fold_case).write.mode(
+        "overwrite"
+    ).parquet(f"{index_dir}/meta")
 
 
 def append_substring_index(
@@ -1623,7 +1666,7 @@ def append_substring_index(
     id_col: str,
     text_col: str,
     index_dir: str,
-    n_posting_files: int = 64,
+    n_posting_files: int | None = None,
 ) -> None:
     """Fold NEW documents into a staged :func:`build_substring_index`
     layout — the append-only lifecycle, with the same crash-safety
@@ -1634,13 +1677,10 @@ def append_substring_index(
     LAST from the swapped postings (q is read from the existing meta —
     the append cannot change the gram width). Double-append == single
     append == full rebuild is pytest-pinned."""
-    from chess_lakehouse_spark.operators.publish import (
-        swap_publish,
-        write_clustered,
-    )
+    from chess_lakehouse_spark.operators.publish import swap_publish
 
     spark = delta_df.sparkSession
-    meta = spark.read.parquet(f"{index_dir}/meta").first()
+    meta = read_substring_index_meta(spark, index_dir)
     q, fold_case = int(meta["q"]), bool(meta["fold_case"])
     t = F.col(text_col)
     if fold_case:
@@ -1649,18 +1689,15 @@ def append_substring_index(
         F.col(id_col).alias("doc_id"), t.alias("t")
     ).where(F.col("t").isNotNull())
     delta_ids = base.select("doc_id").distinct()
-    new_postings = base.select(
-        "doc_id", F.explode(substring_grams(F.col("t"), q)).alias("g")
-    )
     merged = (
         spark.read.parquet(f"{index_dir}/postings")
         .join(delta_ids, "doc_id", "left_anti")
         .select("doc_id", "g")  # keep the build layout's column order
-        .unionByName(new_postings.select("doc_id", "g"))
+        .unionByName(gram_postings(base, q))
     )
     swap_publish(
         spark, f"{index_dir}/postings",
-        lambda tmp: write_clustered(merged, tmp, ["g"], n_files=n_posting_files),
+        lambda tmp: write_gram_postings(merged, tmp, n_posting_files),
         "append_substring_index",
     )
     n_docs = (
@@ -1671,12 +1708,49 @@ def append_substring_index(
     )
     # meta/ swaps too: a straddling reader sees old-or-new meta, never a
     # deleted or half-written one (see the SCALE.md coordination contract)
-    new_meta = local_df(
-        spark, [(q, n_docs, fold_case)], "q int, n_docs long, fold_case boolean"
-    )
+    new_meta = substring_index_meta(spark, q, n_docs, fold_case)
     swap_publish(
         spark, f"{index_dir}/meta",
         new_meta.write.mode("overwrite").parquet, "append_substring_index",
+    )
+
+
+def _substring_candidates(
+    postings: DataFrame, long_q: DataFrame, q: int, max_pushdown_grams: int
+) -> DataFrame:
+    """Candidates for queries at least q long: (qid, qt, n_rows, doc_id),
+    one row per distinct (qid, qt) and document on that query's RAREST
+    gram's posting list. ``n_rows`` counts the query rows carrying that
+    (qid, qt).
+
+    Any document containing qt holds every gram of qt, so one gram's list
+    is a complete candidate set; the rarest one is the smallest. Posting
+    sizes are counted per wanted gram (combined map-side, a few rows per
+    gram), the rarest gram is kept per query, ties broken by the gram, and
+    only that gram's list is joined. A gram with no postings counts 0 and
+    yields no candidates. Duplicate (g, doc_id) postings (the streaming
+    layout re-admits documents) collapse in the final distinct."""
+    g = F.explode(substring_grams(F.col("qt"), q)).alias("g")
+    qg = long_q.groupBy("qid", "qt").agg(F.count(F.lit(1)).alias("n_rows")).select(
+        "qid", "qt", "n_rows", g
+    )
+    wanted = long_q.select(g).distinct()
+    gram_rows = wanted.limit(max_pushdown_grams + 1).collect()
+    if len(gram_rows) <= max_pushdown_grams:
+        postings = postings.where(F.col("g").isin([r["g"] for r in gram_rows]))
+    else:
+        postings = postings.join(wanted, "g", "left_semi")
+    sizes = postings.groupBy("g").agg(F.count(F.lit(1)).alias("n"))
+    by_size = F.struct(F.coalesce("n", F.lit(0)).alias("n"), "g")
+    rarest = (
+        qg.join(sizes, "g", "left")
+        .groupBy("qid", "qt", "n_rows")
+        .agg(F.min(by_size)["g"].alias("g"))
+    )
+    return (
+        rarest.join(postings.select("g", "doc_id"), "g")
+        .select("qid", "qt", "n_rows", "doc_id")
+        .distinct()
     )
 
 
@@ -1692,12 +1766,13 @@ def substring_search_from_index(
     max_pushdown_grams: int = 1_000,
 ) -> DataFrame:
     """Exact substring search (LIKE '%s%' at corpus scale) THROUGH a
-    staged :func:`build_substring_index` layout: candidates = documents
-    containing ALL of the query's q-grams (posting-list intersection as
-    ONE gram join + a map-combined per-pair count == n_grams), then a
-    ``contains`` verify on the candidate-pruned corpus — identical rows
-    to the brute scan (the containment⇒all-grams implication is exact),
-    with corpus text touched only for candidates (semi-join pushdown).
+    staged :func:`build_substring_index` layout. A document containing a
+    query holds every q-gram of it, so each query's candidates are the
+    posting list of ONE of its grams: the rarest, picked from posting
+    sizes counted at serve time (see :func:`_substring_candidates`). A
+    ``contains`` verify on the candidates then returns exactly the brute
+    scan's rows, and the corpus is joined only on candidate ids. Serve
+    cost follows the rarest list per query, not the sum of the lists.
 
     Gram restriction follows the bm25_from_index bounded-literal
     discipline: a batch with ≤ ``max_pushdown_grams`` distinct grams
@@ -1706,14 +1781,11 @@ def substring_search_from_index(
     fall back to the gram-keyed semi-join. Queries SHORTER than the
     indexed q (after dropping NULL/empty) take the documented corpus-scan
     fallback — the same contract as real trigram engines, where the
-    index cannot discriminate below gram width. Returns (qid, doc_id).
-
-    ``qid`` must uniquely identify a query string: the per-query gram
-    count is keyed by qid, so two rows sharing a qid with DIFFERENT texts
-    would demand a candidate contain the union of both texts' grams
-    (silently under-matching). One id, one query.
+    index cannot discriminate below gram width. Returns (qid, doc_id),
+    one row per query row and matching document, as the brute join
+    gives; a qid may carry several texts.
     """
-    meta = spark.read.parquet(f"{index_dir}/meta").first()
+    meta = read_substring_index_meta(spark, index_dir)
     q, fold_case = int(meta["q"]), bool(meta["fold_case"])
     qt = F.col(qtext_col)
     t = F.col(text_col)
@@ -1726,40 +1798,16 @@ def substring_search_from_index(
         F.col(id_col).alias("doc_id"), t.alias("t")
     ).where(F.col("t").isNotNull())
 
-    long_q = qs.where(F.length("qt") >= q)
-    qg = long_q.select(
-        "qid", F.explode(substring_grams(F.col("qt"), q)).alias("g")
+    cand = _substring_candidates(
+        spark.read.parquet(f"{index_dir}/postings"),
+        qs.where(F.length("qt") >= q), q, max_pushdown_grams,
     )
-    n_g = qg.groupBy("qid").agg(F.count(F.lit(1)).alias("n_g"))
-
-    postings = spark.read.parquet(f"{index_dir}/postings")
-    wanted = qg.select("g").distinct()
-    gram_rows = wanted.limit(max_pushdown_grams + 1).collect()
-    if len(gram_rows) <= max_pushdown_grams:
-        postings = postings.where(F.col("g").isin([r["g"] for r in gram_rows]))
-    else:
-        postings = postings.join(wanted, "g", "left_semi")
-
-    cand = (
-        qg.join(postings, "g")
-        .groupBy("qid", "doc_id")
-        # count DISTINCT grams, not rows: the batch-partitioned streaming
-        # layout can carry duplicate (g, doc_id) rows when a doc is
-        # re-admitted across batches, and a row count would then exceed
-        # n_g and silently DROP the true match
-        .agg(F.count_distinct("g").alias("hit"))
-        .join(n_g, "qid")
-        .where(F.col("hit") == F.col("n_g"))
-        .select("qid", "doc_id")
-    )
-    cand_corpus = corpus.join(
-        cand.select("doc_id").distinct(), "doc_id", "semi"
-    )
+    # one row per query row, as the brute join gives
+    per_row = F.array_repeat("qid", F.col("n_rows").cast("int"))
     long_hits = (
-        cand.join(long_q, "qid")
-        .join(cand_corpus, "doc_id")
+        cand.join(corpus, "doc_id")
         .where(F.contains(F.col("t"), F.col("qt")))
-        .select("qid", "doc_id")
+        .select(F.explode(per_row).alias("qid"), "doc_id")
     )
 
     short_q = qs.where(F.length("qt") < q)
@@ -2085,8 +2133,10 @@ def regex_search_from_index(
 ) -> DataFrame:
     """Regex search accelerated by the staged substring index — Cox 2012
     end to end: extract the pattern's REQUIRED literal runs
-    (:func:`regex_required_literals`), intersect their q-grams' posting
-    lists to a candidate set, verify candidates with ``rlike`` — exactly
+    (:func:`regex_required_literals`), take the posting list of their
+    rarest q-gram as the candidate set (the rule of
+    :func:`substring_search_from_index`), verify candidates with
+    ``rlike`` — exactly
     the rows a full ``rlike`` scan returns (required-literal extraction
     is a necessary condition, pytest-pinned). Patterns outside the safe
     subset (or with no literal run >= q) take the honest full-scan
@@ -2098,7 +2148,7 @@ def regex_search_from_index(
     a case-SENSITIVE index (``fold_case=False``): a lowered postings
     table would demand case-insensitive regex verify, which the safe
     subset does not model."""
-    meta = spark.read.parquet(f"{index_dir}/meta").first()
+    meta = read_substring_index_meta(spark, index_dir)
     q, fold_case = int(meta["q"]), bool(meta["fold_case"])
     if fold_case:
         raise ValueError(
@@ -2120,17 +2170,16 @@ def regex_search_from_index(
     need = sorted({r[i : i + q] for r in runs for i in range(len(r) - q + 1)})
     postings = spark.read.parquet(f"{index_dir}/postings")
     if len(need) <= max_pushdown_grams:
-        postings = postings.where(F.col("g").isin(need))
+        wanted = postings.where(F.col("g").isin(need))
     else:  # a pathological generated pattern: keyed semi-join instead of
-        # an oversized isin literal — the intersection count is the same
+        # an oversized isin literal
         need_df = local_df(spark, [(g,) for g in need], "g string")
-        postings = postings.join(need_df, "g", "left_semi")
-    cand = (
-        postings.groupBy("doc_id")
-        .agg(F.count_distinct("g").alias("hit"))
-        .where(F.col("hit") == len(need))
-        .select("doc_id")
-    )
+        wanted = postings.join(need_df, "g", "left_semi")
+    # every match holds every needed gram, so the rarest gram's list is a
+    # complete candidate set; the sizes are at most len(need) rows
+    sizes = dict(wanted.groupBy("g").agg(F.count(F.lit(1))).collect())
+    rarest = min(need, key=lambda g: (sizes.get(g, 0), g))
+    cand = postings.where(F.col("g") == rarest).select("doc_id")
     return (
         corpus.join(cand, "doc_id", "semi")
         .where(F.col("t").rlike(pattern))
@@ -2164,8 +2213,9 @@ def substring_match_snippets(
     text and the snippet is sliced from the ORIGINAL at those offsets —
     exact for any text whose lowercasing preserves length (all of ASCII;
     the documented drift case is locale-class mappings like 'İ' whose
-    lowering adds a combining mark)."""
-    meta = spark.read.parquet(f"{index_dir}/meta").first()
+    lowering adds a combining mark). Hits are joined back to their query
+    text by qid, so here a qid must carry one text."""
+    meta = read_substring_index_meta(spark, index_dir)
     fold_case = bool(meta["fold_case"])
     hits = substring_search_from_index(
         spark, index_dir, corpus_df, id_col, text_col, queries, qid_col,

@@ -79,7 +79,7 @@ def write_clustered(
     df: DataFrame,
     out_dir: str,
     cluster_cols: Sequence[str],
-    n_files: int,
+    n_files: int | None = None,
     mode: str = "overwrite",
     compression: str = "zstd",
 ) -> None:
@@ -103,9 +103,15 @@ def write_clustered(
     ``write_zordered`` which trades per-column tightness for multi-column
     skipping. Evidence: tests/test_clustering.py reads the written footers
     with pyarrow and asserts disjoint per-file ranges + skip counts.
+
+    ``n_files`` defaults to the session's default parallelism, the width
+    :func:`write_partitioned` also uses: a one-partition input then still
+    writes one file per core, from one task per core.
     """
     if not cluster_cols:
         raise ValueError("write_clustered: cluster_cols must be non-empty")
+    if n_files is None:
+        n_files = df.sparkSession.sparkContext.defaultParallelism
     if n_files < 1:
         raise ValueError(f"write_clustered: n_files must be >= 1, got {n_files}")
     cols = [F.col(c) for c in cluster_cols]

@@ -900,10 +900,26 @@ def publish_ivf_index(
     swap_publish(spark, out_dir, write, "publish_ivf_index")
 
 
+def _read_sidecar(spark, sidecar_dir: str) -> DataFrame:
+    """Read an underscore-prefixed sidecar dir by its part files. Spark's
+    reader ignores a root path whose name starts with ``_`` and warns
+    ``All paths were ignored`` (it then reads the dir all the same); the
+    part files themselves are plain names, so passing them reads
+    silently. A glob would warn too: the sink-metadata probe runs on it."""
+    path = spark._jvm.org.apache.hadoop.fs.Path(sidecar_dir)
+    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
+    parts = sorted(
+        st.getPath().toString()
+        for st in fs.listStatus(path)
+        if st.getPath().getName().endswith(".parquet")
+    )
+    return spark.read.parquet(*parts)
+
+
 def read_ivf_centroids(spark, index_dir: str) -> list[tuple[int, list[float]]]:
     """Load the ``_centroids`` sidecar a publish stored — the single
     source of truth for every later assignment against this index."""
-    rows = spark.read.parquet(f"{index_dir}/_centroids").collect()  # k rows
+    rows = _read_sidecar(spark, f"{index_dir}/_centroids").collect()  # k rows
     return sorted((int(r["cid"]), list(r["centroid"])) for r in rows)
 
 
@@ -1615,7 +1631,7 @@ def read_pq_codebooks(spark, index_dir: str):
     """Load the ``_pq_codebooks`` sidecar a publish stored — m codebooks,
     each [(cid, centroid), ...] sorted by cid, the single source of truth
     for every later encode/decode against this index."""
-    rows = spark.read.parquet(f"{index_dir}/_pq_codebooks").collect()  # m*k rows
+    rows = _read_sidecar(spark, f"{index_dir}/_pq_codebooks").collect()  # m*k rows
     by_s: dict[int, list[tuple[int, list[float]]]] = {}
     for r in rows:
         by_s.setdefault(int(r["s"]), []).append((int(r["cid"]), list(r["centroid"])))

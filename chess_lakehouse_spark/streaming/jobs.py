@@ -30,7 +30,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from chess_lakehouse_spark.session import FrameScope, local_df
+from chess_lakehouse_spark.session import FrameScope
 
 
 def read_events_stream(spark: SparkSession, events_dir: str) -> DataFrame:
@@ -1556,7 +1556,7 @@ def substring_index_batch(
     text_col: str = "text",
     q: int = 3,
     fold_case: bool = False,
-    n_posting_files: int = 4,
+    n_posting_files: int | None = None,
 ) -> None:
     """One micro-batch of the streaming substring-index loop: the batch's
     postings land gram-clustered in ``postings/batch_id=b<N>`` and meta/
@@ -1573,15 +1573,22 @@ def substring_index_batch(
     layout cannot be mixed in; land a historical corpus as the first
     drop instead), and consumers read it unchanged because
     ``substring_search_from_index`` ignores the discovered batch_id
-    column and counts DISTINCT grams (duplicate postings from a
-    re-admitted doc cannot break the intersection test). meta/ carries
-    n_docs = NULL — unknowable without a staged read; a periodic
+    column and takes DISTINCT candidates from the rarest gram's list (a
+    doc re-admitted in a later batch has duplicate postings; they can
+    only make its grams look more common, never drop a match). Each
+    batch writes ``n_posting_files`` files (None: one per core). meta/
+    carries n_docs = NULL — unknowable without a staged read; a periodic
     ``compact_stream_state(spark, f"{index_dir}/postings")`` keeps
     partition discovery cheap (the merged partition loses per-file gram
     clustering tightness, never correctness — footers still carry
     min/max)."""
-    from chess_lakehouse_spark.functions.text import substring_grams
-    from chess_lakehouse_spark.operators.publish import swap_publish, write_clustered
+    from chess_lakehouse_spark.functions.text import (
+        gram_postings,
+        read_substring_index_meta,
+        substring_index_meta,
+        write_gram_postings,
+    )
+    from chess_lakehouse_spark.operators.publish import swap_publish
 
     spark = batch_df.sparkSession
     # drift guard: a restart with different q/fold_case would rewrite
@@ -1591,7 +1598,7 @@ def substring_index_batch(
     # build_substring_index layout (whose meta carries a non-NULL n_docs
     # and whose postings/ has no batch_id= dirs to mix with).
     if _path_exists(spark, f"{index_dir}/meta"):
-        meta = spark.read.parquet(f"{index_dir}/meta").first()
+        meta = read_substring_index_meta(spark, index_dir)
         if int(meta["q"]) != q or bool(meta["fold_case"]) != bool(fold_case):
             raise ValueError(
                 f"substring_index_batch: index at {index_dir} was staged "
@@ -1614,23 +1621,17 @@ def substring_index_batch(
     base = batch_df.select(F.col(id_col).alias("doc_id"), t.alias("t")).where(
         F.col("t").isNotNull()
     )
-    postings = base.select(
-        "doc_id", F.explode(substring_grams(F.col("t"), q)).alias("g")
-    )
-    write_clustered(
-        postings,
+    write_gram_postings(
+        gram_postings(base, q),
         f"{index_dir}/postings/batch_id=b{batch_id}",
-        ["g"],
-        n_files=n_posting_files,
+        n_posting_files,
     )
     # meta is CONSTANT for the index's lifetime (the drift guard above
     # enforces it), so it only needs writing when absent — and through
     # the rename-aside swap, never an in-place overwrite a concurrent
     # substring_search_from_index reader could catch half-deleted
     if not _path_exists(spark, f"{index_dir}/meta"):
-        new_meta = local_df(
-            spark, [(q, None, bool(fold_case))], "q int, n_docs long, fold_case boolean"
-        )
+        new_meta = substring_index_meta(spark, q, None, fold_case)
         swap_publish(
             spark, f"{index_dir}/meta",
             new_meta.write.mode("overwrite").parquet, "substring_index_batch",
@@ -1645,7 +1646,7 @@ def stream_substring_index(
     text_col: str = "text",
     q: int = 3,
     fold_case: bool = False,
-    n_posting_files: int = 4,
+    n_posting_files: int | None = None,
 ) -> None:
     """Streaming maintenance of the trigram substring-search index: each
     micro-batch folds its own gram-clustered postings partition — the

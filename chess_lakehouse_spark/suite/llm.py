@@ -3961,8 +3961,8 @@ def q_substring_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact substring search (LIKE '%s%' at corpus scale) THROUGH a
     staged trigram-class index (functions/text.py:build_substring_index /
     substring_search_from_index — the pg_trgm / codesearch pattern, Cox
-    2012): candidates are the intersection of the query's q-gram posting
-    lists (gram-clustered, footer-skipped), verified with contains();
+    2012): candidates are the posting list of the query's rarest q-gram
+    (gram-clustered, footer-skipped), verified with contains();
     identical rows to the brute scan because containment implies
     possession of every q-gram. The index is staged under the per-process
     temp root (the lake_skipping_read pattern) ONCE per process behind a
@@ -3994,7 +3994,7 @@ def q_substring_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 #: Canonical q_substring_search oracle (tests import THIS): the brute
 #: contains() scan — completely index-free, so it checks the
-#: posting-intersection path's exactness rather than mirroring it.
+#: rarest-gram candidate path's exactness rather than mirroring it.
 SUBSTR_SEARCH_ORACLE = f"""
     WITH qs AS (
       SELECT doc_id AS qid,

@@ -1449,7 +1449,7 @@ def main(argv: list[str] | None = None) -> None:
     bsi.add_argument("--idCol", default="doc_id")
     bsi.add_argument("--textCol", default="text")
     bsi.add_argument("--qgram", type=int, default=None)  # build default: 3
-    bsi.add_argument("--postingFiles", type=int, default=64)
+    bsi.add_argument("--postingFiles", type=int, default=None)  # one per core
     bsi.add_argument("--foldCase", action="store_true")
     bsi.add_argument("--append", action="store_true")
     bsi.set_defaults(fn=cmd_build_search_index)

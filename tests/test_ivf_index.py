@@ -272,3 +272,32 @@ def test_publish_clears_stale_staging_root(spark, tmp_path):
         assert sorted(
             d for d in os.listdir(idx) if d.startswith("batch_id=")
         ) == ["batch_id=base"]
+
+
+def test_sidecars_of_several_part_files_read_back_complete(spark, tmp_path):
+    """The ``_centroids`` and ``_pq_codebooks`` sidecars are read by their
+    part files: every row of every part comes back, in the documented
+    order."""
+    from chess_lakehouse_spark.operators.similarity import (
+        read_ivf_centroids,
+        read_pq_codebooks,
+    )
+
+    idx = str(tmp_path / "ivfpq")
+
+    def write_parts(rows, schema, sidecar, n_parts):
+        for i in range(n_parts):  # one appended file per part
+            spark.createDataFrame(rows[i::n_parts], schema).coalesce(1).write.mode(
+                "append"
+            ).parquet(f"{idx}/{sidecar}")
+        assert len(glob.glob(f"{idx}/{sidecar}/*.parquet")) == n_parts
+
+    cents = [(c, [float(c), c / 2.0]) for c in range(7)]
+    write_parts(cents, "cid int, centroid array<double>", "_centroids", 3)
+    books = [(s, c, [float(s), float(c)]) for s in range(2) for c in range(5)]
+    write_parts(books, "s int, cid int, centroid array<double>", "_pq_codebooks", 4)
+
+    assert read_ivf_centroids(spark, idx) == cents
+    assert read_pq_codebooks(spark, idx) == [
+        [(c, [float(s), float(c)]) for c in range(5)] for s in range(2)
+    ]

@@ -408,3 +408,122 @@ def test_snippets_positions_counts_and_fold_case(spark, tmp_path):
     assert set(got_ci) == {(100, 1), (100, 2)}
     assert got_ci[(100, 2)].pos == 1
     assert got_ci[(100, 2)].snippet.startswith("Beta")  # original casing
+
+
+def _brute(queries, docs):
+    """The index-free reference: one row per (query row, containing doc)."""
+    return sorted(
+        tuple(r)
+        for r in queries.where(F.col("qt").isNotNull() & (F.length("qt") >= 1))
+        .join(docs.select("doc_id", "text"), F.contains(F.col("text"), F.col("qt")))
+        .select("qid", "doc_id")
+        .collect()
+    )
+
+
+def _served(spark, idx, docs, queries):
+    return sorted(
+        tuple(r)
+        for r in substring_search_from_index(
+            spark, idx, docs, "doc_id", "text", queries, "qid", "qt"
+        ).collect()
+    )
+
+
+def _slice_queries(docs):
+    return docs.where(F.col("doc_id") % 7 == 0).select(
+        F.col("doc_id").alias("qid"), F.substring("text", 11, 10).alias("qt")
+    )
+
+
+def test_duplicate_postings_in_a_flat_index_change_no_hits(spark, tmp_path):
+    """A posting file present twice doubles some posting counts: the
+    rarest-gram pick may change, the hits may not."""
+    import glob
+    import shutil
+
+    docs = _docs(spark)
+    idx = str(tmp_path / "idx")
+    build_substring_index(docs, "doc_id", "text", idx, q=3)
+    first = sorted(glob.glob(f"{idx}/postings/part-*.parquet"))[0]
+    shutil.copy(first, f"{idx}/postings/part-99999-copy.parquet")
+    queries = _slice_queries(docs)
+    want = _brute(queries, docs)
+    assert _served(spark, idx, docs, queries) == want and len(want) > 0
+
+
+def test_streaming_index_readmitting_a_doc_changes_no_hits(spark, tmp_path):
+    """The batch-partitioned streaming layout holds a re-admitted doc's
+    postings once per batch; serving still equals the brute scan."""
+    from chess_lakehouse_spark.streaming import substring_index_batch
+
+    docs = _docs(spark)
+    idx = str(tmp_path / "sidx")
+    substring_index_batch(docs, 0, idx)
+    substring_index_batch(docs.where(F.col("doc_id") % 5 == 0), 1, idx)
+    queries = _slice_queries(docs)
+    want = _brute(queries, docs)
+    assert _served(spark, idx, docs, queries) == want and len(want) > 0
+
+
+def _rare_gram_corpus(spark):
+    """All 22 docs hold every gram of 'aaaa bbbb'; only docs 100 and 101
+    hold the gram 'bbQ', and only doc 100 holds 'aaaa bbbbQ'."""
+    rows = [(i, "aaaa bbbb") for i in range(1, 21)]
+    rows += [(100, "aaaa bbbbQ"), (101, "bbQ aaaa bbbb")]
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+def test_one_qid_with_two_texts_returns_both_texts_hits(spark, tmp_path):
+    """qid is a label, not a key: a qid carrying two texts gets the hits
+    of each, as the brute join gives (the former per-qid gram count
+    demanded the union of both texts' grams and returned nothing)."""
+    docs = _rare_gram_corpus(spark)
+    idx = str(tmp_path / "idx")
+    build_substring_index(docs, "doc_id", "text", idx, q=3)
+    queries = spark.createDataFrame(
+        [(1, "aaaa bbbbQ"), (1, "bQ aa"), (2, "bbQ"), (2, "bbQ")],
+        "qid long, qt string",
+    )
+    want = _brute(queries, docs)
+    assert (1, 100) in want and (1, 101) in want
+    assert want.count((2, 100)) == 2  # a repeated query row repeats its hits
+    assert _served(spark, idx, docs, queries) == want
+
+
+@pytest.mark.parametrize("max_pushdown_grams", [1_000, 0])
+def test_candidates_come_from_the_rarest_grams_list(
+    spark, tmp_path, max_pushdown_grams
+):
+    """A query with one rare gram and several common ones: the candidate
+    rows are exactly the rare gram's postings, on the isin pushdown path
+    and on the semi-join fallback alike."""
+    from chess_lakehouse_spark.functions.text import _substring_candidates
+
+    docs = _rare_gram_corpus(spark)
+    idx = str(tmp_path / "idx")
+    build_substring_index(docs, "doc_id", "text", idx, q=3)
+    postings = spark.read.parquet(f"{idx}/postings")
+    queries = spark.createDataFrame([(1, "aaaa bbbbQ")], "qid long, qt string")
+    cand = _substring_candidates(postings, queries, 3, max_pushdown_grams)
+    rare = postings.where(F.col("g") == "bbQ").count()
+    assert rare == 2 and postings.where(F.col("g") == "aaa").count() == 22
+    assert sorted(r.doc_id for r in cand.collect()) == [100, 101]
+
+
+def test_one_partition_input_writes_one_posting_file_per_core(spark, tmp_path):
+    """The posting width comes from the core count, not from a constant,
+    for the flat build and for a streaming batch alike."""
+    import glob
+
+    from chess_lakehouse_spark.streaming import substring_index_batch
+
+    docs = _docs(spark)
+    assert docs.rdd.getNumPartitions() == 1
+    cores = spark.sparkContext.defaultParallelism
+    idx = str(tmp_path / "idx")
+    build_substring_index(docs, "doc_id", "text", idx, q=3)
+    assert len(glob.glob(f"{idx}/postings/part-*.parquet")) == cores
+    sidx = str(tmp_path / "sidx")
+    substring_index_batch(docs, 0, sidx)
+    assert len(glob.glob(f"{sidx}/postings/batch_id=b0/part-*.parquet")) == cores
