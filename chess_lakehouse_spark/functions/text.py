@@ -2213,8 +2213,9 @@ def substring_match_snippets(
     text and the snippet is sliced from the ORIGINAL at those offsets —
     exact for any text whose lowercasing preserves length (all of ASCII;
     the documented drift case is locale-class mappings like 'İ' whose
-    lowering adds a combining mark). Hits are joined back to their query
-    text by qid, so here a qid must carry one text."""
+    lowering adds a combining mark). Each matching doc is paired with the
+    query rows of its qid whose text it contains, so the output has one
+    row per query row and matching doc, as the search itself."""
     meta = read_substring_index_meta(spark, index_dir)
     fold_case = bool(meta["fold_case"])
     hits = substring_search_from_index(
@@ -2227,10 +2228,16 @@ def substring_match_snippets(
     qs = queries.select(
         F.col(qid_col).alias("qid"), F.col(qtext_col).alias("qt")
     ).where(F.col("qt").isNotNull() & (F.length("qt") >= 1))
-    out = hits.join(texts, "doc_id").join(qs, "qid")
+    # the search emits one row per query row: back to distinct (qid, doc)
+    # pairs, then one row per query row of the qid whose text matches
+    out = hits.distinct().join(texts, "doc_id").join(qs, "qid")
     mt = F.lower(F.col("t")) if fold_case else F.col("t")
     mq = F.lower(F.col("qt")) if fold_case else F.col("qt")
-    out = out.withColumn("mt_c", mt).withColumn("mq_c", mq)
+    out = (
+        out.withColumn("mt_c", mt)
+        .withColumn("mq_c", mq)
+        .where(F.contains(F.col("mt_c"), F.col("mq_c")))
+    )
     out = (
         out.withColumn("pos", F.expr("locate(mq_c, mt_c)"))
         .withColumn(

@@ -10,25 +10,18 @@ ECO opening (reference: src/find-openings.ts:73-79):
 
 A literal translation (cross join + per-key window) shuffles the ENTIRE fact
 table by key just to rank a handful of matches — at 100 TB that shuffle is
-the whole job. Two implementations are provided; both add the deterministic
-tie-break the reference lacks (SURVEY.md §2.3 ⚠).
-
-1. ``enrich_top1_mapside`` (preferred, used by the chess pipeline): the
-   dimension is collected on the driver in one job and embedded in the plan
-   as ONE constant array<struct>, and the argmax is computed per fact row
-   with higher-order functions (FILTER + REDUCE over the array). The
-   constant is sent to the JVM as a single JSON string that Catalyst folds
-   into the array, so building the plan costs as many Py4J calls for
-   3,400 openings as for 10. Zero shuffle, zero window, stays
-   inside whole-stage codegen; scales as O(|fact| * |dim|) comparisons
-   map-side, which is exactly what the reference's nested-loop lateral
-   does — minus its single-process limit. Requires the dimension to fit in
-   every task binary (~3.5k openings: trivially).
-
-2. ``enrich_top1_join`` (generic): broadcast theta-join + max_by aggregation
-   for dimensions too large to collapse, or when the predicate needs the
-   planner (e.g. an equi-prejoin component). Shuffles only
-   (key, best-payload) pairs thanks to partial aggregation — not full rows.
+the whole job. ``enrich_top1_mapside`` (used by the chess pipeline and the
+``chess_enrich`` query) instead collects the dimension on the driver in one
+job and embeds it in the plan as ONE constant array<struct>, and the argmax
+is computed per fact row with higher-order functions (FILTER + REDUCE over
+the array), with the deterministic tie-break the reference lacks
+(SURVEY.md §2.3 ⚠). The constant is sent to the JVM as a single JSON string
+that Catalyst folds into the array, so building the plan costs as many Py4J
+calls for 3,400 openings as for 10. Zero shuffle, zero window, stays inside
+whole-stage codegen; scales as O(|fact| * |dim|) comparisons map-side, which
+is exactly what the reference's nested-loop lateral does — minus its
+single-process limit. Requires the dimension to fit in every task binary
+(~3.5k openings: trivially).
 """
 
 from __future__ import annotations
@@ -89,9 +82,7 @@ def enrich_top1_mapside(
     max_dim_rows bounds the task binary: the dim is embedded as a literal
     array<struct> that is serialized into every task, so task size grows
     linearly with the dim (building the plan does not: the literal is one
-    string whatever the row count). Beyond the cap this raises — use
-    ``enrich_top1_join``, which broadcasts through the exchange machinery
-    instead of the plan, for larger dimensions.
+    string whatever the row count). Beyond the cap this raises.
     """
     tiebreak_cols = list(tiebreak_cols or [])
     if only_if_null is not None and only_if_null not in fact.columns:
@@ -126,8 +117,7 @@ def enrich_top1_mapside(
     if len(fetched) > max_dim_rows:
         raise ValueError(
             f"enrich_top1_mapside: dimension exceeds max_dim_rows={max_dim_rows}; "
-            "the literal array, serialized into every task, grows linearly with the dim — "
-            "use enrich_top1_join for large dimensions"
+            "the literal array, serialized into every task, grows linearly with the dim"
         )
     n = len(struct_cols)
     dim_rows = sorted(fetched, key=lambda r: tuple((v is None, v) for v in r[:n]))
@@ -155,43 +145,3 @@ def enrich_top1_mapside(
         out = out.withColumn(new, val)
     return out.drop("__best")
 
-
-def enrich_top1_join(
-    fact: DataFrame,
-    dim: DataFrame,
-    on: Column,
-    key_cols: Sequence[str],
-    rank_col: str,
-    payload_cols: Sequence[str],
-    tiebreak_cols: Sequence[str] | None = None,
-    broadcast_dim: bool = True,
-) -> DataFrame:
-    """Generic argmax enrichment: broadcast theta-join then per-key top-1.
-
-    Returns one row per matched key: (key_cols..., rank_col, payload_cols...).
-    Callers left-join this back onto the fact table (unmatched keys keep their
-    existing values — the reference's inner-lateral update semantics,
-    src/find-openings.ts:79).
-
-    Scale notes: the fact side is projected to (keys, probe) BEFORE the join,
-    so the only thing shuffled by the top-1 window is the narrow match set —
-    never full fact rows. The dim side is broadcast (no shuffle for the join
-    itself); Catalyst would otherwise plan a cartesian for a theta predicate.
-    The window orders by (rank DESC, tiebreaks ASC) — deterministic where the
-    reference's bare ``ORDER BY ply DESC LIMIT 1`` is engine-arbitrary.
-    """
-    from pyspark.sql.window import Window
-
-    tiebreak_cols = list(tiebreak_cols or [])
-    d = F.broadcast(dim) if broadcast_dim else dim
-    matches = fact.join(d, on, "inner").select(
-        *key_cols, rank_col, *[c for c in payload_cols if c not in (rank_col, *key_cols)]
-    )
-    w = Window.partitionBy(*key_cols).orderBy(
-        F.col(rank_col).desc(), *[F.col(c).asc() for c in tiebreak_cols]
-    )
-    return (
-        matches.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") == 1)
-        .drop("__rn")
-    )

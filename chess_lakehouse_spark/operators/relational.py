@@ -507,12 +507,12 @@ def winsorize(
     companion to :func:`z_outliers` (clip instead of flag, so downstream
     aggregates see a bounded domain).
 
-    Exact-by-rank: the threshold is the value AT row_number
-    ``ceil(pct * n)`` under the total order (value, id) — integer rank
-    arithmetic, no interpolation, so any engine picks the identical
-    threshold row. Plan: one window shuffle keyed by the group computes
-    ranks, the two threshold rows per group collapse to a |groups|-row
-    frame, broadcast back onto the unclipped rows.
+    Exact-by-rank: the threshold is the value AT rank ``ceil(pct * n)``
+    under the total order (value, id) — integer rank arithmetic, no
+    interpolation, so any engine picks the identical threshold row.
+    Plan: the ``by`` form of :func:`_exact_rank` (one window shuffle
+    keyed by the group), the two threshold rows per group collapse to a
+    |groups|-row frame, broadcast back onto the unclipped rows.
 
     ``exact=False`` is the 100 TB path (mirroring the quality_buckets
     exact-for-oracle / approx-at-scale contract): group thresholds come
@@ -524,8 +524,6 @@ def winsorize(
 
     Returns (id, group, value, clipped).
     """
-    from pyspark.sql.window import Window
-
     if not 0.0 <= lower_pct < upper_pct <= 1.0:
         raise ValueError(
             f"winsorize: need 0 <= lower_pct < upper_pct <= 1, got {lower_pct}, {upper_pct}"
@@ -540,18 +538,13 @@ def winsorize(
         # percentile convention approx_percentile already follows — Spark
         # would otherwise rank NULLs FIRST and shift both thresholds onto
         # wrong rows); NULL-value rows pass through with clipped = NULL
-        nn = base.where(F.col("value").isNotNull())
-        w = Window.partitionBy("grp").orderBy(F.col("value").asc(), F.col("id").asc())
-        ranked = nn.select(
-            "grp",
-            "value",
-            F.row_number().over(w).alias("rn"),
-            F.count(F.lit(1)).over(Window.partitionBy("grp")).alias("n"),
+        ranked = _exact_rank(
+            base.where(F.col("value").isNotNull()), ["value", "id"], by=["grp"]
         )
-        lo_rn = F.greatest(F.lit(1), F.ceil(F.col("n") * F.lit(lower_pct)))
-        hi_rn = F.greatest(F.lit(1), F.ceil(F.col("n") * F.lit(upper_pct)))
+        lo_rn = F.greatest(F.lit(1), F.ceil(F.col("__N") * F.lit(lower_pct)))
+        hi_rn = F.greatest(F.lit(1), F.ceil(F.col("__N") * F.lit(upper_pct)))
         bounds = (
-            ranked.where((F.col("rn") == lo_rn) | (F.col("rn") == hi_rn))
+            ranked.where((F.col("__rank") == lo_rn) | (F.col("__rank") == hi_rn))
             .groupBy("grp")
             .agg(F.min("value").alias("lo"), F.max("value").alias("hi"))
         )
@@ -700,67 +693,146 @@ def activity_streaks(
     )
 
 
-def global_sort_rank(df: DataFrame, order_cols: Sequence[str]) -> DataFrame:
-    """Exact 1-based global rank over the ``order_cols`` ascending total
-    order, computed by the classic DISTRIBUTED sort-rank plan — never
-    Spark's single-partition global-sort window. Range-repartition on
-    the sort key (Spark's scalable sort machinery: every partition sorts
-    independently), per-partition ``row_number``, plus a broadcast of
-    per-partition row-count offsets (|partitions| rows) reconstructs the
-    exact global rank. When the key is unique the rank is independent of
-    where the range partitioner draws its boundaries; with ties, rows of
-    an equal key receive the distinct ranks of their positions in SOME
-    order (any value-at-rank or bucket-of-rank derivation is still
-    deterministic). Returns the input columns plus ``__rank`` (long,
-    1-based) and ``__N`` (long, total rows) — the shared skeleton under
-    :func:`score_buckets` and :func:`exact_quantiles`. Two full-data
-    shuffles (range + pid-hash for the window); everything else is
-    constant-size.
+#: Working columns of :func:`_exact_rank`; the ``weight`` form adds the
+#: second set. Every operator built on the kernel reserves them.
+_RANK_COLS = ("__pid", "__r", "__n", "__off", "__rank", "__N")
+_WEIGHT_COLS = ("__lw", "__pw", "__ow", "__cw", "__tw")
 
-    The ranged frame is materialized through an EAGER ``localCheckpoint``
-    (the pagerank discipline): the offsets, the total and the rank branch
-    all read ONE fixed snapshot, so correctness never depends on
-    Catalyst's exchange-reuse rule deduplicating three instances of a
-    sampled range exchange — with reuse disabled (or a plan shape that
-    defeats canonicalization) independent evaluations could draw
-    different partitioner boundaries and desynchronize ``__off`` from
-    ``__pid``. (A cache owned by the returned frame, ``FrameScope.own``,
-    would not survive derivation: cache substitution happens at action
-    time, so a scope collected with an intermediate frame reopens the hole; the checkpointed RDD is
-    referenced structurally by every derived plan.) Reserved working
-    names must be free."""
-    from pyspark.sql.window import Window
 
-    clash = {"__pid", "__rank", "__N", "__r", "__off", "__n"} & set(df.columns)
+def _check_reserved(fn: str, df: DataFrame, *names: str) -> None:
+    """The one reserved-name guard: the working columns an operator adds,
+    and its named outputs, must be free in its input."""
+    clash = set(names) & set(df.columns)
     if clash:
         raise ValueError(
-            f"global_sort_rank: input carries reserved column(s) {sorted(clash)}"
+            f"{fn}: input carries reserved column(s) {sorted(clash)}"
+            " (working columns, or an out_col the call adds)"
         )
+
+
+def _exact_rank(
+    df: DataFrame,
+    order: Sequence[str],
+    by: Sequence[str] | None = None,
+    weight: str | None = None,
+) -> DataFrame:
+    """The exact-rank kernel under every order-statistics operator here.
+
+    Attaches ``__rank`` (long, 1-based, over the ``order`` columns
+    ascending) and ``__N`` (long, rows in the population). Given a long
+    ``weight`` column it also attaches ``__cw``, the running weight with
+    this row included, and ``__tw``, the total weight. When ``order`` is
+    a unique key, rank and running weight do not depend on the
+    partitioning; with ties, tied rows take the distinct ranks of their
+    positions in SOME order (any value-at-rank or bucket-of-rank
+    derivation is still deterministic).
+
+    ``by`` form: one group-keyed window. Groups parallelize across the
+    cluster, so the per-group sort IS the distributed plan.
+
+    Global form: the distributed sort-rank plan, never Spark's
+    single-partition global-sort window. Range-repartition on the order
+    (every partition sorts independently), per-partition ``row_number``
+    and running weight, plus one broadcast |partitions|-row frame of each
+    partition's offsets (rows and weight in all earlier partitions) and
+    the totals. Two full-data shuffles: the range exchange and the
+    pid-hash for the window; everything else is constant-size.
+
+    The ranged frame is materialized through an EAGER ``localCheckpoint``
+    (the pagerank discipline): the offsets and the rank branch read ONE
+    fixed snapshot, so correctness never depends on Catalyst's
+    exchange-reuse rule deduplicating two instances of a sampled range
+    exchange; independent evaluations could draw different partitioner
+    boundaries and desynchronize the offsets from ``__pid``. A
+    ``FrameScope.own`` cache would not do: cache substitution happens at
+    action time, so a scope collected with an intermediate frame reopens
+    the hole, while the checkpointed RDD is referenced structurally by
+    every derived plan."""
+    from pyspark.sql.window import Window
+
+    ordered = [F.col(c).asc() for c in order]
+    running = (Window.unboundedPreceding, Window.currentRow)
+    if by:
+        w = Window.partitionBy(*by).orderBy(*ordered)
+        group = Window.partitionBy(*by)
+        cols = {"__rank": F.row_number().over(w), "__N": F.count(F.lit(1)).over(group)}
+        if weight:
+            cols["__cw"] = F.sum(weight).over(w.rowsBetween(*running))
+            cols["__tw"] = F.sum(weight).over(group)
+        return df.select("*", *[c.cast("long").alias(n) for n, c in cols.items()])
     ranged = (
-        df.repartitionByRange(*[F.col(c).asc() for c in order_cols])
+        df.repartitionByRange(*ordered)
         .withColumn("__pid", F.spark_partition_id())
         .localCheckpoint()
     )
-    cnts = ranged.groupBy("__pid").agg(F.count(F.lit(1)).alias("__n"))
-    # offsets: rows in all earlier range partitions. |partitions| rows
-    # total, so the unpartitioned window is a constant-size driver-free
-    # cumsum, not a data-volume sort.
-    w_off = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-    offs = cnts.select(
+    w = Window.partitionBy("__pid").orderBy(*ordered)
+    local = [F.row_number().over(w).cast("long").alias("__r")]
+    per_pid = [F.count(F.lit(1)).alias("__n")]
+    if weight:
+        local.append(F.sum(weight).over(w.rowsBetween(*running)).cast("long").alias("__lw"))
+        per_pid.append(F.sum(weight).alias("__pw"))
+    # |partitions| rows, so the unpartitioned windows are a constant-size
+    # driver-free cumsum, not a data-volume sort
+    before = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
+    every = Window.orderBy("__pid").rowsBetween(
+        Window.unboundedPreceding, Window.unboundedFollowing
+    )
+
+    def offset_and_total(part: str, off: str, total: str) -> list[Column]:
+        return [
+            F.coalesce(F.sum(part).over(before), F.lit(0)).cast("long").alias(off),
+            F.sum(part).over(every).cast("long").alias(total),
+        ]
+
+    offs = ranged.groupBy("__pid").agg(*per_pid).select(
         "__pid",
-        F.coalesce(F.sum("__n").over(w_off), F.lit(0)).cast("long").alias("__off"),
+        *offset_and_total("__n", "__off", "__N"),
+        *(offset_and_total("__pw", "__ow", "__tw") if weight else []),
     )
-    total = cnts.agg(F.sum("__n").cast("long").alias("__N"))
-    w_rank = Window.partitionBy("__pid").orderBy(
-        *[F.col(c).asc() for c in order_cols]
-    )
-    return (
-        ranged.withColumn("__r", F.row_number().over(w_rank).cast("long"))
+    out = (
+        ranged.select("*", *local)
         .join(F.broadcast(offs), "__pid")
-        .crossJoin(F.broadcast(total))
         .withColumn("__rank", F.col("__off") + F.col("__r"))
-        .drop("__pid", "__r", "__off")
     )
+    if weight:
+        out = out.withColumn("__cw", F.col("__ow") + F.col("__lw"))
+    return out.drop("__pid", "__r", "__off", "__lw", "__ow")
+
+
+def _ppm_of_rank(rank: str, n: str) -> Column:
+    """``((rank - 1) * 1_000_000) div (n - 1)``: SQL percent_rank's
+    (rank-1)/(N-1) in exact integer millionths, so no float-division
+    boundary exists between engines; a single-row population is 0
+    (percent_rank's own convention, and the ANSI-safe guard for the N-1
+    divisor). Guarded fast path: rank ≤ N, so the ×10⁶ product fits
+    BIGINT whenever N ≤ 9e12, and every realistic frame takes the
+    pure-long branch (CASE branches evaluate lazily in codegen); past it
+    the DECIMAL(38,0) branch keeps the overflow class safe with identical
+    values (div is floor in both forms)."""
+    return (
+        F.when(F.col(n) <= 1, F.lit(0).cast("long"))
+        .when(
+            F.col(n) <= 9_000_000_000_000,
+            F.expr(f"(({rank} - 1) * 1000000) div ({n} - 1)"),
+        )
+        .otherwise(
+            F.expr(
+                f"CAST((CAST({rank} - 1 AS DECIMAL(38,0)) * 1000000)"
+                f" div ({n} - 1) AS BIGINT)"
+            )
+        )
+    )
+
+
+def global_sort_rank(df: DataFrame, order_cols: Sequence[str]) -> DataFrame:
+    """Exact 1-based global rank over the ``order_cols`` ascending total
+    order: the global form of :func:`_exact_rank` (range partition +
+    per-partition ``row_number`` + broadcast offsets, never a
+    single-partition sort). Returns the input columns plus ``__N`` (long,
+    total rows) and ``__rank`` (long, 1-based). Reserved working names
+    must be free."""
+    _check_reserved("global_sort_rank", df, *_RANK_COLS)
+    return _exact_rank(df, order_cols)
 
 
 def global_prefix_sum(
@@ -772,62 +844,99 @@ def global_prefix_sum(
 ) -> DataFrame:
     """Exact global running integer sum of ``value_col`` over the
     ``order_cols`` ascending total order, plus the 1-based global rank —
-    :func:`global_sort_rank`'s twin for 'cumulative tokens in training
-    order' style cuts, by the same DISTRIBUTED plan (range repartition +
-    per-partition running window + broadcast per-partition offsets),
-    never a single-partition global-sort window. The per-partition
-    offset here is the SUM OF VALUES in all earlier range partitions
-    (still a |partitions|-row constant-size cumsum). ``order_cols`` must
-    be a total order (unique-key tie-break) or the running sum at tied
-    keys is partitioner-dependent. Values are cast to long (exact
-    integer masses — tokens, chars, bytes); NULL values count as 0.
-    Returns the input columns plus ``rank_col`` and ``out_col`` (long).
+    for 'cumulative tokens in training order' style cuts: the weighted
+    global form of :func:`_exact_rank`, never a single-partition
+    global-sort window. ``order_cols`` must be a total order (unique-key
+    tie-break) or the running sum at tied keys is partitioner-dependent.
+    Values are cast to long (exact integer masses — tokens, chars,
+    bytes); NULL values count as 0. Returns the input columns plus
+    ``rank_col`` and ``out_col`` (long)."""
+    _check_reserved(
+        "global_prefix_sum", df, *_RANK_COLS, *_WEIGHT_COLS, "__v", rank_col, out_col
+    )
+    ranked = _exact_rank(
+        df.withColumn("__v", F.coalesce(F.col(value_col).cast("long"), F.lit(0))),
+        order_cols,
+        weight="__v",
+    )
+    return ranked.select(
+        *df.columns, F.col("__rank").alias(rank_col), F.col("__cw").alias(out_col)
+    )
 
-    Same eager ``localCheckpoint`` discipline as global_sort_rank: the
-    offsets and the running branch must read one fixed range snapshot.
-    """
-    from pyspark.sql.window import Window
 
-    clash = {
-        "__pid", "__v", "__r", "__c", "__off", "__roff", "__n", "__nr",
-        rank_col, out_col,
-    } & set(df.columns)
-    if clash:
-        raise ValueError(
-            f"global_prefix_sum: input carries reserved column(s) {sorted(clash)}"
-        )
-    ranged = (
-        df.withColumn("__v", F.coalesce(F.col(value_col).cast("long"), F.lit(0)))
-        .repartitionByRange(*[F.col(c).asc() for c in order_cols])
-        .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint()
+def _quantile_pick(
+    fn: str,
+    df: DataFrame,
+    value_col: str,
+    qs: Sequence[float],
+    by: Sequence[str] | None,
+    weight_col: str | None = None,
+) -> DataFrame:
+    """Value at the first row, in value-ascending order, whose running
+    weight reaches ``t = ceil(q * W)`` (W = total weight), floored at 1:
+    the pick under both :func:`exact_quantiles` (unit weight: the running
+    weight is the rank and W is N) and :func:`weighted_quantiles`.
+
+    q is carried as integer millionths and the target is exact integer
+    arithmetic, so both engines cut at identical positions with no float
+    boundary. Rows with a NULL value are excluded (the SQL percentile
+    convention: counting them would shift every rank, and Spark's
+    ascending sort ranks them FIRST where DuckDB ranks them last); with a
+    weight, so are NULL, zero and negative weights. Ties in the value
+    column cannot change the selected VALUE: the target either falls
+    inside a tie group's running range or outside it entirely. Returns
+    ``(*by, q_ppm bigint, value)``, one row per (group × quantile); an
+    empty input (or group) yields no rows."""
+    if not qs:
+        raise ValueError(f"{fn}: qs must be non-empty")
+    ppms = []
+    for q in qs:
+        p = int(round(float(q) * 1_000_000))
+        if not 0 < p <= 1_000_000:
+            raise ValueError(f"{fn}: q must be in (0, 1], got {q}")
+        ppms.append(p)
+    if len(set(ppms)) != len(ppms):
+        raise ValueError(f"{fn}: duplicate quantiles in {list(qs)}")
+    _check_reserved(fn, df, *_RANK_COLS, *_WEIGHT_COLS, "__w", "q_ppm")
+    gcols = list(by) if by else []
+    pts = df.where(F.col(value_col).isNotNull())
+    if weight_col:
+        w = F.col(weight_col).cast("long")
+        pts = pts.where(w.isNotNull() & (w > 0)).select(*gcols, value_col, w.alias("__w"))
+        pos, total, step = F.col("__cw"), "__tw", F.col("__w")
+    else:
+        pts = pts.select(*gcols, value_col)
+        pos, total, step = F.col("__rank"), "__N", F.lit(1)
+    ranked = _exact_rank(pts, [value_col], gcols, "__w" if weight_col else None)
+    # overflow-free LONG arithmetic via the exact split identity
+    # (W = a·10⁶ + b): (q_ppm·W + 999999) div 10⁶ =
+    # q_ppm·a + (q_ppm·b + 999999) div 10⁶ — the first term is a
+    # multiple of 10⁶ inside the div, so the identity is exact; both
+    # products stay below 2⁶³ for EVERY W < 2⁶³ (q_ppm·a ≤ W;
+    # q_ppm·b < 10¹²). A total weight is often a token/char mass that
+    # passes the BIGINT ×10⁶ abort point (~9.2e12) at ~9 TB; a DECIMAL
+    # ride would be exact too, but evaluated per (row × quantile) it
+    # measured 2.7-3.4× slower on the gated quantile queries. The oracle
+    # keeps its HUGEINT form: values are identical.
+    tgt = F.greatest(
+        F.lit(1).cast("long"),
+        F.expr(
+            f"q_ppm * ({total} div 1000000)"
+            f" + (q_ppm * ({total} % 1000000) + 999999) div 1000000"
+        ),
     )
-    # per-partition row count (rank offset) and value mass (sum offset):
-    # ONE |partitions|-row frame carries both constant-size cumsums
-    cnts = ranged.groupBy("__pid").agg(
-        F.count(F.lit(1)).alias("__nr"), F.sum("__v").alias("__n")
-    )
-    w_off = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-    offs = cnts.select(
-        "__pid",
-        F.coalesce(F.sum("__nr").over(w_off), F.lit(0)).cast("long").alias("__roff"),
-        F.coalesce(F.sum("__n").over(w_off), F.lit(0)).cast("long").alias("__off"),
-    )
-    w_run = Window.partitionBy("__pid").orderBy(
-        *[F.col(c).asc() for c in order_cols]
-    )
+    # the target falls in exactly ONE row's interval (pos - step, pos]
+    # per group × q: broadcast the |qs|-row frame in and filter — |qs|
+    # rows per group out, no aggregation. (crossJoin-then-filter rather
+    # than a conditioned join: Spark 4's join-condition resolver flags
+    # the reused per-partition lineage as ambiguous when the condition's
+    # F.expr references both sides; the filter plans to the same
+    # BroadcastNestedLoopJoin.)
+    qdf = local_df(df.sparkSession, [(p,) for p in ppms], "q_ppm long")
     return (
-        ranged.withColumn("__r", F.row_number().over(w_run).cast("long"))
-        .withColumn(
-            "__c",
-            F.sum("__v")
-            .over(w_run.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-            .cast("long"),
-        )
-        .join(F.broadcast(offs), "__pid")
-        .withColumn(rank_col, (F.col("__roff") + F.col("__r")).cast("long"))
-        .withColumn(out_col, (F.col("__off") + F.col("__c")).cast("long"))
-        .drop("__pid", "__v", "__r", "__c", "__off", "__roff")
+        ranked.crossJoin(F.broadcast(qdf))
+        .where((pos >= tgt) & (pos - step < tgt))
+        .select(*gcols, "q_ppm", F.col(value_col).alias("value"))
     )
 
 
@@ -839,72 +948,15 @@ def exact_quantiles(
 ) -> DataFrame:
     """EXACT quantile values (discrete / lower-rank definition: the value
     at rank ``ceil(q * N)``, rank 1-based ascending, floored at 1) — the
-    scale-safe twin of a sort-and-pick. Global form rides
-    :func:`global_sort_rank` (range partition + offset ranks — no
-    single-partition sort); the ``by`` form windows per group (groups
-    parallelize across the cluster, so the per-group sort IS the
-    distributed plan). The target rank is computed in EXACT integer
-    arithmetic — q is carried as integer millionths and
-    ``rank = (q_ppm * N + 999_999) div 1_000_000`` — so both engines cut
-    at identical ranks with no float boundary (ties in the value column
-    cannot change the value at a rank). NULL values are EXCLUDED from N
-    and from ranking (the SQL percentile convention — counting them
-    would shift every rank and return NULL at low quantiles; note
-    Spark's ascending sort would also rank them FIRST where DuckDB ranks
-    them last, a cross-engine trap this filter removes). A group that is
+    scale-safe twin of a sort-and-pick, by :func:`_quantile_pick` with
+    unit weight over :func:`_exact_rank` (global: range partition +
+    offset ranks, no single-partition sort; ``by``: one group window).
+    NULL values are excluded from N and from ranking; a group that is
     all-NULL yields no rows.
 
     Returns ``(*by, q_ppm bigint, value)`` — one row per (group ×
     quantile); empty input (or empty group) yields no rows."""
-    if not qs:
-        raise ValueError("exact_quantiles: qs must be non-empty")
-    ppms = []
-    for q in qs:
-        p = int(round(float(q) * 1_000_000))
-        if not 0 < p <= 1_000_000:
-            raise ValueError(
-                f"exact_quantiles: q must be in (0, 1], got {q}"
-            )
-        ppms.append(p)
-    if len(set(ppms)) != len(ppms):
-        raise ValueError(f"exact_quantiles: duplicate quantiles in {list(qs)}")
-    spark = df.sparkSession
-    qdf = local_df(spark, [(p,) for p in ppms], "q_ppm long")
-    df = df.where(F.col(value_col).isNotNull())
-    if by:
-        from pyspark.sql.window import Window
-
-        gcols = list(by)
-        w = Window.partitionBy(*gcols).orderBy(F.col(value_col).asc())
-        ranked = df.select(*gcols, value_col).withColumn(
-            "__rank", F.row_number().over(w).cast("long")
-        ).withColumn(
-            "__N", F.count(F.lit(1)).over(Window.partitionBy(*gcols)).cast("long")
-        )
-    else:
-        gcols = []
-        ranked = global_sort_rank(df.select(value_col), [value_col])
-    # overflow-free LONG arithmetic via the exact split identity
-    # (N = a·10⁶ + b): (q_ppm·N + 999999) div 10⁶ =
-    # q_ppm·a + (q_ppm·b + 999999) div 10⁶ — the first term is a
-    # multiple of 10⁶ inside the div, so the identity is exact; both
-    # products stay below 2⁶³ for EVERY N < 2⁶³ (q_ppm·a ≤ N;
-    # q_ppm·b < 10¹²). This replaces the r12 first cut's DECIMAL(38,0)
-    # ride, which was exact but evaluated per (row × quantile) in the
-    # rank-join condition — BigDecimal math on the hot path (measured
-    # 2.7-3.4× on the gated quantile queries). The oracle keeps its
-    # HUGEINT form: values are identical.
-    tr = F.greatest(
-        F.lit(1).cast("long"),
-        F.expr(
-            "q_ppm * (__N div 1000000)"
-            " + (q_ppm * (__N % 1000000) + 999999) div 1000000"
-        ),
-    )
-    return (
-        ranked.join(F.broadcast(qdf), tr == F.col("__rank"))
-        .select(*gcols, "q_ppm", F.col(value_col).alias("value"))
-    )
+    return _quantile_pick("exact_quantiles", df, value_col, qs, by)
 
 
 def weighted_quantiles(
@@ -922,137 +974,27 @@ def weighted_quantiles(
     weight, not its existence.
 
     Exactness contract: weights must be POSITIVE INTEGERS (cast to
-    long) — cumulative sums and the target rank are then exact integer
-    arithmetic with q carried in millionths (``t = (q_ppm * W + 999_999)
-    div 1e6``, floored at 1), so both engines cut at identical
-    cumulative positions with no float boundary. Rows with NULL value,
-    NULL weight, or weight <= 0 are EXCLUDED (a zero-weight row cannot
-    carry a quantile; negative weights have no quantile semantics).
-    Ties in the value column cannot change the selected VALUE: the
-    threshold either falls inside a tie group's cumulative range (the
-    group's value is returned regardless of intra-tie order) or outside
-    it entirely.
-
-    Plan: the global form is the :func:`global_sort_rank` skeleton
-    generalized from prefix-COUNT to prefix-SUM — range repartition on
-    value (+ eager localCheckpoint snapshot), per-partition inclusive
-    running weight, broadcast |partitions|-row exclusive cumsum of
-    partition weights; the ``by`` form windows per group (groups
-    parallelize). Each target then picks ``min_by(value, cw)`` over
-    ``cw >= t`` — cw is strictly increasing (weights >= 1), so the
-    arg-min is unique. Returns ``(*by, q_ppm bigint, value)``; empty
-    input (or group) yields no rows."""
-    from pyspark.sql.window import Window
-
-    if not qs:
-        raise ValueError("weighted_quantiles: qs must be non-empty")
-    ppms = []
-    for q in qs:
-        p = int(round(float(q) * 1_000_000))
-        if not 0 < p <= 1_000_000:
-            raise ValueError(f"weighted_quantiles: q must be in (0, 1], got {q}")
-        ppms.append(p)
-    if len(set(ppms)) != len(ppms):
-        raise ValueError(f"weighted_quantiles: duplicate quantiles in {list(qs)}")
-    clash = {"__w", "__cw", "__tw", "__pid", "__lw", "__pw", "__ow", "q_ppm"} & set(
-        df.columns
-    )
-    if clash:
-        raise ValueError(
-            f"weighted_quantiles: input carries reserved column(s) "
-            f"{sorted(clash)}"
-        )
-    spark = df.sparkSession
-    qdf = local_df(spark, [(p,) for p in ppms], "q_ppm long")
-    w = F.col(weight_col).cast("long")
-    pts = df.where(
-        F.col(value_col).isNotNull() & w.isNotNull() & (w > 0)
-    ).select(*(list(by) if by else []), value_col, w.alias("__w"))
-    gcols = list(by) if by else []
-    if gcols:
-        wo = Window.partitionBy(*gcols).orderBy(F.col(value_col).asc())
-        cum = pts.withColumn(
-            "__cw",
-            F.sum("__w")
-            .over(wo.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-            .cast("long"),
-        ).withColumn(
-            "__tw",
-            F.sum("__w").over(Window.partitionBy(*gcols)).cast("long"),
-        )
-    else:
-        ranged = (
-            pts.repartitionByRange(F.col(value_col).asc())
-            .withColumn("__pid", F.spark_partition_id())
-            .localCheckpoint()
-        )
-        w_loc = (
-            Window.partitionBy("__pid")
-            .orderBy(F.col(value_col).asc())
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        loc = ranged.withColumn("__lw", F.sum("__w").over(w_loc).cast("long"))
-        pw = ranged.groupBy("__pid").agg(F.sum("__w").cast("long").alias("__pw"))
-        w_off = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-        offs = pw.select(
-            "__pid",
-            F.coalesce(F.sum("__pw").over(w_off), F.lit(0))
-            .cast("long")
-            .alias("__ow"),
-        )
-        total = pw.agg(F.sum("__pw").cast("long").alias("__tw"))
-        cum = (
-            loc.join(F.broadcast(offs), "__pid")
-            .crossJoin(F.broadcast(total))
-            .withColumn("__cw", F.col("__ow") + F.col("__lw"))
-        )
-    # the target falls in exactly ONE row's cumulative interval
-    # (cw - w, cw] per group x q: broadcast the |qs|-row frame in and
-    # filter — |qs| rows per group out, no aggregation at all.
-    # (crossJoin-then-filter rather than a conditioned join: Spark 4's
-    # join-condition resolver flags the reused per-partition-weights
-    # lineage as ambiguous when the condition's F.expr references both
-    # sides; the single-frame filter resolves cleanly and plans to the
-    # same BroadcastNestedLoopJoin + Filter.)
-    # overflow-free LONG arithmetic via the same exact split identity as
-    # exact_quantiles (see there): total weight __tw is often a token/
-    # char mass that passes the BIGINT ×10⁶ abort point (~9.2e12) at
-    # ~9 TB — the split form stays exact below 2⁶³ total weight with
-    # pure long ops on the per-(row × quantile) hot path
-    tgt = F.greatest(
-        F.lit(1).cast("long"),
-        F.expr(
-            "q_ppm * (__tw div 1000000)"
-            " + (q_ppm * (__tw % 1000000) + 999999) div 1000000"
-        ),
-    )
-    hit = (F.col("__cw") >= tgt) & (F.col("__cw") - F.col("__w") < tgt)
-    return (
-        cum.crossJoin(F.broadcast(qdf))
-        .where(hit)
-        .select(*gcols, "q_ppm", F.col(value_col).alias("value"))
-    )
+    long), so running sums and the target are exact integer arithmetic
+    (see :func:`_quantile_pick`). Rows with NULL value, NULL weight, or
+    weight <= 0 are EXCLUDED (a zero-weight row cannot carry a quantile;
+    negative weights have no quantile semantics). Plan: the weighted form
+    of :func:`_exact_rank`; the running weight is strictly increasing
+    (weights >= 1), so exactly one row per target is picked. Returns
+    ``(*by, q_ppm bigint, value)``; empty input (or group) yields no
+    rows."""
+    return _quantile_pick("weighted_quantiles", df, value_col, qs, by, weight_col)
 
 
 def _ntile_bucket_expr(nb: int) -> Column:
-    """Bucket label from an exact 1-based rank — the integer ntile
-    formula (q = N div n, r0 = N mod n: the first r0 buckets hold q+1
-    rows), shared by the global and per-group exact forms so the two
-    paths cannot drift. Expects ``__rank`` and ``__N`` columns."""
-    return (
-        F.when(
-            F.col("__rank") <= F.col("__r0") * (F.col("__q") + 1),
-            F.expr("(__rank + __q) div (__q + 1)"),
-        )
-        .otherwise(
-            F.col("__r0")
-            + F.expr(
-                "(__rank - __r0 * (__q + 1) + greatest(__q, 1) - 1)"
-                " div greatest(__q, 1)"
-            )
-        )
-        .cast("int")
-    )
+    """Bucket label from the exact 1-based ``__rank`` over ``__N`` rows —
+    the integer ntile formula (q = N div n, r0 = N mod n: the first r0
+    buckets hold q+1 rows)."""
+    q, r0 = f"(__N div {nb})", f"(__N % {nb})"
+    return F.expr(
+        f"CASE WHEN __rank <= {r0} * ({q} + 1) THEN (__rank + {q}) div ({q} + 1)"
+        f" ELSE {r0} + (__rank - {r0} * ({q} + 1) + greatest({q}, 1) - 1)"
+        f" div greatest({q}, 1) END"
+    ).cast("int")
 
 
 def score_buckets(
@@ -1069,18 +1011,15 @@ def score_buckets(
     ``exact=True`` (the default, and the oracle form): engine-exact
     ``ntile`` semantics over the (score, id) total order — but computed
     DISTRIBUTED, never as Spark's native single-partition global-sort
-    window. The plan is the classic distributed sort-rank: range-
-    repartition on the sort key (Spark's scalable sort machinery —
-    every partition sorts independently), per-partition ``row_number``
-    plus a broadcast of per-partition row-count offsets (|partitions|
-    rows) reconstructs the exact global rank, and the bucket falls out
-    of the integer ntile formula (q = N div n, r0 = N mod n: the first
-    r0 buckets hold q+1 rows). The (score, id) key is unique, so the
-    rank — and therefore every bucket label — is independent of where
-    the range partitioner draws its boundaries. All arithmetic is
-    integer (div/%), so the result is bit-identical to a single-
-    partition ntile and to the DuckDB oracle, at two full-data shuffles
-    (range + pid-hash for the window) instead of one un-scalable one.
+    window: the exact rank comes from :func:`_exact_rank` (range
+    partition + offset ranks), and the bucket falls out of the integer
+    ntile formula (q = N div n, r0 = N mod n: the first r0 buckets hold
+    q+1 rows). The (score, id) key is unique, so the rank — and
+    therefore every bucket label — is independent of where the range
+    partitioner draws its boundaries. All arithmetic is integer
+    (div/%), so the result is bit-identical to a single-partition ntile
+    and to the DuckDB oracle, at two full-data shuffles instead of one
+    un-scalable one.
     ``exact=False`` is the cheaper one-pass path: the n-1 cut points
     come from ONE ``approx_percentile`` aggregate (no shuffle of the
     data at all), ship as a 1-row broadcast, and the bucket is a
@@ -1089,9 +1028,8 @@ def score_buckets(
     at a cut point go to the upper bucket deterministically.
 
     ``by`` stratifies WITHIN each group (per-source quality quartiles):
-    the exact form ranks with a PARTITIONED window (groups parallelize
-    across the cluster, so the per-group sort IS the distributed plan —
-    no range exchange needed) and applies the same integer ntile
+    the exact form ranks with the kernel's group window (no range
+    exchange needed) and applies the same integer ntile
     formula against the group's own N; the approx form computes one
     ``approx_percentile`` cut array per group and joins it back. Group
     columns must not contain NULL-sensitive surprises: NULL group keys
@@ -1114,29 +1052,12 @@ def score_buckets(
         nulls = df.where(F.col(score_col).isNull()).select(
             *keep, F.lit(None).cast("int").alias("bucket")
         )
-        nn = df.where(F.col(score_col).isNotNull())
-        if by:
-            from pyspark.sql.window import Window
-
-            gcols = list(by)
-            w = Window.partitionBy(*gcols).orderBy(
-                F.col(score_col).asc(), F.col(id_col).asc()
-            )
-            ranked = nn.withColumn(
-                "__rank", F.row_number().over(w).cast("long")
-            ).withColumn(
-                "__N",
-                F.count(F.lit(1))
-                .over(Window.partitionBy(*gcols))
-                .cast("long"),
-            )
-        else:
-            ranked = global_sort_rank(nn, [score_col, id_col])
+        _check_reserved("score_buckets", df, *_RANK_COLS)
+        ranked = _exact_rank(
+            df.where(F.col(score_col).isNotNull()), [score_col, id_col], by
+        )
         return nulls.unionByName(
-            ranked.withColumn("__q", F.expr(f"__N div {nb}"))
-            .withColumn("__r0", (F.col("__N") % nb).cast("long"))
-            .withColumn("bucket", _ntile_bucket_expr(nb))
-            .select(*keep, "bucket")
+            ranked.select(*keep, _ntile_bucket_expr(nb).alias("bucket"))
         )
     qs = ", ".join(str(i / n_buckets) for i in range(1, n_buckets))
     bucket_of = F.when(
@@ -1187,48 +1108,22 @@ def global_percent_rank(
     """Deterministic global percent-rank in EXACT integer millionths —
     the score-calibration / quantile-normalization pass (map every score
     to its corpus position in [0, 1_000_000]): ``ppm = ((rank - 1) *
-    1_000_000) div (N - 1)``, SQL percent_rank's (rank-1)/(N-1) carried
-    in integer arithmetic so no float-division boundary exists between
-    engines. A single-row input (N = 1) is defined as 0 (percent_rank's
-    own convention, and the ANSI-safe guard for the N-1 divisor).
+    1_000_000) div (N - 1)`` (:func:`_ppm_of_rank`), N = 1 defined as 0.
 
     The caller makes ``order_cols`` a UNIQUE total order (append an id
     column): classic percent_rank SHARES ranks across ties, while this
     form ranks tied rows consecutively — with a unique key the two
-    definitions coincide and the output is partition-invariant (the
-    global_sort_rank determinism contract). NULL ordering keys are the
-    caller's concern: they rank FIRST (Spark ASC NULLS FIRST) — filter
-    them out beforehand if the SQL-percentile convention is wanted.
+    definitions coincide and the output is partition-invariant. NULL
+    ordering keys are the caller's concern: they rank FIRST (Spark ASC
+    NULLS FIRST) — filter them out beforehand if the SQL-percentile
+    convention is wanted.
 
-    Rides :func:`global_sort_rank` (range repartition + per-partition
-    row_number + broadcast offsets — never a single-partition global
-    sort), so the plan survives 100 TB. Returns the input columns plus
-    ``out_col`` (long)."""
-    if out_col in df.columns:
-        raise ValueError(
-            f"global_percent_rank: out_col {out_col!r} already in input"
-        )
-    ranked = global_sort_rank(df, order_cols)
-    ppm = (
-        F.when(F.col("__N") <= 1, F.lit(0).cast("long"))
-        # guarded fast path: rank ≤ N, so the ×10⁶ product fits BIGINT
-        # whenever N ≤ 9e12 — every realistic frame takes the pure-long
-        # branch (CASE branches evaluate lazily in codegen); past it the
-        # DECIMAL(38,0) branch keeps the r11-ADVICE overflow class safe
-        # with identical values (div is floor in both forms)
-        .when(
-            F.col("__N") <= 9_000_000_000_000,
-            F.expr("((__rank - 1) * 1000000) div (__N - 1)"),
-        )
-        .otherwise(
-            F.expr(
-                "CAST((CAST(__rank - 1 AS DECIMAL(38,0)) * 1000000)"
-                " div (__N - 1) AS BIGINT)"
-            )
-        )
-        .alias(out_col)
-    )
-    return ranked.select(*df.columns, ppm)
+    Rides the global form of :func:`_exact_rank` (never a
+    single-partition global sort), so the plan survives 100 TB. Returns
+    the input columns plus ``out_col`` (long)."""
+    _check_reserved("global_percent_rank", df, *_RANK_COLS, out_col)
+    ranked = _exact_rank(df, order_cols)
+    return ranked.select(*df.columns, _ppm_of_rank("__rank", "__N").alias(out_col))
 
 
 def robust_zscore_flags(
@@ -1332,7 +1227,7 @@ def pareto_frontier_2d(df: DataFrame, x_col: str, y_col: str) -> DataFrame:
        strictly greater), so only the |distinct x|-row ``best`` frame
        continues.
     2. Distributed EXCLUSIVE prefix-max of y over x DESCENDING on the
-       best frame — the :func:`global_sort_rank` skeleton generalized
+       best frame — the :func:`_exact_rank` range skeleton generalized
        from prefix-count to prefix-max: range repartition on x desc
        (+ eager localCheckpoint so offsets and rows read ONE fixed
        partitioning), per-partition exclusive running max, plus a
@@ -1344,14 +1239,9 @@ def pareto_frontier_2d(df: DataFrame, x_col: str, y_col: str) -> DataFrame:
        frontier-sized build side.
 
     Returns the input columns, frontier rows only."""
-    clash = {"__pid", "__lm", "__pm", "__om", "__gm", "__x", "__y"} & set(
-        df.columns
+    _check_reserved(
+        "pareto_frontier_2d", df, "__pid", "__lm", "__pm", "__om", "__gm", "__x", "__y"
     )
-    if clash:
-        raise ValueError(
-            f"pareto_frontier_2d: input carries reserved column(s) "
-            f"{sorted(clash)}"
-        )
     from pyspark.sql.window import Window
 
     pts = df.where(F.col(x_col).isNotNull() & F.col(y_col).isNotNull())
@@ -1906,40 +1796,15 @@ def quantile_normalize(
     NULL ordering keys rank first (Spark ASC NULLS FIRST) — filter
     beforehand for the SQL-percentile convention.
 
-    Plan: the global rank rides :func:`global_sort_rank` (two keyed
-    shuffles, never a single-partition window); the group rank is one
-    group-keyed window (groups parallelize — the score_buckets ``by``
-    convention). Returns the input columns plus the two ppm longs."""
-    from pyspark.sql.window import Window
-
-    clash = {group_out, global_out, "__grk", "__gn"} & set(df.columns)
-    if clash:
-        raise ValueError(
-            f"quantile_normalize: input carries reserved column(s) {sorted(clash)}"
-        )
-    g = global_percent_rank(df, [value_col, id_col], out_col=global_out)
-    w = Window.partitionBy(group_col).orderBy(
-        F.col(value_col).asc(), F.col(id_col).asc()
+    Plan: both ranks are :func:`_exact_rank`, global form (two keyed
+    shuffles, never a single-partition window) then ``by`` form (one
+    group-keyed window). Returns the input columns plus the two ppm
+    longs."""
+    _check_reserved("quantile_normalize", df, *_RANK_COLS, group_out, global_out)
+    order = [value_col, id_col]
+    g = _exact_rank(df, order).select(
+        *df.columns, _ppm_of_rank("__rank", "__N").alias(global_out)
     )
-    wn = Window.partitionBy(group_col)
-    staged = g.withColumn("__grk", F.row_number().over(w)).withColumn(
-        "__gn", F.count(F.lit(1)).over(wn)
+    return _exact_rank(g, order, by=[group_col]).select(
+        *df.columns, global_out, _ppm_of_rank("__rank", "__N").alias(group_out)
     )
-    ppm = (
-        F.when(F.col("__gn") <= 1, F.lit(0).cast("long"))
-        # guarded fast path, same shape as global_percent_rank: pure-long
-        # whenever the group is ≤ 9e12 rows, the DECIMAL(38,0) branch
-        # only past the BIGINT ×10⁶ point — identical values either way
-        .when(
-            F.col("__gn") <= 9_000_000_000_000,
-            F.expr("((__grk - 1) * 1000000) div (__gn - 1)"),
-        )
-        .otherwise(
-            F.expr(
-                "CAST((CAST(__grk - 1 AS DECIMAL(38,0)) * 1000000)"
-                " div (__gn - 1) AS BIGINT)"
-            )
-        )
-        .alias(group_out)
-    )
-    return staged.select(*df.columns, F.col(global_out), ppm)

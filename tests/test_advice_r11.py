@@ -12,7 +12,7 @@ expressions overflowed BIGINT (an ANSI job abort) at exactly the
   allocated but emitted zero (doc, epoch) rows.
 - operators/relational.py score_buckets(exact=False, by=...): NULL
   groups got cuts=NULL -> bucket NULL while the exact path buckets
-  them normally.
+  them normally (pinned in tests/test_exact_quantiles.py).
 - operators/sampling.py shard_balance_audit skew_ppm and
   upsample_epochs fppm: mass*1e6 past ~9.2e12 units overflowed BIGINT;
   both now ride DECIMAL(38,0) (oracles mirror via DuckDB HUGEINT).
@@ -21,7 +21,6 @@ expressions overflowed BIGINT (an ANSI job abort) at exactly the
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 
 def test_interleave_groups_null_group_forms_its_own_group(spark):
@@ -71,30 +70,6 @@ def test_upsample_epochs_null_group_gets_its_allocation(spark):
         assert sorted(eps) == [1, 2], (doc_id, eps)
     # NULL-group rows carry the NULL key through to the manifest
     assert {r["src"] for r in out if r["doc_id"] in (3, 4)} == {None}
-
-
-def test_score_buckets_approx_by_buckets_null_groups(spark):
-    """exact=False with by=: NULL group keys form their own group — the
-    approx cuts row for the NULL group must join back (NULL-safe), so a
-    NULL-group row with a non-NULL score gets a real bucket, matching
-    the exact path."""
-    from chess_lakehouse_spark.operators.relational import score_buckets
-
-    rows = [(i, None if i < 4 else "g", float(i % 4) + 1.0) for i in range(8)]
-    df = spark.createDataFrame(rows, "id long, grp string, score double")
-    approx = score_buckets(
-        df, "id", "score", n_buckets=2, exact=False, by=["grp"]
-    ).collect()
-    exact = score_buckets(
-        df, "id", "score", n_buckets=2, exact=True, by=["grp"]
-    ).collect()
-    a = {r["id"]: r["bucket"] for r in approx}
-    e = {r["id"]: r["bucket"] for r in exact}
-    assert None not in a.values()  # the r11 ADVICE bug: NULL buckets
-    # 4-point groups with accuracy 10000 are sketch-exact: paths agree
-    assert a == e
-    # NULL group stratifies on its own: scores 1,2 -> bucket 1; 3,4 -> 2
-    assert [a[i] for i in range(4)] == [1, 1, 2, 2]
 
 
 def test_shard_balance_audit_survives_100tb_mass(spark):

@@ -145,7 +145,7 @@ def test_enrich_mapside_only_if_null_gates_on_named_column(spark, openings_df):
 def test_enrich_mapside_dim_size_guard(spark):
     """The dim literal is serialized into every task binary, so task size
     grows linearly with the dim — beyond max_dim_rows the operator must
-    refuse and point at enrich_top1_join."""
+    refuse."""
     from chess_lakehouse_spark.operators.enrich import enrich_top1_mapside
 
     fact = spark.createDataFrame([("x",)], "probe string")

@@ -349,15 +349,16 @@ def test_bloom_gate_property(spark, keys, probes, n_words, k):
         st.integers(min_value=1, max_value=1_000_000), min_size=1,
         max_size=4, unique=True,
     ),
+    parts=st.integers(1, 8),
 )
-def test_exact_quantiles_property(spark, vals, qs):
+def test_exact_quantiles_property(spark, vals, qs, parts):
     """Property fuzz for distributed exact quantiles: arbitrary floats
     with NULLs mixed in, arbitrary q-millionths — the value at rank
     ceil(q*N) over the NON-NULL sorted values, every time, on any
     partitioning."""
     from chess_lakehouse_spark.operators.relational import exact_quantiles
 
-    df = spark.createDataFrame([(v,) for v in vals], "v double").repartition(5)
+    df = spark.createDataFrame([(v,) for v in vals], "v double").repartition(parts)
     got = {
         r.q_ppm: r.value
         for r in exact_quantiles(
@@ -388,9 +389,10 @@ def test_exact_quantiles_property(spark, vals, qs):
         ),
         min_size=0,
         max_size=40,
-    )
+    ),
+    parts=st.integers(1, 8),
 )
-def test_global_percent_rank_property(spark, vals):
+def test_global_percent_rank_property(spark, vals, parts):
     """Property fuzz for the exact-millionths percent-rank: against the
     pure-Python ((rank-1)*1e6)//(N-1) over the (value, id) unique order,
     on any partitioning; NULL values rank FIRST (documented Spark ASC
@@ -398,7 +400,7 @@ def test_global_percent_rank_property(spark, vals):
     from chess_lakehouse_spark.operators.relational import global_percent_rank
 
     rows = list(enumerate(vals))
-    df = spark.createDataFrame(rows, "id long, v double").repartition(7)
+    df = spark.createDataFrame(rows, "id long, v double").repartition(parts)
     got = {
         r.id: r.pct_ppm
         for r in global_percent_rank(df, ["v", "id"]).collect()
@@ -516,8 +518,9 @@ def test_robust_zscore_property(spark, vals, k):
         max_size=4,
         unique=True,
     ),
+    parts=st.integers(1, 8),
 )
-def test_weighted_quantiles_property(spark, rows, qs):
+def test_weighted_quantiles_property(spark, rows, qs, parts):
     """Property fuzz for exact weighted quantiles: value at the first
     cumulative-weight position reaching ceil(q*W) over the sorted
     positive-weight rows — against a pure-Python reference, heavy value
@@ -526,7 +529,7 @@ def test_weighted_quantiles_property(spark, rows, qs):
 
     df = spark.createDataFrame(
         [(float(v), w) for v, w in rows], "v double, w long"
-    ).repartition(5)
+    ).repartition(parts)
     got = {
         r.q_ppm: r.value
         for r in weighted_quantiles(
@@ -729,16 +732,17 @@ def test_interleave_groups_property(spark, ids, n_groups, seed):
         ),
         min_size=1,
         max_size=120,
-    )
+    ),
+    parts=st.integers(1, 8),
 )
-def test_global_prefix_sum_property(spark, rows):
+def test_global_prefix_sum_property(spark, rows, parts):
     """global_prefix_sum == the pure-Python running sum over the sorted
     order, for arbitrary (group, value) multisets — the distributed
     range-partition/offset plan must be invisible."""
     from chess_lakehouse_spark.operators.relational import global_prefix_sum
 
     data = [(i, g, v) for i, (g, v) in enumerate(rows)]
-    df = spark.createDataFrame(data, "id long, k long, v long").repartition(5)
+    df = spark.createDataFrame(data, "id long, k long, v long").repartition(parts)
     out = {
         r["id"]: (r["pos"], r["cum"])
         for r in global_prefix_sum(df, ["k", "id"], "v").collect()

@@ -1,8 +1,8 @@
 """Tests for eight registered suite queries (suite/llm.py): two-scale
 exact parity against their suite-defined DuckDB oracles, allowlisted
-output types, plan-shape guards, and the operator-level semantics pins
-(percent-rank reference, robust-z NULL/mask behavior, per-group ntile
-formula equivalence, brute-force skyline definition).
+output types, plan-shape guards, and operator-level semantics pins
+(robust-z NULL/mask behavior and others; the rank family's operator pins
+live in tests/test_exact_quantiles.py).
 
 - bloom_gate_table  — word-TABLE Bloom layout, oracle shared verbatim
   with bloom_gate (the layout may never change a verdict)
@@ -99,29 +99,6 @@ def test_score_percentile_candidate_plan_is_distributed(spark):
     assert "BatchEvalPython" not in plan
     # rides global_sort_rank's eager localCheckpoint snapshot
     assert "ExistingRDD" in plan or "LogicalRDD" in plan
-
-
-def test_global_percent_rank_reference_and_guards(spark):
-    """Pure-Python reference on a known order, the N=1 convention, the
-    partition-invariance of the unique-key contract, and the reserved
-    out_col guard."""
-    from chess_lakehouse_spark.operators.relational import global_percent_rank
-
-    df = spark.createDataFrame(
-        [(i, float(100 - i)) for i in range(11)], "id long, s double"
-    ).repartition(5)
-    got = {
-        r.id: r.pct_ppm
-        for r in global_percent_rank(df, ["s", "id"]).collect()
-    }
-    # id=10 has the LOWEST score -> rank 1 -> 0 ppm; id=0 the highest
-    assert got == {10 - i: i * 100_000 for i in range(11)}
-
-    one = spark.createDataFrame([(1, 5.0)], "id long, s double")
-    assert global_percent_rank(one, ["s", "id"]).first()["pct_ppm"] == 0
-
-    with pytest.raises(ValueError, match="out_col"):
-        global_percent_rank(df.withColumn("pct_ppm", F.lit(1)), ["s", "id"])
 
 
 @pytest.mark.parametrize("sf_dir", SCALES)
@@ -224,98 +201,10 @@ def test_group_buckets_candidate_plan(spark):
     assert "rangepartitioning" not in plan.lower()
 
 
-def test_score_buckets_by_matches_native_ntile_and_null_rule(spark):
-    """The by-form's integer formula equals native per-group ntile on a
-    unique order, and NULL scores bucket NULL without shifting a group's
-    boundaries."""
-    from pyspark.sql.window import Window
-
-    from chess_lakehouse_spark.operators.relational import score_buckets
-
-    rows = [(i, f"s{i % 3}", float(i * 7 % 23)) for i in range(40)]
-    rows += [(100, "s0", None), (101, "s9", None)]  # NULL score, own group too
-    df = spark.createDataFrame(rows, "id long, g string, v double")
-    got = {
-        r.id: r.bucket
-        for r in score_buckets(
-            df, "id", "v", n_buckets=3, exact=True, by=["g"]
-        ).collect()
-    }
-    w = Window.partitionBy("g").orderBy(F.col("v").asc(), F.col("id").asc())
-    want = {
-        r.id: r.bucket
-        for r in df.where(F.col("v").isNotNull())
-        .withColumn("bucket", F.ntile(3).over(w))
-        .collect()
-    }
-    assert got[100] is None and got[101] is None
-    assert {k: v for k, v in got.items() if v is not None} == want
-
-    # approx by-form: same grouping keys, buckets within range, NULL->NULL
-    approx = {
-        r.id: r.bucket
-        for r in score_buckets(
-            df, "id", "v", n_buckets=3, exact=False, by=["g"]
-        ).collect()
-    }
-    assert approx[100] is None
-    assert all(v in (1, 2, 3) for k, v in approx.items() if v is not None)
-
-
-def _brute_skyline(points):
-    """Reference weak-dominance skyline: p dominates q iff p.x >= q.x and
-    p.y >= q.y with strict inequality in at least one coordinate."""
-    out = []
-    for q in points:
-        dominated = any(
-            p[0] >= q[0] and p[1] >= q[1] and (p[0] > q[0] or p[1] > q[1])
-            for p in points
-        )
-        if not dominated:
-            out.append(q)
-    return sorted(out)
-
-
-def test_pareto_frontier_matches_brute_force_definition(spark):
-    """The operator's output equals the NOT-EXISTS weak-dominance
-    definition on crafted data covering duplicates on the frontier,
-    same-x/same-y ties, NULL coordinates, and an anti-correlated chain
-    (everything on the frontier)."""
-    from chess_lakehouse_spark.operators.relational import pareto_frontier_2d
-
-    rows = [
-        (1, 10.0, 1.0), (2, 9.0, 2.0), (3, 8.0, 3.0),   # anti-corr chain
-        (4, 9.0, 2.0),                                   # exact dup of 2
-        (5, 9.0, 1.5),                                   # same x, lower y
-        (6, 7.0, 3.0),                                   # same y as 3, lower x
-        (7, 1.0, 1.0),                                   # interior
-        (8, None, 5.0), (9, 5.0, None),                  # incomparable
-        (10, 10.0, 0.5),                                 # same x as 1, lower y
-    ]
-    df = spark.createDataFrame(rows, "id long, x double, y double").repartition(7)
-    got = sorted(
-        (r.x, r.y) for r in pareto_frontier_2d(df, "x", "y").collect()
-    )
-    pts = [(x, y) for _, x, y in rows if x is not None and y is not None]
-    assert got == _brute_skyline(pts)
-    ids = {r.id for r in pareto_frontier_2d(df, "x", "y").collect()}
-    assert ids == {1, 2, 3, 4}  # both duplicates of the frontier point kept
-
-    with pytest.raises(ValueError, match="reserved"):
-        pareto_frontier_2d(df.withColumn("__pid", F.lit(1)), "x", "y")
-
-    # all-on-frontier and empty inputs
-    chain = spark.createDataFrame(
-        [(i, float(100 - i), float(i)) for i in range(50)],
-        "id long, x double, y double",
-    ).repartition(6)
-    assert pareto_frontier_2d(chain, "x", "y").count() == 50
-    empty = spark.createDataFrame([], "id long, x double, y double")
-    assert pareto_frontier_2d(empty, "x", "y").count() == 0
-
-
 @pytest.mark.parametrize("sf_dir", SCALES)
 def test_pareto_frontier_candidate_matches_oracle_two_scales(spark, sf_dir):
+    from test_exact_quantiles import _brute_skyline
+
     from chess_lakehouse_spark.suite.llm import (
         PARETO_FRONTIER_ORACLE,
         q_pareto_frontier,
@@ -347,53 +236,6 @@ def test_pareto_frontier_candidate_plan_is_distributed(spark):
     assert "BatchEvalPython" not in plan
     # the prefix-max rides the checkpointed range snapshot
     assert "ExistingRDD" in plan or "LogicalRDD" in plan
-
-
-def test_weighted_quantiles_semantics(spark):
-    """Known-answer checks: weighted lower-quantile picks, by-group form,
-    exclusion of NULL/zero/negative weights and NULL values, empty
-    input, validation, and the reserved-column guard."""
-    from chess_lakehouse_spark.operators.relational import weighted_quantiles
-
-    df = spark.createDataFrame(
-        [(float(v), v) for v in (1, 2, 3, 4)], "v double, w long"
-    ).repartition(3)
-    got = sorted(
-        tuple(r)
-        for r in weighted_quantiles(df, "v", "w", [0.05, 0.5, 0.9, 1.0]).collect()
-    )
-    # W=10; targets 1,5,9,10 over cumulative 1,3,6,10
-    assert got == [
-        (50_000, 1.0), (500_000, 3.0), (900_000, 4.0), (1_000_000, 4.0)
-    ]
-
-    g = spark.createDataFrame(
-        [("a", float(v), 1) for v in range(1, 6)]
-        + [("b", 7.0, 5), ("b", 9.0, 1)],
-        "g string, v double, w long",
-    )
-    assert sorted(
-        tuple(r) for r in weighted_quantiles(g, "v", "w", [0.5], by=["g"]).collect()
-    ) == [("a", 500_000, 3.0), ("b", 500_000, 7.0)]
-
-    n = spark.createDataFrame(
-        [(1.0, 0), (2.0, None), (None, 3), (5.0, 2), (6.0, -4)],
-        "v double, w long",
-    )
-    # only the (5.0, w=2) row is rankable: zero/NULL/negative weights and
-    # NULL values are all excluded
-    assert [tuple(r) for r in weighted_quantiles(n, "v", "w", [0.5]).collect()] \
-        == [(500_000, 5.0)]
-
-    empty = spark.createDataFrame([], "v double, w long")
-    assert weighted_quantiles(empty, "v", "w", [0.5]).count() == 0
-
-    with pytest.raises(ValueError, match="qs must"):
-        weighted_quantiles(df, "v", "w", [])
-    with pytest.raises(ValueError, match="q must"):
-        weighted_quantiles(df, "v", "w", [1.5])
-    with pytest.raises(ValueError, match="reserved"):
-        weighted_quantiles(df.withColumn("__cw", F.lit(1)), "v", "w", [0.5])
 
 
 @pytest.mark.parametrize("sf_dir", SCALES)

@@ -8,8 +8,8 @@ types, plan-shape guards, and operator-level semantics pins.
   (heavier items sampled more often across seeds) is property-pinned.
 - curriculum_order — quality-descending phase buckets, per-phase source
   interleave, exact global cumulative token count via the distributed
-  prefix-sum skeleton (global_prefix_sum, pinned here against a
-  single-partition reference).
+  prefix-sum skeleton (global_prefix_sum, pinned against a
+  single-partition reference in tests/test_exact_quantiles.py).
 - stream_rollup — the incremental-rollup streaming twin end to end
   (file feed -> foreachBatch append_rollup -> serve); shares
   ROLLUP_STAGED_ORACLE verbatim.
@@ -132,31 +132,6 @@ def test_curriculum_order_matches_oracle_two_scales(spark, sf_dir):
     srows = sorted(tuple(r) for r in sdf.collect())
     assert len(srows) > 0
     assert srows == _oracle_rows(sf_dir, ["documents"], CURRICULUM_ORDER_ORACLE)
-
-
-def test_global_prefix_sum_matches_single_partition_reference(spark):
-    """The distributed prefix sum (range partitions + offsets) equals
-    the trivially-correct single-partition running sum, at several
-    partition layouts, and its plan carries no CartesianProduct."""
-    from chess_lakehouse_spark.operators.relational import global_prefix_sum
-
-    rows = [(i, (i * 37) % 100, (i * 13) % 7 + 1) for i in range(500)]
-    df = spark.createDataFrame(rows, "id long, k long, v long")
-    # reference: driver-side over the sorted rows
-    ordered = sorted(rows, key=lambda r: (r[1], r[0]))
-    want, tot = {}, 0
-    for pos0, (i, k, v) in enumerate(ordered, start=1):
-        tot += v
-        want[i] = (pos0, tot)
-    for parts in (1, 5, 32):
-        out = global_prefix_sum(
-            df.repartition(parts), ["k", "id"], "v",
-            out_col="cum", rank_col="pos",
-        )
-        got = {r["id"]: (r["pos"], r["cum"]) for r in out.collect()}
-        assert got == want, parts
-    plan = _plan(global_prefix_sum(df, ["k", "id"], "v"))
-    assert "CartesianProduct" not in plan
 
 
 def test_curriculum_order_semantics(spark):

@@ -409,6 +409,28 @@ def test_snippets_positions_counts_and_fold_case(spark, tmp_path):
     assert got_ci[(100, 2)].pos == 1
     assert got_ci[(100, 2)].snippet.startswith("Beta")  # original casing
 
+    # one qid carrying several texts, one of them on two query rows: a doc
+    # pairs only with the query rows whose text it contains
+    docs2 = spark.createDataFrame(
+        [(1, "hello world"), (2, "other thing")], "doc_id long, text string"
+    )
+    queries2 = spark.createDataFrame(
+        [(7, "world"), (7, "thing"), (7, "world")], "qid long, qt string"
+    )
+    two = str(tmp_path / "two")
+    build_substring_index(docs2, "doc_id", "text", two, q=3)
+    got2 = sorted(
+        tuple(r)
+        for r in substring_match_snippets(
+            spark, two, docs2, "doc_id", "text", queries2, "qid", "qt", context=5
+        ).collect()
+    )
+    assert got2 == [
+        (7, 1, 7, 1, "ello world"),
+        (7, 1, 7, 1, "ello world"),
+        (7, 2, 7, 1, "ther thing"),
+    ]
+
 
 def _brute(queries, docs):
     """The index-free reference: one row per (query row, containing doc)."""
