@@ -41,6 +41,23 @@ _JSON_OPTIONS = {
 }
 
 
+def _equal_without_equal_json(t: T.DataType) -> bool:
+    """True iff ``t`` holds values that ``distinct()`` takes as equal
+    although their JSON differs: floating point (-0.0 and 0.0) and strings
+    under a collation other than byte equality."""
+    if isinstance(t, (T.FloatType, T.DoubleType)):
+        return True
+    if isinstance(t, T.StringType):
+        return t.collation != "UTF8_BINARY"
+    if isinstance(t, T.StructType):
+        return any(_equal_without_equal_json(f.dataType) for f in t.fields)
+    if isinstance(t, T.ArrayType):
+        return _equal_without_equal_json(t.elementType)
+    if isinstance(t, T.MapType):
+        return _equal_without_equal_json(t.keyType) or _equal_without_equal_json(t.valueType)
+    return False
+
+
 def _better(a: Column, b: Column, rank_field: str, tiebreak_fields: Sequence[str]) -> Column:
     """True iff candidate ``b`` beats incumbent ``a``: higher rank wins, then
     ascending lexicographic tie-break (deterministic where the reference's
@@ -104,23 +121,31 @@ def enrich_top1_mapside(
         "s"
     ].dataType
     # One job both guards and collects: fetch max_dim_rows+1 rows — if the
-    # limit row materializes, the dim is too big (and we never executed the
-    # dim subtree twice). Each row also carries its JSON encoding, made by
-    # the JVM so that it parses back to exactly the collected values.
-    fetched = (
-        dim.select(*struct_cols)
-        .distinct()
-        .select("*", F.to_json(F.struct(*struct_cols), _JSON_OPTIONS).alias("__json"))
-        .limit(max_dim_rows + 1)
-        .collect()
-    )
+    # limit row materializes, the dim is too big. Each row also carries its
+    # JSON encoding, made by the JVM so that it parses back to exactly the
+    # collected values. The rows are deduped on the driver by that string
+    # rather than by a distinct(), whose shuffle would add jobs to dedupe a
+    # dim of a few thousand rows. Only a raw fetch that overflows the cap is
+    # repeated with distinct(), so the guard counts distinct rows. The JSON
+    # is a faithful key except where distinct() equates values whose JSON
+    # differs (see _equal_without_equal_json); such a dim takes distinct().
+    rows = dim.select(*struct_cols)
+    n = len(struct_cols)
+
+    def fetch(frame: DataFrame) -> list:
+        as_json = F.to_json(F.struct(*struct_cols), _JSON_OPTIONS).alias("__json")
+        return frame.select("*", as_json).limit(max_dim_rows + 1).collect()
+
+    fetched = None if _equal_without_equal_json(elem_type) else fetch(rows)
+    if fetched is None or len(fetched) > max_dim_rows:
+        fetched = fetch(rows.distinct())
     if len(fetched) > max_dim_rows:
         raise ValueError(
             f"enrich_top1_mapside: dimension exceeds max_dim_rows={max_dim_rows}; "
             "the literal array, serialized into every task, grows linearly with the dim"
         )
-    n = len(struct_cols)
-    dim_rows = sorted(fetched, key=lambda r: tuple((v is None, v) for v in r[:n]))
+    distinct_rows = {r[n]: r for r in fetched}.values()
+    dim_rows = sorted(distinct_rows, key=lambda r: tuple((v is None, v) for v in r[:n]))
     # ONE literal for the whole dim, whatever its size: Catalyst folds
     # from_json over a constant string into a constant array, so no row
     # parses JSON, and building it is one Py4J call rather than one per cell.

@@ -508,8 +508,9 @@ def winsorize(
     aggregates see a bounded domain).
 
     Exact-by-rank: the threshold is the value AT rank ``ceil(pct * n)``
-    under the total order (value, id) — integer rank arithmetic, no
-    interpolation, so any engine picks the identical threshold row.
+    (floored at 1) under the total order (value, id), with ``pct`` carried
+    as integer millionths (:func:`_ppm_target`) — integer rank arithmetic,
+    no interpolation, so any engine picks the identical threshold row.
     Plan: the ``by`` form of :func:`_exact_rank` (one window shuffle
     keyed by the group), the two threshold rows per group collapse to a
     |groups|-row frame, broadcast back onto the unclipped rows.
@@ -541,8 +542,8 @@ def winsorize(
         ranked = _exact_rank(
             base.where(F.col("value").isNotNull()), ["value", "id"], by=["grp"]
         )
-        lo_rn = F.greatest(F.lit(1), F.ceil(F.col("__N") * F.lit(lower_pct)))
-        hi_rn = F.greatest(F.lit(1), F.ceil(F.col("__N") * F.lit(upper_pct)))
+        lo_rn = _ppm_target(str(int(round(lower_pct * 1_000_000))), "__N")
+        hi_rn = _ppm_target(str(int(round(upper_pct * 1_000_000))), "__N")
         bounds = (
             ranked.where((F.col("__rank") == lo_rn) | (F.col("__rank") == hi_rn))
             .groupBy("grp")
@@ -864,6 +865,32 @@ def global_prefix_sum(
     )
 
 
+def _ppm_target(ppm: str, total: str) -> Column:
+    """``max(1, ceil(ppm · total / 10⁶))`` for SQL expressions ``ppm`` (a
+    fraction in integer millionths) and ``total`` (a LONG count or
+    weight): the 1-based rank, or running weight, a fraction of a
+    population reaches. Exact integer arithmetic, so both engines cut at
+    identical positions with no float boundary (``ceil(100 * 0.55)`` is
+    56 in IEEE doubles).
+
+    Overflow-free LONG arithmetic via the exact split identity
+    (W = a·10⁶ + b): (p·W + 999999) div 10⁶ = p·a + (p·b + 999999) div
+    10⁶ — the first term is a multiple of 10⁶ inside the div, so the
+    identity is exact; both products stay below 2⁶³ for EVERY W < 2⁶³
+    (p·a ≤ W; p·b < 10¹²). A total weight is often a token/char mass
+    that passes the BIGINT ×10⁶ abort point (~9.2e12) at ~9 TB; a
+    DECIMAL ride would be exact too, but evaluated per (row × quantile)
+    it measured 2.7-3.4× slower on the gated quantile queries. The
+    oracles keep their HUGEINT form: values are identical."""
+    return F.greatest(
+        F.lit(1).cast("long"),
+        F.expr(
+            f"{ppm} * ({total} div 1000000)"
+            f" + ({ppm} * ({total} % 1000000) + 999999) div 1000000"
+        ),
+    )
+
+
 def _quantile_pick(
     fn: str,
     df: DataFrame,
@@ -908,23 +935,7 @@ def _quantile_pick(
         pts = pts.select(*gcols, value_col)
         pos, total, step = F.col("__rank"), "__N", F.lit(1)
     ranked = _exact_rank(pts, [value_col], gcols, "__w" if weight_col else None)
-    # overflow-free LONG arithmetic via the exact split identity
-    # (W = a·10⁶ + b): (q_ppm·W + 999999) div 10⁶ =
-    # q_ppm·a + (q_ppm·b + 999999) div 10⁶ — the first term is a
-    # multiple of 10⁶ inside the div, so the identity is exact; both
-    # products stay below 2⁶³ for EVERY W < 2⁶³ (q_ppm·a ≤ W;
-    # q_ppm·b < 10¹²). A total weight is often a token/char mass that
-    # passes the BIGINT ×10⁶ abort point (~9.2e12) at ~9 TB; a DECIMAL
-    # ride would be exact too, but evaluated per (row × quantile) it
-    # measured 2.7-3.4× slower on the gated quantile queries. The oracle
-    # keeps its HUGEINT form: values are identical.
-    tgt = F.greatest(
-        F.lit(1).cast("long"),
-        F.expr(
-            f"q_ppm * ({total} div 1000000)"
-            f" + (q_ppm * ({total} % 1000000) + 999999) div 1000000"
-        ),
-    )
+    tgt = _ppm_target("q_ppm", total)
     # the target falls in exactly ONE row's interval (pos - step, pos]
     # per group × q: broadcast the |qs|-row frame in and filter — |qs|
     # rows per group out, no aggregation. (crossJoin-then-filter rather

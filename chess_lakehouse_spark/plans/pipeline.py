@@ -22,6 +22,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from chess_lakehouse_spark.functions.chess import (
     moves_normalize,
@@ -31,7 +32,33 @@ from chess_lakehouse_spark.functions.chess import (
 from chess_lakehouse_spark.operators.enrich import enrich_top1_mapside
 from chess_lakehouse_spark.operators.publish import write_partitioned
 from chess_lakehouse_spark.operators.relational import align_and_union
-from chess_lakehouse_spark.sources.pgn import read_pgn
+from chess_lakehouse_spark.sources.pgn import GAMES_SCHEMA, read_pgn
+
+# Zone schemas: the stage contracts. Each zone's schema is declared next to
+# the stage that writes it, and the next stage reads the zone with it
+# (``spark.read.schema(...)``), as the reference's stages read DuckDB
+# tables whose schema the catalog holds: a read without a schema first runs
+# a Spark job over the Parquet footers to infer it. A column a zone's files
+# lack reads as NULL, the same fill ``align_and_union`` gives a source that
+# lacks it; a column the schema does not name is not read.
+# tests/test_pipeline.py checks each schema against what Spark infers from a
+# zone its stage wrote, so a writer cannot change without its contract.
+
+#: The raw zone, written by :func:`ingest` (the ``read-pgn`` stage).
+RAW_ZONE_SCHEMA = T.StructType(
+    [
+        *GAMES_SCHEMA.fields,
+        T.StructField("game_id", T.LongType()),
+        T.StructField("clean_movetext", T.StringType()),
+        T.StructField("clean_timecontrol", T.StringType()),
+    ]
+)
+
+#: The enriched zone, written by :func:`enrich` (the ``find-openings``
+#: stage): the raw zone plus the constant ``DataSource``.
+ENRICHED_ZONE_SCHEMA = T.StructType(
+    [*RAW_ZONE_SCHEMA.fields, T.StructField("DataSource", T.StringType())]
+)
 
 #: The canonical 20-column export schema (SURVEY.md §1.2;
 #: src/export-to-parquet.ts:70-93).
@@ -62,7 +89,8 @@ EXPORT_COLUMNS: tuple[str, ...] = (
 def ingest(spark: SparkSession, pgn_path: str | list[str], **read_kwargs) -> DataFrame:
     """Stage 1 — PGN scan + derived columns (src/read-pgn.ts:45-50):
     clean_movetext / clean_timecontrol computed at ingest so enrichment and
-    export never re-normalize."""
+    export never re-normalize. The output is the raw zone,
+    :data:`RAW_ZONE_SCHEMA`."""
     games = read_pgn(spark, pgn_path, **read_kwargs)
     return games.withColumn("clean_movetext", moves_normalize("movetext")).withColumn(
         "clean_timecontrol", timecontrol_normalize("TimeControl")
@@ -76,7 +104,8 @@ def enrich(games: DataFrame, openings: DataFrame, data_source: str) -> DataFrame
     where Opening IS NULL (:68) with the longest opening whose pgn is
     contained in clean_movetext (:73-79), deterministic tie-break
     (ply DESC, eco ASC, name ASC — SURVEY.md §2.3 ⚠). Unmatched rows keep
-    their NULLs (inner-lateral `ON TRUE` semantics, :79).
+    their NULLs (inner-lateral `ON TRUE` semantics, :79). Given the raw
+    zone, the output is the enriched zone, :data:`ENRICHED_ZONE_SCHEMA`.
     """
     dim = openings.select(
         "eco",

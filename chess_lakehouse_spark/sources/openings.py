@@ -18,9 +18,17 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 #: Columns the pipeline consumes (reference: src/find-openings.ts:65,71,74,76).
 OPENINGS_COLUMNS = ("eco", "name", "pgn", "uci")
+
+#: The openings table's contract: the consumed columns, all strings.
+#: :func:`load_openings` reads with it rather than inferring a schema from
+#: the Parquet footers (one Spark job per read); a column the files lack
+#: reads as NULL and any other column (the Lichess dataset's ``epd``, a
+#: snapshot's ``opening_ply``) is not read.
+OPENINGS_SCHEMA = T.StructType([T.StructField(c, T.StringType()) for c in OPENINGS_COLUMNS])
 
 
 def resolve_openings_path(location: str) -> str:
@@ -72,8 +80,8 @@ def load_openings(spark: SparkSession, location: str) -> DataFrame:
     row, exactly like the reference's CTE (src/find-openings.ts:64-66),
     never per (game, opening) pair."""
     df = (
-        spark.read.option("recursiveFileLookup", "true")
+        spark.read.schema(OPENINGS_SCHEMA)
+        .option("recursiveFileLookup", "true")
         .parquet(resolve_openings_path(location))
-        .select(*OPENINGS_COLUMNS)
     )
     return df.withColumn("opening_ply", F.size(F.split("uci", " ")))

@@ -5142,8 +5142,10 @@ ORACLES = {
         ),
         t AS (
           SELECT event_type, MIN(value) AS lo, MAX(value) AS hi FROM b
-          WHERE rn = greatest(1, CAST(ceil(n * {WINSOR_LO}) AS BIGINT))
-             OR rn = greatest(1, CAST(ceil(n * {WINSOR_HI}) AS BIGINT))
+          WHERE rn = greatest(CAST(1 AS BIGINT),
+                              (CAST({round(WINSOR_LO * 1_000_000)} AS HUGEINT) * n + 999999) // 1000000)
+             OR rn = greatest(CAST(1 AS BIGINT),
+                              (CAST({round(WINSOR_HI * 1_000_000)} AS HUGEINT) * n + 999999) // 1000000)
           GROUP BY event_type
         )
         SELECT e.event_id, e.event_type, e.value,

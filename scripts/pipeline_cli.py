@@ -72,7 +72,7 @@ def cmd_read_pgn(args: argparse.Namespace) -> None:
     from pyspark.sql import functions as F
 
     from chess_lakehouse_spark.operators.publish import write_counted
-    from chess_lakehouse_spark.plans.pipeline import ingest
+    from chess_lakehouse_spark.plans.pipeline import RAW_ZONE_SCHEMA, ingest
 
     spark = _spark()
     err = F.col("parse_error").isNotNull()
@@ -86,7 +86,7 @@ def cmd_read_pgn(args: argparse.Namespace) -> None:
         # reference renders QC through `duckdb -markdown` (src/read-pgn.ts:55)
         from chess_lakehouse_spark.report import qc_markdown_report
 
-        staged = spark.read.parquet(args.outDir)
+        staged = spark.read.schema(RAW_ZONE_SCHEMA).parquet(args.outDir)
         print(qc_markdown_report(staged, qc, error_predicate=err))
     else:
         print(f"[read-pgn] key={args.key} games={qc['rows']} parse_errors={qc['error_rows']}")
@@ -94,11 +94,11 @@ def cmd_read_pgn(args: argparse.Namespace) -> None:
 
 def cmd_find_openings(args: argparse.Namespace) -> None:
     from chess_lakehouse_spark.operators.publish import write_counted
-    from chess_lakehouse_spark.plans.pipeline import enrich
+    from chess_lakehouse_spark.plans.pipeline import RAW_ZONE_SCHEMA, enrich
     from chess_lakehouse_spark.sources.openings import load_openings
 
     spark = _spark()
-    games = spark.read.parquet(args.inDir)
+    games = spark.read.schema(RAW_ZONE_SCHEMA).parquet(args.inDir)
     openings = load_openings(spark, args.openingsDb)
     enriched = enrich(games, openings.select("eco", "name", "pgn", "uci"), args.dataSource)
     qc = write_counted(enriched, lambda df: df.write.mode("overwrite").parquet(args.outDir))
@@ -106,20 +106,23 @@ def cmd_find_openings(args: argparse.Namespace) -> None:
 
 
 def cmd_export_parquet(args: argparse.Namespace) -> None:
-    from chess_lakehouse_spark.plans.pipeline import export_combined
+    from chess_lakehouse_spark.plans.pipeline import ENRICHED_ZONE_SCHEMA, export_combined
     from chess_lakehouse_spark.operators.publish import write_partitioned
 
     spark = _spark()
     # one subdir per enriched source, processed in sorted order
     # (deterministic union order — src/export-to-parquet.ts:40-42)
     src_dirs = sorted(str(p) for p in Path(args.inDir).iterdir() if p.is_dir())
-    sources = [spark.read.parquet(d) for d in src_dirs]
+    sources = [spark.read.schema(ENRICHED_ZONE_SCHEMA).parquet(d) for d in src_dirs]
     combined = export_combined(sources)
     sort_cols = [c for c in (args.clusterBy or "").split(",") if c] or None
     n = write_partitioned(
         combined, args.outDir, ("DataSource", "year", "month"), sort_cols=sort_cols
     )["rows"]
     if args.outDb:
+        # inferred on purpose: a declared schema would type the Hive
+        # partition column `month` as the export's string, not the int
+        # that partition discovery reads from `month=01`
         spark.read.parquet(args.outDir).write.mode("overwrite").parquet(args.outDb)
     if args.markdown:
         # reference: `duckdb -markdown ... SELECT COUNT(*) FROM combined`
@@ -889,8 +892,7 @@ def cmd_bloom(args: argparse.Namespace) -> None:
             if args.emit == "flags"
             else flagged.where(~flagged["might_contain"]).drop("might_contain")
         )
-        out.write.mode("overwrite").parquet(args.outDir)
-        n = spark.read.parquet(args.outDir).count()
+        n = _write_rows(out, args.outDir)
         print(f"[bloom-gate] emit={args.emit} rows={n} -> {args.outDir}")
 
 
@@ -933,9 +935,8 @@ def cmd_heavy_hitters(args: argparse.Namespace) -> None:
         )
     else:  # hh-serve
         served = mg_from_batches(spark, args.stateDir, args.k)
-        served.coalesce(1).write.mode("overwrite").parquet(args.outDir)
+        n_rows = _write_rows(served.coalesce(1), args.outDir)
         n = mg_state_total(spark, args.stateDir)
-        n_rows = spark.read.parquet(args.outDir).count()
         print(
             f"[hh-serve] terms={n_rows} n_total={n} "
             f"max_err={n // (args.k + 1)} -> {args.outDir}"
@@ -983,8 +984,7 @@ def cmd_ann_index(args: argparse.Namespace) -> None:
             spark.read.parquet(args.probesParquet),
             args.idCol, args.vecCol, cents, nprobe=args.nprobe, k=args.topK,
         )
-        hits.write.mode("overwrite").parquet(args.outDir)
-        n = spark.read.parquet(args.outDir).count()
+        n = _write_rows(hits, args.outDir)
         print(f"[ann-search] nprobe={args.nprobe} k={args.topK} rows={n} -> {args.outDir}")
 
 

@@ -1,19 +1,23 @@
 """Map-side argmax enrichment (operators/enrich.py): the dimension literal
 round-trips every value exactly, costs a constant number of driver→JVM
-calls whatever the dimension's size, and keeps the plan shape that a cold
-JVM compiles correctly."""
+calls whatever the dimension's size, is fetched in one job with repeats
+dropped on the driver as distinct() would drop them, and keeps the plan
+shape that a cold JVM compiles correctly."""
 
 from __future__ import annotations
 
 import datetime as dt
 import json
+import math
 import subprocess
 import sys
 from pathlib import Path
 
+import pytest
 from pyspark.sql import functions as F
 
 from chess_lakehouse_spark.operators.enrich import enrich_top1_mapside
+from chess_lakehouse_spark.session import local_df
 
 _REPO = Path(__file__).resolve().parent.parent
 
@@ -38,13 +42,13 @@ def _none_last(v):
     return (v is None, v)
 
 
-def _oracle(probe):
+def _oracle(probe, dim=DIM):
     """Brute force: among dim rows whose key the probe contains, the highest
     rank, then the smallest key; a full tie goes to the first such row in
     the dim's column order, NULLs last."""
     if probe is None:
         return None
-    m = [r for r in set(DIM) if r[1] in probe]
+    m = [r for r in set(dim) if r[1] in probe]
     if not m:
         return None
     top = max(r[0] for r in m)
@@ -53,14 +57,14 @@ def _oracle(probe):
     return min((r for r in m if r[1] == key), key=lambda r: tuple(map(_none_last, r)))
 
 
-def _enrich(fact, dim, **kw):
+def _enrich(fact, dim, payload=PAYLOAD, **kw):
     return enrich_top1_mapside(
         fact=fact,
         dim=dim,
         predicate=lambda probe, c: probe.contains(c["key"]),
         fact_probe_col="probe",
         rank_col="rank",
-        payload_cols=list(PAYLOAD),
+        payload_cols=list(payload),
         tiebreak_cols=["key"],
         out_prefix="m_",
         **kw,
@@ -87,6 +91,45 @@ def test_enrich_mapside_literal_roundtrips_values_and_pins_full_ties(spark):
         assert all(map(_same, cells, want[1:] if want else [None] * len(PAYLOAD))), (probe, cells, want)
     # the full tie on (3, "a") is decided by payload order, NULL s last
     assert got["a b"]["m_s"] == "it's"
+
+
+@pytest.mark.parametrize("copies", [2, 6])
+def test_enrich_mapside_dedupes_a_repeating_dim_in_one_fetch(spark, copies):
+    """A dim of 5 distinct rows repeated ``copies`` times, under
+    ``max_dim_rows=10``, is accepted and enriches as the brute-force oracle
+    says. 10 raw rows fit the cap: ONE job fetches them and the driver
+    drops the repeats. 30 raw rows overflow it, so the fetch is repeated
+    with distinct() and the guard counts the 5 distinct rows."""
+    cols = [0, 1, 2, 4, 5, 6]  # no floating-point column: see the ±0.0 test
+    rows = [tuple(r[i] for i in cols) for r in DIM[:5]]
+    payload = [c for c in PAYLOAD if c != "d"]
+    dim = local_df(spark, rows * copies, "rank long, key string, s string, dd date, l long, ts timestamp")
+    fact = spark.createDataFrame([(p,) for p in FACTS], "probe string")
+    sc = spark.sparkContext
+    sc.setJobGroup("dim_fetch", "enrich dim fetch")
+    try:
+        out = _enrich(fact, dim, payload, max_dim_rows=10)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+    finally:
+        sc.setJobGroup("", "")
+    if copies == 2:
+        assert len(sc.statusTracker().getJobIdsForGroup("dim_fetch")) == 1
+    got = {r["probe"]: [r[f"m_{c}"] for c in payload] for r in out.collect()}
+    for probe in FACTS:
+        want = _oracle(probe, rows)
+        assert got[probe] == (list(want[1:]) if want else [None] * len(payload)), probe
+    assert got["a b"][1] == "it's"
+
+
+def test_enrich_mapside_takes_signed_zeros_as_one_dim_row(spark):
+    """distinct() takes -0.0 and 0.0 as one value, though their JSON
+    differs, so a dim with a floating-point column is fetched through
+    distinct(): one dim row, whose 0.0 wins, as it did before the
+    one-job fetch."""
+    dim = local_df(spark, [(1, "a", -0.0), (1, "a", 0.0)], "rank long, key string, d double")
+    fact = spark.createDataFrame([("a",)], "probe string")
+    (row,) = _enrich(fact, dim, payload=("d",)).collect()
+    assert math.copysign(1.0, row["m_d"]) == 1.0
 
 
 def _count_commands(spark, monkeypatch):

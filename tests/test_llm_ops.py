@@ -1198,6 +1198,19 @@ def test_winsorize_clips_to_rank_bounds(spark):
         winsorize(df, "id", "grp", "v", 0.9, 0.1)
 
 
+def test_winsorize_threshold_ranks_take_no_float_rounding(spark):
+    """The threshold ranks are ceil(n * pct) in exact integer millionths:
+    over values 1..100, upper_pct=0.55 clips at rank 55 and lower_pct=0.07
+    at rank 7, where double arithmetic gives ceil(55.00000000000001) = 56
+    and ceil(7.000000000000001) = 8."""
+    from chess_lakehouse_spark.operators.relational import winsorize
+
+    df = spark.createDataFrame([(i, "a", float(i)) for i in range(1, 101)], ["id", "grp", "v"])
+    out = {r.id: r.clipped for r in winsorize(df, "id", "grp", "v", 0.07, 0.55).collect()}
+    assert out[1] == out[7] == 7.0 and out[8] == 8.0
+    assert out[55] == out[56] == out[100] == 55.0 and out[54] == 54.0
+
+
 def test_canary_hits_counts_and_omits_clean(spark):
     import pytest
 

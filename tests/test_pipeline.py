@@ -376,6 +376,92 @@ def test_pipeline_cli_counts_come_from_the_write(spark, tmp_path, capsys, monkey
     assert lake not in read and read.count(raw) == 1 and read.count(enr) == 1, read
 
 
+
+def test_zone_schemas_are_what_their_stages_write(spark, tmp_path):
+    """Each zone's declared schema, the stage contract its reader uses
+    instead of inferring one, equals the schema Spark infers from what its
+    stage wrote: read-pgn's raw zone, find-openings' enriched zone, and the
+    openings columns of a materialize-openings snapshot (its extra
+    ``opening_ply`` column is outside the contract)."""
+    import sys
+    from pathlib import Path
+
+    from pyspark.sql import types as T
+
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "scripts"))
+    import pipeline_cli
+
+    from chess_lakehouse_spark.plans.pipeline import ENRICHED_ZONE_SCHEMA, RAW_ZONE_SCHEMA
+    from chess_lakehouse_spark.sources.openings import OPENINGS_COLUMNS, OPENINGS_SCHEMA
+
+    pgn_dir = tmp_path / "pgn"
+    pgn_dir.mkdir()
+    make_games_pgn(pgn_dir)
+    src, op_dir = str(tmp_path / "openings_src"), str(tmp_path / "openings")
+    spark.createDataFrame(OPENINGS, "eco string, name string, pgn string, uci string").write.parquet(src)
+    raw, enr = str(tmp_path / "raw"), str(tmp_path / "enriched")
+    pipeline_cli.main(["materialize-openings", "--location", src, "--target", op_dir])
+    pipeline_cli.main(["read-pgn", "--key", "k1", "--inDir", str(pgn_dir), "--outDir", raw])
+    pipeline_cli.main([
+        "find-openings", "--key", "k1", "--inDir", raw, "--outDir", enr,
+        "--openingsDb", op_dir, "--dataSource", "S",
+    ])
+    assert spark.read.parquet(raw).schema == RAW_ZONE_SCHEMA
+    assert spark.read.parquet(enr).schema == ENRICHED_ZONE_SCHEMA
+    snapshot = spark.read.parquet(op_dir).schema
+    assert "opening_ply" in snapshot.names
+    assert T.StructType([snapshot[c] for c in OPENINGS_COLUMNS]) == OPENINGS_SCHEMA
+
+
+def test_pgn_dag_stages_run_no_job_but_their_work(spark, tmp_path, capsys):
+    """Spark jobs per stage of the PGN DAG on the one-source fixture:
+    read-pgn 1 (its write), find-openings 2 (the openings fetch and the
+    write), export-parquet 2 (the write's shuffle and the write). Every
+    input zone is read with its declared schema, so no job infers one from
+    Parquet footers, and the openings are fetched without a shuffle. The
+    openings snapshot is one file, as materialize-openings writes it from
+    a one-file dataset; Spark's limit scans one partition first, so a
+    snapshot of several files can cost the fetch a second job."""
+    import sys
+    from pathlib import Path
+
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "scripts"))
+    import pipeline_cli
+
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    pgn_dir = tmp_path / "pgn"
+    pgn_dir.mkdir()
+    make_games_pgn(pgn_dir)
+    src, op_dir = str(tmp_path / "openings_src"), str(tmp_path / "openings")
+    spark.createDataFrame(OPENINGS, "eco string, name string, pgn string, uci string").coalesce(1).write.parquet(src)
+    pipeline_cli.main(["materialize-openings", "--location", src, "--target", op_dir])
+    raw, enr, lake = (str(tmp_path / d) for d in ("raw", "enriched/k1", "lake"))
+    stages = {
+        "read-pgn": ["--key", "k1", "--inDir", str(pgn_dir), "--outDir", raw],
+        "find-openings": [
+            "--key", "k1", "--inDir", raw, "--outDir", enr,
+            "--openingsDb", op_dir, "--dataSource", "S",
+        ],
+        "export-parquet": ["--inDir", str(tmp_path / "enriched"), "--outDir", lake],
+    }
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    jobs = {}
+    for stage, argv in stages.items():
+        sc.setJobGroup(f"dag:{stage}", stage)
+        try:
+            pipeline_cli.main([stage, *argv])
+            bus.waitUntilEmpty()
+        finally:
+            sc.setJobGroup("", "")
+        jobs[stage] = len(sc.statusTracker().getJobIdsForGroup(f"dag:{stage}"))
+    assert jobs == {"read-pgn": 1, "find-openings": 2, "export-parquet": 2}
+    assert capsys.readouterr().out.splitlines()[-3:] == [
+        "[read-pgn] key=k1 games=6 parse_errors=0",
+        "[find-openings] key=k1 dataSource=S rows=6",
+        "[export-parquet] sources=1 rows=4",
+    ]
+
 def test_markdown_table_rendering():
     from chess_lakehouse_spark.report import markdown_table
 
@@ -1138,7 +1224,9 @@ def test_pipeline_cli_bloom_stages_roundtrip(spark, tmp_path, capsys):
         "bloom-gate", "--inParquet", str(corpus), "--keyCol", "url",
         "--bloomDir", bloom, "--outDir", out, "--emit", "clean",
     ])
-    kept = {r.url for r in spark.read.parquet(out).collect()}
+    gated = spark.read.parquet(out).collect()
+    kept = {r.url for r in gated}
+    assert f"[bloom-gate] emit=clean rows={len(gated)} -> {out}" in capsys.readouterr().out
     # no false negatives: every blocklisted url is gone
     assert not any("bad" in u or "worse" in u for u in kept)
     # the gate discriminates: most clean urls survive (FPs bounded)
@@ -1194,10 +1282,11 @@ def test_pipeline_cli_ann_stages_roundtrip(spark, tmp_path, capsys):
         spark, ref_idx, spark.read.parquet(probes_p), "vec_id", "embedding",
         cents, nprobe=2, k=5,
     )
-    got_rows = {tuple(r) for r in spark.read.parquet(hits1).collect()}
+    written = spark.read.parquet(hits1).collect()
+    got_rows = {tuple(r) for r in written}
     assert got_rows == {tuple(r) for r in want.collect()}
     assert len(got_rows) > 0
-    assert "[ann-search] nprobe=2 k=5" in capsys.readouterr().out
+    assert f"[ann-search] nprobe=2 k=5 rows={len(written)} -> {hits1}" in capsys.readouterr().out
 
 
 def test_pipeline_cli_crawl_side_chain_matches_example_dag(spark, tmp_path, capsys):
@@ -1655,6 +1744,7 @@ def test_pipeline_cli_heavy_hitters_stages(spark, tmp_path, capsys):
     assert f"n_total={n}" in logs and f"max_err={n // (k + 1)}" in logs
 
     served = {r["term"]: r["est"] for r in spark.read.parquet(out).collect()}
+    assert f"[hh-serve] terms={len(served)} n_total={n} max_err={n // (k + 1)} -> {out}" in logs
     from collections import Counter
 
     true = Counter(t for (t,) in b1 + b2)
