@@ -20,6 +20,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from chess_lakehouse_spark.operators.publish import write_counted
+
 #: Columns the pipeline consumes (reference: src/find-openings.ts:65,71,74,76).
 OPENINGS_COLUMNS = ("eco", "name", "pgn", "uci")
 
@@ -29,6 +31,12 @@ OPENINGS_COLUMNS = ("eco", "name", "pgn", "uci")
 #: reads as NULL and any other column (the Lichess dataset's ``epd``, a
 #: snapshot's ``opening_ply``) is not read.
 OPENINGS_SCHEMA = T.StructType([T.StructField(c, T.StringType()) for c in OPENINGS_COLUMNS])
+
+#: What :func:`load_openings` returns and a snapshot holds: the contract
+#: plus the derived ``opening_ply``.
+OPENINGS_SNAPSHOT_SCHEMA = T.StructType(
+    OPENINGS_SCHEMA.fields + [T.StructField("opening_ply", T.IntegerType())]
+)
 
 
 def resolve_openings_path(location: str) -> str:
@@ -55,23 +63,30 @@ def resolve_openings_path(location: str) -> str:
 
 def materialize_openings(spark: SparkSession, location: str, target: str) -> DataFrame:
     """``CREATE TABLE IF NOT EXISTS`` semantics for the openings dimension
-    (reference dvc.yaml:3): if ``target`` already holds a committed snapshot
-    (Spark's ``_SUCCESS`` marker), the remote source is NOT touched — the
-    idempotency that makes re-running the ingest stage free. Otherwise the
-    source is read once and published to ``target``.
+    (reference dvc.yaml:3): the snapshot :func:`publish_openings_snapshot`
+    keeps at ``target``, read back with its declared schema, so callers
+    always consume the snapshot, never the remote."""
+    publish_openings_snapshot(spark, location, target)
+    return spark.read.schema(OPENINGS_SNAPSHOT_SCHEMA).parquet(target)
+
+
+def publish_openings_snapshot(spark: SparkSession, location: str, target: str) -> int | None:
+    """Publish the openings snapshot to ``target`` unless it already holds a
+    committed one (Spark's ``_SUCCESS`` marker), in which case the remote
+    source is NOT touched — the idempotency that makes re-running the
+    ingest stage free. Returns the rows written, counted by the write
+    itself, or None when the committed snapshot is reused.
 
     Existence is probed through the Hadoop FileSystem API so the snapshot
-    can live on any supported scheme (file://, hdfs://, s3a://). Returns
-    the materialized dimension (read back from ``target`` in both cases,
-    so callers always consume the snapshot, never the remote)."""
+    can live on any supported scheme (file://, hdfs://, s3a://)."""
     jvm = spark._jvm
     hconf = spark._jsc.hadoopConfiguration()
-    tpath = jvm.org.apache.hadoop.fs.Path(target)
-    fs = tpath.getFileSystem(hconf)
     marker = jvm.org.apache.hadoop.fs.Path(target + "/_SUCCESS")
-    if not fs.exists(marker):
-        load_openings(spark, location).write.mode("overwrite").parquet(target)
-    return spark.read.parquet(target)
+    if marker.getFileSystem(hconf).exists(marker):
+        return None
+    return write_counted(
+        load_openings(spark, location), lambda df: df.write.mode("overwrite").parquet(target)
+    )["rows"]
 
 
 def load_openings(spark: SparkSession, location: str) -> DataFrame:

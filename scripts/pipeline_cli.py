@@ -139,11 +139,16 @@ def cmd_materialize_openings(args: argparse.Namespace) -> None:
     EXISTS openings AS SELECT * FROM 'hf://...'`): idempotent snapshot of
     the openings dataset into a Parquet target; a committed target is never
     re-downloaded (same `IF NOT EXISTS` semantics, `_SUCCESS`-guarded)."""
-    from chess_lakehouse_spark.sources.openings import materialize_openings
+    from chess_lakehouse_spark.sources.openings import (
+        OPENINGS_SNAPSHOT_SCHEMA,
+        publish_openings_snapshot,
+    )
 
     spark = _spark()
-    dim = materialize_openings(spark, args.location, args.target)
-    print(f"[materialize-openings] target={args.target} rows={dim.count()}")
+    rows = publish_openings_snapshot(spark, args.location, args.target)
+    if rows is None:  # a committed snapshot is reused: count it once
+        rows = spark.read.schema(OPENINGS_SNAPSHOT_SCHEMA).parquet(args.target).count()
+    print(f"[materialize-openings] target={args.target} rows={rows}")
 
 
 def cmd_clean_corpus(args: argparse.Namespace) -> None:

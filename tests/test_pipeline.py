@@ -462,6 +462,36 @@ def test_pgn_dag_stages_run_no_job_but_their_work(spark, tmp_path, capsys):
         "[export-parquet] sources=1 rows=4",
     ]
 
+
+def test_materialize_openings_runs_one_job_but_its_work(spark, tmp_path, capsys):
+    """materialize-openings runs only the jobs its work needs: writing a
+    snapshot counts its rows in the write (1 job), and reusing a committed
+    one counts them once (2 jobs under AQE: the count's map stage and its
+    result); neither reads the snapshot back to infer a schema."""
+    import sys
+    from pathlib import Path
+
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "scripts"))
+    import pipeline_cli
+
+    src, target = str(tmp_path / "openings_src"), str(tmp_path / "openings")
+    spark.createDataFrame(OPENINGS, "eco string, name string, pgn string, uci string").coalesce(1).write.parquet(src)
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    jobs = []
+    for run in ("write", "reuse"):
+        sc.setJobGroup(f"openings:{run}", run)
+        try:
+            pipeline_cli.main(["materialize-openings", "--location", src, "--target", target])
+            bus.waitUntilEmpty()
+        finally:
+            sc.setJobGroup("", "")
+        jobs.append(len(sc.statusTracker().getJobIdsForGroup(f"openings:{run}")))
+    line = f"[materialize-openings] target={target} rows={len(OPENINGS)}"
+    assert capsys.readouterr().out.splitlines()[-2:] == [line, line]
+    assert jobs == [1, 2]
+
+
 def test_markdown_table_rendering():
     from chess_lakehouse_spark.report import markdown_table
 
