@@ -18,4 +18,12 @@ though tests run on local mode.
 
 __version__ = "0.5.0"
 
-from chess_lakehouse_spark.session import get_spark  # noqa: F401
+
+def __getattr__(name: str):
+    # ``get_spark`` loads on first use (PEP 562), so importing the package,
+    # as the Python worker daemon does first, imports no pyspark.
+    if name == "get_spark":
+        from chess_lakehouse_spark.session import get_spark
+
+        return get_spark
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")

@@ -19,14 +19,24 @@ directory. The daemon records the keys before it forks, so a fresh
 worker's first task skips the re-read too. Then it runs PySpark's own
 ``pyspark.daemon.manager()``.
 
+Before it imports pyspark, the daemon also moves ``pyspark.zip`` behind an
+installed copy of the same pyspark on ``sys.path``
+(:func:`installed_pyspark_first`). The archive holds sources only, no
+``.pyc``, so every daemon compiled pyspark from source before its first
+line ran: ~0.9 s of a fresh worker's first task on a 4-core VM. The
+installed copy's bytecode loads instead. Only a copy whose
+``pyspark/version.py`` is byte-identical to the archive's is used;
+otherwise the path stays as Spark set it.
+
 Importing this module changes nothing; only running it with ``-m``
-patches ``zipimport``. Its state is per process, like ``zipimport``'s own
+patches ``zipimport`` and reorders ``sys.path``. Its state is per process, like ``zipimport``'s own
 directory cache, and forked workers inherit the daemon's.
 """
 
 from __future__ import annotations
 
 import os
+import sys
 import zipimport
 
 _original_invalidate = zipimport.zipimporter.invalidate_caches
@@ -62,6 +72,34 @@ def invalidate_caches(self) -> None:
     _read_keys[archive] = key
 
 
+def installed_pyspark_first(path: list[str]) -> list[str]:
+    """``path`` with each archive entry that holds pyspark moved just behind
+    the first directory entry that holds pyspark, when every such archive's
+    ``pyspark/version.py`` is byte-identical to the directory's; otherwise
+    ``path`` unchanged. A directory entry that already comes first wins
+    as it is, and nothing moves."""
+    archives: list[tuple[int, bytes]] = []
+    for i, entry in enumerate(path):
+        if os.path.isfile(entry):
+            try:
+                archives.append((i, zipimport.zipimporter(entry).get_data("pyspark/version.py")))
+            except (OSError, zipimport.ZipImportError):
+                pass
+            continue
+        try:
+            with open(os.path.join(entry or os.curdir, "pyspark", "version.py"), "rb") as f:
+                installed = f.read()
+        except OSError:
+            continue
+        if not archives or any(v != installed for _, v in archives):
+            return path
+        moved = {j for j, _ in archives}
+        rest = [e for j, e in enumerate(path) if j not in moved]
+        at = rest.index(entry) + 1
+        return rest[:at] + [path[j] for j in sorted(moved)] + rest[at:]
+    return path
+
+
 if __name__ == "__main__":
     # Run through the package module, so tasks see the same ``rereads``.
     import importlib
@@ -70,6 +108,7 @@ if __name__ == "__main__":
 
     zipimport.zipimporter.invalidate_caches = _pydaemon.invalidate_caches
     importlib.invalidate_caches()  # read each archive once, before the fork
+    sys.path[:] = _pydaemon.installed_pyspark_first(sys.path)
     from pyspark import daemon
 
     daemon.manager()

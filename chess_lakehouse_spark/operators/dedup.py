@@ -176,42 +176,51 @@ def lsh_candidate_pairs(
     ).distinct()
 
 
+def _shingle_sets(shingles: DataFrame, id_col: str) -> DataFrame:
+    """(id, shingles): each id's distinct shingles as one array."""
+    return shingles.groupBy(id_col).agg(F.collect_set("shingle").alias("shingles"))
+
+
+def _salted_md5(h: int):
+    # A factory, not ``lambda x, h=h: ...``: ``F.transform`` counts a
+    # lambda's parameters and would pass a second one the element index.
+    return lambda x: F.md5(F.concat(F.lit(f"{h}|"), x))
+
+
+def _verify_sets(pairs, sets_a, sets_b, id_col, threshold, precision=6) -> DataFrame:
+    sa = sets_a.select(F.col(id_col).alias("id_a"), F.col("shingles").alias("sa"))
+    sb = sets_b.select(F.col(id_col).alias("id_b"), F.col("shingles").alias("sb"))
+    n_common, n_a, n_b = F.col("n_common"), F.size("sa"), F.size("sb")
+    return (
+        pairs.join(sa, "id_a")
+        .join(sb, "id_b")
+        .withColumn("n_common", F.size(F.array_intersect("sa", "sb")))
+        .where(n_common > 0)
+        .select(
+            "id_a",
+            "id_b",
+            F.round(n_common.cast("double") / (n_a + n_b - n_common), precision).alias("jaccard"),
+        )
+        .where(F.col("jaccard") >= threshold)
+    )
+
+
 def jaccard_verify(
     pairs: DataFrame, shingles: DataFrame, id_col: str, threshold: float, precision: int = 6
 ) -> DataFrame:
     """Exact shingle-set Jaccard for each candidate pair; keeps pairs with
     ``jaccard >= threshold``. Returns (id_a, id_b, jaccard).
 
-    intersection via a shingle-equality join restricted to candidate pairs;
-    union from per-doc shingle counts (|A|+|B|-|A∩B|). Jaccard is a ratio of
-    integers, so double division is bit-identical across engines; rounded
-    only for output stability.
+    ``pairs`` holds distinct (id_a, id_b); an id's shingle set is the union
+    of its ``shingles`` rows, each shingle once. One groupBy makes a set per
+    id, each pair joins its two sets on id_a and id_b, |A∩B| is the size of
+    their ``array_intersect`` and the union |A|+|B|-|A∩B|: no join on the
+    shingle. A pair sharing no shingle yields no row, whatever the
+    threshold. Jaccard is a ratio of integers, so double division is
+    bit-identical across engines; rounded only for output stability.
     """
-    counts = shingles.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
-    sh_a = shingles.select(F.col(id_col).alias("id_a"), "shingle")
-    sh_b = shingles.select(F.col(id_col).alias("id_b"), "shingle")
-    inter = (
-        pairs.join(sh_a, "id_a")
-        .join(sh_b, ["id_b", "shingle"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    ca = counts.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a"))
-    cb = counts.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b"))
-    return (
-        inter.join(ca, "id_a")
-        .join(cb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.round(
-                F.col("n_common").cast("double")
-                / (F.col("n_a") + F.col("n_b") - F.col("n_common")),
-                precision,
-            ).alias("jaccard"),
-        )
-        .where(F.col("jaccard") >= threshold)
-    )
+    sets = _shingle_sets(shingles, id_col)
+    return _verify_sets(pairs, sets, sets, id_col, threshold, precision)
 
 
 def minhash_lsh_dedup(
@@ -227,11 +236,11 @@ def minhash_lsh_dedup(
     """End-to-end MinHash+LSH near-dup: shingle → minhash → band →
     bucket-join → exact-Jaccard verify. Returns (id_a, id_b, jaccard).
 
-    The shingle frame feeds the signatures AND both sides of the Jaccard
-    verification; recomputing it per use benchmarks faster than persisting
-    here (scan+explode pipelines inside codegen, while persist forces a
-    materialization barrier). At 100 TB the shingle frame would instead be
-    a checkpointed staging table between pipeline stages.
+    The shingle frame feeds the signatures and the verify's one set per
+    document, which serves both sides of every pair; it is recomputed per
+    use rather than persisted (scan+explode pipelines inside codegen, while
+    persist forces a materialization barrier). At 100 TB the shingle frame
+    would instead be a checkpointed staging table between pipeline stages.
 
     ``max_bucket_size`` (default 10k) deterministically drops band buckets
     too popular to be discriminative — the single-task B²/2 expansion
@@ -269,24 +278,25 @@ def incremental_near_dups(
     the staged table + verification bounded by candidate count — fully
     incremental; the corpus text is touched only for candidates.
 
-    Execution (r16, guide §2.4): ``cand`` is cached, owned by the
-    returned frame (``FrameScope.own``). It is consumed by two
-    differently-pruned subtrees (the corpus semi-join and the verify pair
-    list), and ReuseExchange cannot dedupe across prunings — before the
-    fix the whole band-join chain (new shingles → minhash → bands ⋈
-    staged bands) executed ~5× per action (24 exchanges in the r15 plan).
-    The candidates are BOUNDED at any corpus scale by the LSH collision
-    count — never full-corpus-sized, which is why caching here is safe
-    where minhash_lsh_dedup's full-corpus shingle frame deliberately is
-    not.
+    Execution: the batch is shingled once, into one set per doc, which
+    gives its signatures (``array_min`` of the salted md5s in each row: the
+    :func:`minhash_signatures` values, no second groupBy) and the new side
+    of the verify, a per-candidate set intersection (:func:`jaccard_verify`).
+    Each side's set holds that side's rows only, so an id in both inputs is
+    two sets. ``cand`` is not cached: under its two readers (the corpus
+    semi-join and the pair list) the executed plan reuses the new batch's
+    exchanges, and the uncached plan measured faster.
     """
-    new_sh = word_shingles(new_docs, id_col, text_col, k=k)
-    new_sigs = minhash_signatures(new_sh, id_col, num_hashes=num_hashes)
+    new_sets = _shingle_sets(word_shingles(new_docs, id_col, text_col, k=k), id_col)
+    new_sigs = new_sets.select(id_col, *[
+        F.array_min(F.transform("shingles", _salted_md5(h))).alias(f"h{h}")
+        for h in range(num_hashes)
+    ])
     nb = lsh_bands(new_sigs, id_col, num_hashes=num_hashes, band_size=band_size).select(
-        F.col(id_col).alias("new_id"), "band", "bsig"
+        F.col(id_col).alias("id_a"), "band", "bsig"
     )
     cb = lsh_bands(corpus_sigs, id_col, num_hashes=num_hashes, band_size=band_size).select(
-        F.col(id_col).alias("corpus_id"), "band", "bsig"
+        F.col(id_col).alias("id_b"), "band", "bsig"
     )
     cand = (
         nb.join(cb, on=["band", "bsig"])
@@ -295,28 +305,17 @@ def incremental_near_dups(
         # otherwise match itself at jaccard=1.0 and be dropped as a "dup
         # of the corpus" — i.e. of itself. Defense in depth alongside the
         # current-batch partition filter in streaming/jobs.py.
-        .where(F.col("new_id") != F.col("corpus_id"))
-        .select("new_id", "corpus_id")
+        .where(F.col("id_a") != F.col("id_b"))
+        .select("id_a", "id_b")
         .distinct()
     )
-    with FrameScope() as scope:
-        cand = scope.cache(cand)
-        cand_corpus = corpus_docs.join(
-            cand.select(F.col("corpus_id").alias(id_col)).distinct(), id_col, "semi"
-        )
-        corpus_sh = word_shingles(cand_corpus, id_col, text_col, k=k)
-        pairs = cand.select(
-            F.col("new_id").alias("id_a"), F.col("corpus_id").alias("id_b")
-        )
-        verified = jaccard_verify(
-            pairs, new_sh.unionByName(corpus_sh.select(id_col, "shingle")), id_col,
-            threshold=threshold,
-        )
-        return scope.own(
-            verified.select(
-                F.col("id_a").alias("new_id"), F.col("id_b").alias("corpus_id"), "jaccard"
-            )
-        )
+    cand_corpus = corpus_docs.join(
+        cand.select(F.col("id_b").alias(id_col)).distinct(), id_col, "semi"
+    )
+    corpus_sets = _shingle_sets(word_shingles(cand_corpus, id_col, text_col, k=k), id_col)
+    return _verify_sets(cand, new_sets, corpus_sets, id_col, threshold).select(
+        F.col("id_a").alias("new_id"), F.col("id_b").alias("corpus_id"), "jaccard"
+    )
 
 
 def simhash32(df: DataFrame, id_col: str, text_col: str) -> DataFrame:

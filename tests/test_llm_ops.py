@@ -402,7 +402,9 @@ def test_connected_components_chain_and_island(spark):
 def test_incremental_near_dups_matches_full_self_join(spark):
     """The staged-signatures incremental path must find exactly the
     cross-batch pairs the full self-join finds (restricted to new×corpus),
-    with identical jaccard values."""
+    with identical jaccard values, at one input partition and at five.
+    Corpus id 2 spans two rows (its set is their union); ids 7 and 59 have
+    fewer than k tokens."""
     from chess_lakehouse_spark.operators.dedup import (
         incremental_near_dups,
         minhash_signatures,
@@ -411,31 +413,164 @@ def test_incremental_near_dups_matches_full_self_join(spark):
 
     rows = [
         (1, "alpha beta gamma delta epsilon zeta"),
-        (2, "alpha beta gamma delta epsilon eta"),
+        (2, "alpha beta gamma delta"),
+        (2, "gamma delta epsilon eta"),
         (3, "one two three four five six"),
+        (7, "too short"),
         (19, "alpha beta gamma delta epsilon zeta"),  # new: dup of 1, near 2
         (29, "completely unrelated text goes here now"),  # new: no match
+        (59, "short"),  # new: no shingle
     ]
-    docs = _docs(spark, rows)
-    new = docs.where("doc_id % 10 = 9")
-    corpus = docs.where("doc_id % 10 <> 9")
-    sigs = minhash_signatures(word_shingles(corpus, "doc_id", "text"), "doc_id")
-    got = {
-        (r.new_id, r.corpus_id, r.jaccard)
-        for r in incremental_near_dups(
-            new, sigs, corpus, "doc_id", "text", band_size=2, threshold=0.3
-        ).collect()
+    for n_parts in (1, 5):
+        docs = _docs(spark, rows).repartition(n_parts)
+        new = docs.where("doc_id % 10 = 9")
+        corpus = docs.where("doc_id % 10 <> 9")
+        sigs = minhash_signatures(word_shingles(corpus, "doc_id", "text"), "doc_id")
+        got = {
+            (r.new_id, r.corpus_id, r.jaccard)
+            for r in incremental_near_dups(
+                new, sigs, corpus, "doc_id", "text", band_size=2, threshold=0.3
+            ).collect()
+        }
+        full = {
+            (max(r.id_a, r.id_b), min(r.id_a, r.id_b), r.jaccard)
+            for r in minhash_lsh_dedup(
+                docs, "doc_id", "text", band_size=2, threshold=0.3
+            ).collect()
+            # keep only cross-split pairs (new id is always the larger here)
+            if (max(r.id_a, r.id_b) % 10 == 9) != (min(r.id_a, r.id_b) % 10 == 9)
+        }
+        assert got == full, n_parts
+        assert (19, 1, 1.0) in got and (19, 2, 0.6) in got
+
+
+def _py_shingles(text: str, k: int = 3) -> list[str]:
+    toks = text.split(" ")
+    return [" ".join(toks[i:i + k]) for i in range(len(toks) - k + 1)]
+
+
+def _py_round6(x: float) -> float:
+    # Spark's round: HALF_UP on the double's shortest decimal form
+    from decimal import ROUND_HALF_UP, Decimal
+
+    return float(Decimal(repr(x)).quantize(Decimal("0.000001"), ROUND_HALF_UP))
+
+
+def _py_jaccard(pairs, set_a: dict, set_b: dict, threshold: float) -> set:
+    out = set()
+    for a, b in pairs:
+        sa, sb = set_a.get(a, set()), set_b.get(b, set())
+        common = len(sa & sb)
+        if common and _py_round6(common / len(sa | sb)) >= threshold:
+            out.add((a, b, _py_round6(common / len(sa | sb))))
+    return out
+
+
+def test_jaccard_verify_matches_python_sets(spark):
+    """Planted pairs against brute-force Python sets. The shingle rows
+    repeat (within an id, and an id over two text rows), so an id's set is
+    the union of its rows with each shingle once; id 9 has no shingle
+    (fewer than k tokens); (1, 4) is 2/3, which rounds onto the 0.666667
+    threshold; (1, 5) share nothing and stay out at any threshold."""
+    from chess_lakehouse_spark.operators.dedup import jaccard_verify
+
+    w = [f"w{i}" for i in range(40)]
+    texts = {
+        1: [" ".join(w[:12]), " ".join(w[8:22])],  # one id, two overlapping rows
+        2: [" ".join(w[:22]) + " x1 x2"],
+        3: [" ".join(w[2:22]) + " y1", "w3 w4 w5 w3 w4 w5 w3 w4 w5"],
+        4: [" ".join(w[:18]), "z1 z2 z3 z4 z5 z6"],  # 16 of 1's 20, plus 4
+        5: [" ".join(w[30:40])],
+        9: ["w0 w1"],
     }
-    full = {
-        (max(r.id_a, r.id_b), min(r.id_a, r.id_b), r.jaccard)
-        for r in minhash_lsh_dedup(
-            docs, "doc_id", "text", band_size=2, threshold=0.3
-        ).collect()
-        # keep only cross-split pairs (new id is always the larger here)
-        if (max(r.id_a, r.id_b) % 10 == 9) != (min(r.id_a, r.id_b) % 10 == 9)
+    rows = [(i, sh) for i, ts in texts.items() for t in ts for sh in _py_shingles(t)]
+    sets = {i: {sh for j, sh in rows if j == i} for i in texts}
+    assert len(rows) > sum(len(v) for v in sets.values())  # repeats are planted
+    pairs = [(1, 2), (1, 3), (2, 3), (1, 4), (1, 5), (4, 5), (1, 9), (9, 2)]
+    want_exact = _py_jaccard(pairs, sets, sets, 0.666667)
+    assert (1, 4, 0.666667) in want_exact  # raw 16/24 is below the threshold
+    for n_parts in (1, 4):
+        sh = spark.createDataFrame(rows, "doc_id long, shingle string").repartition(n_parts)
+        pf = spark.createDataFrame(pairs, "id_a long, id_b long").repartition(n_parts)
+        for threshold in (0.666667, 0.3, 0.0, -1.0):
+            got = {tuple(r) for r in jaccard_verify(pf, sh, "doc_id", threshold).collect()}
+            assert got == _py_jaccard(pairs, sets, sets, threshold), (n_parts, threshold)
+            assert not any(p[:2] in {(1, 5), (4, 5), (1, 9), (9, 2)} for p in got)
+
+
+def _py_minhash_candidates(new_sets: dict, corpus_sets: dict, num_hashes=8, band_size=2):
+    def bands(sset):
+        sig = [
+            min(hashlib.md5(f"{h}|{s}".encode()).hexdigest() for s in sset)
+            for h in range(num_hashes)
+        ]
+        return {(b, "".join(sig[b * band_size:(b + 1) * band_size]))
+                for b in range(num_hashes // band_size)}
+
+    cb = {c: bands(s) for c, s in corpus_sets.items()}
+    return {
+        (n, c)
+        for n, s in new_sets.items()
+        for c in corpus_sets
+        if n != c and bands(s) & cb[c]
     }
-    assert got == full
-    assert any(p[:2] == (19, 1) for p in got)
+
+
+def test_incremental_near_dups_matches_python_sets(spark):
+    """The whole incremental path against a Python MinHash + LSH + set
+    Jaccard, at one input partition and at four. Id 5 is in the new batch
+    AND the corpus, with an edited text: it never pairs with itself, and
+    each side's set is that side's text only, also where corpus 5 is new
+    69's candidate. New id 39 spans
+    two rows; new 49 and corpus 7 have fewer than k tokens; (29, 6) is 2/3
+    and rounds onto the 0.666667 threshold."""
+    from chess_lakehouse_spark.operators.dedup import (
+        incremental_near_dups,
+        minhash_signatures,
+        word_shingles,
+    )
+
+    w = [f"w{i}" for i in range(40)]
+    corpus_rows = [
+        (1, " ".join(w[:20])),
+        (2, " ".join(w[20:34])),
+        (2, " ".join(w[30:40])),  # one corpus id over two rows
+        (5, "p0 p1 p2 p3 p4 p5 p6 p7 p8"),
+        (6, " ".join(f"v{i}" for i in range(32))),
+        (7, "a b"),
+    ]
+    new_rows = [
+        (5, "p0 p1 p2 p3 p4 p5 p6 p7 p8 p9"),  # re-offered, edited: also in the corpus
+        (19, " ".join(w[:19]) + " zz"),
+        (29, " ".join(f"v{i}" for i in range(22))),
+        (39, " ".join(w[20:30])),
+        (39, " ".join(w[28:40])),
+        (49, "c d"),
+        (59, "unrelated words only here in this doc"),
+        (69, "p0 p1 p2 p3 p4 p5 p6 p7 q8"),
+    ]
+
+    def py_sets(rows):
+        return {i: {sh for j, t in rows if j == i for sh in _py_shingles(t)} for i, _ in rows}
+
+    new_sets = {i: s for i, s in py_sets(new_rows).items() if s}
+    corpus_sets = {i: s for i, s in py_sets(corpus_rows).items() if s}
+    threshold = 0.666667
+    cand = _py_minhash_candidates(new_sets, corpus_sets)
+    want = _py_jaccard(cand, new_sets, corpus_sets, threshold)
+    assert (29, 6, 0.666667) in want and (39, 2, 1.0) in want and (69, 5) in cand
+    assert not any(p[0] == p[1] for p in cand)
+    for n_parts in (1, 4):
+        new = _docs(spark, new_rows).repartition(n_parts)
+        corpus = _docs(spark, corpus_rows).repartition(n_parts)
+        sigs = minhash_signatures(word_shingles(corpus, "doc_id", "text"), "doc_id")
+        got = {
+            tuple(r)
+            for r in incremental_near_dups(
+                new, sigs, corpus, "doc_id", "text", band_size=2, threshold=threshold
+            ).collect()
+        }
+        assert got == want, n_parts
 
 
 def test_sparse_cosine_pairs_inverted_index(spark):

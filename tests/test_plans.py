@@ -10,6 +10,8 @@ is fatal at scale — this is where it gets caught."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from chess_lakehouse_spark.suite import core, llm
@@ -632,3 +634,29 @@ def test_rollup_serve_reads_only_staged_lake(spark):
     assert "CartesianProduct" not in plan and "BatchEvalPython" not in plan
     # the serve plan scans ONLY the staged agg/spec lake, not events
     assert all("events.parquet" not in f for f in df.inputFiles())
+
+
+def test_jaccard_verify_joins_on_ids_not_shingles(spark):
+    """The verify joins each candidate pair to its two shingle sets on
+    id_a and id_b: no join keyed on the shingle, before or after the run."""
+    from chess_lakehouse_spark.catalog import load_table
+    from chess_lakehouse_spark.operators.dedup import minhash_lsh_dedup
+
+    docs = load_table(spark, SF_DIR, "documents")
+    df = minhash_lsh_dedup(docs, "doc_id", "text", band_size=2)
+    for _ in range(2):
+        plan = explain(spark, df)
+        keys = [ln for ln in plan.splitlines() if re.search(r"(Left|Right) keys", ln)]
+        assert keys and not any("shingle" in ln for ln in keys), keys
+        df.collect()
+
+
+def test_dedup_incremental_exchange_count(spark):
+    """Exchange lines in the executed plan of ``dedup_incremental`` after a
+    run (AQE's final and initial plans both print): 20 since the verify
+    works on per-document shingle sets; 93 with the join on the shingle and
+    the cached candidate frame before it."""
+    df = llm.q_dedup_incremental(spark, SF_DIR)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert sum("Exchange" in ln for ln in plan.splitlines()) <= 20

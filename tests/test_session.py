@@ -68,6 +68,65 @@ def test_unchanged_archive_is_not_reread(tmp_path, monkeypatch):
             del sys.path_importer_cache[k]
 
 
+def _pyspark_copies(tmp_path, archive_version: str, installed_version: str | None):
+    """A fake ``pyspark.zip`` and, unless ``installed_version`` is None, a
+    fake installed ``pyspark`` directory, each with its own version.py."""
+    tmp_path.mkdir(exist_ok=True)
+    archive = tmp_path / "pyspark.zip"
+    with zipfile.ZipFile(archive, "w") as zf:
+        zf.writestr("pyspark/__init__.py", "")
+        zf.writestr("pyspark/version.py", f"__version__: str = {archive_version!r}\n")
+    site = tmp_path / "site-packages"
+    (site / "pyspark").mkdir(parents=True)
+    if installed_version is not None:
+        (site / "pyspark" / "version.py").write_text(f"__version__: str = {installed_version!r}\n")
+    return str(archive), str(site)
+
+
+def test_archive_pyspark_moves_behind_the_same_installed_version(tmp_path):
+    archive, site = _pyspark_copies(tmp_path, "4.1.2", "4.1.2")
+    other = tmp_path / "other.zip"
+    _write_zip(other, "1")
+    path = [str(tmp_path / "app"), archive, str(other), "/nowhere", site, "/after"]
+    assert _pydaemon.installed_pyspark_first(path) == [
+        str(tmp_path / "app"), str(other), "/nowhere", site, archive, "/after"
+    ]
+    # the installed copy already wins: nothing to move
+    assert _pydaemon.installed_pyspark_first([site, archive]) == [site, archive]
+
+
+def test_archive_pyspark_stays_for_another_version_or_no_installed_copy(tmp_path):
+    archive, site = _pyspark_copies(tmp_path / "a", "4.1.2", "4.1.1")
+    path = [archive, site]
+    assert _pydaemon.installed_pyspark_first(path) == path
+    archive, site = _pyspark_copies(tmp_path / "b", "4.1.2", None)
+    path = [archive, site, "/after"]
+    assert _pydaemon.installed_pyspark_first(path) == path
+
+
+def test_workers_import_pyspark_from_the_installed_copy(spark):
+    """Where the installed pyspark is the archive's version, a worker
+    imports it from the installed copy, and the archive is still on its
+    path, behind it."""
+    import pyspark
+
+    def probe(_):
+        import sys
+
+        import pyspark
+
+        yield pyspark.__file__, [p for p in sys.path if p.endswith("pyspark.zip")]
+
+    (file, archives), = spark.sparkContext.parallelize([0], 1).mapPartitions(probe).collect()
+    archive = next((p for p in archives if os.path.isfile(p)), None)
+    if archive is None or pyspark.__file__.startswith(archive):
+        return  # the driver itself runs from the archive: nothing to prefer
+    same = zipimport.zipimporter(archive).get_data("pyspark/version.py") == (
+        Path(pyspark.__file__).with_name("version.py").read_bytes()
+    )
+    assert (file == pyspark.__file__) == same, (file, archives)
+
+
 def test_reused_worker_rereads_no_archive(spark):
     """A ``get_spark`` session's workers run the patched invalidation, and
     a task on a reused worker re-reads no archive."""
