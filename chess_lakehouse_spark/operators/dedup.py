@@ -87,11 +87,15 @@ def minhash_signatures(shingles: DataFrame, id_col: str, num_hashes: int = 8) ->
     signatures come from ONE map-side-combined groupBy over the exploded
     shingles — a single shuffle keyed by doc id, no per-hash pass.
     """
-    aggs = [
-        F.min(F.md5(F.concat(F.lit(f"{h}|"), F.col("shingle")))).alias(f"h{h}")
-        for h in range(num_hashes)
-    ]
+    aggs = [F.min(_salted_md5(h)(F.col("shingle"))).alias(f"h{h}") for h in range(num_hashes)]
     return shingles.groupBy(id_col).agg(*aggs)
+
+
+def _salted_md5(h: int):
+    """Hash ``h`` of the MinHash family. A factory, not ``lambda x, h=h``:
+    ``F.transform`` counts a lambda's parameters and would pass the element
+    index as a second one."""
+    return lambda x: F.md5(F.concat(F.lit(f"{h}|"), x))
 
 
 def lsh_bands(signatures: DataFrame, id_col: str, num_hashes: int = 8, band_size: int = 2) -> DataFrame:
@@ -179,12 +183,6 @@ def lsh_candidate_pairs(
 def _shingle_sets(shingles: DataFrame, id_col: str) -> DataFrame:
     """(id, shingles): each id's distinct shingles as one array."""
     return shingles.groupBy(id_col).agg(F.collect_set("shingle").alias("shingles"))
-
-
-def _salted_md5(h: int):
-    # A factory, not ``lambda x, h=h: ...``: ``F.transform`` counts a
-    # lambda's parameters and would pass a second one the element index.
-    return lambda x: F.md5(F.concat(F.lit(f"{h}|"), x))
 
 
 def _verify_sets(pairs, sets_a, sets_b, id_col, threshold, precision=6) -> DataFrame:

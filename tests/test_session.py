@@ -105,9 +105,8 @@ def test_archive_pyspark_stays_for_another_version_or_no_installed_copy(tmp_path
 
 
 def test_workers_import_pyspark_from_the_installed_copy(spark):
-    """Where the installed pyspark is the archive's version, a worker
-    imports it from the installed copy, and the archive is still on its
-    path, behind it."""
+    """A worker imports pyspark from the driver's installed copy exactly
+    when that copy's version.py is byte-identical to the archive's."""
     import pyspark
 
     def probe(_):
