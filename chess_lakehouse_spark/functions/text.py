@@ -195,8 +195,8 @@ def unigram_logprob(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     text) score high and get filtered before pretraining.
 
     Plan: one explode + map-combined term-count groupBy (vocabulary-sized
-    result), the total-token scalar as a scalar subquery in the SAME plan
-    (``DataFrame.scalar()`` — no separate corpus-scanning action per
+    result), the total-token count as a 1-row aggregate of that frame
+    cross-joined back onto it (no separate corpus-scanning action per
     invocation), a keyed join of per-term log-probs back onto the token
     stream (AQE broadcasts the vocabulary table when its runtime size
     fits; on web-scale noisy text it is NOT bounded, so no forced hint —
@@ -213,16 +213,7 @@ def unigram_logprob(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
         F.col(id_col), F.explode(ws_tokens(F.col(text_col))).alias("term")
     ).where(F.col("term") != "")
     ctf = terms.groupBy("term").agg(F.count(F.lit(1)).alias("ctf"))
-    # total as an unpartitioned-window column over the vocabulary-sized
-    # ctf frame (r16, the bm25 trick): the .scalar() subquery re-executed
-    # the whole tokenize + vocabulary aggregation chain a second time;
-    # the window pass is over the vocab rows the log-prob projection
-    # reads anyway. Same integer, same double, same ROUND.
-    from pyspark.sql.window import Window as _W
-
-    logp = ctf.withColumn(
-        "__t", F.sum("ctf").over(_W.partitionBy())
-    ).select(
+    logp = ctf.crossJoin(ctf.agg(F.sum("ctf").alias("__t"))).select(
         "term",
         F.round(
             F.log(F.col("ctf").cast("double") / F.col("__t").cast("double")), 6
@@ -809,8 +800,9 @@ def pmi_top_k(
     Every ln input is a ratio of exact integer products, so scores are
     engine-identical; ranking carries a (PMI DESC, w1, w2) total order.
     One explode + two map-combined groupBys (pair + unigram tables), the
-    corpus totals as scalar subqueries, a keyed join of pair counts to the
-    two unigram rows, then TakeOrdered top-k. At web scale the integer
+    pair total as a 1-row aggregate of the pair counts cross-joined back
+    onto them, a keyed join of pair counts to the two unigram rows, then
+    TakeOrdered top-k. At web scale the integer
     products c12·T / c1·c2 outgrow BIGINT — subtract logs instead
     (ln c12 + ln T - ln c1 - ln c2) and accept float associativity; the
     plan shape is unchanged. Returns (w1, w2, n_pair, pmi, rk).
@@ -831,16 +823,10 @@ def pmi_top_k(
     ).select(F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2"))
     uni = toks.select(F.explode("toks").alias("w"))
     cu = uni.groupBy("w").agg(F.count(F.lit(1)).alias("cw"))
-    # total_pairs = Σ n_pair over the PRE-filter bigram counts, carried as
-    # an unpartitioned-window column (r16, the bm25 trick): the .scalar()
-    # subquery re-executed the whole bigram explode + count chain; the
-    # window pass is over the vocabulary²-bounded bigram count frame the
-    # scoring join reads anyway. Same integer into the same expressions.
-    cb = (
-        pairs.groupBy("w1", "w2")
-        .agg(F.count(F.lit(1)).alias("n_pair"))
-        .withColumn("__t", F.sum("n_pair").over(Window.partitionBy()))
-        .where(F.col("n_pair") >= min_count)
+    # total_pairs = Σ n_pair over the PRE-filter bigram counts
+    cb = pairs.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("n_pair"))
+    cb = cb.where(F.col("n_pair") >= min_count).crossJoin(
+        cb.agg(F.sum("n_pair").alias("__t"))
     )
     total_pairs = F.col("__t")
     c1 = cu.select(F.col("w").alias("w1"), F.col("cw").alias("c1"))
@@ -1028,8 +1014,9 @@ def bm25_topk(
     Scale shape: document lengths are one map-combined aggregate; term
     statistics are computed ONLY for the query's terms (map-side literal-
     array filter BEFORE any shuffle, so the posting shuffle carries the
-    query's postings, not the corpus vocabulary); avgdl and N ride a
-    1-row broadcast; the result is TakeOrdered(k). Documents containing
+    query's postings, not the corpus vocabulary); avgdl and N are a 1-row
+    aggregate cross-joined onto the query-term df table, which is
+    broadcast; the result is TakeOrdered(k). Documents containing
     no query term score 0 and are not returned.
     """
     terms = sorted({t for t in query.split() if t})
@@ -1051,27 +1038,17 @@ def bm25_topk(
         .cast("bigint")
         .alias("n_d"),
     ).where(F.col("n_d") >= 1)
-    # (n_docs, total_len) as unpartitioned-window columns over the lengths
-    # frame (same fix as bm25_batch): .scalar() planned THREE scalar
-    # subqueries, each re-running the corpus-scan → explode → doc-length
-    # chain; the window pass is over the compact (id, n_d) map-side
-    # projection.
-    from pyspark.sql.window import Window as _W
-
-    _wall = _W.partitionBy()
-    lengths = lengths.select(
-        "id",
-        "n_d",
-        F.count(F.lit(1)).over(_wall).alias("__n_docs"),
-        F.sum("n_d").over(_wall).alias("__total_len"),
-    )
     term_arr = F.array(*[F.lit(t) for t in terms])
     postings = (
         toks.where(F.array_contains(term_arr, F.col("t")))
         .groupBy("id", "t")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
-    dfreq = postings.groupBy("t").agg(F.count(F.lit(1)).alias("df"))
+    dfreq = (
+        postings.groupBy("t")
+        .agg(F.count(F.lit(1)).alias("df"))
+        .crossJoin(_bm25_corpus_stats(lengths))
+    )
 
     n_docs = F.col("__n_docs")
     total_len = F.col("__total_len")
@@ -1207,32 +1184,6 @@ def bm25_batch(
         .cast("bigint")
         .alias("n_d"),
     ).where(F.col("n_d") >= 1)
-    # (n_docs, total_len) ride the lengths frame as unpartitioned-window
-    # columns, so the doc-length chain executes ONCE (the scoring join).
-    # History: .scalar() planned as THREE distinct scalar subqueries
-    # (n_docs twice — idf and denom get separate ids — plus total_len),
-    # each hosting its own corpus-scan → explode → aggregation chain (r15
-    # plan audit); the r15 1-row crossJoin fix planted a
-    # BroadcastNestedLoopJoin under the term chain and fenced 2-8× WORSE
-    # (reverted, OPTIMIZATION_r15.md §3). The window form is the
-    # sparse_cosine_pairs norms trick: same integers (count/sum over all
-    # lengths rows), no subquery, no BNLJ. The single-partition window
-    # pass is over the compact (doc_id, n_d) table — at 100 TB the staged
-    # path (bm25_from_index) serves stats from its materialized 1-row
-    # table instead, so this window never sees corpus-scale volume on the
-    # serving path.
-    from pyspark.sql.window import Window as _W
-
-    _wall = _W.partitionBy()
-    lengths = lengths.select(
-        "doc_id",
-        "n_d",
-        F.count(F.lit(1)).over(_wall).alias("__n_docs"),
-        F.sum("n_d").over(_wall).alias("__total_len"),
-    )
-    n_docs = F.col("__n_docs")
-    total_len = F.col("__total_len")
-
     q_terms = _bm25_query_terms(queries, query_id_col, query_text_col)
     # postings restricted to terms ANY query uses (semi-join, term-keyed)
     wanted = q_terms.select("t").distinct()
@@ -1247,8 +1198,21 @@ def bm25_batch(
     # by Catalyst, so ReuseExchange cannot dedupe it and the whole
     # corpus-scan → explode → semi-join → aggregate chain executes
     # TWICE (r15 plan audit: 7 corpus scans / 14 exchanges → 4 / 8).
+    stats = _bm25_corpus_stats(lengths)
     return _bm25_score_rank(
-        q_terms, postings, None, lengths, n_docs, total_len, k, k1, b, precision
+        q_terms.crossJoin(stats), postings, None, lengths,
+        F.col("__n_docs"), F.col("__total_len"), k, k1, b, precision,
+    )
+
+
+def _bm25_corpus_stats(lengths: DataFrame) -> DataFrame:
+    """(__n_docs, __total_len): one row, a map-combined aggregate of the
+    per-doc lengths. Cross-join it onto the query-term side of the scoring
+    join, never onto the lengths or postings chain: there it puts a
+    nested-loop join under the corpus-sized term chain (2-8x slower,
+    OPTIMIZATION_r15.md §3)."""
+    return lengths.agg(
+        F.count(F.lit(1)).alias("__n_docs"), F.sum("n_d").alias("__total_len")
     )
 
 
@@ -1281,9 +1245,10 @@ def _bm25_score_rank(
     """The single scoring/ranking tail shared by :func:`bm25_batch` and
     :func:`bm25_from_index`: same idf integer-ratio log, per-term
     ROUND(·,precision), DECIMAL-exact sum, and (score DESC, doc_id) total
-    order as the oracle template. ``n_docs``/``total_len`` are Columns
-    (1-row-broadcast stats columns or scalar subqueries — stay lazy, no
-    extra corpus action). ``dfreq=None`` derives the per-term document
+    order as the oracle template. ``n_docs``/``total_len`` are Columns:
+    the batch path's :func:`_bm25_corpus_stats` row cross-joined onto
+    ``q_terms``, or the staged path's literals from its 1-row stats
+    table. ``dfreq=None`` derives the per-term document
     frequency with a count-window over ``postings`` itself (identical
     value: df(t) = number of postings rows for t) — the batch path's
     choice, where a separate postings.groupBy("t") subtree would be

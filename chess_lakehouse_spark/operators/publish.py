@@ -876,15 +876,21 @@ def swap_publish(
     ``_sidecar(live_dir, "compacting")``; a stale copy left there by a
     crashed earlier run is deleted through the Hadoop FileSystem first (so
     it can never be promoted wholesale), then ``write`` fills it and
-    ``_swap_lake_dirs`` renames it into place. ``op`` names the caller in
-    error messages. :func:`vacuum_lake` cleans what a crash leaves."""
+    ``_swap_lake_dirs`` renames it into place. When ``write`` raises, the
+    staging copy is deleted before the error propagates. ``op`` names the
+    caller in error messages. :func:`vacuum_lake` cleans what a crash
+    leaves."""
     live = live_dir.rstrip("/")
     staging = _sidecar(live, "compacting")
     path = spark._jvm.org.apache.hadoop.fs.Path(staging)
     fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
     if fs.exists(path) and not fs.delete(path, True):
         raise IOError(f"{op}: failed to clear stale {staging}")
-    write(staging)
+    try:
+        write(staging)
+    except BaseException:
+        fs.delete(path, True)
+        raise
     _swap_lake_dirs(spark, staging, live, op)
 
 

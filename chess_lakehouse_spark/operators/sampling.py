@@ -449,8 +449,6 @@ def dsir_topk(
             ).alias("b"),
         )
 
-    from pyspark.sql.window import Window as _W
-
     from chess_lakehouse_spark.session import FrameScope
 
     t_counts = features(target).groupBy("b").agg(F.count(F.lit(1)).alias("ct"))
@@ -461,17 +459,16 @@ def dsir_topk(
     with FrameScope() as scope:
         raw_feats = scope.cache(features(raw, with_id=True))
         q_counts = raw_feats.groupBy("b").agg(F.count(F.lit(1)).alias("cq"))
-        # Corpus totals as unpartitioned-window columns over the joined
-        # bucket frame (≤ 2·n_buckets rows) — the .scalar() subqueries each
-        # re-executed a full corpus feature chain (r16, the bm25 trick).
-        # Σ coalesce(ct, 0) over the full-outer join = Σ ct over t_counts
-        # exactly (bucket keys are unique per side), so the same integers
-        # enter the same expressions.
-        _wall = _W.partitionBy()
+        # Corpus totals as a 1-row aggregate of the joined bucket frame
+        # (≤ 2·n_buckets rows). Σ coalesce(ct, 0) over the full-outer join
+        # = Σ ct over t_counts exactly (bucket keys are unique per side).
+        buckets = t_counts.join(q_counts, "b", "full_outer")
+        totals = buckets.agg(
+            F.sum(F.coalesce(F.col("ct"), F.lit(0))).alias("__tt"),
+            F.sum(F.coalesce(F.col("cq"), F.lit(0))).alias("__qt"),
+        )
         ratios = (
-            t_counts.join(q_counts, "b", "full_outer")
-            .withColumn("__tt", F.sum(F.coalesce(F.col("ct"), F.lit(0))).over(_wall))
-            .withColumn("__qt", F.sum(F.coalesce(F.col("cq"), F.lit(0))).over(_wall))
+            buckets.crossJoin(totals)
             .select(
                 "b",
                 F.round(

@@ -1766,7 +1766,8 @@ LAKE_READ_RANGE = (100, 149)
 def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Okapi BM25 ad-hoc retrieval over the documents corpus: postings are
     filtered to the query's terms BEFORE the shuffle (map-side literal-
-    array filter), corpus stats ride scalar subqueries, result is
+    array filter), the corpus stats are a 1-row aggregate of the document
+    lengths cross-joined onto the query-term df table, result is
     TakeOrdered(k). Scoring contract (integer-ratio idf, ROUND(·,6)
     per-term, DECIMAL(18,6) sum, (score DESC, id) order) pinned against a
     pure-Python reference in tests/test_bm25.py."""

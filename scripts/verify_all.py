@@ -10,11 +10,10 @@ Runs, in order, and stops at the first failure:
 4. ``bench.py`` — the headline timing line (stdout, and the JSON line is
    what the driver records as BENCH_r{N}.json)
 
-Optional stages (off by default; each adds minutes):
-  ``--probe``       scripts/scaling_probe.py x1..x8 operator curves
-  ``--lake-probe``  scripts/lake_probe.py lake-maintenance curves
+The scale contract is checked in stage 1, by the plan audit over every
+registered query in ``tests/test_plans.py``.
 
-Usage: python scripts/verify_all.py ROUND [--probe] [--lake-probe]
+Usage: python scripts/verify_all.py ROUND
 e.g.:  python scripts/verify_all.py 7
 """
 
@@ -61,10 +60,6 @@ def main() -> None:
         tee_to=REPO / f"VERIFY_LOCAL_r{rnd:02d}_sf0.1.txt",
     )
     _run([py, "bench.py"])
-    if "--probe" in args:
-        _run([py, "scripts/scaling_probe.py"])
-    if "--lake-probe" in args:
-        _run([py, "scripts/lake_probe.py"])
     print("\nall stages green")
 
 

@@ -69,7 +69,16 @@ def test_bm25_ordering_and_k(spark, docs_df):
 
 
 def test_bm25_no_match_and_validation(spark, docs_df):
+    from chess_lakehouse_spark.functions.text import bm25_batch
+
+    # no matching term, or no documents: no rows (the 1-row corpus stats
+    # of an empty corpus must not surface as a NULL-scored row)
+    empty = docs_df.where("id < 0")
     assert bm25_topk(docs_df, "id", "text", "zebra", k=5).collect() == []
+    assert bm25_topk(empty, "id", "text", "cat", k=5).collect() == []
+    for corpus, qtext in ((docs_df, "zebra"), (empty, "cat")):
+        queries = spark.createDataFrame([("q", qtext)], "qid string, qtext string")
+        assert bm25_batch(corpus, "id", "text", queries, "qid", "qtext").collect() == []
     with pytest.raises(ValueError, match="at least one term"):
         bm25_topk(docs_df, "id", "text", "   ")
     with pytest.raises(ValueError, match="k must"):

@@ -150,6 +150,12 @@ def test_dsir_skips_empty_docs_and_validates(spark, corpora):
     got = dsir_topk(raw2, target, "id", "text", k=40)
     ids = {r["id"] for r in got.collect()}
     assert 99 not in ids
+    # no raw documents: no rows; no target documents: every raw document
+    # still gets a finite weight from the smoothed empty target model
+    assert dsir_topk(raw.where("id < 0"), target, "id", "text", k=5).collect() == []
+    no_target = dsir_topk(raw, target.where("id < 0"), "id", "text", k=40).collect()
+    assert len(no_target) == 40
+    assert all(r["logw"] is not None for r in no_target)
     with pytest.raises(ValueError, match="k must"):
         dsir_topk(raw, target, "id", "text", k=0)
     with pytest.raises(ValueError, match="n_buckets"):

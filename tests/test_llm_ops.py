@@ -865,6 +865,10 @@ def test_unigram_logprob_rare_tokens_score_higher(spark):
     import math
 
     assert abs(got[1].nll - (-round(math.log(7 / 8), 6))) < 1e-9
+    # no documents, or no tokens: no rows
+    assert unigram_logprob(df.where("doc_id < 0"), "doc_id", "text").collect() == []
+    blank = _docs(spark, [(1, ""), (2, "   ")])
+    assert unigram_logprob(blank, "doc_id", "text").collect() == []
 
 
 def test_knn_quantized_agrees_with_brute_force(spark):
@@ -1148,6 +1152,9 @@ def test_pmi_topk_ranks_collocation(spark):
     got = pmi_top_k(df, "doc_id", "text", k=3, min_count=3).collect()
     assert got[0].w1 == "x" and got[0].w2 == "y" and got[0].rk == 1
     assert got[0].pmi > 0
+    # no documents, or no pair reaching min_count: no rows
+    assert pmi_top_k(df.where("doc_id < 0"), "doc_id", "text", k=3).collect() == []
+    assert pmi_top_k(df, "doc_id", "text", k=3, min_count=10).collect() == []
 
 
 def test_token_budget_sample_truncates_and_nests(spark):

@@ -593,6 +593,67 @@ def test_delete_rows_removes_emptied_partition(spark, tmp_path):
     assert set(r["p"] for r in back.select("p").distinct().collect()) == {"A", "B"}
 
 
+def test_update_skipping_manifest_reads_only_affected_partitions(spark, tmp_path):
+    """The manifest refresh after a partition-scoped mutation scans only the
+    affected partitions: with every file of an unaffected partition
+    corrupt it still succeeds, and equals a full rebuild taken before the
+    corruption."""
+    from pathlib import Path
+
+    from chess_lakehouse_spark.operators.publish import (
+        delete_rows,
+        update_skipping_manifest,
+        write_skipping_manifest,
+    )
+
+    lake = str(tmp_path / "lake")
+    _mini_lake(spark, lake)
+    write_skipping_manifest(spark, lake, ["id", "val"])
+    keys = spark.createDataFrame([(3, "A"), (7, "A")], "id long, p string")
+    delete_rows(spark, lake, keys, key_cols=["id"], partition_cols=["p"])
+    full = write_skipping_manifest(
+        spark, lake, ["id", "val"], manifest_dir=str(tmp_path / "full")
+    )
+    want = sorted(spark.read.parquet(full).collect())
+
+    for f in Path(lake, "p=C").glob("*.parquet"):
+        f.write_bytes(b"not a parquet file")
+    with pytest.raises(Exception):
+        write_skipping_manifest(spark, lake, ["id"], manifest_dir=str(tmp_path / "again"))
+
+    update_skipping_manifest(spark, lake, ["id", "val"], ["p"], affected=keys.select("p"))
+    assert sorted(spark.read.parquet(lake + "_manifest").collect()) == want
+
+
+def test_swap_publish_removes_staging_when_write_raises(spark, tmp_path):
+    """A write that raises leaves the live directory byte-unchanged and no
+    staging sidecar behind."""
+    from pathlib import Path
+
+    from chess_lakehouse_spark.operators.publish import swap_publish
+
+    lake = str(tmp_path / "lake")
+    df = _mini_lake(spark, lake)
+
+    def files():
+        return {
+            str(f.relative_to(lake)): f.read_bytes()
+            for f in Path(lake).rglob("*")
+            if f.is_file()
+        }
+
+    before = files()
+
+    def write_then_fail(staging):
+        df.write.parquet(staging)
+        raise RuntimeError("write failed")
+
+    with pytest.raises(RuntimeError, match="write failed"):
+        swap_publish(spark, lake, write_then_fail, "test")
+    assert files() == before
+    assert [f.name for f in tmp_path.iterdir()] == ["lake"]
+
+
 def test_merge_overwrite_evolve_schema_adds_column(spark, tmp_path):
     from pyspark.sql import functions as F
 
